@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
@@ -261,10 +263,13 @@ object Bench {
     // The timed methodology below is unchanged: same queries, same SF,
     // same noop sink, min of reps. Then let the async ContextCleaner
     // drain so broadcast-cleanup GC doesn't land inside a timed region.
+    // A query failing here still gets its timed rep (which records it in
+    // `failed`); name it on stderr now. Fatal errors propagate.
     headline.filter(SparkEntry.queries.contains).foreach { n =>
       try SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warmup $n failed: $e") }
     }
     System.gc()
     Thread.sleep(2000)

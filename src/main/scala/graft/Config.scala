@@ -11,9 +11,12 @@ import java.nio.file.{Files, Paths}
   */
 object Config {
 
-  /** `SPARK_GRAFT_CPUS` — local[] parallelism and shuffle partitions. */
+  /** `SPARK_GRAFT_CPUS` — local[] parallelism and shuffle partitions;
+    * defaults to the processors this JVM may use.
+    */
   def cpus(): String = {
-    val v = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val v = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     require(v.toIntOption.exists(_ > 0),
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
     v

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.VecText
-import graft.sink.KeyedUpsertSink
+import graft.sink.{KeyedUpsertSink, StateWriter}
 import graft.text.TextAnalysis
 
 /** Incremental MinHash-LSH near-duplicate detection over a STREAM of
@@ -192,7 +192,7 @@ object StreamingDedup {
           org.apache.spark.sql.expressions.Window
             .partitionBy("band", "bucket", "doc_id").orderBy(col("__o").desc)))
         .filter(col("__rn") === 1).drop("__rn", "__o")
-      merged.write.mode(SaveMode.Overwrite)
+      StateWriter(merged).mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__bkt")
         .parquet(stateDir)

@@ -285,7 +285,7 @@ object StreamingSimilarity {
       val fresh = graft.Staging.pin(
         if (storeExists) incoming.join(store, Seq("vec_id"), "left_anti")
         else incoming)
-      try fresh.write.mode("append").parquet(storeDir)
+      try graft.sink.StateWriter(fresh).mode("append").parquet(storeDir)
       finally graft.Staging.unpin(fresh)
       val maxRow = lists.groupBy("centroid_id").count().agg(max("count")).head()
       val maxN = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)

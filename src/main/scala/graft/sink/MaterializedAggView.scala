@@ -347,13 +347,18 @@ object MaterializedAggView {
         names.filter(_.startsWith("__")).mkString(", "))
   }
 
-  /** One delta (or bootstrap) pass: per-group weighted sums. `weight`
-    * is `lit(1L)` at bootstrap and the feed's `__weight` on refresh, so
-    * both paths produce identical column types.
+  /** One delta (or bootstrap) pass: per-group sums weighted by the
+    * `__weight` column — bootstrap adds it as a bigint 1 (see
+    * [[bootstrap]]), the feed carries it — so both paths produce
+    * identical column types. (A `lit(1L)` weight would not: Spark types
+    * the literal as `decimal(1,0)` in decimal arithmetic and the column
+    * as `decimal(20,0)`, so a decimal sum would be stored narrower at
+    * bootstrap than every fold publishes it.)
     */
   private def aggregate(df: DataFrame, dims: Seq[String],
       aggs: Seq[AggCol], extrema: Seq[ExtremumCol],
-      distincts: Seq[DistinctCol], weight: Column): DataFrame = {
+      distincts: Seq[DistinctCol]): DataFrame = {
+    val weight = col(WeightCol)
     val cols = aggs.map(a => sum(a.expr * weight).as(a.name)) ++
       extrema.map(e => e.agg(e.name)) ++
       distincts.map(d => count_distinct(d.expr).as(d.name)) :+
@@ -362,14 +367,14 @@ object MaterializedAggView {
   }
 
   /** One distinct column's multiplicity table over `df`: live-key count
-    * per (dims, value), nulls excluded (SQL COUNT DISTINCT semantics).
-    * `weight` is `lit(1L)` at bootstrap and `__weight` on a feed fold.
+    * per (dims, value), nulls excluded (SQL COUNT DISTINCT semantics),
+    * weighted by the `__weight` column.
     */
-  private def buildAux(df: DataFrame, dims: Seq[String], d: DistinctCol,
-      weight: Column): DataFrame =
+  private def buildAux(df: DataFrame, dims: Seq[String],
+      d: DistinctCol): DataFrame =
     df.filter(d.expr.isNotNull)
       .groupBy((dims.map(col) :+ d.expr.as(AuxValCol)): _*)
-      .agg(sum(weight).as(AuxMulCol))
+      .agg(sum(WeightCol).as(AuxMulCol))
 
   /** Fold a delta aggregate into the stored view: per-group sums add
     * (`sum` skips the side that lacks the group), then groups whose
@@ -420,9 +425,9 @@ object MaterializedAggView {
       if (head._2 == 0L) s"v${head._1}" else s"v${head._1}-c${head._2}"
     val stage = root.resolve(
       s".stage-$headTag-${java.util.UUID.randomUUID().toString.take(8)}")
-    view.write.mode("overwrite").parquet(stage.resolve("view").toString)
+    StateWriter(view).mode("overwrite").parquet(stage.resolve("view").toString)
     auxes.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(
+      StateWriter(df).mode("overwrite").parquet(
         stage.resolve(s"aux_$name").toString)
     }
     // the data directory is PER-ATTEMPT unique: a crash between a past
@@ -513,6 +518,17 @@ object MaterializedAggView {
           s"${fmtMark(head)} — two refreshers raced the same head; this " +
           "maintainer's staged version (never referenced) was " +
           "reclaimed. The view is single-maintainer: run one refresh loop")
+      // a cached leaf schema that differs from the one just published
+      // would make every later read fail on the column's type; drop it,
+      // so a view stored with an older writer's types (a bootstrap that
+      // typed a decimal sum narrower than the fold does) heals here
+      val published = (("view", view) +: auxes.map { case (n, df) => (s"aux_$n", df) })
+        .map { case (leaf, df) => leaf -> df.schema.catalogString }.toMap
+      viewSchemaCache.entrySet.removeIf { e =>
+        val (path, _, leaf) = e.getKey
+        path == viewPath &&
+          published.get(leaf).exists(_ != e.getValue.catalogString)
+      }
     }
     reclaim(root, viewPath)
   }
@@ -638,9 +654,10 @@ object MaterializedAggView {
     // the view's distinct counts come from count_distinct in the same
     // scan; each aux is its own base scan (bootstrap-only cost — every
     // refresh folds the feed instead)
+    val weighted = base.withColumn(WeightCol, lit(1L))
     publish(viewPath, None, (head, 0L),
-      aggregate(base, dims, aggs, extrema, distincts, lit(1L)),
-      distincts.map(d => d.name -> buildAux(base, dims, d, lit(1L))),
+      aggregate(weighted, dims, aggs, extrema, distincts),
+      distincts.map(d => d.name -> buildAux(weighted, dims, d)),
       overwrite = force)
     Some(head)
   }
@@ -785,7 +802,7 @@ object MaterializedAggView {
       // refreshExtrema (a -1 row's value must not feed a min/max
       // candidate); distinct multiplicities fold signed like sums
       val deltaAgg =
-        aggregate(deltas, dims, aggs, Seq.empty, Seq.empty, col(WeightCol))
+        aggregate(deltas, dims, aggs, Seq.empty, Seq.empty)
       val sumView = merge(
         old.select((dims ++ aggs.map(_.name) :+ CountCol).map(col): _*),
         deltaAgg, dims, aggs)
@@ -798,7 +815,7 @@ object MaterializedAggView {
         val oldAux = readDataDir(spark, viewPath,
           auxData(fromDir, d.name))
         val mergedAux = oldAux
-          .unionByName(buildAux(deltas, dims, d, col(WeightCol)))
+          .unionByName(buildAux(deltas, dims, d))
           .groupBy((dims :+ AuxValCol).map(col): _*)
           .agg(sum(AuxMulCol).as(AuxMulCol))
           .filter(col(AuxMulCol) =!= 0L)

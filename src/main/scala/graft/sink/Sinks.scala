@@ -145,8 +145,8 @@ object KeyedUpsertSink {
       if (nonEmptyDir(target)) Some(spark.read.parquet(tablePath))
       else None
     val staging = tablePath + s".staging-$batchId"
-    mergeLww(existing, batch, keys, order)
-      .write.mode(SaveMode.Overwrite).parquet(staging)
+    StateWriter(mergeLww(existing, batch, keys, order))
+      .mode(SaveMode.Overwrite).parquet(staging)
     replaceDir(Paths.get(staging), target)
   }
 
@@ -396,8 +396,8 @@ object KeyedUpsertSink {
         if (!nonEmptyDir(target)) None
         else Some(spark.read.option("mergeSchema", "true").parquet(tablePath)
           .filter(col("__bucket").isin(touched: _*))) // prunes to touched dirs
-      mergeLww(existing, bucketed, keys, order)
-        .write.mode(SaveMode.Overwrite)
+      StateWriter(mergeLww(existing, bucketed, keys, order))
+        .mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic") // replace touched buckets only
         .partitionBy("__bucket")
         .parquet(tablePath)
@@ -517,8 +517,8 @@ object KeyedUpsertSink {
     val existing = readManifestBuckets(spark, tablePath, base)
       .map(resolveChainRead(_, base, keys, order))
     val merged = mergeLww(existing, bucketed, keys, order)
-    merged
-      .write.mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
+    StateWriter(merged)
+      .mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
       .partitionBy("__bucket")
       .parquet(s"$tablePath/$gen")
     primeGenSchema(tablePath, gen, merged.schema)
@@ -1067,8 +1067,8 @@ object KeyedUpsertSink {
       // nothing a vacuum won't collect).
       val gen = s"gen-$batchId-u${java.util.UUID.randomUUID().toString.take(8)}"
       val staged = mergeLww(None, bucketed, keys, order)
-      staged
-        .write.mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
+      StateWriter(staged)
+        .mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
         .partitionBy("__bucket")
         .parquet(s"$tablePath/$gen")
       primeGenSchema(tablePath, gen, staged.schema)
@@ -1250,8 +1250,8 @@ object KeyedUpsertSink {
       val folded = fold(resolveChainRead(
         readManifestBuckets(spark, tablePath, targets).get, targets,
         keys, order))
-      folded
-        .write.mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
+      StateWriter(folded)
+        .mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
         .partitionBy("__bucket")
         .parquet(s"$tablePath/$gen")
       primeGenSchema(tablePath, gen, folded.schema)
@@ -1434,8 +1434,8 @@ object KeyedUpsertSink {
         readManifestBuckets(spark, tablePath, man).get, man, keys, order)
       val rebucketed = resolved
         .withColumn("__bucket", bucketOf(keys, newBuckets))
-      rebucketed
-        .write.mode(SaveMode.ErrorIfExists)
+      StateWriter(rebucketed)
+        .mode(SaveMode.ErrorIfExists)
         .partitionBy("__bucket")
         .parquet(s"$tablePath/$gen")
       primeGenSchema(tablePath, gen, rebucketed.schema)

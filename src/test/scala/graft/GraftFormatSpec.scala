@@ -1,12 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sink.KeyedUpsertSink
+import graft.sink.{KeyedUpsertSink, MaterializedAggView}
 import graft.sources.GraftUpsertSinkProvider
 
 /** The SQL-level format surface over the keyed storage tier:
@@ -333,7 +335,6 @@ class GraftFormatSpec extends SparkSpec {
         abortIf = applied(batchId))(rows, batchId)
     assert(commit(5L, batchDf(("a", 1L, 10L))).isDefined)
     val vers0 = KeyedUpsertSink.tableVersions(t).size
-    import scala.jdk.CollectionConverters._
     def gens(): Int = {
       val s = Files.list(java.nio.file.Paths.get(t))
       try s.iterator().asScala.count(_.getFileName.toString.startsWith("gen-"))
@@ -1038,5 +1039,149 @@ class GraftFormatSpec extends SparkSpec {
       e1.getMessage.contains("complete"))
     val e2 = intercept[Exception] { start("append", streamId = "a=b"); () }
     assert(e2.getMessage.contains("streamId"))
+  }
+
+  // ---- storage format: every state writer stores zstd + parquet v2 pages
+
+  private def childDirs(dir: String, keep: String => Boolean): Set[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).filter(keep).toSet
+    finally s.close()
+  }
+
+  private def genDirs(t: String): Set[String] = childDirs(t, _.startsWith("gen"))
+
+  private def viewVersionDirs(v: String): Set[String] =
+    childDirs(v, n => n.matches("v[0-9]+-.*"))
+
+  /** Every column chunk of every parquet file under `dir`, from the footers. */
+  private def columnChunks(dir: Path)
+      : Seq[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData] = {
+    val s = Files.walk(dir)
+    val files = try s.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally s.close()
+    files.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri),
+          new org.apache.hadoop.conf.Configuration()))
+      try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).toList
+      finally r.close()
+    }
+  }
+
+  /** The state format: every chunk zstd, and int64 chunks delta-packed
+    * (at least one — a column whose dictionary pays keeps the dictionary).
+    */
+  private def assertStateFormat(what: String, dir: Path): Unit = {
+    import org.apache.parquet.column.Encoding
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val chunks = columnChunks(dir)
+    assert(chunks.nonEmpty, s"$what wrote no column chunks under $dir")
+    val codecs = chunks.map(_.getCodec).toSet
+    assert(codecs == Set(CompressionCodecName.ZSTD), s"$what: codecs $codecs")
+    assert(chunks.exists(c =>
+      c.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+        c.getEncodings.contains(Encoding.DELTA_BINARY_PACKED)),
+      s"$what: no DELTA_BINARY_PACKED int64 chunk in " +
+        chunks.map(c => s"${c.getPath}:${c.getEncodings}").mkString(", "))
+  }
+
+  test("every keyed-table and view writer stores zstd with parquet v2 delta pages") {
+    val root = Files.createTempDirectory("graft-state-format")
+    val t = root.resolve("t").toString
+    val view = root.resolve("view").toString
+    val lkeys = Seq("k")
+    def rows(ids: Range, ts: Long) =
+      ids.map(i => (i.toLong, i / 4, i * 1000L + ts, ts)).toDF("k", "g", "v", "ts")
+    def step(what: String)(write: => Unit): Unit = {
+      val before = genDirs(t)
+      write
+      val added = genDirs(t) -- before
+      assert(added.size == 1, s"$what added generations $added")
+      assertStateFormat(what, Paths.get(t, added.head))
+    }
+    Files.createDirectories(Paths.get(t))
+    step("delta upsert")(KeyedUpsertSink.upsertBucketedDelta(
+      spark, t, lkeys, order, numBuckets = 4, compactAfter = 0)(rows(0 until 200, 10L), 0L))
+    step("delta upsert")(KeyedUpsertSink.upsertBucketedDelta(
+      spark, t, lkeys, order, numBuckets = 4, compactAfter = 0)(rows(0 until 200 by 3, 20L), 1L))
+    step("delete")(KeyedUpsertSink.deleteBucketedDelta(
+      spark, t, lkeys, order, numBuckets = 4)(
+      (0 until 200 by 5).map(i => (i.toLong, 30L)).toDF("k", "ts"), 2L))
+    step("compaction fold")(assert(KeyedUpsertSink.compactBucketChains(
+      spark, t, lkeys, order, minChain = 2).nonEmpty))
+    step("rebucket")(KeyedUpsertSink.rebucketTable(spark, t, lkeys, order, newBuckets = 8))
+    step("merge-on-write")(KeyedUpsertSink.upsertBucketedOptimistic(
+      spark, t, lkeys, order, numBuckets = 8)(rows(0 until 200 by 2, 40L), 3L))
+    val aggs = Seq(MaterializedAggView.AggCol("n", lit(1L)),
+      MaterializedAggView.AggCol("sum_v", col("v")))
+    MaterializedAggView.bootstrap(spark, t, view, lkeys, order, Seq("g"), aggs)
+    val boot = viewVersionDirs(view)
+    assert(boot.size == 1, s"bootstrap published $boot")
+    assertStateFormat("view bootstrap", Paths.get(view, boot.head))
+    KeyedUpsertSink.upsertBucketedDelta(spark, t, lkeys, order,
+      numBuckets = 8, compactAfter = 0)(rows(0 until 200 by 7, 50L), 4L)
+    MaterializedAggView.refresh(spark, t, view, lkeys, order, Seq("g"), aggs)
+    val folded = viewVersionDirs(view) -- boot
+    assert(folded.size == 1, s"refresh published $folded")
+    assertStateFormat("view fold", Paths.get(view, folded.head))
+  }
+
+  test("every stored type round-trips through the state format, vectorized and row-based, tombstones included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("s", StringType),
+      StructField("d18", DecimalType(18, 2)), StructField("d38", DecimalType(38, 2)),
+      StructField("x", DoubleType), StructField("emb", ArrayType(FloatType)),
+      StructField("at", TimestampType), StructField("ts", LongType)))
+    // every 7th key carries nulls in every value column; the rest span
+    // each type's range (negative, wide, fractional, empty array)
+    def row(i: Int, ts: Long): Row =
+      if (i % 7 == 0) Row(i.toLong, null, null, null, null, null, null, ts)
+      else Row(i.toLong, s"s$i-" + "x" * (i % 5),
+        java.math.BigDecimal.valueOf((i - 100) * 123456789L + ts, 2),
+        new java.math.BigDecimal(BigInt(i).pow(15).toString + ".25").negate(),
+        i * 0.1 - ts, Seq.tabulate(i % 4)(j => (i * j).toFloat / 3),
+        new java.sql.Timestamp(1700000000000L + i * 1000L + ts), ts)
+    def batch(ids: Range, ts: Long) = spark.createDataFrame(
+      java.util.Arrays.asList(ids.map(row(_, ts)): _*), schema)
+    val t = Files.createTempDirectory("graft-state-types").resolve("t").toString
+    val lkeys = Seq("k")
+    val model = scala.collection.mutable.Map.empty[Long, Row]
+    def upsert(ids: Range, ts: Long, id: Long): Unit = {
+      KeyedUpsertSink.upsertBucketedDelta(spark, t, lkeys, order,
+        numBuckets = 4, compactAfter = 0)(batch(ids, ts), id)
+      ids.foreach(i => model(i.toLong) = row(i, ts))
+    }
+    def check(what: String): Unit =
+      for (vectorized <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+        try {
+          val got = KeyedUpsertSink.readBucketedDelta(spark, t, lkeys, order)
+            .select(schema.fieldNames.map(col): _*).collect().toSet
+          assert(got == model.values.toSet, s"$what, vectorized=$vectorized")
+          // the raw generations: tombstone rows keep their null-filled
+          // value columns beside the key and order
+          val tombs = genDirs(t).toSeq.map(g => spark.read.parquet(s"$t/$g"))
+            .filter(_.columns.contains(KeyedUpsertSink.TombstoneCol))
+            .flatMap(_.filter(col(KeyedUpsertSink.TombstoneCol) === true)
+              .select(schema.fieldNames.map(col): _*).collect())
+          assert(tombs.nonEmpty && tombs.forall(r =>
+            (1 to 6).forall(r.isNullAt)), s"$what tombstones, vectorized=$vectorized")
+        } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+      }
+    upsert(0 until 120, 10L, 0L)
+    upsert(0 until 120 by 3, 20L, 1L)
+    KeyedUpsertSink.deleteBucketedDelta(spark, t, lkeys, order, numBuckets = 4)(
+      (0 until 120 by 5).map(i => (i.toLong, 30L)).toDF("k", "ts"), 2L)
+    (0 until 120 by 5).foreach(i => model.remove(i.toLong))
+    check("after delete")
+    assert(KeyedUpsertSink.compactBucketChains(
+      spark, t, lkeys, order, minChain = 2).nonEmpty)
+    check("after compaction")
   }
 }
