@@ -167,6 +167,29 @@ object SparkEntry {
     base.resolve("t").toString
   }
 
+  /** K1 keyed LWW upsert through the keyed table: the events land in two
+    * delta commits keyed on user_id (even event ids, then odd) into 16
+    * buckets, each staged under its own generation and made visible by
+    * the put-if-absent publish of the next manifest version. Read-back
+    * must equal the declarative LWW — same oracle as etl_upsert_lww.
+    */
+  private def twoBatchUpsert(s: SparkSession, dir: String,
+      tag: String): DataFrame = {
+    val ev = Tables.events(s, dir).select(col("user_id"),
+      col("event_id").as("last_event_id"),
+      col("event_type").as("last_event_type"),
+      col("ts_ms").as("last_ts_ms"), col("ts_us"))
+    val path = scratchTable(tag, dir)
+    val keys = Seq("user_id")
+    val order = Seq(col("ts_us"), col("last_event_id"))
+    val sink = graft.sink.KeyedUpsertSink.upsertBucketedDelta(
+      s, path, keys, order, numBuckets = 16) _
+    sink(ev.filter(col("last_event_id") % 2 === 0), 0L)
+    sink(ev.filter(col("last_event_id") % 2 === 1), 1L)
+    graft.sink.KeyedUpsertSink.readBucketedDelta(s, path, keys, order)
+      .drop("ts_us")
+  }
+
   /** The REAL media corpus (PNG/WAV/GIF bytes over documents),
     * memoized to one parquet per sf dir: the corpus is a deterministic
     * pure function of doc_id, and re-ENCODING ~5 s of media per query
@@ -275,40 +298,13 @@ object SparkEntry {
     // K1 keyed LWW upsert semantics as a query (load.ts:61-78).
     "etl_upsert_lww" -> ((s, dir) => EventAnalytics.latestPerUser(Tables.events(s, dir))),
 
-    // K1 through the bucketed sink: the events stream lands in two
-    // micro-batches keyed on user_id; each batch rewrites only its hash
-    // buckets (O(touched), not O(table)). Read-back must equal the
-    // declarative LWW — same oracle as etl_upsert_lww.
-    "etl_upsert_bucketed" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("user_id"),
-        col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"),
-        col("ts_ms").as("last_ts_ms"), col("ts_us"))
-      val path = scratchTable("graft-upsert-q", dir)
-      val sink = graft.sink.KeyedUpsertSink.upsertBucketed(
-        s, path, Seq("user_id"), Seq(col("ts_us"), col("last_event_id")), 16) _
-      sink(ev.filter(col("last_event_id") % 2 === 0), 0L)
-      sink(ev.filter(col("last_event_id") % 2 === 1), 1L)
-      graft.sink.KeyedUpsertSink.readBucketed(s, path).drop("ts_us")
-    }),
-
-    // K1 through the OPTIMISTIC versioned-manifest sink: same two-batch
-    // split, but each batch commits by put-if-absent of the next
-    // manifest version — the object-store protocol (no JVM monitor, no
-    // file lock; racing drivers detect conflicts on touched-bucket
-    // overlap). Read-back must equal the declarative LWW.
-    "etl_upsert_optimistic" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("user_id"),
-        col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"),
-        col("ts_ms").as("last_ts_ms"), col("ts_us"))
-      val path = scratchTable("graft-upsert-opt-q", dir)
-      val sink = graft.sink.KeyedUpsertSink.upsertBucketedOptimistic(
-        s, path, Seq("user_id"), Seq(col("ts_us"), col("last_event_id")), 16) _
-      sink(ev.filter(col("last_event_id") % 2 === 0), 0L)
-      sink(ev.filter(col("last_event_id") % 2 === 1), 1L)
-      graft.sink.KeyedUpsertSink.readBucketedAtomic(s, path).drop("ts_us")
-    }),
+    // K1 through the keyed table's bucketed delta commit: the events
+    // land in two batches keyed on user_id, each a put-if-absent commit
+    // of the next manifest version (see twoBatchUpsert). The three names
+    // are kept from the writers this one commit replaced.
+    "etl_upsert_bucketed" -> ((s, dir) => twoBatchUpsert(s, dir, "graft-upsert-q")),
+    "etl_upsert_optimistic" -> ((s, dir) =>
+      twoBatchUpsert(s, dir, "graft-upsert-opt-q")),
 
     // Change feed over the versioned sink: batch 0 (even event ids)
     // commits v1, batch 1 (odd) commits v2; the feed from v1 is every
@@ -1024,22 +1020,9 @@ object SparkEntry {
         .drop("ts_us")
     }),
 
-    // K1 through the ATOMIC generation-manifest sink: same two-batch
-    // split, but each batch stages under gen-<id>/ and commits by one
-    // manifest rename — a crash mid-write can't tear the table. Read-back
-    // must equal the declarative LWW — same oracle as etl_upsert_lww.
-    "etl_upsert_atomic" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("user_id"),
-        col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"),
-        col("ts_ms").as("last_ts_ms"), col("ts_us"))
-      val path = scratchTable("graft-upsert-atomic-q", dir)
-      val sink = graft.sink.KeyedUpsertSink.upsertBucketedAtomic(
-        s, path, Seq("user_id"), Seq(col("ts_us"), col("last_event_id")), 16) _
-      sink(ev.filter(col("last_event_id") % 2 === 0), 0L)
-      sink(ev.filter(col("last_event_id") % 2 === 1), 1L)
-      graft.sink.KeyedUpsertSink.readBucketedAtomic(s, path).drop("ts_us")
-    }),
+    // K1 with the same two-batch split as etl_upsert_bucketed.
+    "etl_upsert_atomic" -> ((s, dir) =>
+      twoBatchUpsert(s, dir, "graft-upsert-atomic-q")),
 
     // K3 observe channel: multicast tap + per-stage tally (README.md:27).
     "etl_audit_tally" -> ((s, dir) => {

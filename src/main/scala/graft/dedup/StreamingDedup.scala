@@ -83,7 +83,10 @@ object StreamingDedup {
     * shingle Jaccard) as of the last completed trigger.
     */
   def pairs(spark: SparkSession, pairsDir: String): DataFrame =
-    KeyedUpsertSink.readBucketed(spark, pairsDir)
+    KeyedUpsertSink.readBucketedDelta(spark, pairsDir, PairKeys, PairOrder)
+
+  private val PairKeys = Seq("doc_id_a", "doc_id_b")
+  private def PairOrder = Seq(col("jaccard"))
 
   /** Near-dup cluster labels over the maintained pair table, computed on
     * READ — the [[graft.pipeline.StreamingCuration.corpusView]]
@@ -149,7 +152,7 @@ object StreamingDedup {
         .withColumn("__bkt", bktOf(numBuckets)))
     // unpin in finally: a checkpointed stream RETRIES a failed batch, and
     // an unreleased pin per attempt accumulates eagerly-materialized
-    // blocks (the upsertBucketed discipline)
+    // blocks
     try {
       // 2. touched state partitions: bounded (≤ numBuckets) driver metadata
       val touched = newRows.select("__bkt").distinct().collect().map(_.getLong(0))
@@ -179,13 +182,12 @@ object StreamingDedup {
       val verified = Dedup.verifyJaccardHashed(candidates,
         bSide.select("doc_id", "hs", "s").dropDuplicates("doc_id"), threshold)
       // 4. emit pairs (bucketed LWW on the id pair — replay-idempotent) …
-      KeyedUpsertSink.upsertBucketed(spark, pairsDir,
-        Seq("doc_id_a", "doc_id_b"), Seq(col("jaccard")), numBuckets)(
-        verified, batchId)
+      KeyedUpsertSink.upsertBucketedDelta(spark, pairsDir,
+        PairKeys, PairOrder, numBuckets)(verified, batchId)
       // … and merge the new band rows into the touched state partitions
       // (identity (band,bucket,doc_id); dynamic overwrite rewrites only
-      // the touched __bkt dirs — the upsertBucketed discipline with the
-      // layout key decoupled from the row identity)
+      // the touched __bkt dirs, with the layout key decoupled from the
+      // row identity)
       val merged = stateRows.withColumn("__o", lit(0))
         .unionByName(newRows.withColumn("__o", lit(1)))
         .withColumn("__rn", row_number().over(

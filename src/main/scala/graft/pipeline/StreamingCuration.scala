@@ -41,14 +41,13 @@ import graft.text.TextAnalysis
   * function of that relation. Arrival order, wave partitioning, and
   * at-least-once redelivery all collapse in the min-merge.
   *
-  * Scale shape at 100 TB: per-trigger cost is O(batch + touched state
-  * buckets) — the sink rewrites only the `__bucket=N` hash-partitions
-  * the batch touches. Touched-bucket honesty: fingerprints hash
-  * uniformly, so a batch of k distinct fps touches ≈ N·(1−e^(−k/N)) of
-  * N buckets; the bound is only sub-O(state) while k ≪ numBuckets —
-  * size numBuckets ≫ expected batch size at deployment (bucket ≈ one
-  * file), else a big trigger degrades to a full-state rolling
-  * compaction (O(state) per trigger, never worse). State size is the
+  * Scale shape at 100 TB: per-trigger cost is O(batch) — the sink
+  * appends the batch's survivors as one delta generation and defers the
+  * min-merge to read time; a bucket whose chain passes the sink's
+  * `compactAfter` is folded, which costs O(touched buckets). Fingerprints
+  * hash uniformly, so a batch of k distinct fps touches ≈ N·(1−e^(−k/N))
+  * of N buckets; folds stay sub-O(state) while k ≪ numBuckets — size
+  * numBuckets ≫ expected batch size at deployment (bucket ≈ one file). State size is the
   * survivor corpus itself (doc metadata only — text is dropped after
   * flagging), not the stream history. The decontamination n-gram index
   * is built ONCE at stream start (static benchmark ⇒ static index),
@@ -156,11 +155,14 @@ object StreamingCuration {
       .withColumn("contaminated", coalesce(col("contaminated"), lit(false)))
       .select("fp", "doc_id", "source", "lang_pred", "n_tokens",
         "stopword_ratio", "top_bigram_frac", "contaminated")
-    // global merge: min doc_id per fingerprint, O(touched buckets)
-    KeyedUpsertSink.upsertBucketed(
-      spark, stateDir, Seq("fp"), Seq(-col("doc_id")), numBuckets)(
-      candidates, batchId)
+    // global merge: min doc_id per fingerprint, O(batch) per trigger
+    KeyedUpsertSink.upsertBucketedDelta(
+      spark, stateDir, StateKeys, StateOrder, numBuckets)(candidates, batchId)
+    ()
   }
+
+  private val StateKeys = Seq("fp")
+  private def StateOrder = Seq(-col("doc_id"))
 
   /** The curated-corpus materialized view as of the last completed
     * trigger: clean survivors → [[Curation.finalizeCorpus]]. The dangling
@@ -169,7 +171,8 @@ object StreamingCuration {
     */
   def corpusView(spark: SparkSession, stateDir: String,
       budget: Long = 2048L): DataFrame = {
-    val clean = KeyedUpsertSink.readBucketed(spark, stateDir)
+    val clean = KeyedUpsertSink.readBucketedDelta(spark, stateDir,
+        StateKeys, StateOrder)
       .filter(!col("contaminated"))
       .drop("fp", "contaminated")
     Curation.finalizeCorpus(clean, budget)

@@ -89,19 +89,18 @@ object KeyedUpsertSink {
     * Schemas align BY NAME with null back-fill in both directions, so a
     * batch that ADDS a column merges against older rows (which get null
     * there). Key and order columns must exist in every batch
-    * ([[requireKeyOrderCols]] fails loudly otherwise); on the VERSIONED
-    * committers a batch dropping or retyping a committed value column
-    * is refused before reaching here ([[evolveSchemaMeta]] — the
-    * deliberate contract), while the metadata-less lock-path sinks keep
-    * the legacy permissive union (a lacked column survives as null on
-    * the new rows).
+    * ([[requireKeyOrderCols]] fails loudly otherwise); on the versioned
+    * table a batch dropping or retyping a committed value column is
+    * refused before reaching here ([[evolveSchemaMeta]] — the
+    * deliberate contract), while [[upsertBatch]]'s plain table keeps the
+    * permissive union (a lacked column survives as null on the new
+    * rows).
     */
   private def mergeLww(existing: Option[DataFrame], batch: DataFrame,
       keys: Seq[String], order: Seq[Column]): DataFrame = {
     // single source of truth for the guard: EVERY public entry point
-    // ([[upsertBatch]] and the four bucketed sinks) runs
-    // [[requireKeyOrderCols]] before reaching here — re-validating per
-    // merge would re-run on every optimistic restage for nothing
+    // ([[upsertBatch]] and [[upsertBucketedDelta]]) runs
+    // [[requireKeyOrderCols]] before reaching here
     val tagged = batch.withColumn("__gen", lit(1L))
     val merged = existing match {
       case Some(old) =>
@@ -126,8 +125,8 @@ object KeyedUpsertSink {
     * an O(files) delete with the table absent), and a crash between the
     * two renames self-heals on the next batch ([[recoverReplace]] moves
     * the set-aside table back). For multi-writer / reader-concurrent
-    * crash-consistency use [[upsertBucketedAtomic]] — manifest readers
-    * never observe a partial swap there.
+    * crash-consistency use [[upsertBucketedDelta]] — manifest readers
+    * never observe a partial commit there.
     */
   def upsertBatch(
       spark: SparkSession,
@@ -210,7 +209,7 @@ object KeyedUpsertSink {
   /** Best-effort reclamation of crash leftovers around a replaced table:
     * with the table present, any `.old-*` / `.staging-*` sibling older
     * than a one-minute grace is an abandoned attempt (the same dwell
-    * rule as the atomic variant's `_manifest.tmp-*` sweep).
+    * rule as [[vacuumGenerations]]' sweep of staged generations).
     */
   private def reclaimReplaceLeftovers(target: Path): Unit = {
     if (!Files.exists(target)) return
@@ -243,7 +242,7 @@ object KeyedUpsertSink {
   }
 
   /** Hash-bucket partition of the key tuple — the physical layout key for
-    * [[upsertBucketed]]. An internal layout detail (never an output
+    * [[upsertBucketedDelta]]. An internal layout detail (never an output
     * value), so the engine-native xxhash64 is fine here.
     */
   def bucketOf(keys: Seq[String], numBuckets: Int): Column =
@@ -304,15 +303,13 @@ object KeyedUpsertSink {
       case Some(nb) => check(nb)
       case None =>
         // adopting on a PRE-EXISTING (pre-sidecar) table: the adopted
-        // count can only be validated against on-disk evidence — any
-        // bucket id >= numBuckets proves this writer's layout wrong
-        // before it corrupts anything. (The residual risk — a legacy
-        // table whose populated ids happen to all fall below a too-small
+        // count can only be validated against the committed manifest —
+        // any bucket id >= numBuckets proves this writer's layout wrong
+        // before it corrupts anything. (The residual risk — a table
+        // whose populated ids happen to all fall below a too-small
         // numBuckets — would need a data re-hash to catch; tables
         // created after the sidecar existed never face it.)
-        val existing = readManifest(tablePath).keySet ++
-          diskBucketIds(Paths.get(tablePath))
-        existing.find(_ >= numBuckets).foreach { b =>
+        readManifest(tablePath).keySet.find(_ >= numBuckets).foreach { b =>
           throw new IllegalArgumentException(
             s"$tablePath holds bucket id $b but this writer is configured " +
               s"with numBuckets=$numBuckets — the table predates the " +
@@ -324,232 +321,6 @@ object KeyedUpsertSink {
           s"numBuckets=$numBuckets\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
         // lost race → another first-committer published; validate theirs
         check(readLayout(tablePath).get)
-    }
-  }
-
-  /** Top-level `__bucket=N` partition ids of the PLAIN bucketed layout
-    * (the manifest variants nest them under `gen-*`; those ids come from
-    * [[readManifest]] instead). Adoption-time evidence only.
-    */
-  private def diskBucketIds(dir: Path): Set[Long] = {
-    if (!Files.exists(dir)) return Set.empty
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(dir)
-    try s.iterator().asScala.flatMap { p =>
-      val n = p.getFileName.toString
-      if (n.startsWith("__bucket=")) n.stripPrefix("__bucket=").toLongOption
-      else None
-    }.toSet finally s.close()
-  }
-
-  /** Bucketed streaming upsert: the table lives as `__bucket=N/` hash
-    * partitions of the key, and each micro-batch rewrites ONLY the
-    * buckets it touches (dynamic partition overwrite) — per-trigger cost
-    * is O(touched buckets), not O(table). This is the no-Delta answer to
-    * the flat [[upsertBatch]]'s known non-scale rewrite: with buckets
-    * sized so each holds ~one output-file of keys, a key-local batch
-    * rewrites a handful of directories while a 100 TB table stands still.
-    * (A transactional format would still be the production choice — this
-    * keeps the same layout discipline a bucketed MERGE relies on.)
-    *
-    * Same LWW/generation semantics as [[upsertBatch]]; replays merge to
-    * a no-op. Point lookups prune to one bucket directory
-    * ([[readBucketed]] + a `__bucket = bucketOf(...)` filter).
-    */
-  def upsertBucketed(
-      spark: SparkSession,
-      tablePath: String,
-      keys: Seq[String],
-      order: Seq[Column],
-      numBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit = {
-    // pin the batch before deriving `touched`: the write re-executes the
-    // plan, and a non-deterministic upstream could otherwise emit a row
-    // into a bucket absent from `touched` — dynamic overwrite would then
-    // replace that bucket WITHOUT its merged old rows (silent deletion).
-    // The persist closes this in single-JVM mode (blocks cannot be lost);
-    // on a cluster an executor loss can still force a recompute, which is
-    // why [[upsertBucketedAtomic]] — whose post-write disk listing
-    // fail-louds on any unmerged bucket — is the multi-executor
-    // deployment path.
-    // guard BEFORE bucketing: a batch missing a KEY column must surface
-    // as the contract message, not as bucketOf's unresolved-column error
-    requireKeyOrderCols(batch, keys, order)
-    val bucketed = batch
-      .withColumn("__bucket", bucketOf(keys, numBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // distinct buckets of a micro-batch: a bounded-size (≤ numBuckets)
-      // driver list — partition-pruning metadata, not data
-      val touched = bucketed.select("__bucket").distinct()
-        .collect().map(_.getLong(0))
-      // empty batch: nothing to merge, and writing would leave a
-      // marker-only directory behind
-      if (touched.isEmpty) return
-      ensureLayout(tablePath, numBuckets)
-      val target = Paths.get(tablePath)
-      // mergeSchema: a widened batch leaves touched buckets on the new
-      // schema while untouched buckets keep the old one — without the
-      // union the read would pin whichever file's schema it sampled.
-      // (The atomic/optimistic variants get evolution from per-generation
-      // scans instead, without the per-file footer cost at scale.)
-      val existing =
-        if (!nonEmptyDir(target)) None
-        else Some(spark.read.option("mergeSchema", "true").parquet(tablePath)
-          .filter(col("__bucket").isin(touched: _*))) // prunes to touched dirs
-      StateWriter(mergeLww(existing, bucketed, keys, order))
-        .mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic") // replace touched buckets only
-        .partitionBy("__bucket")
-        .parquet(tablePath)
-    } finally bucketed.unpersist()
-  }
-
-  /** Read the bucketed table without its layout column (mergeSchema so
-    * partially-evolved bucket directories read as the by-name union).
-    */
-  def readBucketed(spark: SparkSession, tablePath: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(tablePath).drop("__bucket")
-
-  // ─────────────────────────── atomic generation-manifest variant ──
-
-  /** Atomic bucketed upsert: [[upsertBucketed]]'s dynamic partition
-    * overwrite rewrites touched bucket directories IN PLACE, so a writer
-    * dying mid-batch leaves some buckets new and some old — a torn
-    * table. This variant writes each batch's merged buckets under a
-    * fresh `gen-<batchId>/` directory and then atomically swaps a
-    * manifest file mapping every bucket to the generation holding its
-    * current version (one POSIX rename — the same generation-pointer
-    * discipline a transactional table format uses, minus the format).
-    * A crash anywhere before the rename leaves the manifest untouched:
-    * readers keep resolving the previous consistent generation set, and
-    * the orphaned gen directory is garbage, not corruption (reclaimed by
-    * [[vacuumGenerations]]).
-    *
-    * Same LWW/generation-column merge and O(touched buckets)/trigger
-    * cost as [[upsertBucketed]]: the merge reads only the touched
-    * buckets' current directories (resolved via the manifest), and the
-    * batch replays to a no-op on redelivery.
-    */
-  def upsertBucketedAtomic(
-      spark: SparkSession,
-      tablePath: String,
-      keys: Seq[String],
-      order: Seq[Column],
-      numBuckets: Int = 64)(batch: DataFrame, batchId: Long): Unit =
-    // the lock spans merge AND commit — see withTableLock for why a
-    // commit-only lock still loses rows under concurrent writers
-    withTableLock(tablePath) {
-      writeGeneration(spark, tablePath, keys, order, numBuckets, batch, batchId) match {
-        case Some((gen, touched)) => commitManifestLocked(tablePath, touched, gen)
-        case None => () // empty batch: nothing staged, nothing to commit
-      }
-    }
-
-  /** Stage step: merge the batch against the touched buckets' current
-    * versions and write the result under a FRESH per-attempt generation
-    * directory — NOT yet visible to readers. Returns the generation name
-    * and the bucket ids actually written for [[commitManifest]]; None for
-    * an empty batch. Public so the crash-recovery spec can stage without
-    * committing (simulating a writer killed between the bucket writes and
-    * the manifest swap).
-    *
-    * Two redelivery hazards are closed here:
-    *  - every attempt stages under its own directory ([[nextGenName]]):
-    *    replaying an already-committed batchId must never overwrite the
-    *    generation the manifest (and the merge plan's lazy read) still
-    *    points at — that overwrite deletes files mid-plan and tears the
-    *    table. With unique attempt dirs the replay merges old-vs-new to a
-    *    LWW no-op into a new generation and the superseded one becomes
-    *    vacuumable garbage, never corruption.
-    *  - the batch is pinned (persist + the `touched` action) before the
-    *    merge, and the committed bucket list is derived by LISTING the
-    *    generation directory after the write — the manifest can only ever
-    *    reference `__bucket=N` directories that exist on disk, even if
-    *    the upstream batch expression is non-deterministic.
-    */
-  def writeGeneration(
-      spark: SparkSession,
-      tablePath: String,
-      keys: Seq[String],
-      order: Seq[Column],
-      numBuckets: Int,
-      batch: DataFrame,
-      batchId: Long): Option[(String, Seq[Long])] = {
-    // guard BEFORE bucketing: a batch missing a KEY column must surface
-    // as the contract message, not as bucketOf's unresolved-column error
-    requireKeyOrderCols(batch, keys, order)
-    val bucketed = batch
-      .withColumn("__bucket", bucketOf(keys, numBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // distinct buckets of a micro-batch: bounded (≤ numBuckets) metadata
-      val touched = bucketed.select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
-      if (touched.isEmpty) return None
-      ensureLayout(tablePath, numBuckets)
-      val manifest = readManifest(tablePath)
-      Some(stageAgainst(spark, tablePath, keys, order, bucketed, touched,
-        nextGenName(tablePath, batchId),
-        manifest.filter { case (b, _) => touched.contains(b) }))
-    } finally bucketed.unpersist()
-  }
-
-  /** Merge the (already bucketed + pinned) batch against an EXPLICIT
-    * bucket→generation base and write the result under the given fresh
-    * attempt directory. The shared staging core of the lock path
-    * ([[writeGeneration]] passes the current manifest) and the
-    * optimistic path ([[upsertBucketedOptimistic]] passes the version
-    * it will later validate at commit time). Returns (gen, bucket ids
-    * actually written).
-    */
-  private def stageAgainst(
-      spark: SparkSession,
-      tablePath: String,
-      keys: Seq[String],
-      order: Seq[Column],
-      bucketed: DataFrame,
-      touched: Seq[Long],
-      gen: String,
-      base: Map[Long, String]): (String, Seq[Long]) = {
-    // a base bucket may carry a delta CHAIN (mixed-mode table: delta
-    // commits landed since the last merge-on-write) — resolve it first,
-    // so this merge doubles as that bucket's compaction
-    val existing = readManifestBuckets(spark, tablePath, base)
-      .map(resolveChainRead(_, base, keys, order))
-    val merged = mergeLww(existing, bucketed, keys, order)
-    StateWriter(merged)
-      .mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
-      .partitionBy("__bucket")
-      .parquet(s"$tablePath/$gen")
-    primeGenSchema(tablePath, gen, merged.schema)
-    val written = listBucketIds(Paths.get(tablePath, gen))
-    // the write RE-EXECUTES the batch plan; if the persist's blocks
-    // were lost (executor failure) a non-deterministic batch can
-    // recompute rows into a bucket absent from `touched` — whose old
-    // rows were then never merged. Committing that generation would
-    // silently drop them, so fail the attempt loudly instead: attempt
-    // dirs are write-once and vacuum-reclaimed, and the replay
-    // re-merges from scratch.
-    require(written.forall(touched.contains),
-      s"batch recompute emitted unmerged buckets " +
-        s"${written.filterNot(touched.contains).mkString(",")} " +
-        s"(non-deterministic batch after lost persist blocks); " +
-        s"attempt $gen abandoned, replay will re-merge")
-    (gen, written)
-  }
-
-  /** First attempt of a batch stages under `gen-<batchId>`; each replay
-    * under `gen-<batchId>-r<k>` for the first free k. Attempt dirs are
-    * write-once, so a stage never deletes data a live plan or manifest
-    * still references.
-    */
-  private def nextGenName(tablePath: String, batchId: Long): String = {
-    val base = s"gen-$batchId"
-    if (!Files.exists(Paths.get(tablePath, base))) base
-    else {
-      var k = 1
-      while (Files.exists(Paths.get(tablePath, s"$base-r$k"))) k += 1
-      s"$base-r$k"
     }
   }
 
@@ -565,104 +336,31 @@ object KeyedUpsertSink {
     } finally s.close()
   }
 
-  /** Commit step: point the touched buckets at `gen` via write-tmp +
-    * fsync + atomic rename. THE visibility boundary — everything before
-    * this is invisible to readers. Also snapshots the committed manifest
-    * under `_hist/<gen>` so [[vacuumGenerations]] can grant stalled
-    * readers a grace window of prior manifests.
+  // ─────────────────────────── versioned manifest commit protocol ──
+
+  /** Result of one [[upsertBucketedDelta]] batch: the committed manifest
+    * version, the generation holding the batch's rows, and how many
+    * commit attempts lost the put-if-absent race to another writer.
     */
-  /** Per-table JVM monitors backing [[withTableLock]] (the OS file lock
-    * below throws OverlappingFileLockException for two threads of ONE
-    * process, so in-process callers serialize here first).
-    */
-  private val manifestMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Per-table writer serialization: JVM monitor + OS file lock
-    * (local/NFS cross-process). [[upsertBucketedAtomic]] holds it across
-    * the WHOLE read-merge-stage-commit: locking only the manifest update
-    * would still let a concurrent writer MERGE against a manifest
-    * snapshot that misses the other's commit to a shared bucket — lost
-    * rows with a perfectly consistent-looking manifest. Writers to
-    * DIFFERENT tables stay fully parallel. This lock is the
-    * single-host/local-FS fast path: on object stores (no file locks,
-    * racing DRIVERS) use [[upsertBucketedOptimistic]], whose versioned
-    * put-if-absent commit needs no lock at all.
-    */
-  private def withTableLock[A](tablePath: String)(body: => A): A =
-    manifestMonitors.computeIfAbsent(tablePath, _ => new Object).synchronized {
-      Files.createDirectories(Paths.get(tablePath))
-      val ch = java.nio.channels.FileChannel.open(
-        Paths.get(tablePath, "_manifest.lock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try body finally lock.release()
-      } finally ch.close()
-    }
-
-  def commitManifest(tablePath: String, touched: Seq[Long], gen: String): Unit =
-    withTableLock(tablePath)(commitManifestLocked(tablePath, touched, gen))
-
-  private def commitManifestLocked(tablePath: String, touched: Seq[Long],
-      gen: String): Unit = {
-    // protocol one-way valve: once a versioned chain exists the table
-    // belongs to the optimistic sink — a lock-path commit would write the
-    // legacy `_manifest`, which every reader now ignores in favor of the
-    // chain head, silently unpublishing this commit. This check is
-    // race-free, not check-then-act: it runs under withTableLock, and the
-    // only commit that can CREATE the chain concurrently (the optimistic
-    // v0→v1 migration publish) takes the same lock
-    require(versionFiles(Paths.get(tablePath)).isEmpty,
-      s"$tablePath has a versioned manifest chain (optimistic protocol); " +
-        "use upsertBucketedOptimistic — the lock-path commit would be invisible")
-    val next = readManifest(tablePath) ++ touched.map(_ -> gen)
-    val bytes = renderManifest(next)
-    val tmp = Paths.get(tablePath, s"_manifest.tmp-$gen")
-    writeFsynced(tmp, bytes)
-    Files.move(tmp, Paths.get(tablePath, "_manifest"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    fsyncDir(Paths.get(tablePath)) // make the rename itself durable
-    val hist = Paths.get(tablePath, "_hist")
-    Files.createDirectories(hist)
-    // same tmp + atomic-rename discipline as _manifest: an in-place
-    // write crashed (or read) halfway leaves a truncated snapshot that
-    // poisons every later vacuumGenerations(grace>0) parse
-    val histTmp = hist.resolve(s".$gen.tmp")
-    writeFsynced(histTmp, bytes)
-    Files.move(histTmp, hist.resolve(gen),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  // ─────────────────── optimistic (object-store-safe) commit variant ──
-
-  /** Result of one [[upsertBucketedOptimistic]] batch: the committed
-    * manifest version, the generation holding the batch's buckets, how
-    * many commit attempts lost the put-if-absent race to a DISJOINT
-    * writer (retried with no re-merge), and how many times an
-    * OVERLAPPING writer forced a full re-merge.
-    */
-  case class OptimisticCommit(version: Long, gen: String,
-      commitRetries: Int, restages: Int)
+  case class OptimisticCommit(version: Long, gen: String, commitRetries: Int)
 
   /** Manifest chain head: (version, bucket→gen map). Version 0 = no
-    * versioned commit yet; its map is the legacy `_manifest` when one
-    * exists (so a lock-path table upgrades in place: the first
-    * optimistic commit writes `_manifest.v1` carrying the legacy
-    * entries forward) and empty otherwise.
+    * versioned commit yet, with an empty map.
     */
   private[graft] def versionedHead(tablePath: String): (Long, Map[Long, String]) = {
     val (v, m, _) = versionedHeadFull(tablePath)
     (v, m)
   }
 
-  /** Chain head including its metadata (the legacy v0 state has none —
-    * pre-meta formats resolve layout from the `_layout` sidecar). ONE
-    * read of the head file feeds both parsers — this sits on every
-    * commit attempt's critical path.
+  /** Chain head including its metadata (v0 has none — pre-meta formats
+    * resolve layout from the `_layout` sidecar). ONE read of the head
+    * file feeds both parsers — this sits on every commit attempt's
+    * critical path.
+    *
+    * A directory holding the single-file `_manifest` of the retired
+    * lock-path writers but no version file is refused: read as an empty
+    * v0, its rows would vanish from every read, and a commit on top of
+    * it would publish a v1 that hides them for good.
     */
   private[graft] def versionedHeadFull(
       tablePath: String): (Long, Map[Long, String], Map[String, String]) =
@@ -671,7 +369,14 @@ object KeyedUpsertSink {
         import scala.jdk.CollectionConverters._
         val lines = Files.readAllLines(p).asScala.toSeq
         (v, parseManifestLines(lines), parseMetaLines(lines))
-      case None => (0L, legacyManifest(tablePath), Map.empty)
+      case None =>
+        val lockPath = Paths.get(tablePath, "_manifest")
+        if (Files.exists(lockPath)) throw new IllegalStateException(
+          s"$lockPath is the manifest of a lock-path table, a format this " +
+            "engine no longer reads or writes — its rows would read as an " +
+            "empty table; rewrite with the current writer (upsert its rows " +
+            "into a new table through upsertBucketedDelta)")
+        (0L, Map.empty, Map.empty)
     }
 
   /** All committed `_manifest.v*` files as (version, path). Published
@@ -745,28 +450,15 @@ object KeyedUpsertSink {
   private[graft] case object BasePruned extends Publish
 
   /** One optimistic attempt to publish `entries` as the successor of
-    * head `ver` (whose map at stage time was `manAtStage`). Shared by
-    * every versioned committer (merge-on-write, delta append,
-    * compaction).
-    *
-    * The v0→v1 transition is the ONE commit that can race a legacy
-    * lock-path writer (its commit updates `_manifest`, which v1 must
-    * carry forward in full). Check-then-publish without the lock has a
-    * silent-unpublish window — legacy commits between the head read and
-    * the v1 publish would vanish behind the chain head. Lock-path
-    * writers hold this same lock for their whole commit, so under it
-    * the legacy manifest is frozen: re-read it, bail as a lost race on
-    * any drift. Steady state (ver >= 1) never comes here: legacy
-    * writers are refused once a chain exists, so v2+ is lock-free (on a
-    * real object store there are no legacy lock-path writers at all, so
-    * the lock is a local-FS-only migration artifact).
+    * head `ver`. Shared by every versioned committer (delta append,
+    * rebucket). v1 has no base file to guard, and put-if-absent alone
+    * makes two first-committers race safely; every later version goes
+    * through [[tryCommitSuccessor]]. No lock, no monitor.
     */
   private def publishNext(tablePath: String, ver: Long,
-      manAtStage: Map[Long, String], entries: Map[Long, String],
-      meta: Map[String, String] = Map.empty): Publish =
-    if (ver == 0L) withTableLock(tablePath) {
-      if (legacyManifest(tablePath) == manAtStage &&
-        tryCommitVersion(tablePath, 1L, entries, meta)) Published else LostRace
+      entries: Map[Long, String], meta: Map[String, String]): Publish =
+    if (ver == 0L) {
+      if (tryCommitVersion(tablePath, 1L, entries, meta)) Published else LostRace
     } else tryCommitSuccessor(tablePath, ver, entries, meta)
 
   /** Guarded successor publish for a versioned head (ver >= 1): refuses
@@ -822,175 +514,46 @@ object KeyedUpsertSink {
         "(vacuum keep-window shorter than a stage-commit window)"
   }
 
-  /** Object-store-safe bucketed upsert: same LWW merge, bucket layout,
-    * generation staging, and O(touched buckets)/trigger cost as
-    * [[upsertBucketedAtomic]], but the commit is OPTIMISTIC CONCURRENCY
-    * over a versioned manifest chain instead of a per-table lock —
-    * `FileChannel.lock()` does not exist on S3/GCS, and at 100 TB two
-    * DRIVERS (not threads) can race one table. Protocol:
+  // ──────────────────────────────── the keyed upsert (merge-on-read) ──
+
+  /** THE bucketed keyed upsert — every bucketed writer of the engine
+    * (the keyed table, its SQL surfaces, the streaming operators' state
+    * stores) commits through it. Stage ONLY the batch's own rows
+    * (compacted to one row per key) under a fresh write-once generation,
+    * then APPEND that generation to each touched bucket's manifest chain
+    * by publishing the next `_manifest.v<N>` with put-if-absent; the LWW
+    * merge against older rows is deferred to [[readBucketedDelta]]
+    * (order, then chain recency). A commit writes O(batch) bytes, and
+    * [[compactBucketChains]] (auto-triggered past `compactAfter`, or run
+    * by a caller after a bulk load) folds chains back to one generation,
+    * bounding read amplification.
     *
-    *  1. read the chain head `vN` and stage the merge against the
-    *     CURRENT versions of the touched buckets (fresh write-once
-    *     attempt dir — invisible to readers);
-    *  2. attempt to publish `_manifest.v(N+1)` with create-if-absent
-    *     ([[putIfAbsent]] — the primitive object stores do give you);
-    *  3. lost the race → re-read the head and detect conflict on
-    *     TOUCHED-BUCKET OVERLAP: if none of this batch's buckets moved,
-    *     the staged merge is still exact — re-attempt the commit on top
-    *     of the new head with NO re-merge (disjoint writers of one
-    *     table proceed in parallel, serialized only at the final
-    *     put-if-absent); if a bucket moved, the staged merge is stale —
-    *     re-merge against the new head and try again. Abandoned
-    *     attempt dirs are garbage for [[vacuumGenerations]], never
-    *     corruption.
+    * Crash safety: nothing is visible before the version file is
+    * published, so a writer killed after staging leaves the table at its
+    * last commit and an unreferenced generation that
+    * [[vacuumGenerations]] reclaims. Concurrency: a staged delta depends
+    * on NO base state, so a lost commit race — even on OVERLAPPING
+    * buckets — just re-appends to the fresh head's chains and retries,
+    * with no re-merge and no lock; separate drivers can share a table.
+    * Chain order = commit order, so order-ties resolve to the later
+    * COMMIT, exactly [[mergeLww]]'s batch-beats-existing rule replayed
+    * at read time; at-least-once redelivery appends a duplicate delta
+    * whose rows tie and resolve identically — the replay is a read-level
+    * no-op.
     *
-    * Liveness: some writer commits at every version number, so a batch
-    * retries at most once per competing commit; `maxAttempts` bounds
-    * TOTAL commit attempts — re-stages and disjoint-race retries alike —
-    * so a writer starved by a hot-table storm surfaces as the exception
-    * (the caller replays the batch — at-least-once delivery already
-    * demands that) instead of spinning unboundedly.
-    *
-    * Steady-state writers (ver >= 1) serialize on NOTHING in-process: no
-    * JVM monitor, no file lock (the racing-writers spec runs two threads
-    * through this very path). The ONE exception is the v0→v1 migration
-    * commit, which briefly takes the legacy table lock: it must carry
-    * the legacy `_manifest` forward in full, and a lock-path writer can
-    * update that file concurrently — publishing v1 under the same lock
-    * those writers hold is what makes the upgrade valve race-free
-    * rather than check-then-act (on a real object store there are no
-    * legacy lock-path writers at all, so the lock is a local-FS-only
-    * migration artifact). The lock-path [[upsertBucketedAtomic]] remains
-    * the single-writer local-FS fast path; a table it wrote upgrades to
-    * this protocol in place (legacy `_manifest` reads as version 0),
-    * after which lock-path commits are refused.
-    *
-    * Schema evolution: a batch may ADD columns relative to earlier
-    * generations (older rows read null there) — the merge and
-    * [[readBucketedAtomic]] align by name across generations, and the
-    * committed column contract widens atomically with the commit. A
+    * Schema evolution: a batch may ADD columns (older rows read null
+    * there) and the committed column contract widens with the commit; a
     * batch DROPPING or RETYPING a committed column is refused loudly
     * ([[evolveSchemaMeta]]); key and order columns must exist in every
     * batch.
     *
     * `onBeforeFirstCommit` is a deterministic-interleaving seam for the
-    * conflict specs (runs once, between the first stage and the first
+    * race and crash specs (runs once, between the stage and the first
     * commit attempt); production callers leave the default no-op.
     *
     * Returns None for an empty batch, else the commit stats.
-    */
-  def upsertBucketedOptimistic(
-      spark: SparkSession,
-      tablePath: String,
-      keys: Seq[String],
-      order: Seq[Column],
-      numBuckets: Int = 64,
-      maxAttempts: Int = 20,
-      onBeforeFirstCommit: () => Unit = () => ())(
-      batch: DataFrame, batchId: Long): Option[OptimisticCommit] = {
-    Files.createDirectories(Paths.get(tablePath))
-    // guard BEFORE bucketing: a batch missing a KEY column must surface
-    // as the contract message, not as bucketOf's unresolved-column error
-    requireKeyOrderCols(batch, keys, order)
-    val bucketed = batch
-      .withColumn("__bucket", bucketOf(keys, numBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched = bucketed.select("__bucket").distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
-      if (touched.isEmpty) return None
-      ensureLayout(tablePath, numBuckets)
-      var (ver, man, meta) = versionedHeadFull(tablePath)
-      // guard the FIRST attempt too: a rebucket can commit between
-      // ensureLayout and this head read, and an unchecked first
-      // put-if-absent would land old-layout buckets in the new layout's
-      // manifest (the retry-path check alone leaves that window open)
-      requireLayoutUnchanged(tablePath, numBuckets, meta)
-      meta = evolveSchemaMeta(spark, tablePath,
-        specMeta(spark, tablePath, meta, keys, order), batch.schema)
-      var retries = 0
-      var restages = 0
-      var hookPending = true
-      var committed: Option[OptimisticCommit] = None
-      // bounds TOTAL commit attempts — disjoint-race retries of the inner
-      // loop included, not just outer re-stages — so a starved writer on
-      // a hot table always surfaces as the exception below instead of
-      // spinning unboundedly on put-if-absent losses
-      var attempt = 0
-      while (committed.isEmpty && attempt < maxAttempts) {
-        val base = man.filter { case (b, _) => touched.contains(b) }
-        // attempt names carry a random suffix: two DRIVERS replaying the
-        // same batchId must never race into one staging dir (the lock
-        // path's exists-then-pick nextGenName assumes a single writer)
-        val gen = s"gen-$batchId-u${java.util.UUID.randomUUID().toString.take(8)}"
-        val (_, written) =
-          stageAgainst(spark, tablePath, keys, order, bucketed, touched, gen, base)
-        var stale = false
-        while (committed.isEmpty && !stale && attempt < maxAttempts) {
-          attempt += 1
-          if (hookPending) { hookPending = false; onBeforeFirstCommit() }
-          publishNext(tablePath, ver, man, man ++ written.map(_ -> gen), meta) match {
-            case Published =>
-              committed = Some(OptimisticCommit(ver + 1, gen, retries, restages))
-            case res =>
-            retries += 1
-            val (v2, m2, meta2) = versionedHeadFull(tablePath)
-            // v2 == ver is legal only at ver 0: legacy-manifest drift
-            // (the handshake above bailed), where m2 is the fresh legacy
-            // map to carry forward on the next attempt
-            require(v2 > ver || ver == 0L, staleHeadMsg(tablePath, ver, v2, res))
-            requireLayoutUnchanged(tablePath, numBuckets, meta2)
-            ver = v2
-            man = m2
-            meta = evolveSchemaMeta(spark, tablePath,
-              specMeta(spark, tablePath, meta2, keys, order), batch.schema)
-            // conflict = any bucket WE touched moved since we staged
-            stale = touched.exists(b => m2.get(b) != base.get(b))
-            if (stale) restages += 1
-          }
-        }
-      }
-      Some(committed.getOrElse(throw new IllegalStateException(
-        s"$tablePath: optimistic commit lost $maxAttempts commit attempts " +
-          s"on batch $batchId — hot-table storm; replay the batch")))
-    } finally bucketed.unpersist()
-  }
-
-  // ───────────────────────── merge-on-read delta (small-batch) variant ──
-
-  /** Merge-on-READ upsert: stage ONLY the batch's own rows (compacted to
-    * one row per key) and APPEND the generation to each touched bucket's
-    * manifest chain; the LWW merge against older rows is deferred to
-    * [[readBucketedDelta]] (order, then chain recency). The write-
-    * amplification complement of [[upsertBucketedOptimistic]]: that path
-    * rewrites every touched bucket in full per commit — correct, but at
-    * 100 TB a trickle of small batches pays the whole bucket over and
-    * over — while this path writes O(batch) bytes per commit and lets
-    * [[compactBucketChains]] (auto-triggered past `compactAfter`) fold
-    * chains back to one generation, bounding read amplification. The
-    * classic copy-on-write vs merge-on-read trade every lakehouse format
-    * documents: pick this sink for frequent small batches, the
-    * merge-on-write one for rare bulk loads.
     *
-    * Concurrency is strictly better than merge-on-write: a staged delta
-    * depends on NO base state, so a lost commit race — even on
-    * OVERLAPPING buckets — just re-appends to the fresh head's chains
-    * and retries. No re-merge, no re-stage, ever (`restages` is 0 by
-    * construction). Chain order = commit order, so order-ties resolve
-    * to the later COMMIT, exactly [[mergeLww]]'s batch-beats-existing
-    * rule replayed at read time; at-least-once redelivery appends a
-    * duplicate delta whose rows tie and resolve identically — the
-    * replay is a read-level no-op.
-    *
-    * Interop: chains ride the same versioned-manifest protocol
-    * (conflict detection compares chain STRINGS, so appends are visible
-    * to merge-on-write racers), and a merge-on-write commit on a
-    * chained bucket resolves the chain first — doubling as that
-    * bucket's compaction. Same v0→v1 legacy-table migration handshake.
-    *
-    * Returns None for an empty batch, else the commit stats.
-    */
-  /** `extraMeta` rides the SAME manifest commit as the data (and every
+    * `extraMeta` rides the SAME manifest commit as the data (and every
     * retry re-applies it over the fresh head's meta) — the atomicity a
     * streaming sink's exactly-once marker needs: the Delta
     * `txn (appId, version)` idea on this table's own `#key=value`
@@ -1089,9 +652,9 @@ object KeyedUpsertSink {
       def dropStage(): Unit = dropStageEarly()
       var aborted = abortIf(meta)
       if (!aborted) {
-        // first-attempt layout guard — same window as the optimistic
-        // path: a rebucket committing during the stage must fail this
-        // batch loudly, not let its old-layout buckets into the manifest.
+        // first-attempt layout guard: a rebucket committing during the
+        // stage must fail this batch loudly, not let its old-layout
+        // buckets into the manifest.
         // A refusal here was a free pre-stage refusal before the
         // single-execution reorder — drop the staged dir so it stays one
         try {
@@ -1114,16 +677,16 @@ object KeyedUpsertSink {
         // extraMetaAt sees the VERSION this attempt commits at (ver+1,
         // current per retry) — the channel deleteBucketedDelta uses to
         // record the landed tombstone version for exact feed refusals
-        publishNext(tablePath, ver, man, entries,
+        publishNext(tablePath, ver, entries,
           meta ++ extraMetaAt(ver + 1)) match {
           case Published =>
-            committed = Some(OptimisticCommit(ver + 1, gen, retries, 0))
+            committed = Some(OptimisticCommit(ver + 1, gen, retries))
           case res =>
             retries += 1
             val (v2, m2, meta2) = versionedHeadFull(tablePath)
             if (abortIf(meta2)) aborted = true
             else {
-              require(v2 > ver || ver == 0L, staleHeadMsg(tablePath, ver, v2, res))
+              require(v2 > ver, staleHeadMsg(tablePath, ver, v2, res))
               requireLayoutUnchanged(tablePath, numBuckets, meta2)
               ver = v2
               man = m2
@@ -1174,7 +737,7 @@ object KeyedUpsertSink {
     * appended while it staged is carried forward behind the compacted
     * generation (rewrite and append commute — the Delta/Iceberg
     * rewrite-vs-append rule); if a bucket's prefix itself changed
-    * (another compactor, or a merge-on-write commit), the staged fold is
+    * (another compactor, purge or rebucket), the staged fold is
     * stale for that bucket and the whole pass re-stages against the new
     * head. Old delta generations become unreferenced and are reclaimed
     * by [[vacuumGenerations]] under its usual reader-grace window.
@@ -1240,7 +803,7 @@ object KeyedUpsertSink {
     var hookPending = true
     while (attempt < maxAttempts) {
       val (ver, man, meta0) = versionedHeadFull(tablePath)
-      // a v0/legacy table has no versioned chains to rewrite — the
+      // a never-committed table has no versioned chains to rewrite — the
       // blanket-maintenance-sweep answer is the empty no-op
       if (ver < 1L) return Seq.empty
       var meta = specMeta(spark, tablePath, meta0, keys, order)
@@ -1445,12 +1008,12 @@ object KeyedUpsertSink {
       // records the new layout atomically with it
       val entries = written.map(_ -> gen).toMap
       if (hookPending) { hookPending = false; onBeforeFirstCommit() }
-      publishNext(tablePath, ver, man, entries,
+      publishNext(tablePath, ver, entries,
         meta + ("numBuckets" -> newBuckets.toString)) match {
         case Published => return ver + 1
         case res =>
           val (v2, _) = versionedHead(tablePath)
-          require(v2 > ver || ver == 0L, staleHeadMsg(tablePath, ver, v2, res))
+          require(v2 > ver, staleHeadMsg(tablePath, ver, v2, res))
           // ANY concurrent commit invalidates a whole-table image —
           // loop back and re-stage against the new head
       }
@@ -1623,25 +1186,11 @@ object KeyedUpsertSink {
       try ch.force(true) finally ch.close()
     } catch { case _: java.io.IOException => () }
 
-  /** Current bucket → generation mapping; empty before the first commit.
-    * When a VERSIONED manifest chain exists ([[upsertBucketedOptimistic]]),
-    * its head is authoritative; otherwise the lock-path `_manifest` file.
-    * A table upgraded to the optimistic protocol therefore keeps reading
-    * correctly through the same entry point.
+  /** Current bucket → generation chain mapping at the head version;
+    * empty before the first commit.
     */
   def readManifest(tablePath: String): Map[Long, String] =
     versionedHead(tablePath)._2
-
-  /** The lock-path `_manifest` file (pre-versioned format). */
-  private def legacyManifest(tablePath: String): Map[Long, String] = {
-    val p = Paths.get(tablePath, "_manifest")
-    if (!Files.exists(p)) Map.empty else parseManifest(p)
-  }
-
-  private def parseManifest(p: Path): Map[Long, String] = {
-    import scala.jdk.CollectionConverters._
-    parseManifestLines(Files.readAllLines(p).asScala.toSeq)
-  }
 
   private def parseManifestLines(lines: Seq[String]): Map[Long, String] =
     lines
@@ -1900,10 +1449,6 @@ object KeyedUpsertSink {
     *    LWW merge would silently null-fill it on every row the batch
     *    wins, which reads as data loss; a caller that really means it
     *    carries the column explicitly (`lit(null).cast(...)`).
-    *
-    * The lock-path sinks ([[upsertBucketed]]/[[upsertBucketedAtomic]])
-    * keep the legacy permissive union — they have no metadata channel;
-    * the versioned protocol is the 100 TB path and gets the contract.
     */
   private def evolveSchemaMeta(spark: SparkSession, tablePath: String,
       meta: Map[String, String],
@@ -1948,12 +1493,10 @@ object KeyedUpsertSink {
   }
 
   /** A manifest VALUE is a `;`-joined generation chain, oldest first:
-    * merge-on-write commits ([[upsertBucketedAtomic]] /
-    * [[upsertBucketedOptimistic]]) always write single-element chains
-    * (the plain `gen` string — the pre-chain format reads back
-    * unchanged), while [[upsertBucketedDelta]] APPENDS one generation
-    * per commit and defers the LWW merge to read time. Generation names
-    * never contain `,` or `;`.
+    * [[upsertBucketedDelta]] APPENDS one generation per commit and
+    * defers the LWW merge to read time, while compaction, purge and
+    * rebucket folds write single-element chains (the plain `gen`
+    * string). Generation names never contain `,` or `;`.
     */
   private[graft] def chainOf(value: String): Seq[String] =
     value.split(";").toSeq.filter(_.nonEmpty)
@@ -2025,7 +1568,7 @@ object KeyedUpsertSink {
     * re-appended as the partition column — so the first read of every
     * fresh generation can skip its schema-inference job (~25-35 ms of
     * driver footer I/O per commit, on every writer: delta stage,
-    * merge-on-write, compaction/purge folds, rebucket). `__bucket` is
+    * compaction/purge folds, rebucket). `__bucket` is
     * primed as LONG, making [[readBucketTriples]]'s normalizing cast a
     * no-op; data fields are relaxed to nullable to match what parquet
     * footer inference would report. Best-effort: a failure here just
@@ -2149,41 +1692,17 @@ object KeyedUpsertSink {
     * chain recency (`__seq` — a later delta beats an earlier one on
     * order-ties, the read-time equivalent of [[mergeLww]]'s batch-beats-
     * existing tag). Single-chain tables skip the window entirely — a
-    * fully-compacted or merge-on-write table resolves for free.
+    * fully-compacted table resolves for free.
     */
   private def resolveChainRead(df: DataFrame, entries: Map[Long, String],
       keys: Seq[String], order: Seq[Column]): DataFrame =
     if (hasChains(entries)) latestByKey(df, keys, order :+ col("__seq")).drop("__seq")
     else df.drop("__seq")
 
-  /** Read the atomic table at its current manifest, without the layout
-    * column. Before the first commit there is no schema to offer, so the
-    * zero-column `emptyDataFrame` comes back — callers that must project
-    * specific columns before data exists should gate on
-    * `readManifest(path).nonEmpty` (schema lives in the data files; this
-    * sink stores none of its own).
-    *
-    * Refuses a table with unresolved delta chains: this reader has no
-    * key/order spec, so it would return every superseded row version —
-    * a silently-wrong table. Use [[readBucketedDelta]] (or compact
-    * first) there.
-    */
-  def readBucketedAtomic(spark: SparkSession, tablePath: String): DataFrame = {
-    val manifest = readManifest(tablePath)
-    require(!hasChains(manifest),
-      s"$tablePath has merge-on-read delta chains; " +
-        "use readBucketedDelta(keys, order) or compactBucketChains first")
-    readManifestBuckets(spark, tablePath, manifest) match {
-      case Some(df) => dropTombstones(df).drop("__seq").drop("__bucket")
-      case None => spark.emptyDataFrame
-    }
-  }
-
   /** Merge-on-read resolving reader: the table at `atVersion` (default:
     * the chain head), LWW-resolved per key by `order` then delta
-    * recency. Works on any table of this family — on a merge-on-write
-    * table (no chains) it degrades to a plain scan with NO window
-    * shuffle, so it is always safe to read through this entry point.
+    * recency. On a fully-compacted table (no chains) it degrades to a
+    * plain scan with NO window shuffle.
     *
     * `atVersion` is the time-travel handle: any version still inside
     * the vacuum keep window is readable ([[tableVersions]] lists them).
@@ -2913,7 +2432,7 @@ object KeyedUpsertSink {
     */
   private def manifestAndMetaAt(tablePath: String,
       version: Long): (Map[Long, String], Map[String, String]) =
-    if (version == 0L) (legacyManifest(tablePath), Map.empty)
+    if (version == 0L) (Map.empty, Map.empty)
     else versionFiles(Paths.get(tablePath)).find(_._1 == version) match {
       case Some((_, p)) =>
         import scala.jdk.CollectionConverters._
@@ -3012,7 +2531,7 @@ object KeyedUpsertSink {
       if (weighted) df.withColumn("__weight", lit(w)) else df
     // APPEND FAST PATH: when every touched bucket's from-chain is a
     // prefix of its to-chain (pure delta appends — the steady state of
-    // a trickle feed; a compaction or merge-on-write commit in between
+    // a trickle feed; a compaction, purge or rebucket commit in between
     // breaks the prefix and falls back to the full diff below), the
     // only keys whose resolved image can change are those IN the
     // appended generations: a key's LWW resolve depends solely on its
@@ -3118,40 +2637,24 @@ object KeyedUpsertSink {
       } catch {
         case _: java.nio.file.NoSuchFileException => None // vacuum race
       }
-    } match {
-      // a pre-versioning table still has readable state at v0; a path
-      // with NEITHER is a typo or a never-created table — the silent
-      // empty history would read as "no commits", so refuse loudly
-      // (the normal read path's own contract, shared with stats/advise)
-      case Seq() =>
-        Seq(historyRow(0L, legacyOrRefuse(tablePath), Map.empty))
-      case rs => rs
     }
+    if (rows.isEmpty) requireTableState(tablePath)
     spark.createDataFrame(
       new java.util.ArrayList(rows.asJava), TableHistorySchema)
   }
 
   /** Loud existence check shared by the read-only SQL maintenance
-    * verbs (stats/advise): a mistyped path must error like history
-    * does, never read as "0 buckets" or "healthy" — a silent empty
+    * verbs (history/stats/advise): a mistyped path must error, never
+    * read as "no commits", "0 buckets" or "healthy" — a silent empty
     * answer to a fleet-monitoring query is exactly the wrong-path
-    * failure mode these verbs exist to surface.
+    * failure mode these verbs exist to surface. One wording for all
+    * three (the specs pin it); a retired lock-path table is refused by
+    * [[versionedHeadFull]] first.
     */
   private[graft] def requireTableState(tablePath: String): Unit =
-    if (versionFiles(Paths.get(tablePath)).isEmpty) { legacyOrRefuse(tablePath); () }
-
-  /** The legacy (pre-versioning) manifest, or the ONE shared
-    * never-created refusal — the single wording/semantics source for
-    * history, stats and advise (two drifting copies would silently
-    * diverge the refusals the specs pin to match).
-    */
-  private def legacyOrRefuse(tablePath: String): Map[Long, String] = {
-    val legacy = legacyManifest(tablePath)
-    require(legacy.nonEmpty,
-      s"$tablePath has no committed versions and no legacy " +
-        "manifest — wrong path, or the table was never created")
-    legacy
-  }
+    require(versionedHeadFull(tablePath)._1 > 0L,
+      s"$tablePath has no committed versions — wrong path, or the table " +
+        "was never created")
 
   /** [[tableHistory]]'s fixed schema — a constant so the SQL history
     * relation can declare itself WITHOUT reading the commit log (the
@@ -3173,9 +2676,8 @@ object KeyedUpsertSink {
     */
   private[graft] def manifestAt(tablePath: String, version: Long): Map[Long, String] =
     // ONE definition of the v0 rule and the loud-on-pruned contract:
-    // [[manifestAndMetaAt]] (v0 = the pre-first-commit state — the
-    // legacy lock-path `_manifest` when one exists, else empty — so a
-    // change feed FROM v0 is the full bootstrap image, the contract the
+    // [[manifestAndMetaAt]] (v0 = the empty pre-first-commit state — so
+    // a change feed FROM v0 is the full bootstrap image, the contract the
     // streaming source's `startingVersion=0` documents)
     manifestAndMetaAt(tablePath, version)._1
 
@@ -3186,29 +2688,24 @@ object KeyedUpsertSink {
     manifestAndMetaAt(tablePath, version)._2
 
   /** Best-effort reclamation of generation directories no manifest entry
-    * references (superseded or orphaned by a crash), plus stale
-    * `_manifest.tmp-*` files a writer crash left behind.
+    * references (superseded or orphaned by a crash), plus the hidden
+    * put-staging files of a crashed [[putIfAbsent]].
     *
     * `graceManifests` guards stalled readers: a reader that resolved the
     * manifest just before a superseding commit may still be scanning the
     * old generation when the vacuum runs. With grace N, every generation
-    * referenced by any of the N most recent committed manifest snapshots
-    * (`_hist/`, ordered by batchId then attempt) is retained in addition
-    * to the current one — the reader's whole resolved view survives.
-    * Grace 0 reclaims everything unreferenced (the round-5 behavior).
+    * referenced by the N most recent `_manifest.v*` versions below the
+    * head is retained in addition to the head's — the reader's whole
+    * resolved view survives. Grace 0 reclaims everything unreferenced.
     *
     * `quiesceMs` guards CONCURRENT WRITERS: an unreferenced `gen-*`
-    * directory (or `_manifest.tmp-*` file) may belong to a commit in
-    * flight right now — staged but not yet manifest-swapped — so only
-    * entries quiescent longer than the dwell are reclaimed. The default
-    * minute dwarfs any stage-commit window; pass 0 only when no writer
-    * can be active (tests, offline maintenance).
+    * directory (or put-staging file) may belong to a commit in flight
+    * right now — staged but not yet published — so only entries
+    * quiescent longer than the dwell are reclaimed. The default minute
+    * dwarfs any stage-commit window; pass 0 only when no writer can be
+    * active (tests, offline maintenance).
     *
-    * On an optimistic-protocol table the versioned chain doubles as the
-    * history: the `graceManifests` most recent `_manifest.v*` snapshots
-    * (plus the head) contribute to the live set, the chain is pruned to
-    * a bounded keep window, and abandoned hidden put-staging files are
-    * swept under the same dwell. The keep window is deliberately wide
+    * The version chain is pruned to a bounded keep window, deliberately wide
     * (≥ 64 versions): a writer stalled between reading head vN and
     * attempting v(N+1) for longer than the window could otherwise
     * publish a version number below an already-pruned one — the same
@@ -3233,10 +2730,7 @@ object KeyedUpsertSink {
     if (!Files.exists(dir)) return VacuumStats(0, Seq.empty, 0L, 0)
     import scala.jdk.CollectionConverters._
     val vfiles = versionFiles(dir).sortBy(_._1)
-    // the SAME live-set rule as vacuumGenerations below
-    val live = readManifest(tablePath).values.flatMap(chainOf).toSet ++
-      recentHistory(dir, graceManifests).flatMap(h => manifestValues(h)) ++
-      vfiles.takeRight(graceManifests + 1).flatMap { case (_, p) => manifestValues(p) }
+    val live = liveGenerations(tablePath, vfiles, graceManifests)
     val s = Files.list(dir)
     val gens = try s.iterator().asScala.toList
       .filter(_.getFileName.toString.startsWith("gen-")) finally s.close()
@@ -3353,41 +2847,31 @@ object KeyedUpsertSink {
     if (!Files.exists(dir)) return Seq.empty
     import scala.jdk.CollectionConverters._
     val vfiles = versionFiles(dir).sortBy(_._1)
-    // manifest values are generation CHAINS — every chain member is live
-    val live = readManifest(tablePath).values.flatMap(chainOf).toSet ++
-      recentHistory(dir, graceManifests).flatMap(h => manifestValues(h)) ++
-      vfiles.takeRight(graceManifests + 1).flatMap { case (_, p) => manifestValues(p) }
+    val live = liveGenerations(tablePath, vfiles, graceManifests)
     val s = Files.list(dir)
     val (gens, staleTmp) =
       try {
         val entries = s.iterator().asScala.toList
         (entries.filter(_.getFileName.toString.startsWith("gen-")),
+         // a crashed putIfAbsent's hidden staging file
          entries.filter { p =>
            val n = p.getFileName.toString
-           n.startsWith("_manifest.tmp-") ||
-             // a crashed putIfAbsent's hidden staging file
-             (n.startsWith("._manifest.") && n.contains(".put-")) ||
-             (n.startsWith("._layout") && n.contains(".put-"))
+           (n.startsWith("._manifest.") || n.startsWith("._layout")) &&
+             n.contains(".put-")
          })
       } finally s.close()
     // prune the version chain beyond the keep window (see scaladoc for
     // why the window must dwarf any writer's stage-commit span)
     vfiles.dropRight(math.max(graceManifests + 1, 16) * 4)
       .foreach { case (_, p) => Files.deleteIfExists(p) }
-    // only reclaim tmp files demonstrably ABANDONED: a concurrent writer
-    // may be between writeFsynced(tmp) and the atomic rename right now,
+    // only reclaim staging files demonstrably ABANDONED: a concurrent
+    // writer may be between writeFsynced(tmp) and the link right now,
     // and deleting its tmp would fail that commit. One minute dwarfs any
-    // write-fsync-rename window while still reclaiming crash leftovers.
-    val tmpGraceMs = quiesceMs
+    // write-fsync-link window while still reclaiming crash leftovers.
     val now = System.currentTimeMillis()
     staleTmp
-      .filter(p => now - Files.getLastModifiedTime(p).toMillis > tmpGraceMs)
+      .filter(p => now - Files.getLastModifiedTime(p).toMillis > quiesceMs)
       .foreach(Files.deleteIfExists(_))
-    // prune _hist beyond what the reader grace window needs — a
-    // long-running streaming sink otherwise accumulates one snapshot per
-    // commit forever (keep a healthy multiple so the window can be
-    // widened retroactively)
-    pruneHistory(dir, keep = math.max(graceManifests + 1, 16) * 4)
     gens.filterNot(p => live.contains(p.getFileName.toString))
       // same dwell rule as the tmp sweep, for generation DIRECTORIES: a
       // concurrent writer may be between staging gen-N and its manifest
@@ -3399,7 +2883,7 @@ object KeyedUpsertSink {
       // active long write keeps its deep mtime fresh while a crashed
       // job's leftovers go stale and reclaim after the same dwell. The
       // walk touches only UNREFERENCED gen dirs — bounded.
-      .filter(p => now - newestMtimeMs(p) > tmpGraceMs)
+      .filter(p => now - newestMtimeMs(p) > quiesceMs)
       .sortBy(_.getFileName.toString)
       .map { p => deleteRecursively(p); p.getFileName.toString }
   }
@@ -3417,54 +2901,20 @@ object KeyedUpsertSink {
     finally s.close()
   }
 
-  /** Delete `_hist/` snapshots beyond the newest `keep` (by commit
-    * order). Called from vacuum so history stays bounded for long-running
-    * sinks.
+  /** The generations [[vacuumGenerations]] (and its preview) must keep:
+    * every chain member of the head and of the `graceManifests`
+    * versions below it.
     */
-  private def pruneHistory(dir: Path, keep: Int): Unit = {
-    histSnapshots(dir).sortBy(p => genOrder(p.getFileName.toString))
-      .reverse.drop(keep)
-      .foreach(Files.deleteIfExists(_))
-  }
-
-  /** Committed `_hist/` snapshots — hidden entries (in-flight `.tmp`
-    * writes) are excluded, both to skip unparseable names and to leave a
-    * concurrent commit's staging file alone.
-    */
-  private def histSnapshots(dir: Path): List[Path] = {
-    val hist = dir.resolve("_hist")
-    if (!Files.exists(hist)) return Nil
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(hist)
-    try s.iterator().asScala.toList
-      .filterNot(_.getFileName.toString.startsWith("."))
-    finally s.close()
-  }
-
-  /** The `n` most recent `_hist/` manifest snapshots, newest first,
-    * ordered by the (batchId, attempt) encoded in the generation name.
-    */
-  private def recentHistory(dir: Path, n: Int): Seq[Path] = {
-    if (n <= 0) return Seq.empty
-    // the newest snapshot duplicates the current manifest, so reaching n
-    // PRIOR committed manifests means taking n+1 snapshots
-    histSnapshots(dir).sortBy(p => genOrder(p.getFileName.toString))
-      .reverse.take(n + 1)
-  }
-
-  /** Sort key for generation names: `gen-<batchId>` < `gen-<batchId>-r<k>`. */
-  private def genOrder(gen: String): (Long, Int) = {
-    val parts = gen.stripPrefix("gen-").split("-r", 2)
-    (parts(0).toLong, if (parts.length > 1) parts(1).toInt else 0)
-  }
+  private def liveGenerations(tablePath: String, vfiles: Seq[(Long, Path)],
+      graceManifests: Int): Set[String] =
+    readManifest(tablePath).values.flatMap(chainOf).toSet ++
+      vfiles.takeRight(graceManifests + 1).flatMap { case (_, p) => manifestValues(p) }
 
   private def manifestValues(p: Path): Set[String] = {
     import scala.jdk.CollectionConverters._
-    // tolerate a malformed line (e.g. a pre-tmp-discipline truncated
-    // snapshot): skipping it only RETAINS extra generations, never
-    // deletes live ones. Values are `;`-chains — every member is live.
-    Files.readAllLines(p).asScala.filter(_.contains(","))
-      .flatMap(l => chainOf(l.split(",", 2)(1))).toSet
+    // values are `;`-chains — every member is live
+    parseManifestLines(Files.readAllLines(p).asScala.toSeq)
+      .values.flatMap(chainOf).toSet
   }
 }
 

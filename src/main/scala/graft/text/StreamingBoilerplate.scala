@@ -37,7 +37,8 @@ import graft.sink.KeyedUpsertSink
   *
   * Scale shape per trigger: O(batch paragraphs) map-side hashing, one
   * partial-agged shuffle of compact (doc_id, md5) pairs, and an
-  * O(touched buckets) state merge — never O(corpus).
+  * O(batch) delta commit to the state table (chains folded past the
+  * sink's `compactAfter`) — never O(corpus).
   */
 object StreamingBoilerplate {
 
@@ -70,13 +71,17 @@ object StreamingBoilerplate {
         explode(split(col("text"), java.util.regex.Pattern.quote(sep))).as("para"))
       .select(col("doc_id"), TextAnalysis.paraNormHash(col("para")).as("ph"))
       .groupBy("doc_id", "ph").agg(count(lit(1)).as("n"))
-    KeyedUpsertSink.upsertBucketed(spark, stateDir,
-      Seq("doc_id", "ph"), Seq(col("n")), numBuckets)(counts, batchId)
+    KeyedUpsertSink.upsertBucketedDelta(spark, stateDir,
+      CountKeys, CountOrder, numBuckets)(counts, batchId)
+    ()
   }
+
+  private val CountKeys = Seq("doc_id", "ph")
+  private def CountOrder = Seq(col("n"))
 
   /** The maintained (doc_id, ph, n) count state as of the last trigger. */
   def counts(spark: SparkSession, stateDir: String): DataFrame =
-    KeyedUpsertSink.readBucketed(spark, stateDir)
+    KeyedUpsertSink.readBucketedDelta(spark, stateDir, CountKeys, CountOrder)
 
   /** The boilerplate-stripped corpus under the maintained counts —
     * identical to [[TextAnalysis.removeBoilerplateParagraphs]] over the

@@ -5,15 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.sink.KeyedUpsertSink
 
-/** Second-DRIVER half of the multi-process optimistic-commit race
+/** Second-DRIVER half of the multi-process commit race
   * (MultiProcessRaceSpec forks this main in its own JVM): the whole
   * point of the versioned-manifest protocol is that two *drivers* — no
   * shared JVM monitor, no shared SparkContext, only the filesystem's
   * `link(2)` put-if-absent — can commit one table without losing rows.
   *
   * Each batch writes this writer's own keys (disjoint from the other
-  * writer's) plus the "shared" key (guaranteed overlap, forcing
-  * re-merges on conflict). Exit 0 iff every batch committed.
+  * writer's) plus the "shared" key (guaranteed overlap: a lost race
+  * re-appends to the fresh head's chains). Exit 0 iff every batch
+  * committed.
   *
   * args: tablePath writerId nBatches numBuckets
   */
@@ -30,7 +31,7 @@ object OptimisticRacer {
       .getOrCreate()
     import spark.implicits._
     try {
-      val sink = KeyedUpsertSink.upsertBucketedOptimistic(
+      val sink = KeyedUpsertSink.upsertBucketedDelta(
         spark, tablePath, Seq("k"), Seq(col("ts")),
         numBuckets = numBucketsS.toInt, maxAttempts = 60) _
       (0 until nBatches).foreach { i =>
@@ -45,7 +46,7 @@ object OptimisticRacer {
         // one line per commit so the spec can assert both drivers really
         // interleaved (distinct versions, monotone per writer)
         println(s"RACER $writerId COMMIT batch=$i version=${st.version} " +
-          s"retries=${st.commitRetries} restages=${st.restages}")
+          s"retries=${st.commitRetries}")
       }
       println(s"RACER $writerId DONE")
     } finally spark.stop()

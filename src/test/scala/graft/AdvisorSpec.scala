@@ -70,18 +70,19 @@ class AdvisorSpec extends SparkSpec {
 
   test("vacuumStats previews exactly what the vacuum reclaims, grace included") {
     val path = newTable("graft-advisor-vac")
-    val sink = KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, path, keys, order, 2) _
-    // merge-on-write: each commit REWRITES its buckets, superseding the
-    // previous generations entirely
+    val sink = KeyedUpsertSink.upsertBucketedDelta(
+      spark, path, keys, order, 2, compactAfter = 0) _
+    // two deltas on the same keys, then a fold: the folded generation
+    // supersedes both deltas entirely
     val g1 = sink(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L).get.gen
     val g2 = sink(batchDf(("a", 2L, 20L), ("b", 2L, 20L)), 1L).get.gen
+    KeyedUpsertSink.compactBucketChains(spark, path, keys, order)
     val preview = KeyedUpsertSink.vacuumStats(path)
-    assert(preview.reclaimableGenerations == Seq(g1),
-      s"superseded generation must preview as reclaimable: $preview")
+    assert(preview.reclaimableGenerations == Seq(g1, g2).sorted,
+      s"superseded generations must preview as reclaimable: $preview")
     assert(preview.reclaimableBytes > 0L)
-    assert(preview.retainedVersions == 2)
-    // with one manifest of reader grace, g1 is still referenced — the
+    assert(preview.retainedVersions == 3)
+    // with one manifest of reader grace, v2 still references both — the
     // preview must agree with the vacuum's own live-set rule
     assert(KeyedUpsertSink.vacuumStats(path, graceManifests = 1)
       .reclaimableGenerations.isEmpty)
@@ -90,17 +91,14 @@ class AdvisorSpec extends SparkSpec {
     assert(removed == preview.reclaimableGenerations)
     val after = KeyedUpsertSink.vacuumStats(path)
     assert(after.reclaimableGenerations.isEmpty && after.reclaimableBytes == 0L)
-    assert(!after.reclaimableGenerations.contains(g2))
   }
 
   test("adviseRetention sizes the keep window from observed consumer lag; the advised grace provably suffices") {
     val root = Files.createTempDirectory("graft-advisor-ret")
     val base = root.resolve("t").toString
     val ckpt = root.resolve("ckpt").toString
-    // merge-on-write: each commit REWRITES its buckets, so retention
-    // genuinely decides whether an old version's generations survive
-    val sink = KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, base, keys, order, 2) _
+    val sink = KeyedUpsertSink.upsertBucketedDelta(
+      spark, base, keys, order, 2, compactAfter = 0) _
     sink(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L) // v1
     sink(batchDf(("a", 2L, 20L)), 1L)                 // v2
     // a mirror stream drains through v2, then stalls (its checkpoint
@@ -120,16 +118,19 @@ class AdvisorSpec extends SparkSpec {
     // the table advances while both consumers lag
     sink(batchDf(("b", 2L, 30L)), 2L) // v3
     sink(batchDf(("a", 3L, 40L)), 3L) // v4
-    sink(batchDf(("b", 3L, 50L)), 4L) // v5 (head)
+    sink(batchDf(("b", 3L, 50L)), 4L) // v5
+    // the fold supersedes every delta generation, so retention genuinely
+    // decides whether an old version's generations survive
+    KeyedUpsertSink.compactBucketChains(spark, base, keys, order) // v6 (head)
     val streamPos = graft.sources.ChangeFeedSourceProvider
       .checkpointPosition(ckpt).get._1
     val advice = KeyedUpsertSink.adviseRetention(base,
       Seq("mirror-stream" -> streamPos, "nightly-poller" -> 1L))
-    assert(advice.head == 5L && advice.laggard == Some(("nightly-poller", 1L)))
-    assert(advice.requiredGraceManifests == 4,
-      s"versions above v1 = 4: $advice")
+    assert(advice.head == 6L && advice.laggard == Some(("nightly-poller", 1L)))
+    assert(advice.requiredGraceManifests == 5,
+      s"versions above v1 = 5: $advice")
     assert(advice.intact, s"nothing vacuumed yet: $advice")
-    assert(advice.reason.contains("graceManifests >= 4"))
+    assert(advice.reason.contains("graceManifests >= 5"))
     // STRUCTURAL sufficiency: vacuum AT the advised grace, then the
     // laggard's whole catch-up feed still reads — a reclaim that had
     // touched its range would fail this loudly

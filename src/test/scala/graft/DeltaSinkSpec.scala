@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,19 +54,24 @@ class DeltaSinkSpec extends SparkSpec {
     val wPath = newTable("graft-mow-parity")
     val dSink = KeyedUpsertSink.upsertBucketedDelta(
       spark, dPath, k, o, numBuckets = 8, compactAfter = 0) _
-    val wSink = KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, wPath, k, o, numBuckets = 8) _
+    // the merge-on-write table: every commit's chains folded at once,
+    // so each bucket holds one generation
+    val wSink = KeyedUpsertSink.upsertBucketedDelta(
+      spark, wPath, k, o, numBuckets = 8, compactAfter = 1) _
     (0L to 2L).foreach { i =>
       dSink(ev.filter(col("event_id") % 3 === i), i)
       wSink(ev.filter(col("event_id") % 3 === i), i)
     }
+    assert(chainLens(wPath).valuesIterator.forall(_ == 1))
     assert(chainLens(dPath).valuesIterator.exists(_ > 1),
       "fixture built no multi-generation chain — parity test is vacuous")
     val got = KeyedUpsertSink.readBucketedDelta(spark, dPath, k, o)
       .select("user_id", "event_id", "ts_us").as[(Long, Long, Long)].collect().toSet
-    val want = KeyedUpsertSink.readBucketedAtomic(spark, wPath)
+    val want = KeyedUpsertSink.readBucketedDelta(spark, wPath, k, o)
       .select("user_id", "event_id", "ts_us").as[(Long, Long, Long)].collect().toSet
     assert(got == want, "merge-on-read resolve diverged from merge-on-write")
+    assert(want == KeyedUpsertSink.latestByKey(ev, k, o)
+      .as[(Long, Long, Long)].collect().toSet)
   }
 
   test("order ties resolve to the later commit; redelivery is a read-level no-op") {
@@ -111,6 +118,41 @@ class DeltaSinkSpec extends SparkSpec {
       spark, path, keys, order, minChain = 2) == Seq(0L))
     assert(chainLens(path) == Map(0L -> 1))
     assert(table(path) == Set(("a", 9L, 40L), ("b", 1L, 10L), ("c", 1L, 30L)))
+    // the rest of the maintenance cycle — delete, rebucket, vacuum —
+    // commits through version files alone: no lock file, no single-file
+    // manifest, no manifest temp files, no history snapshots
+    KeyedUpsertSink.deleteBucketedDelta(spark, path, keys, order, numBuckets = 1)(
+      Seq(("b", 50L)).toDF("k", "ts"), 4L)
+    KeyedUpsertSink.rebucketTable(spark, path, keys, order, newBuckets = 2)
+    KeyedUpsertSink.vacuumGenerations(path, quiesceMs = 0L)
+    assert(table(path) == Set(("a", 9L, 40L), ("c", 1L, 30L)))
+    val entries = {
+      val ls = Files.list(Paths.get(path))
+      try ls.iterator().asScala.map(_.getFileName.toString).toSeq finally ls.close()
+    }
+    assert(entries.exists(_.startsWith("_manifest.v")))
+    assert(!entries.exists(n => n == "_manifest" || n == "_manifest.lock" ||
+      n.startsWith("_manifest.tmp-") || n == "_hist"),
+      s"lock-path artifacts in a delta table: ${entries.sorted}")
+  }
+
+  test("a table holding a lock-path _manifest and no version file is refused loudly") {
+    // the retired lock-path writers kept their bucket map in one
+    // `_manifest` file; read as an empty v0, such a table would lose
+    // every row, and a commit on top would publish a v1 hiding them
+    val path = newTable("graft-delta-lockpath")
+    Files.createDirectories(Paths.get(path, "gen-0", "__bucket=0"))
+    Files.writeString(Paths.get(path, "_manifest"), "0,gen-0\n")
+    def refused(what: String)(body: => Any): Unit = {
+      val err = intercept[IllegalStateException](body)
+      assert(err.getMessage.contains(Paths.get(path, "_manifest").toString) &&
+        err.getMessage.contains("rewrite with the current writer"),
+        s"$what: ${err.getMessage}")
+    }
+    refused("write")(delta(path)(batchDf(("a", 1L, 10L)), 0L))
+    refused("read")(KeyedUpsertSink.readBucketedDelta(spark, path, keys, order))
+    refused("history")(KeyedUpsertSink.tableHistory(spark, path))
+    assert(KeyedUpsertSink.tableVersions(path).isEmpty, "the refused write published")
   }
 
   test("auto-compaction past compactAfter folds the chain; vacuum reclaims the deltas") {
@@ -126,28 +168,6 @@ class DeltaSinkSpec extends SparkSpec {
     assert(commits.map(_.gen).toSet.subsetOf(removed.toSet),
       "superseded delta generations must reclaim")
     assert(table(path) == want, "vacuum changed the resolved table")
-  }
-
-  test("mixed-mode: a merge-on-write commit resolves the chains it touches") {
-    val path = newTable("graft-delta-mixed")
-    val sink = delta(path, numBuckets = 1) _
-    sink(batchDf(("a", 1L, 10L)), 0L)
-    sink(batchDf(("a", 2L, 20L), ("b", 1L, 20L)), 1L)
-    assert(chainLens(path) == Map(0L -> 2))
-    // the resolving reader refuses nothing; the schema-blind one refuses
-    // LOUDLY (it would return superseded row versions)
-    val err = intercept[IllegalArgumentException] {
-      KeyedUpsertSink.readBucketedAtomic(spark, path)
-    }
-    assert(err.getMessage.contains("merge-on-read delta chains"))
-    // a merge-on-write commit on the chained bucket resolves the chain
-    // first — doubling as that bucket's compaction
-    KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, path, keys, order, numBuckets = 1)(batchDf(("c", 1L, 30L)), 2L)
-    assert(chainLens(path) == Map(0L -> 1))
-    assert(KeyedUpsertSink.readBucketedAtomic(spark, path)
-      .select("k", "v", "ts").as[(String, Long, Long)].collect().toSet ==
-      Set(("a", 2L, 20L), ("b", 1L, 20L), ("c", 1L, 30L)))
   }
 
   test("schema evolution across deltas: chains union by name with null back-fill") {

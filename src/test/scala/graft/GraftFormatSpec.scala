@@ -1114,7 +1114,7 @@ class GraftFormatSpec extends SparkSpec {
     step("compaction fold")(assert(KeyedUpsertSink.compactBucketChains(
       spark, t, lkeys, order, minChain = 2).nonEmpty))
     step("rebucket")(KeyedUpsertSink.rebucketTable(spark, t, lkeys, order, newBuckets = 8))
-    step("merge-on-write")(KeyedUpsertSink.upsertBucketedOptimistic(
+    step("delta upsert on the rebucketed layout")(KeyedUpsertSink.upsertBucketedDelta(
       spark, t, lkeys, order, numBuckets = 8)(rows(0 until 200 by 2, 40L), 3L))
     val aggs = Seq(MaterializedAggView.AggCol("n", lit(1L)),
       MaterializedAggView.AggCol("sum_v", col("v")))

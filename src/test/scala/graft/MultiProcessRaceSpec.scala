@@ -55,7 +55,7 @@ class MultiProcessRaceSpec extends SparkSpec {
     // serial schedule. So: commit batch 0, then WAIT until the chain has
     // advanced past our own commit (the child is live and committing),
     // then interleave the remaining batches against it.
-    val sink = KeyedUpsertSink.upsertBucketedOptimistic(
+    val sink = KeyedUpsertSink.upsertBucketedDelta(
       spark, tbl, Seq("k"), Seq(col("ts")), numBuckets, maxAttempts = 60) _
     def commit(i: Int): Unit =
       sink(Seq(
@@ -80,7 +80,7 @@ class MultiProcessRaceSpec extends SparkSpec {
     assert(log.contains("RACER 2 DONE"))
 
     // no lost rows: every key from BOTH drivers, with its latest value
-    val got = KeyedUpsertSink.readBucketedAtomic(spark, tbl)
+    val got = KeyedUpsertSink.readBucketedDelta(spark, tbl, Seq("k"), Seq(col("ts")))
       .select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
     val wantOwn = (0 until nBatches).flatMap(i => Seq(
       (s"w1-$i", 1L, 100L + i), (s"w2-$i", 2L, 100L + i))).toSet

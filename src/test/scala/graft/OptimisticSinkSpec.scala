@@ -8,17 +8,22 @@ import org.apache.spark.sql.functions._
 import graft.sink.KeyedUpsertSink
 import graft.sink.KeyedUpsertSink.OptimisticCommit
 
-/** The object-store-safe optimistic commit: two writers with NO shared
-  * JVM monitor and NO file lock racing one table must lose nothing —
-  * disjoint-bucket writers proceed with a cheap commit retry, overlapping
-  * writers re-merge. Plus the lock-path upgrade valve and schema
-  * evolution across generations.
+/** The object-store-safe optimistic commit of the keyed table
+  * ([[KeyedUpsertSink.upsertBucketedDelta]]): two writers with NO shared
+  * JVM monitor and NO file lock racing one table must lose nothing — a
+  * writer that loses the put-if-absent race re-appends its staged
+  * generation to the fresh head with no re-stage, whether or not the
+  * buckets overlap, and the LWW merge at read time orders the rows.
+  * Plus schema evolution across generations.
   */
 class OptimisticSinkSpec extends SparkSpec {
   import spark.implicits._
 
+  private val keys = Seq("k")
+  private def order = Seq(col("ts"))
+
   private def table(path: String): Set[(String, Long, Long)] =
-    KeyedUpsertSink.readBucketedAtomic(spark, path)
+    KeyedUpsertSink.readBucketedDelta(spark, path, keys, order)
       .select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
 
   private def batchDf(rows: (String, Long, Long)*): DataFrame =
@@ -29,8 +34,8 @@ class OptimisticSinkSpec extends SparkSpec {
 
   private def opt(path: String, numBuckets: Int = 4,
       hook: () => Unit = () => ())(batch: DataFrame, batchId: Long): OptimisticCommit =
-    KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, path, Seq("k"), Seq(col("ts")), numBuckets,
+    KeyedUpsertSink.upsertBucketedDelta(
+      spark, path, keys, order, numBuckets, compactAfter = 0,
       onBeforeFirstCommit = hook)(batch, batchId)
       .getOrElse(fail("non-empty batch must commit"))
 
@@ -44,9 +49,10 @@ class OptimisticSinkSpec extends SparkSpec {
     val rowsA = (1 to 30).map(i => (s"a$i", 1L, 10L)) :+ ("shared", 1L, 5L)
     val rowsB = (1 to 30).map(i => (s"b$i", 2L, 10L)) :+ ("shared", 2L, 9L)
     // 2 buckets for 62 keys: the writers' touched sets MUST overlap.
-    // The barrier forces BOTH writers to finish staging before either
-    // commits — without it a skewed schedule can serialize the writers
-    // entirely and the re-merge assertion below would be flaky.
+    // The barrier forces BOTH writers to finish staging against the same
+    // head before either commits — without it a skewed schedule can
+    // serialize the writers entirely and the lost-race assertion below
+    // would be flaky.
     val staged = new java.util.concurrent.CyclicBarrier(2)
     val await = () => { staged.await(30, java.util.concurrent.TimeUnit.SECONDS); () }
     var stA: OptimisticCommit = null
@@ -56,24 +62,24 @@ class OptimisticSinkSpec extends SparkSpec {
     tA.start(); tB.start(); tA.join(); tB.join()
     val want = rowsA.dropRight(1).toSet ++ rowsB.toSet // shared: ts 9 beats 5
     assert(table(path) == want, "a racing writer's rows were lost")
-    // both committed, at distinct versions, and the loser re-merged
+    // both committed, at distinct versions, and the loser retried
     assert(Set(stA.version, stB.version).size == 2)
-    assert(stA.restages + stB.restages >= 1,
-      "overlapping concurrent commits must force at least one re-merge")
+    assert(stA.commitRetries + stB.commitRetries >= 1,
+      "two writers staged on one head: one must lose the put-if-absent race")
   }
 
   test("overlapping interference is detected and re-merged (deterministic)") {
     val path = newTable("graft-opt-overlap")
     opt(path)(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L)
-    // writer B stages against v1; writer A then commits a SUPERSEDING
+    // writer B stages at head v1; writer A then commits a SUPERSEDING
     // value for the same key before B's first commit attempt
     val stB = opt(path, 4, hook = () =>
       { opt(path)(batchDf(("a", 7L, 30L)), 1L); () })(
       batchDf(("a", 5L, 20L), ("c", 1L, 20L)), 2L)
-    assert(stB.restages == 1, "stale staged merge must be re-merged, not committed")
-    assert(stB.commitRetries >= 1)
-    // sequential semantics: A's ts=30 beats B's ts=20 on key a — B's
-    // re-merge must have seen A's committed bucket
+    // detected: B's publish of v2 lost, B re-appended on top of A's v2
+    assert(stB.commitRetries == 1 && stB.version == 3L)
+    // sequential semantics: A's ts=30 beats B's ts=20 on key a even
+    // though B committed later — the read-time merge ranks by order
     assert(table(path) ==
       Set(("a", 7L, 30L), ("b", 1L, 10L), ("c", 1L, 20L)))
   }
@@ -94,39 +100,21 @@ class OptimisticSinkSpec extends SparkSpec {
       { opt(path, n)(batchDf((keysA(1), 2L, 20L)), 1L); () })(
       batchDf((keysB.head, 3L, 20L)), 2L)
     assert(stB.commitRetries == 1, "lost put-if-absent race must retry once")
-    assert(stB.restages == 0,
-      "disjoint-bucket interference must NOT force a re-merge")
+    // no re-merge: the generation B staged is the one it committed
+    assert(KeyedUpsertSink.readManifest(path)(bkB) == stB.gen)
     assert(stB.version == 3L)
     assert(table(path) == Set(
       (keysA.head, 1L, 10L), (keysA(1), 2L, 20L), (keysB.head, 3L, 20L)))
   }
 
-  test("a lock-path table upgrades in place; lock-path commits are then refused") {
-    val path = newTable("graft-opt-upgrade")
-    val lockSink = KeyedUpsertSink.upsertBucketedAtomic(
-      spark, path, Seq("k"), Seq(col("ts")), numBuckets = 4) _
-    lockSink(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L)
-    // first optimistic commit carries the legacy entries forward as v1
-    val st = opt(path)(batchDf(("a", 2L, 20L), ("c", 1L, 20L)), 1L)
-    assert(st.version == 1L)
-    assert(table(path) == Set(("a", 2L, 20L), ("b", 1L, 10L), ("c", 1L, 20L)))
-    // the one-way valve: a later lock-path commit would be invisible to
-    // readers (they follow the chain head), so it must refuse loudly
-    intercept[IllegalArgumentException] {
-      lockSink(batchDf(("d", 1L, 30L)), 2L)
-    }
-    assert(table(path) == Set(("a", 2L, 20L), ("b", 1L, 10L), ("c", 1L, 20L)))
-  }
-
   test("schema evolution: widened batches merge by name, old generations read with nulls") {
     val path = newTable("graft-opt-schema")
-    val sink = KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, path, Seq("k"), Seq(col("ts")), 4) _
+    val sink = opt(path) _
     sink(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L)
     // batch 1 ADDS a column and overwrites one key
     sink(Seq(("a", 2L, 20L, "x"), ("c", 1L, 20L, "y"))
       .toDF("k", "v", "ts", "extra"), 1L)
-    val got = KeyedUpsertSink.readBucketedAtomic(spark, path)
+    val got = KeyedUpsertSink.readBucketedDelta(spark, path, keys, order)
       .select("k", "v", "ts", "extra")
       .as[(String, Long, Long, Option[String])].collect().toSet
     assert(got == Set(
@@ -146,41 +134,31 @@ class OptimisticSinkSpec extends SparkSpec {
     sink(Seq(("d", 30L)).toDF("k", "ts")
       .withColumn("v", lit(null).cast("long"))
       .withColumn("extra", lit(null).cast("string")), 2L)
-    val got2 = KeyedUpsertSink.readBucketedAtomic(spark, path)
+    val got2 = KeyedUpsertSink.readBucketedDelta(spark, path, keys, order)
       .select("k", "v", "ts", "extra")
       .as[(String, Option[Long], Long, Option[String])].collect().toSet
     assert(got2.contains(("d", None, 30L, None)))
     assert(got2.size == 4)
   }
 
-  test("schema evolution holds on the lock-path atomic sink too (shared merge)") {
-    val path = newTable("graft-atomic-schema")
-    val sink = KeyedUpsertSink.upsertBucketedAtomic(
-      spark, path, Seq("k"), Seq(col("ts")), numBuckets = 4) _
-    sink(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L)
-    sink(Seq(("a", 2L, 20L, "x")).toDF("k", "v", "ts", "extra"), 1L)
-    val got = KeyedUpsertSink.readBucketedAtomic(spark, path)
-      .select("k", "v", "ts", "extra")
-      .as[(String, Long, Long, Option[String])].collect().toSet
-    assert(got == Set(("a", 2L, 20L, Some("x")), ("b", 1L, 10L, None)))
-  }
-
   test("vacuum on an optimistic table: superseded generations reclaim, chain stays consistent") {
     val path = newTable("graft-opt-vacuum")
-    val sink = opt(path, 2) _
+    val sink = opt(path, 1) _
+    def fold(): Seq[Long] = KeyedUpsertSink.compactBucketChains(spark, path, keys, order)
     val st0 = sink(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L)
-    val st1 = sink(batchDf(("a", 2L, 20L), ("b", 2L, 20L)), 1L) // supersedes everything
+    val st1 = sink(batchDf(("a", 2L, 20L), ("b", 2L, 20L)), 1L)
+    fold() // supersedes both deltas
     val removed = KeyedUpsertSink.vacuumGenerations(path, quiesceMs = 0L)
-    assert(removed.contains(st0.gen), "fully-superseded generation must reclaim")
-    assert(!removed.contains(st1.gen))
+    assert(removed == Seq(st0.gen, st1.gen).sorted,
+      "fully-superseded generations must reclaim")
     assert(table(path) == Set(("a", 2L, 20L), ("b", 2L, 20L)))
     // grace window keeps the prior version's generations for stalled readers
     val st2 = sink(batchDf(("a", 3L, 30L), ("b", 3L, 30L)), 2L)
+    fold()
     val removedGrace = KeyedUpsertSink.vacuumGenerations(
       path, graceManifests = 1, quiesceMs = 0L)
-    assert(!removedGrace.contains(st1.gen),
+    assert(!removedGrace.contains(st2.gen),
       "grace must retain the previous version's generations")
-    assert(!removedGrace.contains(st2.gen))
     // abandoned hidden put-staging files sweep under the dwell
     val stalePut = Paths.get(path, "._manifest.v00000000000000000099.put-dead")
     Files.writeString(stalePut, "orphan")
@@ -194,12 +172,13 @@ class OptimisticSinkSpec extends SparkSpec {
 
   test("empty optimistic batches stage nothing and commit nothing") {
     val path = newTable("graft-opt-empty")
-    assert(KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, path, Seq("k"), Seq(col("ts")), 4)(batchDf(), 0L).isEmpty)
+    def empty(batchId: Long) = KeyedUpsertSink.upsertBucketedDelta(
+      spark, path, keys, order, 4)(batchDf(), batchId)
+    assert(empty(0L).isEmpty)
     assert(KeyedUpsertSink.readManifest(path).isEmpty)
     opt(path)(batchDf(("a", 1L, 10L)), 1L)
-    assert(KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, path, Seq("k"), Seq(col("ts")), 4)(batchDf(), 2L).isEmpty)
+    assert(empty(2L).isEmpty)
+    assert(KeyedUpsertSink.tableVersions(path) == Seq(1L))
     assert(table(path) == Set(("a", 1L, 10L)))
   }
 
@@ -207,11 +186,12 @@ class OptimisticSinkSpec extends SparkSpec {
     val path = newTable("graft-opt-lww")
     val ev = Tables.events(spark, Sf0001).select(col("user_id"),
       col("event_id"), col("ts_us"))
-    val sink = KeyedUpsertSink.upsertBucketedOptimistic(
-      spark, path, Seq("user_id"), Seq(col("ts_us"), col("event_id")), 8) _
+    val k = Seq("user_id")
+    val o = Seq(col("ts_us"), col("event_id"))
+    val sink = KeyedUpsertSink.upsertBucketedDelta(spark, path, k, o, 8) _
     sink(ev.filter(col("event_id") % 2 === 0), 0L)
     sink(ev.filter(col("event_id") % 2 === 1), 1L)
-    val got = KeyedUpsertSink.readBucketedAtomic(spark, path)
+    val got = KeyedUpsertSink.readBucketedDelta(spark, path, k, o)
       .select("user_id", "event_id", "ts_us")
       .as[(Long, Long, Long)].collect().toSet
     val want = KeyedUpsertSink.latestByKey(ev, Seq("user_id"),

@@ -77,12 +77,6 @@ class SinkLookupSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("laid out with numBuckets=8"))
     assert(err.getMessage.contains("configured with numBuckets=16"))
-    // every variant validates — the plain bucketed writer too
-    val err2 = intercept[IllegalArgumentException] {
-      KeyedUpsertSink.upsertBucketed(
-        spark, path, keys, order, numBuckets = 4)(batchDf(("c", 1L, 30L)), 2L)
-    }
-    assert(err2.getMessage.contains("laid out with numBuckets=8"))
   }
 
   test("point lookup reads ONLY the requested keys' buckets (deleted others prove it)") {

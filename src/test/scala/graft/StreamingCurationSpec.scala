@@ -64,6 +64,47 @@ class StreamingCurationSpec extends SparkSpec {
     assert(got == batchWant)
   }
 
+  test("a trigger killed between stage and commit leaves the previous trigger's view; its replay converges") {
+    import graft.sink.KeyedUpsertSink
+    val root = Files.createTempDirectory("graft-scur-crash")
+    val state = root.resolve("state").toString
+    val twin = root.resolve("twin").toString
+    val index = graft.dedup.Dedup.benchmarkNgramIndex(benchmark).persist()
+    def merge(dir: String)(wave: DataFrame, id: Long): Unit =
+      StreamingCuration.mergeBatch(spark, index, dir, MinShared, 8)(
+        Curation.gates(wave, isBench), id)
+    def view = StreamingCuration.corpusView(spark, state).collect().toSet
+    def gens(dir: String): Set[String] = {
+      val s = Files.list(java.nio.file.Paths.get(dir))
+      try { import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("gen-")).toSet }
+      finally s.close()
+    }
+    try {
+      val odd = docs.filter(col("doc_id") % 2 === 1)
+      merge(state)(docs.filter(col("doc_id") % 2 === 0), 0L)
+      val afterFirst = view
+      assert(afterFirst.nonEmpty)
+      // trigger 1 is killed after staging: a delta stage depends on the
+      // batch alone, so the generation it left is the one a twin store
+      // stages for the same batch — moved in, never published
+      merge(twin)(odd, 1L)
+      val orphan = gens(twin).toSeq match {
+        case Seq(g) => g
+        case other => fail(s"twin staged $other")
+      }
+      Files.move(java.nio.file.Paths.get(twin, orphan),
+        java.nio.file.Paths.get(state, orphan))
+      assert(view == afterFirst, "an unpublished stage leaked into the view")
+      // the stream replays trigger 1: the view is the batch pipeline's
+      merge(state)(odd, 1L)
+      assert(view == batchWant)
+      assert(KeyedUpsertSink.vacuumGenerations(state, quiesceMs = 0L) == Seq(orphan))
+      assert(view == batchWant)
+    } finally index.unpersist()
+  }
+
   test("benchmark index is built once across a multi-trigger run") {
     // count every evaluation of a benchmark text: the index build reads
     // each benchmark row exactly once, so a run with 3 triggers over a
@@ -127,7 +168,8 @@ class StreamingCurationSpec extends SparkSpec {
       .option("recursiveFileLookup", "true").parquet(landing)
     StreamingCuration.start(stream, benchmark, isBench, state, ckpt,
       minShared = MinShared, numBuckets = 8).awaitTermination()
-    val st = graft.sink.KeyedUpsertSink.readBucketed(spark, state)
+    // the self-describing read: the state table's stored key/order spec
+    val st = graft.sink.KeyedUpsertSink.readBucketedDelta(spark, state)
     // one row per surviving fingerprint — not per arrival
     assert(st.count() == st.select("fp").distinct().count())
     assert(!st.columns.contains("text"))

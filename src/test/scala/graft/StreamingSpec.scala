@@ -175,13 +175,15 @@ class StreamingSpec extends SparkSpec {
       .option("recursiveFileLookup", "true").parquet(landing)
     val gated = Curation.gates(stream, col("doc_id") % 37 === 0)
     val q = gated.writeStream
-      .foreachBatch(KeyedUpsertSink.upsertBucketed(
-        spark, table, Seq("doc_id"), Seq(col("doc_id")), 8) _)
+      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) => {
+        KeyedUpsertSink.upsertBucketedDelta(
+          spark, table, Seq("doc_id"), Seq(col("doc_id")), 8)(df, id); ()
+      })
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val got = KeyedUpsertSink.readBucketed(spark, table)
+    val got = KeyedUpsertSink.readBucketedDelta(spark, table)
       .select("doc_id").as[Long].collect().toSet
     val want = Curation.gates(docs, col("doc_id") % 37 === 0)
       .select("doc_id").as[Long].collect().toSet
@@ -221,37 +223,34 @@ class StreamingSpec extends SparkSpec {
     assert(got == want && got.nonEmpty)
   }
 
-  test("upsertBucketed merges LWW and rewrites only touched bucket dirs") {
+  test("the bucketed commit merges LWW and appends only to the touched buckets' chains") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     import graft.sink.KeyedUpsertSink
     val root = Files.createTempDirectory("graft-upsert-b")
     val dir = root.resolve("t").toString
     val nb = 8
-    val sink = KeyedUpsertSink.upsertBucketed(spark, dir, Seq("id"), Seq(col("seq")), nb) _
+    val sink = KeyedUpsertSink.upsertBucketedDelta(spark, dir, Seq("id"), Seq(col("seq")), nb) _
     // seed: 100 keys spread across buckets
     val seed = (1 to 100).map(i => (i.toString, "old", 1L)).toDF("id", "v", "seq")
-    sink(seed, 0L)
-    val before = Files.list(java.nio.file.Paths.get(dir)).toArray.map(_.toString)
-      .filter(_.contains("__bucket=")).sorted
-    assert(before.length == nb)
-    val mtimes = before.map(p => p -> Files.list(java.nio.file.Paths.get(p))
-      .toArray.map(q => Files.getLastModifiedTime(q.asInstanceOf[java.nio.file.Path]).toMillis).max).toMap
-    Thread.sleep(1100) // let mtime resolution tick
+    val seedGen = sink(seed, 0L).get.gen
+    val before = KeyedUpsertSink.readManifest(dir)
+    assert(before.size == nb && before.values.forall(_ == seedGen))
     // second batch: update one key, insert one — touches at most 2 buckets
     val b2 = Seq(("1", "new", 2L), ("999", "ins", 1L)).toDF("id", "v", "seq")
-    sink(b2, 1L)
+    val gen2 = sink(b2, 1L).get.gen
     val touched = b2.select(KeyedUpsertSink.bucketOf(Seq("id"), nb)).distinct()
-      .collect().map(_.getLong(0)).map(b => s"__bucket=$b").toSet
-    before.foreach { p =>
-      val nowM = Files.list(java.nio.file.Paths.get(p))
-        .toArray.map(q => Files.getLastModifiedTime(q.asInstanceOf[java.nio.file.Path]).toMillis).max
-      if (touched.exists(p.contains)) assert(nowM > mtimes(p), s"touched $p not rewritten")
-      else assert(nowM == mtimes(p), s"untouched $p was rewritten")
+      .collect().map(_.getLong(0)).toSet
+    // only the touched buckets' chains grew, by exactly the new
+    // generation; every other bucket still points at the seed alone
+    val after = KeyedUpsertSink.readManifest(dir)
+    before.foreach { case (b, chain) =>
+      if (touched(b)) assert(after(b) == s"$chain;$gen2", s"touched bucket $b")
+      else assert(after(b) == chain, s"untouched bucket $b was rewritten")
     }
     // LWW semantics survive the bucketed layout, and replay is a no-op
     sink(b2, 1L)
-    val t = KeyedUpsertSink.readBucketed(spark, dir)
+    val t = KeyedUpsertSink.readBucketedDelta(spark, dir, Seq("id"), Seq(col("seq")))
     assert(t.count() == 101)
     assert(t.filter(col("id") === "1").select("v").as[String].head() == "new")
   }

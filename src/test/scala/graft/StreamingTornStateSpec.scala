@@ -8,16 +8,19 @@ import org.apache.spark.sql.functions._
 import graft.dedup.{Dedup, StreamingDedup}
 import graft.pipeline.{Curation, StreamingCuration}
 
-/** Torn-write recovery: the bucketed state sinks rewrite touched
+/** Torn-write recovery. The StreamingDedup band state rewrites touched
   * partitions IN PLACE, so a writer dying mid-batch leaves some
-  * partitions at the new generation and some at the old. The streaming
-  * checkpoint then REPLAYS the batch — and because both merges are
-  * monotone set-unions with deterministic winners (min doc_id per
-  * fingerprint; identity rows per (band,bucket,doc_id)), replaying over
-  * a torn state must converge to exactly the clean run's result. This
-  * spec manufactures the torn state deliberately: snapshot state before
-  * a wave, apply the wave, roll HALF the partitions back to the
-  * snapshot, replay the wave, compare against an untorn run.
+  * partitions at the new generation and some at the old; the
+  * StreamingCuration survivor state commits through the keyed table's
+  * delta protocol, where a writer dying mid-stage leaves part of an
+  * unpublished generation on disk. The streaming checkpoint then
+  * REPLAYS the batch — and because both merges are monotone set-unions
+  * with deterministic winners (min doc_id per fingerprint; identity
+  * rows per (band,bucket,doc_id)), replaying over a torn state must
+  * converge to exactly the clean run's result. This spec manufactures
+  * the torn state deliberately: snapshot state before a wave, apply the
+  * wave, roll HALF of it back to the snapshot, replay the wave, compare
+  * against an untorn run.
   */
 class StreamingTornStateSpec extends SparkSpec {
 
@@ -61,6 +64,34 @@ class StreamingTornStateSpec extends SparkSpec {
     torn
   }
 
+  /** Un-publish the commit a wave made on a delta-protocol table and
+    * keep only HALF of the generation it staged — the outcome of a
+    * writer dying mid-stage: no version file past the snapshot's, the
+    * odd `__bucket=N` dirs of the new generation on disk, the even ones
+    * missing. Returns the bucket dirs removed.
+    */
+  private def tearCommit(state: Path, snapshot: Path): Int = {
+    var torn = 0
+    val s = Files.list(state)
+    try s.forEach { p =>
+      val name = p.getFileName.toString
+      if (!Files.exists(snapshot.resolve(name))) {
+        if (name.startsWith("_manifest.v")) Files.delete(p)
+        else if (name.startsWith("gen-")) {
+          val b = Files.list(p)
+          try b.forEach { q =>
+            val n = q.getFileName.toString
+            if (n.startsWith("__bucket=") &&
+                n.stripPrefix("__bucket=").toLong % 2 == 0) {
+              deleteDir(q); torn += 1
+            }
+          } finally b.close()
+        }
+      }
+    } finally s.close()
+    torn
+  }
+
   test("StreamingDedup: batch replay over a torn state converges to the clean result") {
     val w0 = docs.filter(col("doc_id") % 2 === 0)
     val w1 = docs.filter(col("doc_id") % 2 === 1)
@@ -99,8 +130,11 @@ class StreamingTornStateSpec extends SparkSpec {
       state.toString, 40L, 8) _
     merge(gated(w0), 0L)
     val snap = root.resolve("snap"); copyDir(state, snap)
+    val before = StreamingCuration.corpusView(spark, state.toString).collect().toSet
     merge(gated(w1), 1L)
-    assert(tear(state, snap, "__bucket") > 0, "no partitions torn — vacuous")
+    assert(tearCommit(state, snap) > 0, "no partitions torn — vacuous")
+    // the half-staged, unpublished wave is invisible
+    assert(StreamingCuration.corpusView(spark, state.toString).collect().toSet == before)
     merge(gated(w1), 1L)
     val got = StreamingCuration.corpusView(spark, state.toString).collect().toSet
     val want = Curation.curate(docs, isBench, minShared = 40L).collect().toSet

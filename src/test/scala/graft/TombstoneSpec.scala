@@ -292,8 +292,8 @@ class TombstoneSpec extends SparkSpec {
 
   test("purge is a no-op on a never-versioned table, not a refusal") {
     val t = newTable("graft-del-purge-v0")
-    KeyedUpsertSink.upsertBucketed(
-      spark, t, keys, order, numBuckets = 4)(batchDf(("a", 1L, 10L)), 0L)
+    // an empty first batch: the directory exists, nothing committed
+    assert(sink(t)(batchDf(), 0L).isEmpty)
     assert(KeyedUpsertSink.purgeTombstones(
       spark, t, keys, order, lit(true)).isEmpty)
   }
