@@ -324,18 +324,6 @@ object KeyedUpsertSink {
     }
   }
 
-  /** Bucket ids present on disk under a generation directory. */
-  private def listBucketIds(genDir: Path): Seq[Long] = {
-    val s = Files.list(genDir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("__bucket="))
-        .map(_.stripPrefix("__bucket=").toLong)
-        .toSeq.sorted
-    } finally s.close()
-  }
-
   // ─────────────────────────── versioned manifest commit protocol ──
 
   /** Result of one [[upsertBucketedDelta]] batch: the committed manifest
@@ -620,8 +608,8 @@ object KeyedUpsertSink {
       // job, one full materialization and a persist round-trip per
       // commit, on every delta writer (the stream sink's per-trigger
       // path included). With an empty base nothing is merged, so the
-      // staged generation's own bucket dirs ARE the touched set: write
-      // once, list once. Every head validation (abortIf, layout, schema
+      // buckets the stage write observes ARE the touched set: one write,
+      // no listing. Every head validation (abortIf, layout, schema
       // evolution) already re-runs against the post-stage head below —
       // the freshest base for the first commit attempt — and re-validates
       // on every CAS retry; a batch those checks refuse drops its staged
@@ -630,13 +618,8 @@ object KeyedUpsertSink {
       // nothing a vacuum won't collect).
       val gen = s"gen-$batchId-u${java.util.UUID.randomUUID().toString.take(8)}"
       val staged = mergeLww(None, bucketed, keys, order)
-      StateWriter(staged)
-        .mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
-        .partitionBy("__bucket")
-        .parquet(s"$tablePath/$gen")
+      val touched = StateWriter.generation(staged, s"$tablePath/$gen", keys)
       primeGenSchema(tablePath, gen, staged.schema)
-      val written = listBucketIds(Paths.get(tablePath, gen))
-      val touched = written
       def dropStageEarly(): Unit =
         try deleteRecursively(Paths.get(tablePath, gen))
         catch { case _: java.nio.file.NoSuchFileException => () }
@@ -671,7 +654,7 @@ object KeyedUpsertSink {
       while (!aborted && committed.isEmpty && attempt < maxAttempts) {
         attempt += 1
         if (hookPending) { hookPending = false; onBeforeFirstCommit() }
-        val entries = man ++ written.map { b =>
+        val entries = man ++ touched.map { b =>
           b -> renderChain(man.get(b).map(chainOf).getOrElse(Seq.empty) :+ gen)
         }
         // extraMetaAt sees the VERSION this attempt commits at (ver+1,
@@ -708,7 +691,7 @@ object KeyedUpsertSink {
           readManifest(tablePath).exists { case (b, v) =>
             touched.contains(b) && chainOf(v).length > compactAfter })
         try compactBucketChains(spark, tablePath, keys, order,
-          minChain = compactAfter + 1, buckets = Some(touched.toSet))
+          minChain = compactAfter + 1, buckets = Some(touched))
         catch {
           // best-effort means BEST-EFFORT: the batch's commit is already
           // durably published, so NO compaction failure may fail the
@@ -724,7 +707,7 @@ object KeyedUpsertSink {
       // the in-scope head map (+1 for this commit's append): NO extra
       // listing or manifest read on the hot write path
       if (compactAfter <= 0 && !chainDriftWarned.contains(tablePath))
-        warnChainDrift(tablePath, written.map(b =>
+        warnChainDrift(tablePath, touched.toSeq.map(b =>
           b -> (man.get(b).map(chainOf(_).length).getOrElse(0) + 1)))
       Some(c)
     }
@@ -813,12 +796,8 @@ object KeyedUpsertSink {
       val folded = fold(resolveChainRead(
         readManifestBuckets(spark, tablePath, targets).get, targets,
         keys, order))
-      StateWriter(folded)
-        .mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
-        .partitionBy("__bucket")
-        .parquet(s"$tablePath/$gen")
+      val written = StateWriter.generation(folded, s"$tablePath/$gen", keys)
       primeGenSchema(tablePath, gen, folded.schema)
-      val written = listBucketIds(Paths.get(tablePath, gen)).toSet
       var head = (ver, man)
       var stale = false
       while (!stale && attempt < maxAttempts) {
@@ -995,14 +974,9 @@ object KeyedUpsertSink {
       val gen = s"gen-rebucket-u${java.util.UUID.randomUUID().toString.take(8)}"
       val resolved = resolveChainRead(
         readManifestBuckets(spark, tablePath, man).get, man, keys, order)
-      val rebucketed = resolved
-        .withColumn("__bucket", bucketOf(keys, newBuckets))
-      StateWriter(rebucketed)
-        .mode(SaveMode.ErrorIfExists)
-        .partitionBy("__bucket")
-        .parquet(s"$tablePath/$gen")
+      val rebucketed = resolved.withColumn("__bucket", bucketOf(keys, newBuckets))
+      val written = StateWriter.generation(rebucketed, s"$tablePath/$gen", keys)
       primeGenSchema(tablePath, gen, rebucketed.schema)
-      val written = listBucketIds(Paths.get(tablePath, gen))
       // the new map REPLACES the old one in full: old bucket ids vanish
       // (their generations become vacuum-reclaimable), the metadata
       // records the new layout atomically with it
@@ -1032,42 +1006,59 @@ object KeyedUpsertSink {
       chainLen: Int)
 
   /** Per-bucket physical stats from the head manifest + file listing —
-    * driver-side METADATA (one directory listing per (bucket,
-    * generation) pair, the same class of work as vacuum), never a data
-    * scan. The operational input [[adviseRebucket]] reads.
+    * driver-side METADATA (one listing per referenced generation, the
+    * same class of work as vacuum), never a data scan. The operational
+    * input [[adviseRebucket]] reads.
+    *
+    * A generation holds every bucket its commit touched, so its files
+    * and bytes are split evenly over the buckets whose head chain
+    * references it (the remainder to the lowest bucket ids): the sums
+    * over buckets are exactly the distinct referenced files and their
+    * bytes, each counted once.
     */
   def tableStats(tablePath: String): Seq[BucketStats] = {
-    import scala.jdk.CollectionConverters._
-    readManifest(tablePath).toSeq.sortBy(_._1).map { case (b, chain) =>
-      val gens = chainOf(chain)
-      var files = 0L
-      var bytes = 0L
-      gens.foreach { g =>
-        val dir = Paths.get(tablePath, g, s"__bucket=$b")
-        // tolerate concurrent reclamation (vacuum/compaction deleting a
-        // superseded generation between the manifest snapshot and this
-        // listing): a read-only advisor returns slightly-stale stats,
-        // never a NoSuchFileException — the markers() discipline
-        try {
-          if (Files.isDirectory(dir)) {
-            val s = Files.list(dir)
-            try s.iterator().asScala.foreach { p =>
-              val n = p.getFileName.toString
-              if (!n.startsWith(".") && !n.startsWith("_")) {
-                files += 1
-                bytes += scala.util.Try(Files.size(p)).getOrElse(0L)
-              }
-            } finally s.close()
-          }
-        } catch {
-          case _: java.nio.file.NoSuchFileException => ()
-          case e: java.io.UncheckedIOException
-              if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] => ()
-        }
+    val chains = readManifest(tablePath).map { case (b, v) => b -> chainOf(v) }
+    val holders = chains.toSeq
+      .flatMap { case (b, gens) => gens.map(_ -> b) }
+      .groupMap(_._1)(_._2)
+    def share(total: Long, n: Int, i: Int): Long =
+      total / n + (if (i < total % n) 1L else 0L)
+    val shares = holders.flatMap { case (g, bs) =>
+      val (files, bytes) = generationFiles(Paths.get(tablePath, g))
+      bs.sorted.zipWithIndex.map { case (b, i) =>
+        (g, b) -> (share(files, bs.size, i), share(bytes, bs.size, i))
       }
-      BucketStats(b, files, bytes, gens.length)
+    }
+    chains.toSeq.sortBy(_._1).map { case (b, gens) =>
+      val own = gens.map(g => shares((g, b)))
+      BucketStats(b, own.map(_._1).sum, own.map(_._2).sum, gens.length)
     }
   }
+
+  /** (data files, bytes) under one generation directory. Tolerates
+    * concurrent reclamation (vacuum/compaction deleting a superseded
+    * generation between the manifest snapshot and this listing): a
+    * read-only advisor returns slightly-stale stats, never a
+    * NoSuchFileException — the markers() discipline.
+    */
+  private def generationFiles(dir: Path): (Long, Long) =
+    try {
+      import scala.jdk.CollectionConverters._
+      val s = Files.walk(dir)
+      try s.iterator().asScala
+        .filter { p =>
+          val n = p.getFileName.toString
+          !n.startsWith(".") && !n.startsWith("_") && Files.isRegularFile(p)
+        }
+        .foldLeft((0L, 0L)) { case ((files, bytes), p) =>
+          (files + 1, bytes + scala.util.Try(Files.size(p)).getOrElse(0L))
+        }
+      finally s.close()
+    } catch {
+      case _: java.nio.file.NoSuchFileException => (0L, 0L)
+      case e: java.io.UncheckedIOException
+          if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] => (0L, 0L)
+    }
 
   /** A recommendation to resize — see [[adviseRebucket]]. */
   final case class RebucketAdvice(currentBuckets: Int,
@@ -1099,8 +1090,8 @@ object KeyedUpsertSink {
 
   /** [[adviseRebucket]] over a caller-supplied [[tableStats]] snapshot
     * — the advise verb computes stats ONCE and feeds both this and the
-    * compact advisor instead of paying the per-(bucket, generation)
-    * directory walk twice per scan.
+    * compact advisor instead of paying the per-generation listing
+    * twice per scan.
     */
   private[graft] def adviseRebucketWith(tablePath: String,
       stats: Seq[BucketStats],
@@ -1510,9 +1501,9 @@ object KeyedUpsertSink {
     entries.valuesIterator.exists(_.contains(';'))
 
   /** Read the given bucket→chain entries, one scan per distinct
-    * (generation, chain position) pair (basePath keeps the `__bucket=N`
-    * partition column), cast back to the writer's long type. None when
-    * no entry exists yet. The returned frame carries `__seq` = the
+    * (generation, chain position) pair, each restricted to the buckets
+    * whose chain holds that generation at that position. None when no
+    * entry exists yet. The returned frame carries `__seq` = the
     * generation's position in ITS bucket's chain: keys never compete
     * across buckets, so per-bucket positions are a sound LWW recency
     * axis even though one generation may sit at different depths in
@@ -1563,26 +1554,20 @@ object KeyedUpsertSink {
 
   /** Prime [[genSchemaCache]] for a generation THIS writer just wrote
     * (round-20 optimization): the writer already knows the read-back
-    * schema — the written frame's columns minus the `__bucket`
-    * partition column (moved to directory names) plus `__bucket`
-    * re-appended as the partition column — so the first read of every
-    * fresh generation can skip its schema-inference job (~25-35 ms of
-    * driver footer I/O per commit, on every writer: delta stage,
-    * compaction/purge folds, rebucket). `__bucket` is
-    * primed as LONG, making [[readBucketTriples]]'s normalizing cast a
-    * no-op; data fields are relaxed to nullable to match what parquet
-    * footer inference would report. Best-effort: a failure here just
-    * means the reader infers as before.
+    * schema — the written frame's columns, `__bucket` (a stored long)
+    * among them as a data column — so the first read of every fresh
+    * generation can skip its schema-inference job (~25-35 ms of driver
+    * footer I/O per commit, on every writer: delta stage,
+    * compaction/purge folds, rebucket). Fields are relaxed to nullable
+    * to match what parquet footer inference would report. Best-effort:
+    * a failure here just means the reader infers as before.
     */
   private def primeGenSchema(tablePath: String, gen: String,
       written: org.apache.spark.sql.types.StructType): Unit =
     try {
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
       val genDir = Paths.get(tablePath, gen)
-      val readBack = StructType(
-        written.fields.filterNot(_.name == "__bucket")
-          .map(_.copy(nullable = true)) :+
-          StructField("__bucket", LongType, nullable = true))
+      val readBack = org.apache.spark.sql.types.StructType(
+        written.fields.map(_.copy(nullable = true)))
       if (genSchemaCache.size > 4096) genSchemaCache.clear()
       genSchemaCache.put(
         (genDir.toString, Files.getLastModifiedTime(genDir)), readBack)
@@ -1594,15 +1579,19 @@ object KeyedUpsertSink {
     * feed's append fast path to read a chain SUFFIX at its true
     * positions.
     *
-    * Round-19 scan shape: one read per generation, schema pinned from
-    * [[genSchemaCache]] (no per-read inference job), and the scan
-    * coalesced to ~128 MB input per task. Without the coalesce, Spark's
-    * parallelism-first split sizing (`spark.sql.files.minPartitionNum`
-    * defaults to the core count) gives every small bucket FILE its own
-    * task — a 7-link × 16-bucket chain resolve ran 112 near-empty tasks
-    * where 7 suffice. The target tracks real bytes, so a 100 TB chain
-    * keeps its full scan parallelism (guide §2.2/§6: fewer, larger
-    * tasks; small files are the enemy).
+    * One read per (generation, position): the generation directory
+    * filtered by `__bucket IN (the buckets holding it there)`. The filter
+    * is required for correctness: a generation holds every bucket its
+    * commit touched, and after a partial compaction or purge some of
+    * them no longer reference it — their stale rows must not come back.
+    * Generations written with `__bucket=N` directories read the same
+    * way: Spark discovers the column and the filter prunes partitions.
+    *
+    * Round-19 scan shape: schema pinned from [[genSchemaCache]] (no
+    * per-read inference job), and the scan coalesced to ~128 MB input
+    * per task — Spark's parallelism-first split sizing would otherwise
+    * give every small file its own task, while a 100 TB chain keeps its
+    * full scan parallelism (guide §2.2/§6).
     */
   private def readBucketTriples(
       spark: SparkSession,
@@ -1615,8 +1604,7 @@ object KeyedUpsertSink {
       val union = triples.groupBy(t => (t._1, t._2)).toSeq.sortBy(_._1).map {
         case ((gen, pos), grp) =>
           val genDir = Paths.get(tablePath, gen)
-          val paths = grp.map(_._3).sorted
-            .map(b => s"$tablePath/$gen/__bucket=$b")
+          val buckets = grp.map(_._3).distinct.sorted
           // RESOLVED-scan cache (round-20, third pass): constructing a
           // reader runs the analyzer's ResolveDataSource rule — a
           // driver-side relation resolve (existence probes + file-index
@@ -1627,34 +1615,29 @@ object KeyedUpsertSink {
           // tier; at object-store latency each re-resolve is a remote
           // LIST). Generation dirs are immutable once written (attempt
           // dirs are write-once, folds/rebuckets mint NEW gens), so the
-          // resolved frame — scan + byte-sized coalesce + __bucket
-          // normalize, everything below the per-call `__seq` position
-          // tag — is reusable for the life of the dir; the mtime key
-          // evicts on any rewrite, the session token isolates sessions,
-          // and the size cap bounds retention. A cached PLAN, not data:
-          // every action still scans the parquet files.
+          // resolved frame — scan + bucket filter + byte-sized coalesce,
+          // everything below the per-call `__seq` position tag — is
+          // reusable for the life of the dir; the mtime key evicts on
+          // any rewrite, the session token isolates sessions, and the
+          // size cap bounds retention. A cached PLAN, not data: every
+          // action still scans the parquet files.
           val base = genScanCache.computeIfAbsent(
             (graft.Tables.sessionToken(spark), genDir.toString,
-              Files.getLastModifiedTime(genDir), paths.mkString(",")),
+              Files.getLastModifiedTime(genDir), buckets.mkString(",")),
             _ => {
-              def rd = spark.read.option("basePath", s"$tablePath/$gen")
               val schema = genSchemaCache.computeIfAbsent(
                 (genDir.toString, Files.getLastModifiedTime(genDir)),
-                _ => rd.parquet(paths: _*).schema)
-              val bytes = paths.iterator.map { p =>
-                val s = Files.list(Paths.get(p))
-                try {
-                  import scala.jdk.CollectionConverters._
-                  s.iterator().asScala
-                    .filter(_.getFileName.toString.endsWith(".parquet"))
-                    .map(Files.size).sum
-                } finally s.close()
-              }.sum
+                _ => spark.read.parquet(genDir.toString).schema)
+              val bytes = generationFiles(genDir)._2
               val targetParts =
                 math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20)).toInt
-              rd.schema(schema).parquet(paths: _*)
-                .coalesce(targetParts)
+              // the long cast is a no-op on a stored column; it widens
+              // the int that partition discovery infers for `__bucket=N`
+              // directories
+              spark.read.schema(schema).parquet(genDir.toString)
                 .withColumn("__bucket", col("__bucket").cast("long"))
+                .filter(col("__bucket").isin(buckets: _*))
+                .coalesce(targetParts)
             })
           base.withColumn("__seq", lit(pos.toLong))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -1888,7 +1871,7 @@ object KeyedUpsertSink {
 
   /** Bucket-pruned point lookup: resolve ONLY the buckets the requested
     * keys hash to — at 100 TB a point read must touch O(requested keys)
-    * bucket directories, never scan the table. `keyDf` carries exactly
+    * buckets' generations, never scan the table. `keyDf` carries exactly
     * the key columns (one row per requested key tuple); the bucket count
     * comes from the table's layout record (manifest metadata after a
     * [[rebucketTable]], else the `_layout` sidecar), so the reader
@@ -2736,22 +2719,8 @@ object KeyedUpsertSink {
       .filter(_.getFileName.toString.startsWith("gen-")) finally s.close()
     val dead = gens.filterNot(p => live.contains(p.getFileName.toString))
       .sortBy(_.getFileName.toString)
-    val bytes = dead.map { p =>
-      // same concurrent-reclaim tolerance as tableStats: a vacuum can
-      // delete a dead generation mid-walk — count what remains
-      try {
-        val w = Files.walk(p)
-        try w.iterator().asScala
-          .map(q => scala.util.Try(
-            if (Files.isRegularFile(q)) Files.size(q) else 0L).getOrElse(0L))
-          .sum
-        finally w.close()
-      } catch {
-        case _: java.nio.file.NoSuchFileException => 0L
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] => 0L
-      }
-    }.sum
+    // a vacuum can delete a dead generation mid-walk — count what remains
+    val bytes = dead.map(generationFiles(_)._2).sum
     VacuumStats(live.size, dead.map(_.getFileName.toString), bytes,
       vfiles.size)
   }

@@ -1,6 +1,7 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode}
+import org.apache.spark.sql.functions.{col, collect_set}
 
 /** The one parquet writer for state the engine reads back: keyed-table
   * generations, maintained-view versions and streaming operator stores.
@@ -31,4 +32,22 @@ private[graft] object StateWriter {
     df.write
       .option("compression", Codec)
       .option("parquet.writer.version", PageVersion)
+
+  /** Write one keyed-table generation to the new directory `dir` and
+    * return the bucket ids it holds. `__bucket` is a stored column, not a
+    * partition directory: each write task sorts its rows by (`__bucket`,
+    * keys) and writes ONE file, so a commit pays the ~1.5 KB a parquet
+    * file costs in footer, schema and dictionaries once per task, not
+    * once per (task, bucket); sorted runs also pack tighter and let
+    * row-group statistics prune a bucket subset. The bucket set is an
+    * [[Observation]] of the write itself: no listing, no extra job.
+    */
+  def generation(df: DataFrame, dir: String, keys: Seq[String]): Set[Long] = {
+    val buckets = Observation()
+    apply(df.observe(buckets, collect_set(col("__bucket")).as("b"))
+        .sortWithinPartitions((col("__bucket") +: keys.map(col)): _*))
+      .mode(SaveMode.ErrorIfExists) // attempt dirs are never reused
+      .parquet(dir)
+    buckets.get("b").asInstanceOf[scala.collection.Seq[Long]].toSet
+  }
 }

@@ -84,34 +84,38 @@ class ChangeFeedAdmissionSpec extends SparkSpec {
   }
 
   test("a bucket slice structurally never touches buckets outside it (deletion proof)") {
-    // the SinkLookupSpec pattern: DELETE every file outside the slice
-    // before reading — a scan that touched them would fail loudly, so a
-    // passing read is proof of pruning, not an inference from metrics
+    // the SinkLookupSpec pattern: DELETE every generation outside the
+    // slice before reading — a scan that touched one would fail loudly,
+    // so a passing read is proof of pruning, not an inference from
+    // metrics. A generation holds all the buckets its commit touched, so
+    // the fixture gives the slice's buckets and the others different
+    // chains: v2 writes only buckets outside the slice
     val root = Files.createTempDirectory("graft-adm-prune")
     val table = root.resolve("t").toString
     sink(table)(fatBatch, 0L) // v1 touches all 8 buckets
-    val touched = KeyedUpsertSink.touchedBucketsAt(table, 1L).get
-    val slice = touched.take(3).toSet
-    val expect = KeyedUpsertSink
-      .readChangesSlice(spark, table, keys, order, 1L, slice, weighted = false)
+    val slice = KeyedUpsertSink.touchedBucketsAt(table, 1L).get.take(3).toSet
+    val bucketOf = fatBatch
+      .select(col("k"), KeyedUpsertSink.bucketOf(keys, 8))
+      .as[(String, Long)].collect().toMap
+    val outside = (1 to 64).filterNot(i => slice(bucketOf(s"k$i")))
+    val v2 = sink(table)(
+      batchDf(outside.map(i => (s"k$i", i + 100L, 20L)): _*), 1L).get
+    sink(table)(batchDf((1 to 64).map(i => (s"k$i", i + 200L, 30L)): _*), 2L) // v3
+    assert(KeyedUpsertSink.touchedBucketsAt(table, 3L).get.toSet.size == 8)
+    def read() = KeyedUpsertSink
+      .readChangesSlice(spark, table, keys, order, 3L, slice, weighted = false)
       .select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
-    // destroy every OTHER bucket's directory under the generation
-    import scala.jdk.CollectionConverters._
-    val gens = Files.list(java.nio.file.Paths.get(table)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("gen-")).toList
-    assert(gens.size == 1)
-    touched.filterNot(slice).foreach { b =>
-      val dir = gens.head.resolve(s"__bucket=$b")
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder()).iterator()
-        .forEachRemaining(p => { Files.deleteIfExists(p); () })
-      finally s.close()
-    }
-    val got = KeyedUpsertSink
-      .readChangesSlice(spark, table, keys, order, 1L, slice, weighted = false)
-      .select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
-    assert(got == expect && got.nonEmpty,
-      "the slice must read identically with every other bucket destroyed")
+    val expect = (1 to 64).filter(i => slice(bucketOf(s"k$i")))
+      .map(i => (s"k$i", i + 200L, 30L)).toSet
+    assert(read() == expect && expect.nonEmpty)
+    // destroy the generation only the OTHER buckets reference
+    val dir = java.nio.file.Paths.get(table, v2.gen)
+    val s = Files.walk(dir)
+    try s.sorted(java.util.Comparator.reverseOrder()).iterator()
+      .forEachRemaining(p => { Files.deleteIfExists(p); () })
+    finally s.close()
+    assert(read() == expect,
+      "the slice must read identically with the other buckets' generation destroyed")
   }
 
   test("cursor offsets recover through a mid-version checkpoint after a consumer crash") {

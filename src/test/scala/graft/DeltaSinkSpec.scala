@@ -45,6 +45,157 @@ class DeltaSinkSpec extends SparkSpec {
     KeyedUpsertSink.readManifest(path)
       .map { case (b, v) => b -> KeyedUpsertSink.chainOf(v).length }
 
+  private def rows(df: DataFrame): Seq[(String, Long, Long)] =
+    df.select("k", "v", "ts").as[(String, Long, Long)].collect().toSeq.sorted
+
+  private def bucketsOf(ks: Seq[String], numBuckets: Int): Map[String, Long] =
+    ks.toDF("k").select(col("k"), KeyedUpsertSink.bucketOf(keys, numBuckets))
+      .as[(String, Long)].collect().toMap
+
+  /** Every read path of `path` against the LWW model (version → resolved
+    * image), duplicates included: the head read, a point lookup of
+    * `lookupKeys`, time travel to every modelled version below the
+    * head, and the plain change feed from every version in
+    * [`feedFrom`, head) to the head (the rows of the head image not
+    * identically in the from image).
+    */
+  private def assertReadsEqualModel(what: String, path: String,
+      model: collection.Map[Long, Map[String, (Long, Long)]],
+      lookupKeys: Seq[String], feedFrom: Long): Unit = {
+    def image(v: Long): Seq[(String, Long, Long)] =
+      model(v).toSeq.map { case (k, (v, ts)) => (k, v, ts) }.sorted
+    val head = KeyedUpsertSink.tableVersions(path).max
+    assert(rows(KeyedUpsertSink.readBucketedDelta(spark, path, keys, order))
+      == image(head), s"$what: head read at v$head")
+    assert(rows(KeyedUpsertSink.lookupBucketed(spark, path, keys, order,
+      lookupKeys.toDF("k"))) == image(head).filter(r => lookupKeys.contains(r._1)),
+      s"$what: lookup at v$head")
+    model.keys.filter(_ < head).toSeq.sorted.foreach { v =>
+      assert(rows(KeyedUpsertSink.readBucketedDelta(spark, path, keys, order,
+        atVersion = Some(v))) == image(v), s"$what: time travel to v$v")
+    }
+    (feedFrom until head).foreach { from =>
+      assert(rows(KeyedUpsertSink.readChangesBetween(spark, path, keys, order,
+        from)) == image(head).diff(image(from)), s"$what: change feed from v$from")
+    }
+  }
+
+  test("a generation shared by buckets that a partial compaction or purge moved off it never resurrects their rows") {
+    val path = newTable("graft-delta-shared")
+    val ks = (1 to 32).map(i => s"k$i")
+    val bucket = bucketsOf(ks, 4)
+    // x and z share bucket s; w sits in bucket b; c in a third bucket
+    val x = "k1"
+    val s = bucket(x)
+    val z = ks.find(k => k != x && bucket(k) == s).get
+    val w = ks.find(k => bucket(k) != s).get
+    val b = bucket(w)
+    val c = ks.find(k => bucket(k) != s && bucket(k) != b).get
+    val model = scala.collection.mutable.Map[Long, Map[String, (Long, Long)]]()
+    var image = Map.empty[String, (Long, Long)]
+    def record(v: Long): Unit = model(v) = image
+    def upsert(batchId: Long, rs: (String, Long, Long)*): Unit = {
+      val committed = delta(path)(batchDf(rs: _*), batchId)
+      image ++= rs.map { case (k, v, ts) => k -> (v, ts) }
+      record(committed.version)
+    }
+    def head = KeyedUpsertSink.tableVersions(path).max
+    upsert(0L, ks.zipWithIndex.map { case (k, i) => (k, i.toLong, 10L) }: _*) // v1
+    upsert(1L, (x, 100L, 20L), (w, 200L, 20L))                                // v2
+    val del = KeyedUpsertSink.deleteBucketedDelta(spark, path, keys, order,
+      numBuckets = 4)(Seq((z, 30L)).toDF("k", "ts"), 2L).get                 // v3
+    image -= z
+    record(del.version)
+    val lookups = Seq(x, z, w, c)
+    // the shared v1 generation stays referenced by every bucket but s
+    assert(KeyedUpsertSink.compactBucketChains(spark, path, keys, order,
+      buckets = Some(Set(s))) == Seq(s))                                     // v4
+    record(head)
+    assertReadsEqualModel("after compacting bucket s", path, model, lookups,
+      feedFrom = del.version)
+    // ...and by no bucket with a chain: the resolved read is a plain scan
+    assert(KeyedUpsertSink.compactBucketChains(spark, path, keys, order,
+      buckets = Some(Set(b))) == Seq(b))                                     // v5
+    record(head)
+    assert(KeyedUpsertSink.readManifest(path).values.forall(!_.contains(";")))
+    assertReadsEqualModel("after compacting bucket b", path, model, lookups,
+      feedFrom = del.version)
+    // the purge drops z's tombstone: only the filter keeps v1's z row out
+    assert(KeyedUpsertSink.purgeTombstones(spark, path, keys, order,
+      col("ts") <= 30L) == Seq(s))                                           // v6
+    record(head)
+    upsert(3L, (c, 300L, 40L))                                               // v7
+    assertReadsEqualModel("after the purge", path, model, lookups,
+      feedFrom = del.version)
+  }
+
+  test("chains mixing a bucket-directory generation with one-file generations read, fold and rewrite alike") {
+    import graft.sink.MaterializedAggView
+    import graft.sink.MaterializedAggView.AggCol
+    val root = Files.createTempDirectory("graft-delta-mixed")
+    val path = root.resolve("t").toString
+    val view = root.resolve("view").toString
+    val ks = (1 to 32).map(i => s"k$i")
+    val bucket = bucketsOf(ks, 4)
+    // v1: a generation stored the way earlier writers stored them — one
+    // `__bucket=N` directory per bucket — published through the manifest
+    val first = ks.zipWithIndex.map { case (k, i) => (k, i.toLong, 10L) }
+    batchDf(first: _*).withColumn("__bucket", KeyedUpsertSink.bucketOf(keys, 4))
+      .write.partitionBy("__bucket").parquet(s"$path/gen-legacy")
+    Files.writeString(Paths.get(path, "_layout"), "numBuckets=4\n")
+    assert(KeyedUpsertSink.tryCommitVersion(path, 1L,
+      bucket.values.toSeq.distinct.map(_ -> "gen-legacy").toMap))
+    val model = scala.collection.mutable.Map[Long, Map[String, (Long, Long)]]()
+    var image = first.map { case (k, v, ts) => k -> (v, ts) }.toMap
+    model(1L) = image
+    val aggs = Seq(AggCol("n", lit(1L)), AggCol("sum_v", col("v")))
+    MaterializedAggView.bootstrap(spark, path, view, keys, order, Seq("ts"), aggs)
+    def viewEqualsModel(what: String): Unit = {
+      MaterializedAggView.maintainStream(spark, path, view, keys, order,
+        Seq("ts"), aggs, checkpointDir = root.resolve("ckpt").toString)
+        .awaitTermination()
+      val want = image.values.groupBy(_._2)
+        .map { case (ts, vs) => (ts, vs.size.toLong, vs.map(_._1).sum) }.toSet
+      assert(MaterializedAggView.read(spark, view).select("ts", "n", "sum_v")
+        .as[(Long, Long, Long)].collect().toSet == want, s"$what: view")
+    }
+    // one-file generations on top: an upsert wave, then a delete
+    val wave = Seq(("k1", 100L, 20L), ("k2", 200L, 20L), ("new", 1L, 20L))
+    val v2 = delta(path)(batchDf(wave: _*), 0L).version
+    image ++= wave.map { case (k, v, ts) => k -> (v, ts) }
+    model(v2) = image
+    val v3 = KeyedUpsertSink.deleteBucketedDelta(spark, path, keys, order,
+      numBuckets = 4)(Seq(("k3", 30L)).toDF("k", "ts"), 1L).get.version
+    image -= "k3"
+    model(v3) = image
+    val lookups = Seq("k1", "k3", "k4", "new")
+    assertReadsEqualModel("legacy + one-file chains", path, model, lookups,
+      feedFrom = v3)
+    assert(rows(KeyedUpsertSink.readChangesBetween(spark, path, keys, order,
+      1L, Some(v2))) == wave.sorted, "change feed from the legacy version")
+    viewEqualsModel("legacy + one-file chains")
+    // a partial compaction leaves the legacy generation shared
+    val s = bucket("k1")
+    KeyedUpsertSink.compactBucketChains(spark, path, keys, order,
+      buckets = Some(Set(s)))
+    model(KeyedUpsertSink.tableVersions(path).max) = image
+    assertReadsEqualModel("after a partial compaction", path, model, lookups,
+      feedFrom = v3)
+    KeyedUpsertSink.compactBucketChains(spark, path, keys, order)
+    KeyedUpsertSink.rebucketTable(spark, path, keys, order, newBuckets = 2)
+    viewEqualsModel("after compaction and rebucket")
+    KeyedUpsertSink.vacuumGenerations(path, quiesceMs = 0L)
+    assert(rows(KeyedUpsertSink.readBucketedDelta(spark, path, keys, order))
+      == image.toSeq.map { case (k, (v, ts)) => (k, v, ts) }.sorted)
+    val left = {
+      val walk = Files.walk(Paths.get(path))
+      try walk.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("__bucket=")).toList
+      finally walk.close()
+    }
+    assert(left.isEmpty, s"bucket directories left after the rewrite: $left")
+  }
+
   test("chain-resolved read equals the merge-on-write table over the same batches") {
     val ev = Tables.events(spark, Sf0001).select(col("user_id"),
       col("event_id"), col("ts_us"))
@@ -141,7 +292,7 @@ class DeltaSinkSpec extends SparkSpec {
     // `_manifest` file; read as an empty v0, such a table would lose
     // every row, and a commit on top would publish a v1 hiding them
     val path = newTable("graft-delta-lockpath")
-    Files.createDirectories(Paths.get(path, "gen-0", "__bucket=0"))
+    Files.createDirectories(Paths.get(path, "gen-0"))
     Files.writeString(Paths.get(path, "_manifest"), "0,gen-0\n")
     def refused(what: String)(body: => Any): Unit = {
       val err = intercept[IllegalStateException](body)

@@ -1089,6 +1089,33 @@ class GraftFormatSpec extends SparkSpec {
         chunks.map(c => s"${c.getPath}:${c.getEncodings}").mkString(", "))
   }
 
+  /** A keyed-table generation is flat: one parquet file per write task
+    * (Spark names a task's files `part-<task>-<uuid>-c<n>`, so one file
+    * per task is distinct task numbers, each file `c000`), no
+    * `__bucket=` subdirectory, and `__bucket` stored non-decreasing
+    * within each file. Returns the generation's parquet files.
+    */
+  private def assertOneFilePerTask(what: String, dir: Path): Seq[Path] = {
+    val entries = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    assert(!entries.exists(Files.isDirectory(_)),
+      s"$what: subdirectories in $dir: ${entries.filter(Files.isDirectory(_))}")
+    val files = entries.filter(_.getFileName.toString.endsWith(".parquet"))
+    val names = files.map(_.getFileName.toString)
+    assert(names.nonEmpty && names.forall(_.contains("-c000")) &&
+      names.map(_.split("-")(1)).distinct.size == names.size,
+      s"$what: not one file per write task: $names")
+    files.foreach { f =>
+      val b = spark.read.parquet(f.toString).select("__bucket").as[Long]
+        .collect().toSeq
+      assert(b.nonEmpty && b == b.sorted,
+        s"$what: __bucket not sorted within ${f.getFileName}")
+    }
+    files
+  }
+
   test("every keyed-table and view writer stores zstd with parquet v2 delta pages") {
     val root = Files.createTempDirectory("graft-state-format")
     val t = root.resolve("t").toString
@@ -1096,16 +1123,19 @@ class GraftFormatSpec extends SparkSpec {
     val lkeys = Seq("k")
     def rows(ids: Range, ts: Long) =
       ids.map(i => (i.toLong, i / 4, i * 1000L + ts, ts)).toDF("k", "g", "v", "ts")
-    def step(what: String)(write: => Unit): Unit = {
+    def step(what: String)(write: => Unit): Seq[Path] = {
       val before = genDirs(t)
       write
       val added = genDirs(t) -- before
       assert(added.size == 1, s"$what added generations $added")
       assertStateFormat(what, Paths.get(t, added.head))
+      assertOneFilePerTask(what, Paths.get(t, added.head))
     }
     Files.createDirectories(Paths.get(t))
-    step("delta upsert")(KeyedUpsertSink.upsertBucketedDelta(
+    val first = step("delta upsert")(KeyedUpsertSink.upsertBucketedDelta(
       spark, t, lkeys, order, numBuckets = 4, compactAfter = 0)(rows(0 until 200, 10L), 0L))
+    // a small commit is one file, whatever the number of buckets it touches
+    assert(first.size == 1, s"a 200-row commit wrote ${first.size} files")
     step("delta upsert")(KeyedUpsertSink.upsertBucketedDelta(
       spark, t, lkeys, order, numBuckets = 4, compactAfter = 0)(rows(0 until 200 by 3, 20L), 1L))
     step("delete")(KeyedUpsertSink.deleteBucketedDelta(

@@ -41,31 +41,56 @@ class SinkLookupSpec extends SparkSpec {
     finally s.close()
   }
 
-  /** Destroy every `__bucket=N` directory under every generation EXCEPT
-    * the buckets `keepKeys` hash to — the structural pruning proof: a
-    * read that scans a destroyed bucket fails loudly, so a passing read
-    * provably never touched it.
-    */
-  private def nukeOtherBuckets(path: String, keepKeys: Seq[String]): Unit = {
-    import scala.jdk.CollectionConverters._
+  private def bucketsOf(path: String, ks: Seq[String]): Set[Long] = {
     val nb = KeyedUpsertSink.readLayout(path).get
-    val keep = keyDf(keepKeys: _*)
-      .withColumn("__b", KeyedUpsertSink.bucketOf(keys, nb))
+    keyDf(ks: _*).withColumn("__b", KeyedUpsertSink.bucketOf(keys, nb))
       .select("__b").as[Long].collect().toSet
+  }
+
+  /** Destroy every generation that no bucket `keepKeys` hash to
+    * references — the structural pruning proof: a read that scans a
+    * destroyed generation fails loudly, so a passing read provably never
+    * touched it. Returns the generations destroyed. (A generation is one
+    * file holding every bucket its commit touched; inside a kept
+    * generation, pruning to the requested buckets is the `__bucket`
+    * filter [[unfilteredScans]] checks for.)
+    */
+  private def nukeOtherBuckets(path: String, keepKeys: Seq[String]): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val keep = bucketsOf(path, keepKeys)
+    val live = KeyedUpsertSink.readManifest(path)
+      .collect { case (b, v) if keep(b) => KeyedUpsertSink.chainOf(v) }
+      .flatten.toSet
     val s = Files.list(Paths.get(path))
     val genDirs =
       try s.iterator().asScala.toList
         .filter(_.getFileName.toString.startsWith("gen-"))
       finally s.close()
-    genDirs.foreach { gen =>
-      val b = Files.list(gen)
-      try b.iterator().asScala.toList
-        .filter(_.getFileName.toString.startsWith("__bucket="))
-        .filterNot(p => keep.contains(
-          p.getFileName.toString.stripPrefix("__bucket=").toLong))
-        .foreach(nuke)
-      finally b.close()
+    genDirs.filterNot(g => live(g.getFileName.toString)).map { g =>
+      nuke(g); g.getFileName.toString
+    }.toSet
+  }
+
+  /** Every file scan under `df`'s executed plan (runs it once). */
+  private def scans(df: DataFrame)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    df.write.format("noop").mode("overwrite").save()
+    def walk(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: FileSourceScanExec => Seq(s)
+      case other => (other.children ++ other.subqueries).flatMap(walk)
     }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** The scans of `df` whose pushed filters do NOT restrict `__bucket`. */
+  private def unfilteredScans(df: DataFrame): Seq[String] = {
+    val all = scans(df)
+    assert(all.nonEmpty, "no file scan in the plan")
+    all.map(_.metadata.getOrElse("PushedFilters", ""))
+      .filterNot(_.contains("__bucket"))
   }
 
   test("a writer with a different bucket count is refused before it can corrupt the table") {
@@ -85,16 +110,24 @@ class SinkLookupSpec extends SparkSpec {
     delta(path)(batchDf(rows: _*), 0L)
     delta(path)(batchDf(("k1", 100L, 20L)), 1L) // a chain on k1's bucket
     val wantKeys = Seq("k1", "k17")
-    nukeOtherBuckets(path, wantKeys)
-    val got = KeyedUpsertSink.lookupBucketed(spark, path, keys, order,
+    // a commit only the OTHER buckets reference
+    val want = bucketsOf(path, wantKeys)
+    val other = rows.map(_._1).find(k => !want(bucketsOf(path, Seq(k)).head)).get
+    val otherGen = delta(path)(batchDf((other, 7L, 30L)), 2L).gen
+    assert(nukeOtherBuckets(path, wantKeys) == Set(otherGen))
+    val lookup = KeyedUpsertSink.lookupBucketed(spark, path, keys, order,
       keyDf(wantKeys: _*))
+    val got = lookup
       .select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
     assert(got == Set(("k1", 100L, 20L), ("k17", 17L, 10L)),
       "lookup must resolve the chain LWW for exactly the requested keys")
+    // inside the shared generations, the scan reads only the requested
+    // buckets' rows: every scan pushes the `__bucket` filter
+    val unfiltered = unfilteredScans(lookup)
+    assert(unfiltered.isEmpty, s"lookup scans without a __bucket filter: $unfiltered")
   }
 
   test("point lookup pushes the requested keys into the parquet scan below the LWW window") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val path = newTable("graft-lkp-push")
     val up = delta(path) _
     up(batchDf(("a", 1L, 10L), ("b", 1L, 10L), ("c", 1L, 10L),
@@ -104,16 +137,7 @@ class SinkLookupSpec extends SparkSpec {
       spark, path, keys, order, keyDf("a", "c"))
     assert(df.select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
       == Set(("a", 2L, 20L), ("c", 2L, 20L)))
-    df.write.format("noop").mode("overwrite").save()
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case s: FileSourceScanExec => Seq(s)
-      case other =>
-        (other.children ++ other.subqueries).flatMap(scans)
-    }
-    val pushed = scans(df.queryExecution.executedPlan)
+    val pushed = scans(df)
       .map(_.metadata.getOrElse("PushedFilters", "")).mkString("; ")
     // the requested keys reach the scan as an In/EqualTo filter — parquet
     // row-group stats can skip the bucket's other keys' data, and the
@@ -156,15 +180,25 @@ class SinkLookupSpec extends SparkSpec {
     // spread keys so batch 1 touches a strict subset of buckets
     val base = (1 to 64).map(i => (s"k$i", i.toLong, 10L))
     delta(path)(batchDf(base: _*), 0L)                            // v1
-    delta(path)(batchDf(("k1", 100L, 20L), ("new1", 1L, 20L)), 1L) // v2
-    // destroy every UNchanged bucket: the feed must never read them
-    nukeOtherBuckets(path, Seq("k1", "new1"))
-    val feed = KeyedUpsertSink.readChangesBetween(
-      spark, path, keys, order, fromVersion = 1L)
+    // v2 touches only buckets the v3 commit leaves alone
+    val changed = Seq("k1", "new1")
+    val changedBuckets = bucketsOf(path, changed)
+    val other = base.map(_._1)
+      .find(k => !changedBuckets(bucketsOf(path, Seq(k)).head)).get
+    val otherGen = delta(path)(batchDf((other, 7L, 15L)), 1L).gen // v2
+    delta(path)(batchDf(("k1", 100L, 20L), ("new1", 1L, 20L)), 2L) // v3
+    // destroy every generation the changed buckets do not reference:
+    // the feed must never read them
+    assert(nukeOtherBuckets(path, changed) == Set(otherGen))
+    val changes = KeyedUpsertSink.readChangesBetween(
+      spark, path, keys, order, fromVersion = 2L)
+    val feed = changes
       .select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
     // exact upserts at their to-version values: the updated key and the
     // new key — NOT the unchanged keys sharing their buckets
     assert(feed == Set(("k1", 100L, 20L), ("new1", 1L, 20L)))
+    val unfiltered = unfilteredScans(changes)
+    assert(unfiltered.isEmpty, s"feed scans without a __bucket filter: $unfiltered")
   }
 
   test("a compaction between versions produces no phantom changes") {

@@ -49,16 +49,37 @@ class StreamingStatePlanSpec extends SparkSpec {
   }
 
   test("curation survivor-state read prunes __bucket partitions at the scan") {
+    import scala.jdk.CollectionConverters._
+    import graft.sink.KeyedUpsertSink
     val root = Files.createTempDirectory("graft-plan-cur")
     val state = root.resolve("state").toString
     val gated = Curation.gates(docs, col("doc_id") % 37 === 0)
-    StreamingCuration.mergeBatch(spark,
+    val merge = StreamingCuration.mergeBatch(spark,
       graft.dedup.Dedup.benchmarkNgramIndex(docs.filter(col("doc_id") % 37 === 0)),
-      state, 40L, 8)(gated, 0L)
-    val slice = spark.read.parquet(state).filter(col("__bucket").isin(0L, 1L))
+      state, 40L, 8) _
+    merge(gated, 0L)
+    merge(gated.orderBy("doc_id").limit(2), 1L) // touches at most 2 buckets
+    // the survivor state is a keyed table: a generation is one file per
+    // write task with `__bucket` stored, so the read of a bucket subset
+    // is the generations those buckets reference, filtered by `__bucket`
+    // at the scan. The buckets the second batch left alone reference
+    // only the first generation.
+    val man = KeyedUpsertSink.readManifest(state)
+    val untouched = man.filter { case (_, v) => !v.contains(";") }
+    assert(untouched.nonEmpty && untouched.size < man.size,
+      s"fixture must leave some buckets single-generation: $man")
+    val (k, o) = KeyedUpsertSink.storedSpec(state).get
+    val slice = KeyedUpsertSink.readBucketedDeltaManifest(spark, state, k, o,
+      untouched.take(2))
     val scan = scanOf(slice)
-    assert(scan.metadata("PartitionFilters").contains("__bucket"),
-      s"partition filter must reach the scan: ${scan.metadata("PartitionFilters")}")
-    assert(filesTouched(slice) < filesTouched(spark.read.parquet(state)))
+    assert(scan.metadata("PushedFilters").contains("__bucket"),
+      s"bucket filter must reach the scan: ${scan.metadata("PushedFilters")}")
+    val dataFiles = {
+      val s = Files.walk(java.nio.file.Paths.get(state))
+      try s.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+      finally s.close()
+    }
+    assert(filesTouched(slice) < dataFiles,
+      "the slice must skip the generation its buckets do not reference")
   }
 }

@@ -65,10 +65,10 @@ class StreamingTornStateSpec extends SparkSpec {
   }
 
   /** Un-publish the commit a wave made on a delta-protocol table and
-    * keep only HALF of the generation it staged — the outcome of a
-    * writer dying mid-stage: no version file past the snapshot's, the
-    * odd `__bucket=N` dirs of the new generation on disk, the even ones
-    * missing. Returns the bucket dirs removed.
+    * tear the generation it staged — the outcome of a writer dying
+    * mid-stage: no version file past the snapshot's, and each parquet
+    * file of the new generation (one per write task) cut to half its
+    * length. Returns the files torn.
     */
   private def tearCommit(state: Path, snapshot: Path): Int = {
     var torn = 0
@@ -80,10 +80,11 @@ class StreamingTornStateSpec extends SparkSpec {
         else if (name.startsWith("gen-")) {
           val b = Files.list(p)
           try b.forEach { q =>
-            val n = q.getFileName.toString
-            if (n.startsWith("__bucket=") &&
-                n.stripPrefix("__bucket=").toLong % 2 == 0) {
-              deleteDir(q); torn += 1
+            if (q.getFileName.toString.endsWith(".parquet")) {
+              val ch = java.nio.channels.FileChannel.open(q,
+                java.nio.file.StandardOpenOption.WRITE)
+              try ch.truncate(ch.size() / 2) finally ch.close()
+              torn += 1
             }
           } finally b.close()
         }
@@ -132,7 +133,7 @@ class StreamingTornStateSpec extends SparkSpec {
     val snap = root.resolve("snap"); copyDir(state, snap)
     val before = StreamingCuration.corpusView(spark, state.toString).collect().toSet
     merge(gated(w1), 1L)
-    assert(tearCommit(state, snap) > 0, "no partitions torn — vacuous")
+    assert(tearCommit(state, snap) > 0, "no generation file torn — vacuous")
     // the half-staged, unpublished wave is invisible
     assert(StreamingCuration.corpusView(spark, state.toString).collect().toSet == before)
     merge(gated(w1), 1L)
