@@ -218,17 +218,19 @@ object Bench {
   def passedTotal(walls: Seq[(String, Double)], failed: Set[String]): Double =
     walls.collect { case (n, w) if !failed.contains(n) => w }.sum
 
-  /** The per-rep view/feed route counts as one diagnostic stdout line
-    * (compact keys; `[bounded, full, extrema, diff, append]` per rep) —
-    * printed above the artifact line when it fits the driver's stored
-    * tail, so a driver-run anomaly on a routed query self-adjudicates
-    * without the working-tree `bench_full.json`.
+  /** The per-rep maintained-view route counts as one diagnostic stdout
+    * line (compact keys; `[bounded, full, extrema]` per rep: dirty-group
+    * recomputes by route, and extremum recomputes) — printed above the
+    * artifact line when it fits the driver's stored tail, so a
+    * driver-run anomaly on a routed query self-adjudicates without the
+    * working-tree `bench_full.json`. The change feed has one kernel and
+    * no route to count.
     */
   private[graft] def viewRoutesLine(
-      routes: Seq[(String, Seq[(Long, Long, Long, Long, Long)])]): String =
+      routes: Seq[(String, Seq[(Long, Long, Long)])]): String =
     """{"diag":"view_routes","routes":{""" + routes.map { case (k, reps) =>
-      "\"" + compactKey(k) + "\":" + reps.map { case (b, f, e, d, a) =>
-        s"[$b,$f,$e,$d,$a]" }.mkString("[", ",", "]")
+      "\"" + compactKey(k) + "\":" + reps.map { case (b, f, e) =>
+        s"[$b,$f,$e]" }.mkString("[", ",", "]")
     }.mkString(",") + "}}"
 
   def main(args: Array[String]): Unit = {
@@ -310,27 +312,21 @@ object Bench {
     // distinguish "a dirty-extremum recompute fired" from "the machine
     // stalled" — the counters ride bench_full.json per rep now, so the
     // adjudication reads straight from the artifact. Counters cover the
-    // dirty-route choice (bounded/full), extremum recomputes, and the
-    // change feed's diff-fallback (vs append fast path) servings.
+    // dirty-route choice (bounded/full) and extremum recomputes.
     val ctBounded = new java.util.concurrent.atomic.AtomicLong
     val ctFull = new java.util.concurrent.atomic.AtomicLong
     val ctExtrema = new java.util.concurrent.atomic.AtomicLong
-    val ctDiff = new java.util.concurrent.atomic.AtomicLong
-    val ctAppend = new java.util.concurrent.atomic.AtomicLong
     graft.sink.MaterializedAggView.onDirtyRoute = (_, path) =>
       (if (path == "bounded") ctBounded else ctFull).incrementAndGet()
     graft.sink.MaterializedAggView.onExtremaRecompute = _ =>
       ctExtrema.incrementAndGet()
-    graft.sink.KeyedUpsertSink.onChangesPath = p =>
-      (if (p == "diff") ctDiff else ctAppend).incrementAndGet()
-    def routeSnapshot(): (Long, Long, Long, Long, Long) =
-      (ctBounded.get(), ctFull.get(), ctExtrema.get(), ctDiff.get(),
-        ctAppend.get())
+    def routeSnapshot(): (Long, Long, Long) =
+      (ctBounded.get(), ctFull.get(), ctExtrema.get())
     // (wall, gc, jit, succeeded) — success is tracked PER REP, and a
     // query is failed only when NO rep passes: a transient single-rep
     // failure (FS hiccup inside the noisy-sample third rep, say) must
     // not drop a genuinely passing query's wall from the headline total
-    def once(name: String): (Double, Double, Double, Boolean, (Long, Long, Long, Long, Long)) = {
+    def once(name: String): (Double, Double, Double, Boolean, (Long, Long, Long)) = {
       val fn = SparkEntry.queries(name)
       val r0 = routeSnapshot()
       val g0 = gcMillis(); val j0 = jitMillis()
@@ -344,18 +340,15 @@ object Bench {
       val r1 = routeSnapshot()
       ((System.nanoTime() - t0) / 1e9, (gcMillis() - g0) / 1e3,
         (jitMillis() - j0) / 1e3, ok,
-        (r1._1 - r0._1, r1._2 - r0._2, r1._3 - r0._3, r1._4 - r0._4,
-          r1._5 - r0._5))
+        (r1._1 - r0._1, r1._2 - r0._2, r1._3 - r0._3))
     }
     val ccAfter = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // every rep's (wall, gc, jit), not just the best — the round-11
     // JIT stall could only be adjudicated from per-rep attribution
     val allReps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Double, Double, Double)]]
-    // per-rep [bounded, full, extrema, diff, append] route counts,
-    // recorded only for queries where any rep was nonzero (the view/feed
-    // tier) — `append` makes the healthy signal POSITIVE: a stalled rep
-    // with [0,0,0,0,N] is a machine stall, not a plan change
-    val allRoutes = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Long, Long, Long, Long, Long)]]
+    // per-rep [bounded, full, extrema] route counts, recorded only for
+    // queries where any rep was nonzero (the maintained-view tier)
+    val allRoutes = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Long, Long, Long)]]
     val results = names.zipWithIndex.map { case (name, _) =>
       // settle before every query: finished queries leave broadcast and
       // checkpoint blocks whose deferred cleanup otherwise lands as
@@ -400,12 +393,11 @@ object Bench {
         Seq(s1, s2, once(name)) else Seq(s1, s2)
       ccAfter(name) = codeCacheUsedMb()
       allReps(name) = samples.map(s => (s._1, s._2, s._3))
-      if (samples.exists(s => s._5 != ((0L, 0L, 0L, 0L, 0L)))) {
+      if (samples.exists(s => s._5 != ((0L, 0L, 0L)))) {
         allRoutes(name) = samples.map(_._5)
         System.err.println(s"[bench] $name routes per rep " +
-          "[bounded,full,extrema,diff,append]: " + samples.map(s =>
-          s"[${s._5._1},${s._5._2},${s._5._3},${s._5._4},${s._5._5}]")
-          .mkString(","))
+          "[bounded,full,extrema]: " + samples.map(s =>
+          s"[${s._5._1},${s._5._2},${s._5._3}]").mkString(","))
       }
       val passing = samples.filter(_._4)
       if (passing.isEmpty) failed += name
@@ -459,7 +451,7 @@ object Bench {
           }.mkString("[", ",", "]")
         })},"view_routes":${
         jmap(allRoutes.toSeq.map { case (k, reps) =>
-          k -> reps.map { case (b, f, e, d, a) => s"[$b,$f,$e,$d,$a]" }
+          k -> reps.map { case (b, f, e) => s"[$b,$f,$e]" }
             .mkString("[", ",", "]")
         })},"failed":$failedArr,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),

@@ -177,8 +177,15 @@ object MaterializedAggView {
       KeyedUpsertSink.putIfAbsent(f,
         (java.util.UUID.randomUUID().toString + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8).trim
+    storedIncarnation(viewPath).get
+  }
+
+  /** The view's incarnation token if one was ever minted (never mints). */
+  private def storedIncarnation(viewPath: String): Option[String] = {
+    val f = incarnationFile(viewPath)
+    if (!Files.exists(f)) None
+    else Some(new String(Files.readAllBytes(f),
+      java.nio.charset.StandardCharsets.UTF_8).trim)
   }
 
   /** A watermark position: base version `v` fully applied PLUS the first
@@ -278,15 +285,13 @@ object MaterializedAggView {
   private def readDataDir(spark: SparkSession, viewPath: String,
       dataDir: Path): DataFrame = {
     val key = {
-      val f = incarnationFile(viewPath)
-      val inc =
-        if (Files.exists(f))
-          new String(Files.readAllBytes(f),
-            java.nio.charset.StandardCharsets.UTF_8).trim
-        else
+      val inc = storedIncarnation(viewPath) match {
+        case Some(token) => token
+        case None =>
           try s"mtime:$dataDir:${Files.getLastModifiedTime(dataDir)}"
           catch { case _: java.io.IOException =>
             return spark.read.parquet(dataDir.toString) }
+      }
       // Keyed by LEAF name (not the full version-dir path) on purpose:
       // the schema is constant across version dirs within one
       // incarnation, and per-version keying would re-pay a schema-
@@ -490,7 +495,7 @@ object MaterializedAggView {
       // a read that raced this force (resolved an OLD version dir after
       // the incarnation rotated) may have cached the old schema under
       // the NEW token — purge this view's entries now that the forced
-      // state is published, so post-force reads re-infer fresh
+      // state is published; the prime below re-fills the leaves written
       viewSchemaCache.keySet.removeIf(_._1 == viewPath)
     } else {
       // the loser's just-moved directory is provably unreferenced (its
@@ -518,17 +523,25 @@ object MaterializedAggView {
           s"${fmtMark(head)} — two refreshers raced the same head; this " +
           "maintainer's staged version (never referenced) was " +
           "reclaimed. The view is single-maintainer: run one refresh loop")
-      // a cached leaf schema that differs from the one just published
-      // would make every later read fail on the column's type; drop it,
-      // so a view stored with an older writer's types (a bootstrap that
-      // typed a decimal sum narrower than the fold does) heals here
-      val published = (("view", view) +: auxes.map { case (n, df) => (s"aux_$n", df) })
-        .map { case (leaf, df) => leaf -> df.schema.catalogString }.toMap
-      viewSchemaCache.entrySet.removeIf { e =>
-        val (path, _, leaf) = e.getKey
-        path == viewPath &&
-          published.get(leaf).exists(_ != e.getValue.catalogString)
-      }
+    }
+    // PRIME the schema cache with what this publish wrote (fields relaxed
+    // to nullable, as parquet footer inference reports them): the next
+    // read of this incarnation skips its schema-inference job — the
+    // first refresh or fold after a bootstrap or JVM start paid one —
+    // and a cached schema that differs from the one just published (a
+    // view stored with an older writer's types, say a bootstrap that
+    // typed a decimal sum narrower than the fold does) is replaced
+    // instead of failing every later read on the column's type. A
+    // pre-incarnation view keys its reads by data-dir mtime: nothing to
+    // prime.
+    storedIncarnation(viewPath).foreach { token =>
+      if (viewSchemaCache.size > 8192) viewSchemaCache.clear()
+      (("view", view) +: auxes.map { case (n, df) => (s"aux_$n", df) })
+        .foreach { case (leaf, df) =>
+          viewSchemaCache.put((viewPath, token, leaf),
+            org.apache.spark.sql.types.StructType(
+              df.schema.fields.map(_.copy(nullable = true))))
+        }
     }
     reclaim(root, viewPath)
   }

@@ -1576,8 +1576,7 @@ object KeyedUpsertSink {
 
   /** Scan an explicit set of (generation, chain position, bucket)
     * entries — [[readManifestBuckets]]'s core, also used by the change
-    * feed's append fast path to read a chain SUFFIX at its true
-    * positions.
+    * feed to read a chain's prefix and suffixes at their true positions.
     *
     * One read per (generation, position): the generation directory
     * filtered by `__bucket IN (the buckets holding it there)`. The filter
@@ -1879,10 +1878,11 @@ object KeyedUpsertSink {
     * on chained (merge-on-read) and plain manifest tables alike;
     * `atVersion` makes it a historical point read.
     *
-    * Driver-side metadata: one collect of the requested keys' distinct
-    * buckets — bounded by [[MaxLookupKeys]] with a loud refusal above
-    * it (a bulk subset read belongs on readBucketedDelta + a
-    * distributed join, where pruning would not help anyway).
+    * Driver-side metadata: one collect of the requested keys, deduped
+    * and bucketed on the driver — bounded by [[MaxLookupKeys]] distinct
+    * keys with a loud refusal above it (a bulk subset read belongs on
+    * readBucketedDelta + a distributed join, where pruning would not
+    * help anyway).
     */
   def lookupBucketed(spark: SparkSession, tablePath: String,
       keys: Seq[String], order: Seq[Column], keyDf: DataFrame,
@@ -1921,20 +1921,28 @@ object KeyedUpsertSink {
     // the bound, read the table through readBucketedDelta and join the
     // request set distributed — at millions of keys most buckets are
     // touched anyway, so bucket pruning has nothing left to save.
-    val keyed = keyDf.select(keys.map(col): _*).distinct()
-      .withColumn("__bucket", bucketOf(keys, nb))
-    val keyRows = keyed.limit(MaxLookupKeys + 1).collect().toIndexedSeq
+    // The keys dedupe and bucket on the DRIVER: a distributed distinct
+    // and bucket column ran a shuffle before any table data was read.
+    // Only a request of more than MaxLookupKeys rows dedupes on the
+    // cluster, so a duplicate-heavy request set is still judged by its
+    // distinct keys.
+    val requested = keyDf.select(keys.map(col): _*)
+    val raw = requested.limit(MaxLookupKeys + 1).collect()
+    val keyRows = (if (raw.length <= MaxLookupKeys) raw
+      else requested.distinct().limit(MaxLookupKeys + 1).collect())
+      .distinct.toIndexedSeq
     require(keyRows.size <= MaxLookupKeys,
       s"lookupBucketed request set exceeds $MaxLookupKeys distinct keys — " +
         "this is a point-lookup API whose request set is collected to " +
         "the driver for bucket pruning; for bulk subset reads join the " +
         "key set against readBucketedDelta (distributed, no pruning " +
         "needed at that selectivity)")
-    val buckets = keyRows.map(r => r.getLong(r.length - 1)).toSet // last field = __bucket
     val requestDf = spark.createDataFrame(
       new java.util.ArrayList(scala.jdk.CollectionConverters
-        .SeqHasAsJava(keyRows).asJava), keyed.schema)
-      .drop("__bucket")
+        .SeqHasAsJava(keyRows).asJava), requested.schema)
+    // a projection of a local relation folds on the driver: no job
+    val buckets = requestDf.select(bucketOf(keys, nb)).collect()
+      .map(_.getLong(0)).toSet
     val manifest = fullManifest.filter { case (b, _) => buckets.contains(b) }
     // requested-key predicate pushed BELOW the LWW window: filtering by
     // KEY columns there is safe (all of a key's version-rows satisfy or
@@ -2269,13 +2277,17 @@ object KeyedUpsertSink {
     * pattern) read the feed instead of diffing 100 TB.
     *
     * Cost shape: only buckets whose manifest CHAIN ENTRY differs between
-    * the two versions are read (both sides), never the whole table — an
-    * untouched bucket contributes nothing and is provably never scanned.
-    * A compaction between the versions changes a chain entry without
-    * changing data; the row-level diff then correctly reports nothing
-    * for it. Both versions must still be inside the vacuum keep window,
-    * and `fromVersion`'s generations inside the reader grace set — the
-    * same retention contract as time travel.
+    * the two versions are read, never the whole table — an untouched
+    * bucket contributes nothing and is provably never scanned. One
+    * kernel serves every range: each changed bucket's two chains split
+    * at their longest common prefix, the suffix rows name the keys that
+    * can have changed, the prefix rows of those keys alone join in, and
+    * one aggregate on the keys picks both images' winners. A range of
+    * pure appends therefore costs batch-scale shuffles; a compaction
+    * changes a chain entry without changing data, and the kernel reports
+    * nothing for it. Both versions must still be inside the vacuum keep
+    * window, and `fromVersion`'s generations inside the reader grace set
+    * — the same retention contract as time travel.
     */
   def readChangesBetween(spark: SparkSession, tablePath: String,
       keys: Seq[String], order: Seq[Column], fromVersion: Long,
@@ -2311,9 +2323,10 @@ object KeyedUpsertSink {
     * consumer folds like any other (this is the only feed that can
     * represent deletes; the plain feed refuses tombstoned ranges).
     *
-    * Same touched-bucket cost shape and vacuum/retention contract as
-    * [[readChangesBetween]]; the symmetric difference is computed only
-    * over buckets whose manifest chain entry changed.
+    * Same kernel, touched-bucket cost shape and vacuum/retention
+    * contract as [[readChangesBetween]]: a key whose two images differ
+    * emits its new image at +1 and its old one at -1 from the same
+    * aggregate row.
     */
   def readChangesWeighted(spark: SparkSession, tablePath: String,
       keys: Seq[String], order: Seq[Column], fromVersion: Long,
@@ -2332,58 +2345,6 @@ object KeyedUpsertSink {
       fromVersion: Long, toVersion: Option[Long]): DataFrame = {
     val (keys, order) = mustStoredSpec(tablePath)
     readChangesWeighted(spark, tablePath, keys, order, fromVersion, toVersion)
-  }
-
-  /** Test/telemetry seam: which implementation served a change-feed
-    * read — "append" (chain-suffix fast path: batch-scale shuffles
-    * only) or "diff" (full symmetric difference over the touched
-    * buckets). Invoked once per non-idle feed read.
-    */
-  private[graft] var onChangesPath: String => Unit = _ => ()
-
-  /** The change feed's append fast path: with every touched bucket's
-    * from-chain a prefix of its to-chain, the changed keys are exactly
-    * those in the appended generations. `appended` carries the suffix
-    * rows at their true to-chain `__seq` positions; the before-image
-    * rows of those keys join in (null-safe — LWW groups null keys) and
-    * both sides resolve with the SAME `order :+ __seq` rank as
-    * [[resolveChainRead]] (from-prefix positions sit strictly below the
-    * suffix positions per bucket, so recency ties break identically).
-    * The feed is then the batch-scale symmetric difference of the two
-    * images — bit-identical to the full-diff path by construction,
-    * without its table-scale window + except shuffles.
-    */
-  private def appendFeed(spark: SparkSession, tablePath: String,
-      keys: Seq[String], order: Seq[Column], before: Map[Long, String],
-      appended: DataFrame, weighted: Boolean): DataFrame = {
-    val oldSemi = readManifestBuckets(spark, tablePath, before)
-      .map(oldRows => semiJoinNullSafe(oldRows, appended, keys))
-    def img(df: DataFrame): DataFrame =
-      // a winning tombstone makes its key ABSENT from the image, so the
-      // symmetric difference below reports a delete as the weighted
-      // feed's bare -1 (old image, no +1) — same shape as the full diff
-      dropTombstones(latestByKey(df, keys, order :+ col("__seq")))
-        .drop("__seq").drop("__bucket")
-    oldSemi match {
-      case None => // touched buckets had no before image: inserts only
-        val ins = img(appended)
-        if (weighted) ins.withColumn("__weight", lit(1L)) else ins
-      case Some(o) =>
-        // align to the union schema (schema evolution can differ the
-        // two sides) with the before image as the left frame both
-        // times, so column order matches
-        val newImg = img(o.unionByName(appended, allowMissingColumns = true))
-        val oldImg = img(o.unionByName(appended.limit(0),
-          allowMissingColumns = true))
-          .select(newImg.columns.map(col).toIndexedSeq: _*)
-        // one row per key on both sides, so except's set semantics
-        // can't collapse distinct keys; an identical redelivered row
-        // nets nothing — same contract as the full diff
-        val plus = newImg.except(oldImg)
-        if (!weighted) plus
-        else plus.withColumn("__weight", lit(1L))
-          .unionByName(oldImg.except(newImg).withColumn("__weight", lit(-1L)))
-    }
   }
 
   /** Sorted bucket ids whose manifest entry changed from version `v-1`
@@ -2473,13 +2434,11 @@ object KeyedUpsertSink {
         "readChangesWeighted (a deleted key is the bare __weight=-1 " +
         "last image), the graft-changes source with weighted=true, or " +
         "start the plain range at-or-after the delete version")
-    // a rebucket inside the range redefines what a bucket ID means: the
-    // per-bucket diff below would drop any old bucket id absent from the
-    // new layout's map (silently presenting its rows as inserts), so the
-    // whole table diffs on BOTH sides — row-level except is layout-
-    // agnostic, only the bucket-pruning shortcut is. Correct (never
-    // silently wrong), at the documented table-scale cost: a rebucket IS
-    // a full rewrite, and a feed spanning it pays the same scale once.
+    // a rebucket inside the range redefines what a bucket ID means, so
+    // no chain position is shared across it: every arm of both
+    // manifests is side-specific and the kernel compares the whole
+    // table — correct at the documented table-scale cost (a rebucket IS
+    // a full rewrite, and a feed spanning it pays that scale once)
     val layoutChanged =
       metaFrom.get("numBuckets") != metaTo.get("numBuckets")
     // a bucket SUBSET is only meaningful within one layout — callers
@@ -2488,91 +2447,77 @@ object KeyedUpsertSink {
     // user-facing contract
     require(bucketSubset.isEmpty || !layoutChanged,
       s"$tablePath: a bucket-restricted feed cannot span a layout change")
-    val touchedAll =
-      if (layoutChanged) manTo
-      else manTo.filter { case (b, g) => !manFrom.get(b).contains(g) }
-    val touched = bucketSubset.fold(touchedAll)(s =>
-      touchedAll.filter { case (b, _) => s.contains(b) })
-    // a bucket REMOVED from the manifest inside the range (a purge
-    // emptied it) has a before-image but no to-chain: it must still
-    // diff, or the feed silently drops its retractions (a weighted
-    // consumer would keep the deleted keys' contribution forever)
-    val removed =
-      if (layoutChanged) Map.empty[Long, String]
-      else bucketSubset.fold(
-        manFrom.filter { case (b, _) => !manTo.contains(b) })(s =>
-        manFrom.filter { case (b, _) => !manTo.contains(b) && s.contains(b) })
-    val before =
-      if (layoutChanged) manFrom
-      else manFrom.filter { case (b, _) =>
-        touched.contains(b) || removed.contains(b) }
-    def resolve(man: Map[Long, String]): Option[DataFrame] =
-      readManifestBuckets(spark, tablePath, man)
-        .map(df => dropTombstones(resolveChainRead(df, man, keys, order))
-          .drop("__bucket"))
-    def weigh(df: DataFrame, w: Long): DataFrame =
-      if (weighted) df.withColumn("__weight", lit(w)) else df
-    // APPEND FAST PATH: when every touched bucket's from-chain is a
-    // prefix of its to-chain (pure delta appends — the steady state of
-    // a trickle feed; a compaction, purge or rebucket commit in between
-    // breaks the prefix and falls back to the full diff below), the
-    // only keys whose resolved image can change are those IN the
-    // appended generations: a key's LWW resolve depends solely on its
-    // own rows, and the prefix rule means rows were only added. So the
-    // feed derives from the appended files (batch-scale) plus ONE scan
-    // of the before-image semi-joined to the appended keys — every
-    // shuffle is batch-scale, where the full diff below pays two
-    // table-scale window+except shuffles over the touched buckets.
-    // a removed bucket is by definition NOT an append — its rows
-    // disappeared — so the fast path is off whenever one exists
-    val appendOnly = !layoutChanged && removed.isEmpty &&
-      touched.forall { case (b, vTo) =>
-        chainOf(vTo).startsWith(manFrom.get(b).map(chainOf).getOrElse(Seq.empty))
+    // ARMS: every bucket whose chain entry changed — including one a
+    // purge REMOVED from the manifest, whose retractions must not drop —
+    // splits its from- and to-chain at their longest common prefix. The
+    // prefix generations are read once for BOTH images (same chain
+    // positions on both sides); the from-suffix only feeds the old
+    // image, the to-suffix only the new one.
+    def arms(b: Long, chain: Seq[String]): Seq[(String, Int, Long)] =
+      chain.zipWithIndex.map { case (g, p) => (g, p, b) }
+    val (both, olds, news) =
+      if (layoutChanged)
+        (Seq.empty, manFrom.toSeq.flatMap { case (b, c) => arms(b, chainOf(c)) },
+          manTo.toSeq.flatMap { case (b, c) => arms(b, chainOf(c)) })
+      else {
+        val split = (manFrom.keySet ++ manTo.keySet).toSeq.sorted
+          .filter(b => manFrom.get(b) != manTo.get(b) &&
+            bucketSubset.forall(_.contains(b)))
+          .map { b =>
+            val f = arms(b, manFrom.get(b).map(chainOf).getOrElse(Seq.empty))
+            val t = arms(b, manTo.get(b).map(chainOf).getOrElse(Seq.empty))
+            val common = f.zip(t).takeWhile { case (x, y) => x == y }.length
+            (f.take(common), f.drop(common), t.drop(common))
+          }
+        (split.flatMap(_._1), split.flatMap(_._2), split.flatMap(_._3))
       }
-    if (appendOnly && touched.nonEmpty) {
-      val appendedTriples = touched.toSeq.flatMap { case (b, vTo) =>
-        val pre = manFrom.get(b).map(chainOf(_).length).getOrElse(0)
-        chainOf(vTo).zipWithIndex.drop(pre).map { case (g, p) => (g, p, b) }
-      }
-      // entry differs + prefix holds ⇒ the to-chain is strictly longer
-      val appended = readBucketTriples(spark, tablePath, appendedTriples).get
-      onChangesPath("append")
-      return appendFeed(spark, tablePath, keys, order, before, appended,
-        weighted)
-    }
-    if (touched.nonEmpty || removed.nonEmpty) onChangesPath("diff")
-    (resolve(touched), resolve(before)) match {
-      case (None, Some(from)) =>
-        // every changed bucket was REMOVED (a purge emptied them): the
-        // to-image is empty. The weighted feed retracts whatever the
-        // before-image still resolved (live rows only — a purge of
-        // already-filtered tombstones retracts nothing); the plain
-        // feed has no upserts to report (the tombstone-version guard
-        // above already refused any range where that would be lossy)
-        if (!weighted) from.limit(0) else weigh(from, -1L)
-      case (None, None) =>
+    val side = "__side"
+    def read(triples: Seq[(String, Int, Long)], tag: String): Option[DataFrame] =
+      readBucketTriples(spark, tablePath, triples)
+        .map(_.withColumn(side, lit(tag)))
+    val changed = (read(news, "new") ++ read(olds, "old"))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .getOrElse {
         // nothing changed — the steady state a CDC poller hits on every
         // idle tick: still carry the table's schema (footer-only, limit
         // 0) so downstream select/write is version-independent
-        resolve(manTo).map(df => weigh(df, 1L).limit(0))
-          .getOrElse(spark.emptyDataFrame)
-      // defensive only: an empty `before` makes every prefix check
-      // vacuously true, so the append fast path already served this
-      // shape — kept as the documented fallback invariant
-      case (Some(to), None) => weigh(to, 1L)
-      case (Some(to), Some(from)) =>
-        // align to the UNION of columns before the set difference:
-        // schema evolution can leave the two versions on different
-        // column sets, and `except` demands aligned schemas. Each image
-        // has one row per key (post-resolve), so `except`'s set
-        // semantics can't collapse distinct keys.
-        val toU = to.unionByName(from.limit(0), allowMissingColumns = true)
-        val fromU = from.unionByName(to.limit(0), allowMissingColumns = true)
-          .select(toU.columns.map(col).toIndexedSeq: _*)
-        if (!weighted) toU.except(fromU)
-        else weigh(toU.except(fromU), 1L)
-          .unionByName(weigh(fromU.except(toU), -1L))
-    }
+        return readManifestBuckets(spark, tablePath, manTo).map { df =>
+          val img = dropTombstones(resolveChainRead(df, manTo, keys, order))
+            .drop("__bucket").limit(0)
+          if (weighted) img.withColumn("__weight", lit(1L)) else img
+        }.getOrElse(spark.emptyDataFrame)
+      }
+    // a key's image can only differ if the key has a suffix row on either
+    // side: the prefix rows join in for those keys alone (null-safe — LWW
+    // groups null keys), so every shuffle below is batch-scale whenever
+    // the range is
+    val rows = read(both, "both").fold(changed)(b => changed.unionByName(
+      semiJoinNullSafe(b, changed, keys, dedupRight = false),
+      allowMissingColumns = true))
+    // KERNEL: one aggregate on the keys computes both images. A side's
+    // winner is the row ranked first by `order :+ __seq` — the rank of
+    // [[resolveChainRead]]: struct comparison puts nulls first, so the
+    // max is the descending-nulls-last first row, and `(key, __seq)` is
+    // unique within a side (every generation is LWW-deduped at write).
+    // A winning tombstone is an absent image.
+    val image = rows.columns.filterNot(Set(side, "__seq", "__bucket", TombstoneCol))
+    val row = struct(image.map(c => col("`" + c.replace("`", "``") + "`")).toIndexedSeq: _*)
+    val live =
+      if (rows.columns.contains(TombstoneCol))
+        when(!coalesce(col(TombstoneCol), lit(false)), row)
+      else row
+    val rank = struct((order :+ col("__seq")): _*)
+    def winner(skip: String): Column = max_by(live, when(col(side) =!= skip, rank))
+    val pairs = rows.groupBy(keys.map(col): _*)
+      .agg(winner("old").as("__new"), winner("new").as("__old"))
+      .filter(!(col("__new") <=> col("__old")))
+    if (!weighted) pairs.filter(col("__new").isNotNull).select("__new.*")
+    else pairs
+      .select(explode(array(
+        struct(col("__new").as("r"), lit(1L).as("w")),
+        struct(col("__old").as("r"), lit(-1L).as("w")))).as("__d"))
+      .filter(col("__d.r").isNotNull)
+      .select(col("__d.r.*"), col("__d.w").as("__weight"))
   }
 
   /** Committed manifest versions still readable (oldest first). Version

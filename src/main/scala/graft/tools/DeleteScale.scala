@@ -58,19 +58,14 @@ object DeleteScale {
     val numBuckets = 16
     val horizon = 4102444800000000L // tombstone order: above every event
 
-    val routes = scala.collection.mutable.ArrayBuffer.empty[String]
-    KeyedUpsertSink.onChangesPath = p => routes.synchronized { routes += p; () }
     def measure(scale: Int, tag: String)(run: => Long): Unit = {
       io.reset()
-      routes.synchronized(routes.clear())
       val t0 = System.nanoTime()
       val n = run
       val wall = (System.nanoTime() - t0) / 1e9
       val (in, sh) = io.snapshot()
-      val rt = routes.synchronized(routes.toSeq)
       println(f"[del-scale] x$scale%-4d $tag%-14s rows=$n%-8d " +
-        f"wall=$wall%6.2fs input=${in / 1e6}%9.2fMB shuffle=${sh / 1e6}%9.3fMB" +
-        (if (rt.nonEmpty) s" routes=${rt.mkString(",")}" else ""))
+        f"wall=$wall%6.2fs input=${in / 1e6}%9.2fMB shuffle=${sh / 1e6}%9.3fMB")
     }
     // force full row width through the resolve (a bare count would let
     // the scan prune the value columns the resolve must carry)

@@ -44,8 +44,8 @@ class IoListener extends SparkListener {
   * trickle shapes bracket the cost:
   *
   *   - `spread`: batch keys land in every bucket (worst case — the
-  *     feed's before-image scan touches the whole table; the append
-  *     fast path still keeps every SHUFFLE batch-scale);
+  *     feed's prefix scan touches the whole table; the kernel's key
+  *     restriction still keeps every SHUFFLE batch-scale);
   *   - `local`: batch keys all hash into bucket 0 (the locality a
   *     partitioned ingest produces — the feed reads 1/numBuckets of
   *     the table, the recompute still reads all of it).
@@ -62,9 +62,10 @@ class IoListener extends SparkListener {
   *
   * `compactAfter` (0 = never) separates the two refresh regimes: with
   * in-run compaction the totals include one compaction-triggered
-  * full-diff refresh (the documented fallback — ITS bytes grow with
-  * the touched buckets), while 0 isolates the pure append fast path,
-  * whose per-refresh shuffle must stay batch-scale at every base size.
+  * refresh (a compacted chain shares no prefix with its old self, so
+  * ITS bytes grow with the touched buckets), while 0 isolates pure
+  * appends, whose per-refresh shuffle must stay batch-scale at every
+  * base size.
   *
   * Usage: runMain graft.tools.MviewScale <sfDir> [nBatches] [batchRows] [scale] [compactAfter] [dimMode]
   */

@@ -15,8 +15,8 @@ import graft.sink.KeyedUpsertSink
   * version per micro-batch) over the same scaled bases and attributes
   * RAW shuffle/input bytes per micro-batch via the TaskEnd listener —
   * the claim under test is that the streaming engine's plan splicing
-  * preserves the append fast path, so a trickle batch's shuffle stays
-  * BATCH-scale at every base size while the control (one full LWW
+  * preserves the feed kernel's key restriction, so a trickle batch's
+  * shuffle stays BATCH-scale at every base size while the control (one full LWW
   * resolve of the table) grows with the base.
   *
   * Each batch lands in a parquet append (the realistic consumer shape);

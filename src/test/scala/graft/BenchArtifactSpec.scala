@@ -49,13 +49,13 @@ class BenchArtifactSpec extends AnyFunSuite {
     // for the artifact line inside the 2000-char tail only in the
     // NORMAL regime, which the in-main guard enforces dynamically;
     // here we pin the line's shape and that it stays small.
-    val reps = Seq.fill(3)((99L, 99L, 99L, 99L, 99L))
+    val reps = Seq.fill(3)((99L, 99L, 99L))
     val line = Bench.viewRoutesLine(Seq(
       "etl_view_refresh" -> reps, "etl_view_stream" -> reps,
       "etl_upsert_stream_sink" -> reps, "etl_view_stream_sliced" -> reps))
     assert(line.startsWith("""{"diag":"view_routes","routes":{"""))
     assert(line.contains("\"" + Bench.compactKey("etl_view_refresh") +
-      "\":[[99,99,99,99,99],"))
+      "\":[[99,99,99],"))
     assert(line.length <= 330,
       s"routes line ${line.length} chars — it must stay a small fraction " +
         "of the 2000-char tail or the in-main guard will always drop it")

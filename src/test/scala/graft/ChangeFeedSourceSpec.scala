@@ -12,7 +12,7 @@ import graft.sink.KeyedUpsertSink
   * keyed table must serve exactly the poller's change feed (offsets ARE
   * manifest versions), resume from its checkpoint at the right version,
   * fail loudly past the vacuum keep window, and serve trickle batches
-  * from the append fast path (batch-scale shuffles, never the table).
+  * from the change-feed kernel (batch-scale shuffles, never the table).
   */
 class ChangeFeedSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -77,28 +77,24 @@ class ChangeFeedSourceSpec extends SparkSpec {
     // two commits land before the first trigger: one batch covers both
     up(batchDf(("a", 2L, 20L), ("c", 1L, 20L)), 1L) // v2
     up(batchDf(("d", 1L, 30L)), 2L)                 // v3
-    val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-    val prev = KeyedUpsertSink.onChangesPath
-    KeyedUpsertSink.onChangesPath = paths += _
-    try {
-      // floor at v1: everything the table committed after it streams
-      assert(drain(table, ckpt, Map("startingVersion" -> "1"))
-        == feedRows(table, 1L, 3L), "first batch = the (1, 3] poller range")
-      // trickle commits resolve through the append fast path — the
-      // structural proof that a stream batch never shuffles the table
-      assert(paths.nonEmpty && paths.forall(_ == "append"),
-        s"trickle stream batches must use the append fast path (got $paths)")
-      // restart under the same checkpoint: only the new range arrives
-      up(batchDf(("a", 3L, 40L)), 3L) // v4
-      assert(drain(table, ckpt) == feedRows(table, 3L, 4L),
-        "restart resumes at the checkpointed version, not startingVersion")
-      // idle restart: no new versions → no batch at all
-      assert(drain(table, ckpt).isEmpty)
-      // DEFAULT startingVersion = the head at source creation: a fresh
-      // stream started now (head v4) tails changes only — zero rows
-      assert(drain(table, root.resolve("ckDefault").toString).isEmpty,
-        "default floor is the head at stream start: no replay of history")
-    } finally KeyedUpsertSink.onChangesPath = prev
+    // floor at v1: everything the table committed after it streams
+    assert(drain(table, ckpt, Map("startingVersion" -> "1"))
+      == feedRows(table, 1L, 3L), "first batch = the (1, 3] poller range")
+    // a stream batch is the poller's feed for its range: one aggregate
+    // on the keys over the trickle's suffix rows and their keys' prefix
+    // rows — never a window over the table
+    FeedPlans.assertOneKernel(KeyedUpsertSink.readChangesBetween(
+      spark, table, keys, order, 1L, Some(3L)), keys)
+    // restart under the same checkpoint: only the new range arrives
+    up(batchDf(("a", 3L, 40L)), 3L) // v4
+    assert(drain(table, ckpt) == feedRows(table, 3L, 4L),
+      "restart resumes at the checkpointed version, not startingVersion")
+    // idle restart: no new versions → no batch at all
+    assert(drain(table, ckpt).isEmpty)
+    // DEFAULT startingVersion = the head at source creation: a fresh
+    // stream started now (head v4) tails changes only — zero rows
+    assert(drain(table, root.resolve("ckDefault").toString).isEmpty,
+      "default floor is the head at stream start: no replay of history")
   }
 
   test("startingVersion=0 bootstraps the full history; maxVersionsPerTrigger bounds each batch") {
@@ -294,7 +290,8 @@ class ChangeFeedSourceSpec extends SparkSpec {
     // COMMITTED range and discards the result; the feed leaf defers
     // its whole construction (and the AQE-eager toRdd) into a thunk,
     // so the discarded recovery frame must not even CONSTRUCT a feed —
-    // pinned via the onChangesPath construction hook. Before the lazy
+    // pinned by the idle restart running no Spark job (a constructed
+    // leaf's AQE-eager toRdd runs the feed's shuffle). Before the lazy
     // leaf this replayed a whole batch's shuffles per restart
     // (measured table-scale after a bootstrap batch in
     // tools/DeleteScale).
@@ -318,14 +315,11 @@ class ChangeFeedSourceSpec extends SparkSpec {
     }
     drain()
     assert(drained >= 2L) // both versions served
-    val constructed = new java.util.concurrent.atomic.AtomicInteger
-    KeyedUpsertSink.onChangesPath = _ => { constructed.incrementAndGet(); () }
-    try {
-      drain() // idle restart: recovery getBatch only
-      assert(constructed.get() == 0,
-        s"idle restart constructed ${constructed.get()} feed plan(s) - " +
-          "the recovery frame must stay a deferred thunk")
-    } finally KeyedUpsertSink.onChangesPath = _ => ()
+    // idle restart: recovery getBatch only
+    val (_, jobs) = org.apache.spark.sql.graft.Jobs.during(spark)(drain())
+    assert(jobs == 0,
+      s"idle restart ran $jobs Spark job(s) - the recovery frame must " +
+        "stay a deferred thunk")
     // and a REAL new batch after restart still serves correctly
     up(batchDf(("c", 1L, 30L)), 2L) // v3
     val before = drained

@@ -403,46 +403,39 @@ class DeltaSinkSpec extends SparkSpec {
     assert(err.getMessage.contains("v3 IS durably published"))
   }
 
-  /** Record which implementation serves each change-feed read. */
-  private def recordingPaths[A](body: => A): (A, Seq[String]) = {
-    var paths = Seq.empty[String]
-    KeyedUpsertSink.onChangesPath = p => paths :+= p
-    try (body, paths) finally KeyedUpsertSink.onChangesPath = _ => ()
-  }
+  /** The feed, after checking that it plans the one change-feed kernel. */
+  private def kernel(feed: DataFrame): DataFrame =
+    FeedPlans.assertOneKernel(feed, keys)
 
   test("change feed: pure appends take the append fast path; a compaction falls back to the diff — same rows either way") {
     val path = newTable("graft-feed-path")
     delta(path)(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L) // v1
     delta(path)(batchDf(("a", 2L, 20L), ("c", 1L, 20L)), 1L) // v2
     def weightedFrom1: Set[(String, Long, Long, Long)] =
-      KeyedUpsertSink.readChangesWeighted(spark, path, keys, order,
-        fromVersion = 1L)
+      kernel(KeyedUpsertSink.readChangesWeighted(spark, path, keys, order,
+        fromVersion = 1L))
         .select("k", "v", "ts", "__weight")
         .as[(String, Long, Long, Long)].collect().toSet
-    // chains are pure suffixes of v1's → the fast path serves, and the
-    // netted rows are the exact ±1 set
-    val (feedFast, p1) = recordingPaths(weightedFrom1)
-    assert(p1 == Seq("append"))
+    // chains are pure suffixes of v1's: one aggregate on the keys nets
+    // the exact ±1 set
+    val feedFast = weightedFrom1
     assert(feedFast == Set(("a", 2L, 20L, 1L), ("c", 1L, 20L, 1L),
       ("a", 1L, 10L, -1L)))
     // compacting folds every chain: v1's chains are no longer prefixes,
-    // so the same range must fall back to the full diff — and net the
-    // same rows (compaction rewrites files, not data)
+    // and the same kernel must net the same rows (compaction rewrites
+    // files, not data)
     KeyedUpsertSink.compactBucketChains(spark, path, keys, order) // v3
-    val (feedDiff, p2) = recordingPaths(weightedFrom1)
-    assert(p2 == Seq("diff"))
+    val feedDiff = weightedFrom1
     assert(feedDiff == feedFast)
-    // and a compaction-only range nets nothing through the diff path
-    val (compactOnly, p3) = recordingPaths {
-      KeyedUpsertSink.readChangesWeighted(spark, path, keys, order,
-        fromVersion = 2L).count()
-    }
-    assert(p3 == Seq("diff") && compactOnly == 0L)
+    // and a compaction-only range nets nothing
+    val compactOnly = kernel(KeyedUpsertSink.readChangesWeighted(spark, path,
+      keys, order, fromVersion = 2L)).count()
+    assert(compactOnly == 0L)
   }
 
   test("change feed: a null-keyed row's retraction survives the append fast path") {
     // keys may carry null VALUES (only a missing key column is
-    // refused); the fast path's before-image semi-join must be
+    // refused); the prefix rows' semi-join and the aggregate must be
     // null-safe or the null key's -1 image silently vanishes and a
     // downstream maintained aggregate double-counts it
     val path = newTable("graft-feed-nullkey")
@@ -450,13 +443,10 @@ class DeltaSinkSpec extends SparkSpec {
       rows.toDF("k", "v", "ts")
     delta(path)(df((None, 1L, 10L), (Some("a"), 1L, 10L)), 0L) // v1
     delta(path)(df((None, 2L, 20L)), 1L)                       // v2
-    val (feed, paths) = recordingPaths {
-      KeyedUpsertSink.readChangesWeighted(spark, path, keys, order,
-        fromVersion = 1L)
-        .select("k", "v", "ts", "__weight")
-        .as[(Option[String], Long, Long, Long)].collect().toSet
-    }
-    assert(paths == Seq("append"))
+    val feed = kernel(KeyedUpsertSink.readChangesWeighted(spark, path, keys,
+      order, fromVersion = 1L))
+      .select("k", "v", "ts", "__weight")
+      .as[(Option[String], Long, Long, Long)].collect().toSet
     assert(feed == Set((None, 2L, 20L, 1L), (None, 1L, 10L, -1L)))
   }
 
@@ -465,13 +455,10 @@ class DeltaSinkSpec extends SparkSpec {
     delta(path)(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L) // v1
     // v2 ADDS a column; the -1 image must null-fill it, the +1 carry it
     delta(path)(Seq(("a", 2L, 20L, "x")).toDF("k", "v", "ts", "tag"), 1L)
-    val (feed, paths) = recordingPaths {
-      KeyedUpsertSink.readChangesWeighted(spark, path, keys, order,
-        fromVersion = 1L)
-        .select("k", "v", "ts", "tag", "__weight")
-        .as[(String, Long, Long, Option[String], Long)].collect().toSet
-    }
-    assert(paths == Seq("append"))
+    val feed = kernel(KeyedUpsertSink.readChangesWeighted(spark, path, keys,
+      order, fromVersion = 1L))
+      .select("k", "v", "ts", "tag", "__weight")
+      .as[(String, Long, Long, Option[String], Long)].collect().toSet
     assert(feed == Set(("a", 2L, 20L, Some("x"), 1L),
       ("a", 1L, 10L, None, -1L)))
   }

@@ -744,6 +744,24 @@ class MaterializedViewSpec extends SparkSpec {
     }
   }
 
+  test("publish primes the view's schema: reading a fresh bootstrap or refresh infers nothing") {
+    val base = newDir("graft-mv-prime")
+    val view = newDir("graft-mv-prime-view")
+    sinkTo(base)(batchDf(("a", "x", 1L, 10L), ("b", "y", 2L, 10L)), 0L)
+    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
+    // the first read after a bootstrap used to pay a parquet schema-
+    // inference job before any data moved; the schema publish wrote is
+    // already cached, so building the read runs no job at all
+    def building(): Int =
+      org.apache.spark.sql.graft.Jobs.during(spark)(
+        MaterializedAggView.read(spark, view))._2
+    assert(building() == 0, "the bootstrap's schema must be primed")
+    sinkTo(base)(batchDf(("a", "y", 3L, 20L)), 1L)
+    MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
+    assert(building() == 0, "the fold's schema must be primed")
+    assert(viewRows(view) == recomputed(base))
+  }
+
   test("a view stored with a narrower decimal sum than the fold publishes heals on its next fold") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.DecimalType

@@ -12,8 +12,8 @@ import graft.sink.KeyedUpsertSink
 /** Online re-bucketing ([[KeyedUpsertSink.rebucketTable]]): layout and
   * data swap in ONE manifest commit, so reads are identical across the
   * boundary, historical reads keep the old layout, a change-feed range
-  * spanning the resize serves correctly (full diff — never silently
-  * wrong), concurrent commits force a re-stage instead of being lost,
+  * spanning the resize serves correctly (both whole manifests — never
+  * silently wrong), concurrent commits force a re-stage instead of being lost,
   * and writers still configured with the dead layout are refused loudly.
   */
 class RebucketSpec extends SparkSpec {
@@ -84,36 +84,28 @@ class RebucketSpec extends SparkSpec {
     up(batchDf(("a", 2L, 20L), ("c", 1L, 20L)), 1L) // v2
     KeyedUpsertSink.rebucketTable(spark, t, keys, order, newBuckets = 8) // v3
     sink(t, nb = 8)(batchDf(("d", 1L, 30L), ("b", 9L, 30L)), 2L)         // v4
-    val paths = scala.collection.mutable.ArrayBuffer.empty[String]
-    val prev = KeyedUpsertSink.onChangesPath
-    KeyedUpsertSink.onChangesPath = paths += _
-    try {
-      // the spanning range (v1, v4]: exactly the keys whose image moved,
-      // at their v4 values — the same row-level contract as any range
-      val feed = rows(KeyedUpsertSink.readChangesBetween(
-        spark, t, keys, order, fromVersion = 1L, toVersion = Some(4L)))
-      assert(feed == Set(("a", 2L, 20L), ("c", 1L, 20L), ("d", 1L, 30L),
-        ("b", 9L, 30L)))
-      assert(paths.lastOption.contains("diff"),
-        "a resize inside the range must force the full-diff path")
-      // the resize itself nets NO row changes: a range holding only it
-      // is empty (compaction-like), via the full diff
-      assert(rows(KeyedUpsertSink.readChangesBetween(
-        spark, t, keys, order, fromVersion = 2L, toVersion = Some(3L))).isEmpty)
-      // weighted feed across the resize: retraction for the updated key
-      val w = KeyedUpsertSink.readChangesWeighted(
-        spark, t, keys, order, fromVersion = 3L, toVersion = Some(4L))
-        .select("k", "v", "ts", "__weight")
-        .as[(String, Long, Long, Long)].collect().toSet
-      assert(w == Set(("d", 1L, 30L, 1L), ("b", 9L, 30L, 1L), ("b", 1L, 10L, -1L)))
-      // post-resize trickle ranges go back to the append fast path
-      paths.clear()
-      sink(t, nb = 8)(batchDf(("e", 1L, 40L)), 3L) // v5
-      rows(KeyedUpsertSink.readChangesBetween(
-        spark, t, keys, order, fromVersion = 4L, toVersion = Some(5L)))
-      assert(paths.contains("append"),
-        "trickles after the resize must regain the append fast path")
-    } finally KeyedUpsertSink.onChangesPath = prev
+    // the spanning range (v1, v4]: exactly the keys whose image moved,
+    // at their v4 values — the same row-level contract as any range,
+    // from the same one-aggregate kernel over both whole manifests
+    val feed = rows(FeedPlans.assertOneKernel(KeyedUpsertSink.readChangesBetween(
+      spark, t, keys, order, fromVersion = 1L, toVersion = Some(4L)), keys))
+    assert(feed == Set(("a", 2L, 20L), ("c", 1L, 20L), ("d", 1L, 30L),
+      ("b", 9L, 30L)))
+    // the resize itself nets NO row changes: a range holding only it
+    // is empty (compaction-like)
+    assert(rows(KeyedUpsertSink.readChangesBetween(
+      spark, t, keys, order, fromVersion = 2L, toVersion = Some(3L))).isEmpty)
+    // weighted feed across the resize: retraction for the updated key
+    val w = KeyedUpsertSink.readChangesWeighted(
+      spark, t, keys, order, fromVersion = 3L, toVersion = Some(4L))
+      .select("k", "v", "ts", "__weight")
+      .as[(String, Long, Long, Long)].collect().toSet
+    assert(w == Set(("d", 1L, 30L, 1L), ("b", 9L, 30L, 1L), ("b", 1L, 10L, -1L)))
+    // post-resize trickle ranges plan the same kernel
+    sink(t, nb = 8)(batchDf(("e", 1L, 40L)), 3L) // v5
+    assert(rows(FeedPlans.assertOneKernel(KeyedUpsertSink.readChangesBetween(
+      spark, t, keys, order, fromVersion = 4L, toVersion = Some(5L)), keys)) ==
+      Set(("e", 1L, 40L)))
   }
 
   test("vacuum reclaims the old layout's generations; time-travel grace retains them first") {

@@ -317,6 +317,26 @@ class SinkLookupSpec extends SparkSpec {
       ("m", None)) == full)
   }
 
+  test("the request set dedupes and buckets on the driver: building a lookup runs no job") {
+    val path = newTable("graft-lookup-driver")
+    delta(path)(batchDf(("a", 1L, 10L), ("b", 2L, 10L)), 0L)
+    def got(df: DataFrame): Set[(String, Long, Long)] =
+      df.select("k", "v", "ts").as[(String, Long, Long)].collect().toSet
+    // a distributed distinct + bucket column shuffled the request set
+    // before any table data was read
+    val (lookup, jobs) = org.apache.spark.sql.graft.Jobs.during(spark)(
+      KeyedUpsertSink.lookupBucketed(spark, path, keys, order,
+        keyDf("a", "a", "b", "zz")))
+    assert(jobs == 0, s"building the lookup ran $jobs job(s)")
+    assert(got(lookup) == Set(("a", 1L, 10L), ("b", 2L, 10L)))
+    // more request ROWS than the bound, but few distinct keys: judged by
+    // the distinct keys, still a point lookup
+    val dupes = spark.range(0, KeyedUpsertSink.MaxLookupKeys + 5)
+      .select(when(col("id") % 2 === 0, lit("a")).otherwise(lit("b")).as("k"))
+    assert(got(KeyedUpsertSink.lookupBucketed(spark, path, keys, order, dupes)) ==
+      Set(("a", 1L, 10L), ("b", 2L, 10L)))
+  }
+
   test("an oversized request set is refused with the point-lookup contract, never an opaque driver OOM") {
     val path = newTable("graft-lookup-bound")
     delta(path)(batchDf(("a", 1L, 10L)), 0L)
