@@ -1,7 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.lang.management.ManagementFactory
 
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Benchmark main — driver contract: one JSON line
@@ -233,21 +244,208 @@ object Bench {
         s"[$b,$f,$e]" }.mkString("[", ",", "]")
     }.mkString(",") + "}}"
 
+  /** One Spark job of a measured run, as the scheduler's listener events
+    * report it: its interval (epoch ms; `endMs` 0 if it never ended), its
+    * description followed by its stages' names (each stage's callsite),
+    * and its tasks' summed metrics.
+    */
+  final case class Job(id: Int, startMs: Long, endMs: Long, desc: String,
+      tasks: Int, cpuNs: Long, runMs: Long, shuffleRead: Long,
+      shuffleWrite: Long, input: Long, output: Long, spill: Long)
+
+  /** One measured run of a query: what Bench keeps per rep and
+    * `tools.Profile` prints. `layers` holds [[layerNames]], named as
+    * BENCHMARK.json's per_layer names them where it names them;
+    * `sched.covered_s` (the union of the job intervals) plus
+    * `sched.gap_s` (the driver gap) is the wall. `routes` counts the
+    * maintained view's `[bounded, full, extrema]` recomputes; `plan` is
+    * the last action's execution.
+    */
+  final case class Run(wall: Double, ok: Boolean, routes: (Long, Long, Long),
+      layers: ListMap[String, Double], jobs: Seq[Job],
+      plan: Option[QueryExecution])
+
+  val layerNames: Seq[String] = Seq("sched.jobs", "sched.tasks",
+    "sched.covered_s", "sched.gap_s", "plan.analysis_s",
+    "plan.optimization_s", "plan.planning_s", "plan.rules_s",
+    "exec.task_cpu_s", "exec.input_bytes", "exec.output_bytes",
+    "exec.shuffle_read_bytes", "exec.shuffle_write_bytes",
+    "exec.spill_bytes", "jvm.gc_s", "jvm.jit_s")
+
+  // GC and JIT deltas per rep let a stalled sample be read as "GC",
+  // "recompilation" or "something else" straight from the artifact
+  private def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
+    .asScala.map(_.getCollectionTime).sum
+
+  // (JIT wall isn't 1:1 with query wall: compiler threads run
+  // concurrently)
+  private def jitMillis(): Long =
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime
+
+  /** Cumulative Catalyst analyzer/optimizer rule time, all threads. */
+  private def ruleSeconds(): Double =
+    "Total time: ([0-9.E-]+) seconds".r
+      .findFirstMatchIn(RuleExecutor.dumpTimeSpent())
+      .map(_.group(1).toDouble).getOrElse(Double.NaN)
+
+  /** Collects the jobs and query executions of one measured run. */
+  private final class Recorder extends SparkListener with QueryExecutionListener {
+    private final class Acc(val id: Int, val startMs: Long, var desc: String) {
+      var endMs, cpuNs, runMs, shuffleRead, shuffleWrite, input, output,
+        spill = 0L
+      var tasks = 0
+    }
+    private val jobs = mutable.LinkedHashMap[Int, Acc]()
+    private val stageJob = mutable.HashMap[Int, Int]()
+    private val executions = mutable.ArrayBuffer[QueryExecution]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      jobs(e.jobId) = new Acc(e.jobId, e.time, Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse(""))
+      e.stageIds.foreach(stageJob(_) = e.jobId)
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      synchronized {
+        stageJob.get(e.stageInfo.stageId).flatMap(jobs.get).foreach { j =>
+          if (!j.desc.contains(e.stageInfo.name.take(60)))
+            j.desc = (j.desc + " | " + e.stageInfo.name.take(60)).take(200)
+        }
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach(_.endMs = e.time)
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      stageJob.get(e.stageId).flatMap(jobs.get).foreach { j =>
+        j.tasks += 1
+        val m = e.taskMetrics
+        if (m != null) {
+          j.cpuNs += m.executorCpuTime
+          j.runMs += m.executorRunTime
+          j.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          j.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          j.input += m.inputMetrics.bytesRead
+          j.output += m.outputMetrics.bytesWritten
+          j.spill += m.memoryBytesSpilled + m.diskBytesSpilled
+        }
+      }
+    }
+    override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+      synchronized { executions += qe }
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+      synchronized { executions += qe }
+
+    def recorded: (Seq[Job], Seq[QueryExecution]) = synchronized {
+      (jobs.values.toSeq.sortBy(_.startMs).map(a => Job(a.id, a.startMs,
+        a.endMs, a.desc, a.tasks, a.cpuNs, a.runMs, a.shuffleRead,
+        a.shuffleWrite, a.input, a.output, a.spill)), executions.toSeq)
+    }
+  }
+
+  /** Settle, then run `name` once into the `noop` sink (full plan
+    * execution, every output column materialized) and record it.
+    *
+    * The settle is untimed: finished queries leave broadcast and
+    * checkpoint blocks whose deferred cleanup otherwise lands as
+    * eviction/GC storms inside later timed runs (iterative many-job
+    * queries like dedup_cluster are the most exposed), so it collects
+    * first; then it waits for JIT quiescence — the C2 compiler threads
+    * compete with the query for cores, and async recompilation kicked off
+    * by one query lands inside the next one's timed runs (the round-11
+    * 2.3→5.7 s text_decontaminate_bloom wall on bit-identical code was a
+    * backlogged C2 queue). The wait ends at a quiet 200 ms window or after
+    * 8 s. A failed run is recorded with `ok = false`; fatal errors
+    * propagate.
+    */
+  def measure(spark: SparkSession, sfDir: String, name: String): Run = {
+    val query = SparkEntry.queries(name)
+    System.gc(); Thread.sleep(250)
+    var lastJit = jitMillis(); var waited = 0
+    while (waited < 8000) {
+      Thread.sleep(200)
+      val now = jitMillis()
+      if (now - lastJit < 20) waited = 8000
+      else { lastJit = now; waited += 200 }
+    }
+    val rec = new Recorder
+    val routes = Array.fill(3)(new java.util.concurrent.atomic.AtomicLong)
+    val view = graft.sink.MaterializedAggView
+    val (onRoute, onExtrema) = (view.onDirtyRoute, view.onExtremaRecompute)
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(rec)
+    spark.listenerManager.register(rec)
+    view.onDirtyRoute = (_, path) =>
+      routes(if (path == "bounded") 0 else 1).incrementAndGet()
+    view.onExtremaRecompute = _ => routes(2).incrementAndGet()
+    try {
+      val rules0 = ruleSeconds(); val gc0 = gcMillis(); val jit0 = jitMillis()
+      val t0 = System.nanoTime()
+      val ok =
+        try { query(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
+      val wall = (System.nanoTime() - t0) / 1e9
+      val (gc, jit) = ((gcMillis() - gc0) / 1e3, (jitMillis() - jit0) / 1e3)
+      val rules = ruleSeconds() - rules0
+      Bridge.drainListenerBus(spark)
+      val (jobs, executions) = rec.recorded
+      // union of the [start, end] job intervals: the time at least one
+      // job ran; the rest of the wall is the driver gap
+      var covered = 0L; var curS = 0L; var curE = 0L
+      jobs.filter(_.endMs > 0).foreach { j =>
+        if (j.startMs > curE) { covered += curE - curS; curS = j.startMs; curE = j.endMs }
+        else curE = math.max(curE, j.endMs)
+      }
+      covered += curE - curS
+      def phase(p: String): Double = executions.flatMap(_.tracker.phases.get(p))
+        .map(_.durationMs).sum / 1e3
+      def sum(f: Job => Long): Double = jobs.map(f).sum.toDouble
+      Run(wall, ok, (routes(0).get, routes(1).get, routes(2).get), ListMap(
+        "sched.jobs" -> jobs.size.toDouble,
+        "sched.tasks" -> sum(_.tasks.toLong),
+        "sched.covered_s" -> covered / 1e3,
+        "sched.gap_s" -> (wall - covered / 1e3),
+        "plan.analysis_s" -> phase(QueryPlanningTracker.ANALYSIS),
+        "plan.optimization_s" -> phase(QueryPlanningTracker.OPTIMIZATION),
+        "plan.planning_s" -> phase(QueryPlanningTracker.PLANNING),
+        "plan.rules_s" -> rules,
+        "exec.task_cpu_s" -> sum(_.cpuNs) / 1e9,
+        "exec.input_bytes" -> sum(_.input),
+        "exec.output_bytes" -> sum(_.output),
+        "exec.shuffle_read_bytes" -> sum(_.shuffleRead),
+        "exec.shuffle_write_bytes" -> sum(_.shuffleWrite),
+        "exec.spill_bytes" -> sum(_.spill),
+        "jvm.gc_s" -> gc,
+        "jvm.jit_s" -> jit), jobs, executions.lastOption)
+    } finally {
+      view.onDirtyRoute = onRoute
+      view.onExtremaRecompute = onExtrema
+      spark.listenerManager.unregister(rec)
+      spark.sparkContext.removeSparkListener(rec)
+    }
+  }
+
+  /** `layers` as one JSON object: query name → its layer values, seconds
+    * to 3 decimals and counts and bytes whole.
+    */
+  private[graft] def layersJson(layers: Seq[(String, ListMap[String, Double])]): String =
+    layers.map { case (name, ls) =>
+      "\"" + name + "\":" + ls.map { case (k, v) =>
+        "\"" + k + "\":" + fmt(v, if (k.endsWith("_s")) 3 else 0)
+      }.mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+
+  // Locale.ROOT formatting everywhere: the f"" interpolator uses the JVM
+  // default locale, which under e.g. de_DE would emit comma decimals and
+  // corrupt the JSON artifact.
+  private def fmt(v: Double, dp: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = Config.benchSfDir() // fail fast on a missing/typo'd dir
-    val cpus = Config.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE size cached/pinned plans' output partitions by bytes (see
-      // Verify.scala — the same flag, same rationale, kept in lockstep)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Config.session()
     // fail-loud fixture drift diagnosis (stderr only — the driver's
     // 2000-char stdout tail must stay reserved for the artifact line)
     Tables.probeFixtures(spark, sfDir)
@@ -280,105 +478,35 @@ object Bench {
     // whatever async cleanup happens to overlap it (observed 3-10x
     // outliers on single-sample runs); the min is the steady-state cost.
     val names = headline.filter(SparkEntry.queries.contains)
-    // per-query GC attribution: cumulative collection millis across all
-    // collectors, sampled around the BEST rep — so a stalled sample can
-    // be read as "GC" vs "something else" straight from the driver
-    // artifact (round-6 observed 2-5 s stalls that survive min-of-3 and
-    // move between runs; this pins down their nature without a rerun)
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    // JIT wall isn't 1:1 with query wall (compiler threads run
-    // concurrently), but a stalled sample with multi-second jit delta
-    // and zero gc reads as recompilation pressure, not a plan change
-    def jitMillis(): Long = java.lang.management.ManagementFactory
-      .getCompilationMXBean.getTotalCompilationTime
     // Code-cache occupancy (sum of the segmented CodeHeap pools, or the
     // single "Code Cache" pool pre-segmentation). Diagnostic for the
     // round-11 finding that late-suite queries pay jit_sec ≈ wall on
     // unchanged code: a cache pinned at its reserved ceiling means the
     // sweeper is evicting warm methods and the JIT is re-compiling them
     // inside timed reps — a suite-size effect, not a plan change.
-    def codeCacheUsedMb(): Double = java.lang.management.ManagementFactory
+    def codeCacheUsedMb(): Double = ManagementFactory
       .getMemoryPoolMXBeans.asScala
       .filter(p => p.getName.contains("CodeHeap") || p.getName.contains("Code Cache"))
       .map(_.getUsage.getUsed).sum / 1e6
     // a failed query must not masquerade as a fast one in the artifact:
     // record it in a `failed` list the driver JSON carries alongside the
-    // (fast-fail) wall time, so a regression can't read as a speedup
+    // (fast-fail) wall time, so a regression can't read as a speedup.
+    // Success is tracked PER REP, and a query is failed only when NO rep
+    // passes: a transient single-rep failure (FS hiccup inside the
+    // noisy-sample third rep, say) must not drop a genuinely passing
+    // query's wall from the headline total
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    // per-rep VIEW ROUTE observability (r16 verdict "what's wrong" #2):
-    // a stalled etl_view_refresh rep used to need a custom probe to
-    // distinguish "a dirty-extremum recompute fired" from "the machine
-    // stalled" — the counters ride bench_full.json per rep now, so the
-    // adjudication reads straight from the artifact. Counters cover the
-    // dirty-route choice (bounded/full) and extremum recomputes.
-    val ctBounded = new java.util.concurrent.atomic.AtomicLong
-    val ctFull = new java.util.concurrent.atomic.AtomicLong
-    val ctExtrema = new java.util.concurrent.atomic.AtomicLong
-    graft.sink.MaterializedAggView.onDirtyRoute = (_, path) =>
-      (if (path == "bounded") ctBounded else ctFull).incrementAndGet()
-    graft.sink.MaterializedAggView.onExtremaRecompute = _ =>
-      ctExtrema.incrementAndGet()
-    def routeSnapshot(): (Long, Long, Long) =
-      (ctBounded.get(), ctFull.get(), ctExtrema.get())
-    // (wall, gc, jit, succeeded) — success is tracked PER REP, and a
-    // query is failed only when NO rep passes: a transient single-rep
-    // failure (FS hiccup inside the noisy-sample third rep, say) must
-    // not drop a genuinely passing query's wall from the headline total
-    def once(name: String): (Double, Double, Double, Boolean, (Long, Long, Long)) = {
-      val fn = SparkEntry.queries(name)
-      val r0 = routeSnapshot()
-      val g0 = gcMillis(); val j0 = jitMillis()
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val r1 = routeSnapshot()
-      ((System.nanoTime() - t0) / 1e9, (gcMillis() - g0) / 1e3,
-        (jitMillis() - j0) / 1e3, ok,
-        (r1._1 - r0._1, r1._2 - r0._2, r1._3 - r0._3))
-    }
     val ccAfter = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // every rep's (wall, gc, jit), not just the best — the round-11
-    // JIT stall could only be adjudicated from per-rep attribution
-    val allReps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Double, Double, Double)]]
-    // per-rep [bounded, full, extrema] route counts, recorded only for
-    // queries where any rep was nonzero (the maintained-view tier)
-    val allRoutes = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(Long, Long, Long)]]
-    val results = names.zipWithIndex.map { case (name, _) =>
-      // settle before every query: finished queries leave broadcast and
-      // checkpoint blocks whose deferred cleanup otherwise lands as
-      // eviction/GC storms inside later timed reps (iterative many-job
-      // queries like dedup_cluster are the most exposed). The settle is
-      // untimed — it trades wall-clock for stable steady-state samples.
-      System.gc(); Thread.sleep(250)
-      // ...and wait for JIT quiescence: on a saturated local[32] the C2
-      // compiler threads compete with the query for cores, and async
-      // recompilation kicked off by query N lands inside query N+1's
-      // timed reps (jit_sec showed 2-3 s of concurrent compilation in
-      // stalled-but-gc-0 samples). Bounded wait: quiet 200 ms window or
-      // 3 s cap.
-      // cap raised 3 s → 8 s after the round-11 stall post-mortem: the
-      // 2.3→5.7 s text_decontaminate_bloom wall on bit-identical code
-      // was jit_sec ≈ wall on BOTH reps with codecache at 132/240 MB —
-      // i.e. a backlogged C2 queue from the preceding queries, not
-      // cache eviction or a plan change. A longer (still untimed,
-      // early-exiting) quiescence wait is the fix that addresses that
-      // mechanism; quiet runs exit in one 200 ms probe as before.
-      var lastJit = jitMillis(); var waited = 0
-      while (waited < 8000) {
-        Thread.sleep(200)
-        val now = jitMillis()
-        if (now - lastJit < 20) waited = 8000
-        else { lastJit = now; waited += 200 }
-      }
-      val s1 = once(name)
-      val s2 = once(name)
-      val best = math.min(s1._1, s2._1)
+    // every rep's record, not just the best — the round-11 JIT stall
+    // could only be adjudicated from per-rep attribution
+    val allReps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Run]]
+    val results = names.map { name =>
+      // the executed plan is dropped at once: kept, it would hold every
+      // rep's broadcast relations for the rest of the run
+      def rep(): Run = measure(spark, sfDir, name).copy(plan = None)
+      val s1 = rep()
+      val s2 = rep()
+      val best = math.min(s1.wall, s2.wall)
       // samples disagreeing by >25% means one absorbed async cleanup /
       // GC / a backlogged C2 queue — a third rep resolves which was
       // real (the round-13/14 adjudications kept re-litigating phantom
@@ -389,20 +517,22 @@ object Bench {
       // hit both reps). A failed rep's fast-fail wall also triggers the
       // disagreement rule, so a one-transient-failure query gets its
       // resolving third rep.
-      val samples = if (math.max(s1._1, s2._1) > 1.25 * best || best > 2.5)
-        Seq(s1, s2, once(name)) else Seq(s1, s2)
+      val samples = if (math.max(s1.wall, s2.wall) > 1.25 * best || best > 2.5)
+        Seq(s1, s2, rep()) else Seq(s1, s2)
       ccAfter(name) = codeCacheUsedMb()
-      allReps(name) = samples.map(s => (s._1, s._2, s._3))
-      if (samples.exists(s => s._5 != ((0L, 0L, 0L)))) {
-        allRoutes(name) = samples.map(_._5)
+      allReps(name) = samples
+      if (samples.exists(_.routes != ((0L, 0L, 0L))))
         System.err.println(s"[bench] $name routes per rep " +
-          "[bounded,full,extrema]: " + samples.map(s =>
-          s"[${s._5._1},${s._5._2},${s._5._3}]").mkString(","))
-      }
-      val passing = samples.filter(_._4)
+          "[bounded,full,extrema]: " + samples.map { s =>
+            val (b, f, e) = s.routes; s"[$b,$f,$e]" }.mkString(","))
+      val passing = samples.filter(_.ok)
       if (passing.isEmpty) failed += name
-      val pick = (if (passing.nonEmpty) passing else samples).minBy(_._1)
-      name -> ((pick._1, pick._2, pick._3))
+      name -> (if (passing.nonEmpty) passing else samples).minBy(_.wall)
+    }
+    // per-rep [bounded, full, extrema] route counts, recorded only for
+    // queries where any rep was nonzero (the maintained-view tier)
+    val allRoutes = allReps.toSeq.collect {
+      case (k, reps) if reps.exists(_.routes != ((0L, 0L, 0L))) => k -> reps.map(_.routes)
     }
     // The driver records only the LAST 2000 characters of stdout, which must
     // hold the whole artifact line plus sbt's trailing [success] line
@@ -411,17 +541,14 @@ object Bench {
     // walls, and the sf basename, which keeps the 90-query line ≤ ~1.85 KB.
     // Run-to-run variance (≫ 10 ms, see round-6/7 stall notes) makes the
     // 10 ms rounding floor irrelevant for grading; sub-10ms claims come
-    // from tools/Timeit. Full fidelity — full names, 3-decimal walls,
-    // gc/jit attribution maps — goes to `bench_full.json` in the CWD (the
-    // round-end commit picks it up). Locale.ROOT formatting everywhere:
-    // the f"" interpolator uses the JVM default locale, which under e.g.
-    // de_DE would emit comma decimals and corrupt the JSON artifact.
-    def fmt(v: Double, dp: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+    // from tools/Profile's per-rep walls. Full fidelity — full names,
+    // 3-decimal walls, gc/jit attribution maps, the best rep's layers —
+    // goes to `bench_full.json` in the CWD (the round-end commit picks it
+    // up).
     def jmap(entries: Seq[(String, String)]): String =
       entries.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}")
-    val total = passedTotal(results.map { case (k, (v, _, _)) => k -> v }, failed.toSet)
+    val total = passedTotal(results.map { case (k, r) => k -> r.wall }, failed.toSet)
     val nPassed = results.size - failed.size
     // full names in the full artifact; the compact stdout line uses the
     // same compactKey scheme for `failed` as for `queries` (the 101-query
@@ -441,19 +568,21 @@ object Bench {
       ).mkString("[", ",", "]")
     val fullJson =
       s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","n_passed":$nPassed,"queries":${
-        jmap(results.map { case (k, (v, _, _)) => k -> fmt(v, 3) })},"gc_sec":${
-        jmap(results.map { case (k, (_, g, _)) => k -> fmt(g, 3) })},"jit_sec":${
-        jmap(results.map { case (k, (_, _, j)) => k -> fmt(j, 3) })},"codecache_mb":${
+        jmap(results.map { case (k, r) => k -> fmt(r.wall, 3) })},"gc_sec":${
+        jmap(results.map { case (k, r) => k -> fmt(r.layers("jvm.gc_s"), 3) })},"jit_sec":${
+        jmap(results.map { case (k, r) => k -> fmt(r.layers("jvm.jit_s"), 3) })},"codecache_mb":${
         jmap(results.map { case (k, _) => k -> fmt(ccAfter.getOrElse(k, 0.0), 1) })},"reps":${
         jmap(results.map { case (k, _) =>
-          k -> allReps.getOrElse(k, Nil).map { case (w, g, j) =>
-            s"[${fmt(w, 3)},${fmt(g, 3)},${fmt(j, 3)}]"
+          k -> allReps.getOrElse(k, Nil).map { r =>
+            s"[${fmt(r.wall, 3)},${fmt(r.layers("jvm.gc_s"), 3)},${fmt(r.layers("jvm.jit_s"), 3)}]"
           }.mkString("[", ",", "]")
         })},"view_routes":${
-        jmap(allRoutes.toSeq.map { case (k, reps) =>
+        jmap(allRoutes.map { case (k, reps) =>
           k -> reps.map { case (b, f, e) => s"[$b,$f,$e]" }
             .mkString("[", ",", "]")
-        })},"failed":$failedArr,"sf":"$sfDir"}"""
+        })},"layers":${
+        layersJson(results.map { case (k, r) => k -> r.layers })
+        },"failed":$failedArr,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
@@ -466,7 +595,7 @@ object Bench {
     val failedField = s""","failed":$failedArrCompact"""
     val compact =
       s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","n_passed":$nPassed,"queries":${
-        jmap(results.map { case (k, (v, _, _)) => compactKey(k) -> fmt(v, 2) })
+        jmap(results.map { case (k, r) => compactKey(k) -> fmt(r.wall, 2) })
         }$failedField,"sf":"$sfBase"}"""
     if (compact.length > 1900)
       System.err.println(s"[bench] WARNING compact line ${compact.length} chars > 1900 — may clip in driver tail")
@@ -479,7 +608,7 @@ object Bench {
     // provably fits the 2000-char tail alongside the artifact + sbt's
     // [success] trailer; a mass-failure round defers to
     // bench_full.json's view_routes rather than clip the artifact.
-    val routesLine = viewRoutesLine(allRoutes.toSeq)
+    val routesLine = viewRoutesLine(allRoutes)
     if (allRoutes.nonEmpty &&
         routesLine.length + compact.length + 80 <= 2000)
       println(routesLine)

@@ -241,7 +241,7 @@ object SparkEntry {
     // resolved-reader cache (the corpus dir is immutable once its
     // _SUCCESS-guarded publish lands; the fingerprint key catches a
     // regeneration) — the per-rep reader construction was 2-3 of
-    // mm_*_real's ~80 ms/rep ResolveDataSource cost (RuleTimeProbe)
+    // mm_*_real's ~80 ms/rep ResolveDataSource cost (tools.Profile's rule table)
     Tables.parquetFrame(s, base.toString).as[Multimodal.Asset]
   }
 

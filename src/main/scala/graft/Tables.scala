@@ -58,7 +58,7 @@ object Tables {
     * analyzer's ResolveDataSource rule — a driver-side relation resolve
     * (existence checks + file-index build) measured at 15-30 ms per
     * construction, and the mains construct hundreds per run over the
-    * SAME immutable fixture files (RuleTimeProbe: 15-80 ms/rep on
+    * SAME immutable fixture files (tools.Profile's rule table: 15-80 ms/rep on
     * ordinary queries, top rule suite-wide). Reusing the resolved
     * Dataset embeds the already-analyzed LogicalRelation in downstream
     * plans, so the rule never re-fires for a cached read. This caches a

@@ -2,29 +2,35 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Given query
+  * names after `<sfDir> <outDir>`, it dumps only those, and the two json
+  * files cover only them, so `tools/check_oracle.py` checks just those.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = Config.verifyArgs(args) // fail fast, named message
-    val cpus = Config.cpus()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE size cached/pinned plans' output partitions by bytes
-      // (default false keeps the static shuffle.partitions count on every
-      // persisted frame — the iterative operators' pinned intermediates
-      // then drag `cpus` near-empty tasks into every consumer stage; at
-      // cluster scale the same flag yields advisory-sized partitions)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, outDir, names) = Config.verifyArgs(args) // fail fast, named message
+    val spark = Config.session()
+    try dump(spark, sfDir, outDir, names) finally spark.stop()
+  }
+
+  /** Refuses names that are not SparkEntry queries. */
+  def requireKnown(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+  }
+
+  /** Writes `names`' results (every query when empty) under `outDir`,
+    * with `oracle_sql.json` and `verify_meta.json` beside them.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String] = Seq.empty): Unit = {
+    requireKnown(names)
     Tables.probeFixtures(spark, sfDir) // fail-loud fixture drift diagnosis
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    val chosen =
+      if (names.isEmpty) SparkEntry.queries.toSeq
+      else names.distinct.map(n => n -> SparkEntry.queries(n))
+    chosen.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -43,16 +49,16 @@ object Verify {
         }
       }
     }
+    def slice(n: String) = names.isEmpty || names.contains(n)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      VerifyJson.render(SparkEntry.oracleSql))
+      VerifyJson.render(SparkEntry.oracleSql.filter { case (n, _) => slice(n) }))
     // machine-readable split of "no oracle BY CONSTRUCTION" from "no
     // oracle by omission": a consumer tallying correctness should count
     // these as rows_only, not as errors (they are sketch-internal
     // results with hash-green exact twins — see SparkEntry.rowsOnly)
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"),
-      "{\"rows_only\": " + SparkEntry.rowsOnly.toSeq.sorted
+      "{\"rows_only\": " + SparkEntry.rowsOnly.filter(slice).toSeq.sorted
         .map(VerifyJson.quote).mkString("[", ",", "]") + "}")
-    spark.stop()
   }
 }
 

@@ -108,26 +108,14 @@ object GraphAnalytics {
       // on the node id (pr by the previous round's groupBy("dst"), deg
       // by its own groupBy) — Catalyst plans it without a fresh
       // edge-sized shuffle.
-      // `graft.pagerank.shape=double` is the measurement seam for
-      // tools.PrShapeAb's interleaved same-JVM A/B (the only honest way
-      // to compare the shapes — cross-round walls are machine-load
-      // confounded). Production never sets it; at ×100 the pre-join
-      // shape measured 82.4 s vs 97.9 s for this historical one.
-      val contrib =
-        if (sys.props.get("graft.pagerank.shape").contains("double")) {
-          edges
-            .join(pr, edges("src") === pr("id"))
-            .join(deg.withColumnRenamed("id", "did"), col("src") === col("did"))
-            .select(col("dst"), expr("pr div deg").as("c"))
-            .groupBy("dst").agg(sum("c").as("m"))
-        } else {
-          val outShare = pr.join(deg, "id")
-            .select(col("id"), expr("pr div deg").as("c"))
-          edges
-            .join(outShare, edges("src") === outShare("id"))
-            .select(col("dst"), col("c"))
-            .groupBy("dst").agg(sum("c").as("m"))
-        }
+      // At ×100 this pre-join shape measured 82.4 s against 97.9 s for
+      // the historical one (SURVEY).
+      val outShare = pr.join(deg, "id")
+        .select(col("id"), expr("pr div deg").as("c"))
+      val contrib = edges
+        .join(outShare, edges("src") === outShare("id"))
+        .select(col("dst"), col("c"))
+        .groupBy("dst").agg(sum("c").as("m"))
       pr = contrib.crossJoin(broadcast(nRow))
         .select(col("dst").as("id"),
           expr(s"(${15 * (scale / 100)}L div n) + ((m * 85L) div 100L)").as("pr"))

@@ -628,8 +628,6 @@ object Dedup {
           (col("cluster_id") < col("old_label")).as("changed"))
         .pipe(graft.Staging.pin)
       converged = next.filter(col("changed")).isEmpty
-      if (sys.props.contains("graft.cc.debug"))
-        println(s"CC round $iter converged=$converged")
       // drop the superseded round's blocks NOW — leaving them to the async
       // ContextCleaner lets O(rounds) checkpoint sets pile up in the block
       // manager (and, under repeated invocation, into later queries' heap)

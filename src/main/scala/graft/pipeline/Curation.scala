@@ -94,7 +94,7 @@ object Curation {
       extraGate: DataFrame => DataFrame = identity): DataFrame = {
     // Scans.spread under the gate kernels: tried and REJECTED (round-20
     // third pass). The one-row-group fixture runs the gate stats on one
-    // task (~0.5 s JobProfile job), which looks like the minhash case —
+    // task (~0.5 s job in tools.Profile), which looks like the minhash case —
     // but the kernel share of that job is only ~0.2 s (the rest is the
     // scan + exchange write itself), below the exchange's fixed cost:
     // min-of-8 warm reps measured 1.82 s without vs 2.44 s with the

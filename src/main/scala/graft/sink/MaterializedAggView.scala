@@ -149,10 +149,13 @@ object MaterializedAggView {
     */
   private[graft] var onForceStep: String => Unit = _ => ()
 
-  /** The legacy (pre-CAS) watermark file — read as a fallback so views
-    * written by earlier rounds keep resolving; never written anymore.
+  /** Refuses a view directory in a layout written before the `_head.v*`
+    * markers and the `_incarnation` token: nothing reads or maintains it.
     */
-  private def headFile(viewPath: String): Path = Paths.get(viewPath, "_head")
+  private def refuseLegacy(viewPath: String, found: String): Nothing =
+    throw new IllegalStateException(
+      s"$viewPath $found — a view layout this engine no longer reads. A " +
+        "view is derived state: delete the view directory and bootstrap it")
 
   /** The view's INCARNATION: a uuid minted at bootstrap and REPLACED by
     * every force re-bootstrap — the token that lets a maintenance
@@ -168,8 +171,8 @@ object MaterializedAggView {
   private def incarnationFile(viewPath: String): Path =
     Paths.get(viewPath, "_incarnation")
 
-  /** Read (minting one first for pre-incarnation views — the upgrade
-    * path) the view's incarnation token.
+  /** Read (minting one first for a fresh view) the view's incarnation
+    * token.
     */
   private def incarnation(viewPath: String): String = {
     val f = incarnationFile(viewPath)
@@ -220,7 +223,8 @@ object MaterializedAggView {
     * A marker the maintainer's keep-window prune unlinks between this
     * listing and its read is skipped, not fatal — concurrent readers
     * are exactly what the grace design supports, and a pruned marker
-    * was by construction far below the watermark.
+    * was by construction far below the watermark. A directory holding
+    * the pre-marker `_head` file and no marker is refused.
     */
   private def markers(viewPath: String): Seq[((Long, Long), String)] = {
     val root = Paths.get(viewPath)
@@ -244,17 +248,19 @@ object MaterializedAggView {
         }
       }
     } finally s.close()
+    if (found.isEmpty && Files.exists(root.resolve("_head")))
+      refuseLegacy(viewPath, "holds a `_head` watermark file and no `_head.v*` marker")
     found.sortBy(_._1)
   }
 
-  /** Directory holding position `m`'s data: the marker's recorded name,
-    * or the pre-CAS fixed `v<H>` layout when no marker exists (clean
-    * positions only — mid-version states postdate the CAS).
-    */
+  /** Directory holding position `m`'s data: the marker's recorded name. */
   private def viewDirAt(viewPath: String, m: (Long, Long)): Path =
     markers(viewPath).find(_._1 == m) match {
       case Some((_, dir)) => Paths.get(viewPath, dir)
-      case None => Paths.get(viewPath, s"v${m._1}")
+      case None => throw new java.util.ConcurrentModificationException(
+        s"$viewPath: the marker of ${fmtMark(m)} is gone — another " +
+          "maintainer advanced the view past it concurrently. The view " +
+          "is single-maintainer: run one refresh loop")
     }
 
   /** The view data lives under `<versionDir>/view/`; each distinct
@@ -274,10 +280,8 @@ object MaterializedAggView {
     * incarnation (publish validates the column set; the base table's
     * evolution contract refuses retypes). Keyed by the incarnation
     * token, so a force re-bootstrap (the one legal schema change)
-    * misses instead of serving a stale schema. A pre-incarnation legacy
-    * view is NEVER minted an incarnation from a read path — it keys by
-    * (data dir, mtime) instead, which still de-dupes repeated reads of
-    * one published dir.
+    * misses instead of serving a stale schema. A view without an
+    * incarnation predates the token and is refused.
     */
   private val viewSchemaCache = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String), org.apache.spark.sql.types.StructType]()
@@ -285,13 +289,8 @@ object MaterializedAggView {
   private def readDataDir(spark: SparkSession, viewPath: String,
       dataDir: Path): DataFrame = {
     val key = {
-      val inc = storedIncarnation(viewPath) match {
-        case Some(token) => token
-        case None =>
-          try s"mtime:$dataDir:${Files.getLastModifiedTime(dataDir)}"
-          catch { case _: java.io.IOException =>
-            return spark.read.parquet(dataDir.toString) }
-      }
+      val inc = storedIncarnation(viewPath).getOrElse(
+        refuseLegacy(viewPath, "has no `_incarnation` token"))
       // Keyed by LEAF name (not the full version-dir path) on purpose:
       // the schema is constant across version dirs within one
       // incarnation, and per-version keying would re-pay a schema-
@@ -316,10 +315,8 @@ object MaterializedAggView {
   private val AuxMulCol = "__m"
 
   /** The view's watermark: the base-table version its stored state
-    * reflects — the max committed `_head.v*` marker (falling back to
-    * the legacy `_head` file for pre-CAS views). None before bootstrap;
-    * corruption of the legacy file is loud (the checkpoint reader's
-    * contract), never "fresh".
+    * reflects — the max committed `_head.v*` marker. None before
+    * bootstrap.
     */
   def watermark(viewPath: String): Option[Long] =
     watermarkFull(viewPath).map(_._1)
@@ -333,8 +330,6 @@ object MaterializedAggView {
     */
   def watermarkFull(viewPath: String): Option[(Long, Long)] =
     markers(viewPath).lastOption.map(_._1)
-      .orElse(ChangeFeedConsumer.readCheckpoint(headFile(viewPath))
-        .map((_, 0L)))
 
   private def validate(dims: Seq[String], aggs: Seq[AggCol],
       extrema: Seq[ExtremumCol], distincts: Seq[DistinctCol]): Unit = {
@@ -491,7 +486,6 @@ object MaterializedAggView {
         try KeyedUpsertSink.deleteRecursively(p)
         catch { case _: java.nio.file.NoSuchFileException => () }
       }
-      Files.deleteIfExists(headFile(viewPath)) // legacy fallback file
       // a read that raced this force (resolved an OLD version dir after
       // the incarnation rotated) may have cached the old schema under
       // the NEW token — purge this view's entries now that the forced
@@ -531,9 +525,7 @@ object MaterializedAggView {
     // and a cached schema that differs from the one just published (a
     // view stored with an older writer's types, say a bootstrap that
     // typed a decimal sum narrower than the fold does) is replaced
-    // instead of failing every later read on the column's type. A
-    // pre-incarnation view keys its reads by data-dir mtime: nothing to
-    // prime.
+    // instead of failing every later read on the column's type.
     storedIncarnation(viewPath).foreach { token =>
       if (viewSchemaCache.size > 8192) viewSchemaCache.clear()
       (("view", view) +: auxes.map { case (n, df) => (s"aux_$n", df) })
@@ -549,10 +541,8 @@ object MaterializedAggView {
   /** Reclamation, only ever run by a maintainer that just COMMITTED.
     * Keeps the top-2 marker-referenced directories (current watermark +
     * reader grace; plus the top-2 CLEAN versions' under sliced
-    * maintenance — see below), every directory whose version exceeds the watermark
-    * (a concurrent maintainer's in-flight publish), and — while fewer
-    * than 2 markers exist — the newest pre-CAS plain `v<N>` directory
-    * below the watermark (grace for an upgraded legacy view). Loser
+    * maintenance — see below) and every directory whose version exceeds
+    * the watermark (a concurrent maintainer's in-flight publish). Loser
     * directories, crash leftovers at or below the watermark, markers
     * beyond a keep window, and stages quiescent past a one-minute dwell
     * (a LIVE stage belongs to a concurrent maintainer mid-publish) go.
@@ -570,11 +560,7 @@ object MaterializedAggView {
     // coincide and this is exactly the old top-2 rule
     val keepMs = (ms.takeRight(2) ++
       ms.filter(_._1._2 == 0L).takeRight(2)).distinct
-    val keepDirs: Set[String] = keepMs.map(_._2).toSet ++
-      (if (ms.size < 2)
-        versionsOnDisk(root).filter(_._1 < wm._1).sortBy(_._1).lastOption
-          .map(_._2.getFileName.toString)
-      else None)
+    val keepDirs: Set[String] = keepMs.map(_._2).toSet
     // markers prune to the SAME window as retained data directories —
     // a marker whose directory is gone is a dangling audit surface, not
     // history (the old keep-16 window left markers 3..16 pointing at
@@ -607,8 +593,8 @@ object MaterializedAggView {
     }
   }
 
-  /** Version of a data directory name — both the CAS layout
-    * (`v<N>-<suffix>`) and the legacy plain `v<N>`.
+  /** Version of a data directory name (`v<N>-<suffix>`, mid-version
+    * `v<N>-c<C>-<suffix>`).
     */
   private def versionOf(name: String): Option[Long] =
     if (!name.startsWith("v")) None
@@ -948,7 +934,8 @@ object MaterializedAggView {
     // tail, silently. Every bootstrap mints (force: replaces) the
     // view's incarnation token; this stream binds to it at first start
     // and refuses any later mismatch.
-    val inc = incarnation(viewPath)
+    val inc = storedIncarnation(viewPath).getOrElse(
+      refuseLegacy(viewPath, "has no `_incarnation` token"))
     val persistedInc = graft.sources.ChangeFeedSource
       .resolveLocalPath(checkpointDir)
       .resolve("sources").resolve("0").resolve("graft-view-incarnation")
@@ -1180,9 +1167,6 @@ object MaterializedAggView {
     // could straddle a concurrent advance
     val ms = markers(viewPath)
     val dir = ms.lastOption.map { case (_, d) => Paths.get(viewPath, d) }
-      .orElse( // pre-CAS legacy view: `_head` file + plain v<H> dir
-        ChangeFeedConsumer.readCheckpoint(headFile(viewPath))
-          .map(v => Paths.get(viewPath, s"v$v")))
       .getOrElse(throw new IllegalStateException(
         s"$viewPath: no watermark — the view was never bootstrapped"))
     readDataDir(spark, viewPath, viewData(dir)).drop(CountCol)

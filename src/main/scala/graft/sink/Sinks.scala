@@ -1609,7 +1609,7 @@ object KeyedUpsertSink {
           // driver-side relation resolve (existence probes + file-index
           // listing) measured at ~30 ms per construction, re-paid on
           // EVERY chain read of the same write-once generation
-          // (RuleTimeProbe: 0.9-1.1 s/rep on the delete-where/stream-
+          // (tools.Profile's rule table: 0.9-1.1 s/rep on the delete-where/stream-
           // sink fixtures, the top Catalyst rule on the whole sink
           // tier; at object-store latency each re-resolve is a remote
           // LIST). Generation dirs are immutable once written (attempt

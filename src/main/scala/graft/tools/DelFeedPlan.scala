@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.KeyedUpsertSink
@@ -16,13 +15,7 @@ object DelFeedPlan {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val scale = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Config.session()
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
     val keys = Seq("event_id")

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Tables => T}
@@ -37,14 +37,7 @@ object DeltaAmp {
     val sfDir = args(0)
     val nBatches = if (args.length > 1) args(1).toInt else 32
     val batchRows = if (args.length > 2) args(2).toInt else 200
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("delta-amp")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Config.session()
 
     // realistic row width (keep the string columns): a 3-long skeleton
     // makes parquet per-FILE overhead dominate both sinks' output and

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.KeyedUpsertSink
@@ -27,14 +26,7 @@ object FacadeCostProbe {
     val sfDir = args(0)
     val scales = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("facade-cost-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Config.session()
     val keys = Seq("event_id")
     val order = Seq(col("ts_us"))
 

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sink.{KeyedUpsertSink, MaterializedAggView}
@@ -37,14 +37,7 @@ object LmViewScale {
     val scales = (if (args.length > 1) args(1) else "1,10,100")
       .split(",").toSeq.map(_.trim.toInt)
     val trickleDocs = if (args.length > 2) args(2).toInt else 200
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("lm-view-scale")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Config.session()
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
 

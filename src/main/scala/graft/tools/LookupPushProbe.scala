@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.KeyedUpsertSink
@@ -30,14 +29,7 @@ object LookupPushProbe {
     val sfDir = args(0)
     val scales = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("lookup-push-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Config.session()
     import spark.implicits._
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -34,14 +33,7 @@ object MirrorScale {
     val nBatches = if (args.length > 1) args(1).toInt else 8
     val batchRows = if (args.length > 2) args(2).toInt else 500
     val scale = if (args.length > 3) args(3).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("mirror-scale")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Config.session()
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
 

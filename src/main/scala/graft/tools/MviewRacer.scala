@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.MaterializedAggView
@@ -21,12 +20,7 @@ import graft.sink.MaterializedAggView
 object MviewRacer {
   def main(args: Array[String]): Unit = {
     val Array(basePath, viewPath, doneFile) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("mview-racer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Config.session(2)
     try {
       val keys = Seq("k")
       val order = Seq(col("ts"))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{Tables => T}
@@ -81,14 +81,7 @@ object MviewScale {
     // one dirty group is ~4% ≈ broadcastable keys, the key-bounded
     // regime readBucketedDeltaMatching exists for)
     val dimMode = if (args.length > 5) args(5) else "type"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("mview-scale")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Config.session()
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.KeyedUpsertSink
@@ -23,12 +22,7 @@ object OptimisticRacer {
     val Array(tablePath, writerIdS, nBatchesS, numBucketsS) = args
     val writerId = writerIdS.toInt
     val nBatches = nBatchesS.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"optimistic-racer-$writerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Config.session(2)
     import spark.implicits._
     try {
       val sink = KeyedUpsertSink.upsertBucketedDelta(

@@ -16,7 +16,7 @@ import graft.dedup.Dedup
 object PrefixProbe {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 10
-    val spark = ProbeCorpus.session()
+    val spark = graft.Config.session()
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     val time = ProbeCorpus.time("PREFIX") _
 

@@ -5,7 +5,7 @@ package graft.tools
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-        val spark = ProbeCorpus.session(4)
+    val spark = graft.Config.session()
     Seq("events", "customer", "supplier", "part", "region", "nation").foreach { t =>
       println(s"== $t")
       try {

@@ -5,11 +5,11 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared infrastructure for the dev-only scale probes: one place for the
-  * probe SparkSession shape, wall-clock reporting, parquet-cached corpus
+/** Shared infrastructure for the dev-only scale probes: wall-clock
+  * reporting, parquet-cached corpus
   * synthesis, and the three growth models the probes share
   * (exact-replica, mutated-copy, hash-noise). Previously each of
-  * ScaleProbe / ScaleProbe100 / CcProbe carried its own copy.
+  * ScaleProbe / ScaleProbe100 carried its own copy.
   *
   * Growth-model semantics (why three models exist):
   *  - `exactDocCopies` / `exactEmbCopies`: replicas form n² duplicate
@@ -24,21 +24,6 @@ import org.apache.spark.sql.functions._
   *    cluster structure.
   */
 object ProbeCorpus {
-
-  def session(cpus: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.props.getOrElse("graft.probe.cachedAqe", "true"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
 
   /** Print `TAG label W s rows=n` — the line shape the probe tables in
     * SURVEY/scaladocs quote.

@@ -15,7 +15,7 @@ object RepCheck {
     val dir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = ProbeCorpus.session()
+    val spark = graft.Config.session()
     var bad = 0
     names.foreach { name =>
       def snapshot(): Seq[String] =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -14,7 +14,7 @@ import graft.dedup.Dedup
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 5
-    val spark = ProbeCorpus.session()
+    val spark = graft.Config.session()
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
 
     def corpus(copies: Int): DataFrame = ProbeCorpus.exactDocCopies(base, copies)

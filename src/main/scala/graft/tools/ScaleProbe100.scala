@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -38,7 +38,7 @@ object ScaleProbe100 {
     val mode = if (args.length > 1) args(1) else "all"
     // mem mode models a constrained executor: local[8] (pair with
     // SPARK_DRIVER_MEM=4g so the forked JVM gets the small heap)
-    val spark = ProbeCorpus.session(if (mode == "mem") 8 else 32)
+    val spark = if (mode == "mem") graft.Config.session(8) else graft.Config.session()
     val tmp = "/tmp/graft-scale100"
     val sfDir = "/root/testdata/sf0.1"
 

@@ -27,7 +27,7 @@ object SfRehearsal {
     val out = if (args.nonEmpty) args(0) else "/tmp/graft-sf1"
     val c = if (args.length > 1) args(1).toInt else 10
     val src = "/root/testdata/sf0.1"
-    val spark = ProbeCorpus.session(32)
+    val spark = graft.Config.session()
     val K = 10000000000L // disjoint-universe key offset per copy
 
     def base(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

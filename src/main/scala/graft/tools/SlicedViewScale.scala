@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.{KeyedUpsertSink, MaterializedAggView}
@@ -35,14 +34,7 @@ object SlicedViewScale {
     val sfDir = args(0)
     val scale = if (args.length > 1) args(1).toInt else 1
     val bucketCap = if (args.length > 2) args(2).toLong else 2L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("sliced-view-scale")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Config.session()
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.text.TextAnalysis
@@ -30,13 +29,7 @@ object TrainScale {
     val sfDir = args(0)
     val scales = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Config.session()
     val io = new IoListener
     spark.sparkContext.addSparkListener(io)
 

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Layout
@@ -17,7 +17,7 @@ import graft.analytics.Layout
   */
 object ZOrderProbe {
   def main(args: Array[String]): Unit = {
-    val spark = ProbeCorpus.session()
+    val spark = graft.Config.session()
     val tmp = "/tmp/graft-zorder"
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.1")
     val base = ProbeCorpus.eventCopies(ev, 10)

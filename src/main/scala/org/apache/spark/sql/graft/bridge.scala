@@ -124,4 +124,12 @@ object Bridge {
           l: org.apache.spark.sql.execution.LogicalRDD) => Some(l.rdd)
       case _ => None
     }
+
+  /** Blocks until the listener bus has delivered every event posted so
+    * far (`waitUntilEmpty` is `private[spark]`): a listener added after
+    * this sees none of the earlier events, and one read after it has
+    * seen all of its own.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -61,6 +61,28 @@ class BenchArtifactSpec extends AnyFunSuite {
         "of the 2000-char tail or the in-main guard will always drop it")
   }
 
+  test("bench_full.json's layers map holds one entry per query with every layer name") {
+    val record = scala.collection.immutable.ListMap(
+      Bench.layerNames.map(k => k -> 12345.6789): _*)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Bench.layersJson(Bench.headline.map(_ -> record)))
+    import scala.jdk.CollectionConverters._
+    assert(json.fieldNames().asScala.toSeq == Bench.headline)
+    Bench.headline.foreach { q =>
+      val layers = json.get(q)
+      assert(layers.fieldNames().asScala.toSeq == Bench.layerNames)
+      Bench.layerNames.foreach { k =>
+        assert(layers.get(k).asText == (if (k.endsWith("_s")) "12345.679" else "12346"))
+      }
+    }
+    // BENCHMARK.json's per_layer names for what the record measures
+    Seq("sched.jobs", "sched.tasks", "sched.gap_s", "plan.analysis_s",
+      "plan.optimization_s", "plan.planning_s", "exec.task_cpu_s",
+      "exec.input_bytes", "exec.output_bytes", "exec.shuffle_write_bytes",
+      "exec.spill_bytes", "jvm.gc_s", "jvm.jit_s")
+      .foreach(k => assert(Bench.layerNames.contains(k), k))
+  }
+
   test("failed queries do not count toward the headline total") {
     val walls = Seq("a" -> 1.0, "b" -> 2.0, "c" -> 0.05)
     assert(Bench.passedTotal(walls, Set("c")) == 3.0)

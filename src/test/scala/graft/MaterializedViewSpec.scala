@@ -308,6 +308,48 @@ class MaterializedViewSpec extends SparkSpec {
     assert(e2.getMessage.contains("recreated"))
   }
 
+  test("a view directory without `_head.v*` markers or `_incarnation` is refused by every reader and maintainer") {
+    val base = newDir("graft-mv-legacy")
+    sinkTo(base)(batchDf(("a", "x", 1L, 10L), ("b", "y", 2L, 10L)), 0L)
+    val head = KeyedUpsertSink.tableVersions(base).max
+    def refused(view: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(view) &&
+        e.getMessage.contains("delete the view directory and bootstrap"),
+        e.getMessage)
+    }
+    def checkpoint = Files.createTempDirectory("graft-mv-legacy-ck").toString
+    // the pre-marker layout: a `_head` watermark file naming a plain
+    // `v<H>` data directory
+    val legacy = newDir("graft-mv-legacy-view")
+    spark.range(1).select(lit("x").as("g"), lit(1L).as("n"),
+      lit(1L).as("sum_v"), lit(1L).as("__n"))
+      .write.parquet(s"$legacy/v$head/view")
+    Files.writeString(Paths.get(legacy, "_head"), s"$head\n")
+    refused(legacy)(MaterializedAggView.read(spark, legacy))
+    refused(legacy)(MaterializedAggView.watermark(legacy))
+    refused(legacy)(MaterializedAggView.refresh(
+      spark, base, legacy, keys, order, dims, aggs))
+    refused(legacy)(MaterializedAggView.bootstrap(
+      spark, base, legacy, keys, order, dims, aggs))
+    refused(legacy)(MaterializedAggView.bootstrap(
+      spark, base, legacy, keys, order, dims, aggs, force = true))
+    refused(legacy)(MaterializedAggView.maintainStream(spark, base, legacy,
+      keys, order, dims, aggs, checkpointDir = checkpoint))
+    // markers but no incarnation token
+    val tokenless = newDir("graft-mv-tokenless-view")
+    MaterializedAggView.bootstrap(spark, base, tokenless, keys, order, dims, aggs)
+    Files.delete(Paths.get(tokenless, "_incarnation"))
+    refused(tokenless)(MaterializedAggView.read(spark, tokenless))
+    refused(tokenless)(MaterializedAggView.maintainStream(spark, base,
+      tokenless, keys, order, dims, aggs, checkpointDir = checkpoint))
+    // the fix the message names
+    rmTree(legacy)
+    assert(MaterializedAggView.bootstrap(
+      spark, base, legacy, keys, order, dims, aggs).contains(head))
+    assert(viewRows(legacy) == recomputed(base))
+  }
+
   // ---- MIN/MAX maintenance (ExtremumCol two-path scheme) ----
 
   private def extrema = Seq(
