@@ -1,5 +1,7 @@
 package graft.dedup
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -123,6 +125,23 @@ object StreamingDedup {
   private def bktOf(numBuckets: Int) =
     pmod(xxhash64(col("band"), col("bucket")), lit(numBuckets.toLong))
 
+  /** Existence probe that closes its directory stream — a bare
+    * `Files.list(...).findAny()` leaks one descriptor per micro-batch on
+    * a long-running stream. A directory holding only the `_SUCCESS`
+    * marker or hidden staging entries counts as EMPTY — reading one as a
+    * table fails schema inference. `__bkt=N` partition directories DO
+    * count (they start with `_` but are the data itself).
+    */
+  private def nonEmptyDir(target: Path): Boolean =
+    Files.exists(target) && {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(target)
+      try s.iterator().asScala.exists { p =>
+        val n = p.getFileName.toString
+        n != "_SUCCESS" && !n.startsWith(".")
+      } finally s.close()
+    }
+
   /** One micro-batch: candidates vs state, verify, emit, merge. Public
     * for direct spec drive; idempotent end to end.
     */
@@ -160,7 +179,7 @@ object StreamingDedup {
       // state write can leave a marker-only directory, which exists() calls
       // a table — the schema read would then fail on every replay forever
       val stateRows =
-        if (!KeyedUpsertSink.nonEmptyDir(java.nio.file.Paths.get(stateDir)))
+        if (!nonEmptyDir(Paths.get(stateDir)))
           newRows.limit(0)
         else spark.read.parquet(stateDir).filter(col("__bkt").isin(touched: _*))
       val bSide = stateRows.unionByName(newRows)

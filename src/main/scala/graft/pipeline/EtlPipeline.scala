@@ -97,9 +97,13 @@ object EtlPipeline {
   }
 
   /** Streaming mode (SURVEY.md §7.2 M3): the same pipeline over a watched
-    * landing directory, exactly-once into a keyed parquet table via
+    * landing directory, exactly-once into the versioned keyed table via
     * checkpointed foreachBatch — an upgrade over the reference's
-    * at-least-once delivery (SURVEY.md §1.4).
+    * at-least-once delivery (SURVEY.md §1.4). Each micro-batch commits
+    * one delta generation through [[KeyedUpsertSink.upsertBucketedDelta]],
+    * so a drop writes only its own rows; the table records its key/order
+    * spec, and [[KeyedUpsertSink.readBucketedDelta]], `versionAsOf` and
+    * the change feed read it without restating either.
     */
   def runStreaming(
       spark: SparkSession,
@@ -110,15 +114,17 @@ object EtlPipeline {
       maxFilesPerTrigger: Int = 16): StreamingQuery = {
     val rows    = CsvExtract.stream(spark, landingDir, headers, maxFilesPerTrigger)
     val loaded  = addressRows(transformedEvents(CsvExtract.toEvents(rows)))
+    // same deterministic tie-break as runBatch: within one micro-batch
+    // all rows share the current_timestamp() stamp; ACROSS batches a tie
+    // goes to the later commit on the chain
+    val upsert = KeyedUpsertSink.upsertBucketedDelta(spark, tablePath,
+      Seq("id"), lwwOrder(loaded.columns.toSeq)) _
     loaded.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(
-        // same deterministic tie-break as runBatch: within one
-        // micro-batch all rows share the current_timestamp() stamp
-        // (mergeLww's __gen only disambiguates ACROSS batches)
-        KeyedUpsertSink.upsertBatch(spark, tablePath, Seq("id"),
-          lwwOrder(loaded.columns.toSeq)) _)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        upsert(batch, batchId); ()
+      }
       .start()
   }
 }

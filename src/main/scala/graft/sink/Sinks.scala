@@ -81,159 +81,9 @@ object KeyedUpsertSink {
         "order column silently corrupts the LWW merge")
   }
 
-  /** New batch outranks existing rows on equal order values: tag a
-    * generation column so replays/redeliveries resolve deterministically.
-    * THE LWW merge shared by every upsert variant — one place for the
-    * tie-break semantics.
-    *
-    * Schemas align BY NAME with null back-fill in both directions, so a
-    * batch that ADDS a column merges against older rows (which get null
-    * there). Key and order columns must exist in every batch
-    * ([[requireKeyOrderCols]] fails loudly otherwise); on the versioned
-    * table a batch dropping or retyping a committed value column is
-    * refused before reaching here ([[evolveSchemaMeta]] — the
-    * deliberate contract), while [[upsertBatch]]'s plain table keeps the
-    * permissive union (a lacked column survives as null on the new
-    * rows).
-    */
-  private def mergeLww(existing: Option[DataFrame], batch: DataFrame,
-      keys: Seq[String], order: Seq[Column]): DataFrame = {
-    // single source of truth for the guard: EVERY public entry point
-    // ([[upsertBatch]] and [[upsertBucketedDelta]]) runs
-    // [[requireKeyOrderCols]] before reaching here
-    val tagged = batch.withColumn("__gen", lit(1L))
-    val merged = existing match {
-      case Some(old) =>
-        latestByKey(
-          old.withColumn("__gen", lit(0L))
-            .unionByName(tagged, allowMissingColumns = true),
-          keys, order :+ col("__gen"))
-      case None => latestByKey(tagged, keys, order)
-    }
-    merged.drop("__gen")
-  }
-
-  /** Streaming upsert via foreachBatch: read-merge-overwrite a parquet
-    * table (build environment has no transactional table format on the
-    * classpath — SURVEY.md §7.4.4; on a real deployment this body swaps for
-    * a Delta/Iceberg MERGE keyed on `keys`).
-    *
-    * Idempotent per batch replay: merging the same batch twice is a no-op
-    * because the merge itself is last-write-wins on `keys` — this upgrades
-    * the reference's at-least-once to effectively-once. Crash windows:
-    * the replace is a rename-aside + rename-in swap (microseconds, never
-    * an O(files) delete with the table absent), and a crash between the
-    * two renames self-heals on the next batch ([[recoverReplace]] moves
-    * the set-aside table back). For multi-writer / reader-concurrent
-    * crash-consistency use [[upsertBucketedDelta]] — manifest readers
-    * never observe a partial commit there.
-    */
-  def upsertBatch(
-      spark: SparkSession,
-      tablePath: String,
-      keys: Seq[String],
-      order: Seq[Column])(batch: DataFrame, batchId: Long): Unit = {
-    requireKeyOrderCols(batch, keys, order)
-    val target = Paths.get(tablePath)
-    recoverReplace(target)
-    reclaimReplaceLeftovers(target)
-    // empty batch: merging is the identity — and writing would create a
-    // _SUCCESS-only directory that poisons the next batch's schema read
-    if (batch.isEmpty) return
-    val existing =
-      if (nonEmptyDir(target)) Some(spark.read.parquet(tablePath))
-      else None
-    val staging = tablePath + s".staging-$batchId"
-    StateWriter(mergeLww(existing, batch, keys, order))
-      .mode(SaveMode.Overwrite).parquet(staging)
-    replaceDir(Paths.get(staging), target)
-  }
-
-  /** Existence probe that closes its directory stream — a bare
-    * `Files.list(...).findAny()` leaks one descriptor per micro-batch on
-    * a long-running stream. A directory holding only the `_SUCCESS`
-    * marker or hidden staging entries counts as EMPTY — reading one as a
-    * table fails schema inference. `__bucket=N` partition directories DO
-    * count (they start with `_` but are the data itself).
-    */
-  private[graft] def nonEmptyDir(target: Path): Boolean =
-    Files.exists(target) && {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(target)
-      try s.iterator().asScala.exists { p =>
-        val n = p.getFileName.toString
-        // metadata sidecars are not data: a table holding only _SUCCESS
-        // or _layout (written by ensureLayout BEFORE the first data
-        // lands) must still read as empty
-        n != "_SUCCESS" && n != "_layout" && !n.startsWith(".")
-      } finally s.close()
-    }
-
-  /** Swap `staging` into place with two renames: the old table moves
-    * aside (one rename — never a recursive delete while the table is
-    * absent), staging moves in, and only then is the set-aside copy
-    * reclaimed. The crash window is two metadata operations; a crash
-    * inside it leaves the old table intact under `.old-*`, which
-    * [[recoverReplace]] restores on the next batch instead of silently
-    * rebuilding the table from one batch.
-    */
-  private def replaceDir(staging: Path, target: Path): Unit = {
-    if (Files.exists(target)) {
-      // wall-clock stamp, NOT nanoTime: recoverReplace picks the newest
-      // set-aside numerically, and nanoTime origins are arbitrary per JVM
-      // — across a restart it could rank a stale crash leftover above the
-      // genuinely newest table
-      val old = Paths.get(s"$target.old-${System.currentTimeMillis()}")
-      Files.move(target, old)
-      Files.move(staging, target)
-      deleteRecursively(old)
-    } else Files.move(staging, target)
-  }
-
-  /** Crash recovery for [[replaceDir]]: if the table is missing but a
-    * set-aside `.old-*` sibling exists (crash between the two renames),
-    * restore the newest one — the previously committed table — before
-    * merging anything.
-    */
-  private def recoverReplace(target: Path): Unit = {
-    if (Files.exists(target)) return
-    val stamp = target.getFileName.toString + ".old-"
-    // numeric sort on the wall-clock suffix — a lexicographic sort
-    // mis-orders across digit-count boundaries
-    siblings(target, ".old-")
-      .sortBy(p => p.getFileName.toString.stripPrefix(stamp).toLongOption
-        .getOrElse(Long.MinValue))
-      .lastOption.foreach(old => Files.move(old, target))
-  }
-
-  /** Best-effort reclamation of crash leftovers around a replaced table:
-    * with the table present, any `.old-*` / `.staging-*` sibling older
-    * than a one-minute grace is an abandoned attempt (the same dwell
-    * rule as [[vacuumGenerations]]' sweep of staged generations).
-    */
-  private def reclaimReplaceLeftovers(target: Path): Unit = {
-    if (!Files.exists(target)) return
-    val now = System.currentTimeMillis()
-    (siblings(target, ".old-") ++ siblings(target, ".staging-"))
-      .filter(p => now - Files.getLastModifiedTime(p).toMillis > 60000L)
-      .foreach(deleteRecursively)
-  }
-
-  /** Siblings of `target` named `<table><suffixPrefix>*`. */
-  private def siblings(target: Path, suffixPrefix: String): Seq[Path] = {
-    val parent = target.getParent
-    if (parent == null || !Files.exists(parent)) return Seq.empty
-    val prefix = target.getFileName.toString + suffixPrefix
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(parent)
-    try s.iterator().asScala.toList
-      .filter(_.getFileName.toString.startsWith(prefix))
-    finally s.close()
-  }
-
-  /** Recursive delete that closes its walk stream — same descriptor-leak
-    * class as the `Files.list` fixed in [[nonEmptyDir]]; invoked per
-    * micro-batch on replace/vacuum paths.
+  /** Recursive delete that closes its walk stream — an unclosed
+    * `Files.walk` leaks one descriptor per call; invoked per micro-batch
+    * on the stage-drop and vacuum paths.
     */
   private[sink] def deleteRecursively(root: Path): Unit = {
     val s = Files.walk(root)
@@ -524,16 +374,16 @@ object KeyedUpsertSink {
     * buckets — just re-appends to the fresh head's chains and retries,
     * with no re-merge and no lock; separate drivers can share a table.
     * Chain order = commit order, so order-ties resolve to the later
-    * COMMIT, exactly [[mergeLww]]'s batch-beats-existing rule replayed
-    * at read time; at-least-once redelivery appends a duplicate delta
-    * whose rows tie and resolve identically — the replay is a read-level
-    * no-op.
+    * COMMIT (a new batch beats existing rows); at-least-once redelivery
+    * appends a duplicate delta whose rows tie and resolve identically —
+    * the replay is a read-level no-op.
     *
-    * Schema evolution: a batch may ADD columns (older rows read null
-    * there) and the committed column contract widens with the commit; a
-    * batch DROPPING or RETYPING a committed column is refused loudly
+    * Schema evolution: generations align BY NAME at read time, so a
+    * batch may ADD columns (older rows read null there) and the
+    * committed column contract widens with the commit; a batch DROPPING
+    * or RETYPING a committed column is refused loudly
     * ([[evolveSchemaMeta]]); key and order columns must exist in every
-    * batch.
+    * batch ([[requireKeyOrderCols]] fails loudly otherwise).
     *
     * `onBeforeFirstCommit` is a deterministic-interleaving seam for the
     * race and crash specs (runs once, between the stage and the first
@@ -599,11 +449,10 @@ object KeyedUpsertSink {
     requireKeyOrderCols(batch, keys, order)
     val bucketed = batch.withColumn("__bucket", bucketOf(keys, numBuckets))
     locally {
-      // stage FIRST, against an EMPTY base: mergeLww degrades to the
-      // intra-batch latestByKey compaction (one row per key per delta —
-      // two in-batch duplicates must not reach read time, where they'd
-      // tie on __seq). Round-19 single-execution staging: the batch plan
-      // used to persist + run a touched-buckets distinct/collect BEFORE
+      // stage FIRST, against an EMPTY base: the intra-batch latestByKey
+      // compaction (one row per key per delta — two in-batch duplicates
+      // must not reach read time, where they'd tie on __seq). Round-19
+      // single-execution staging: the batch plan used to persist + run a touched-buckets distinct/collect BEFORE
       // the stage write re-ran it from the persisted blocks — one extra
       // job, one full materialization and a persist round-trip per
       // commit, on every delta writer (the stream sink's per-trigger
@@ -617,7 +466,7 @@ object KeyedUpsertSink {
       // vacuum-reclaimed, so a crash between stage and drop leaks
       // nothing a vacuum won't collect).
       val gen = s"gen-$batchId-u${java.util.UUID.randomUUID().toString.take(8)}"
-      val staged = mergeLww(None, bucketed, keys, order)
+      val staged = latestByKey(bucketed, keys, order)
       val touched = StateWriter.generation(staged, s"$tablePath/$gen", keys)
       primeGenSchema(tablePath, gen, staged.schema)
       def dropStageEarly(): Unit =
@@ -1672,9 +1521,9 @@ object KeyedUpsertSink {
 
   /** LWW-resolve a chain read: one row per key, ranked by `order` then
     * chain recency (`__seq` — a later delta beats an earlier one on
-    * order-ties, the read-time equivalent of [[mergeLww]]'s batch-beats-
-    * existing tag). Single-chain tables skip the window entirely — a
-    * fully-compacted table resolves for free.
+    * order-ties, so a new batch beats existing rows). Single-chain
+    * tables skip the window entirely — a fully-compacted table resolves
+    * for free.
     */
   private def resolveChainRead(df: DataFrame, entries: Map[Long, String],
       keys: Seq[String], order: Seq[Column]): DataFrame =

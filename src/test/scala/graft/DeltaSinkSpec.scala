@@ -228,8 +228,8 @@ class DeltaSinkSpec extends SparkSpec {
   test("order ties resolve to the later commit; redelivery is a read-level no-op") {
     val path = newTable("graft-delta-redeliver")
     delta(path)(batchDf(("a", 1L, 10L), ("b", 1L, 10L)), 0L)
-    // same ts — the later COMMIT must win, mergeLww's batch-beats-existing
-    // rule replayed at read time
+    // same ts — the later COMMIT must win: a new batch beats existing
+    // rows, resolved at read time
     delta(path)(batchDf(("a", 2L, 10L)), 1L)
     assert(table(path) == Set(("a", 2L, 10L), ("b", 1L, 10L)))
     // at-least-once redelivery of the SAME batch: rows tie and resolve

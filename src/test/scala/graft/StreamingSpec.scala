@@ -1,70 +1,139 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import graft.pipeline.EtlPipeline
+import graft.sink.KeyedUpsertSink
 
 /** Streaming-mode pipeline (SURVEY.md §7.2 M3): watched landing dir →
-  * checkpointed foreachBatch keyed upsert, exactly-once across restarts.
+  * checkpointed foreachBatch keyed upsert into the versioned table,
+  * exactly-once across restarts.
   */
 class StreamingSpec extends SparkSpec {
 
-  test("streaming pipeline upserts CSV arrivals exactly-once across restarts") {
-    val root = Files.createTempDirectory("graft-stream")
-    val landing = Files.createDirectory(root.resolve("landing"))
-    val table = root.resolve("table").toString
-    val ckpt = root.resolve("ckpt").toString
-    val headers = Seq("ID", "HouseNum", "Street", "Town", "Zip")
+  private val Headers = Seq("ID", "HouseNum", "Street", "Town", "Zip")
+  private val DropA =
+    "ID,HouseNum,Street,Town,Zip\n1,10,First St,Alpha,11111\n2,20,Second St,Beta,22222\n"
+  private val DropB =
+    "ID,HouseNum,Street,Town,Zip\n2,99,Updated St,Beta2,22299\n3,30,Third St,Gamma,33333\n"
 
-    Files.writeString(landing.resolve("a.csv"),
-      "ID,HouseNum,Street,Town,Zip\n1,10,First St,Alpha,11111\n2,20,Second St,Beta,22222\n")
-    val q1 = EtlPipeline.runStreaming(
-      spark, landing.toString, headers, table, ckpt)
-    q1.awaitTermination()
-    assert(spark.read.parquet(table).count() == 2)
+  /** Land `csv` as `name`, then run the pipeline to quiescence. */
+  private def drop(root: Path, name: String, csv: String): Unit = {
+    Files.writeString(root.resolve("landing").resolve(name), csv)
+    runPipeline(root)
+  }
+
+  private def runPipeline(root: Path): Unit =
+    EtlPipeline.runStreaming(spark, root.resolve("landing").toString, Headers,
+      root.resolve("table").toString, root.resolve("ckpt").toString)
+      .awaitTermination()
+
+  private def pipelineRoot(prefix: String): Path = {
+    val root = Files.createTempDirectory(prefix)
+    Files.createDirectory(root.resolve("landing"))
+    root
+  }
+
+  test("streaming pipeline upserts CSV arrivals exactly-once across restarts") {
+    val root = pipelineRoot("graft-stream")
+    val table = root.resolve("table").toString
+    drop(root, "a.csv", DropA)
+    assert(KeyedUpsertSink.readBucketedDelta(spark, table).count() == 2)
 
     // second file: one new id, one overwrite of id=2 (LWW)
-    Files.writeString(landing.resolve("b.csv"),
-      "ID,HouseNum,Street,Town,Zip\n2,99,Updated St,Beta2,22299\n3,30,Third St,Gamma,33333\n")
-    val q2 = EtlPipeline.runStreaming(
-      spark, landing.toString, headers, table, ckpt)
-    q2.awaitTermination()
-    val rows = spark.read.parquet(table)
+    drop(root, "b.csv", DropB)
+    val rows = KeyedUpsertSink.readBucketedDelta(spark, table)
     assert(rows.count() == 3)
     val r2 = rows.filter("id = '2'").collect().head
     assert(r2.getAs[String]("street_address") == "Updated St")
 
     // restart with NO new files: checkpoint prevents reprocessing
-    val q3 = EtlPipeline.runStreaming(
-      spark, landing.toString, headers, table, ckpt)
-    q3.awaitTermination()
-    assert(spark.read.parquet(table).count() == 3)
+    runPipeline(root)
+    assert(KeyedUpsertSink.readBucketedDelta(spark, table).count() == 3)
+  }
+
+  test("a micro-batch replayed after its table commit leaves the table unchanged") {
+    val root = pipelineRoot("graft-stream-replay")
+    val table = root.resolve("table").toString
+    drop(root, "a.csv", DropA)
+    drop(root, "b.csv", DropB)
+    val before = KeyedUpsertSink.readBucketedDelta(spark, table).collect().toSet
+    val versionsBefore = KeyedUpsertSink.tableVersions(table).last
+    // a crash after the table commit and before the checkpoint commit:
+    // the last batch's commit-log entry (and its checksum) never landed
+    val commits = root.resolve("ckpt").resolve("commits")
+    Files.delete(commits.resolve("1"))
+    Files.deleteIfExists(commits.resolve(".1.crc"))
+    runPipeline(root)
+    // the batch ran again and committed a duplicate delta …
+    assert(KeyedUpsertSink.tableVersions(table).last == versionsBefore + 1)
+    // … whose rows tie and resolve to the same table: the replay keeps
+    // its batchTimestampMs from the offset log, so `time` does not move
+    assert(KeyedUpsertSink.readBucketedDelta(spark, table).collect().toSet == before)
+    assert(before.size == 3)
+  }
+
+  test("a drop's commit writes only the drop: older chains stay prefixes") {
+    val root = pipelineRoot("graft-stream-100tb")
+    val table = root.resolve("table").toString
+    drop(root, "bulk.csv", (1 to 2000)
+      .map(i => s"$i,$i,Street $i,Town,11111")
+      .mkString("ID,HouseNum,Street,Town,Zip\n", "\n", "\n"))
+    val before = KeyedUpsertSink.readManifest(table)
+    drop(root, "one.csv", "ID,HouseNum,Street,Town,Zip\n5000,1,Last St,Omega,99999\n")
+    val after = KeyedUpsertSink.readManifest(table)
+    before.foreach { case (b, chain) =>
+      assert(KeyedUpsertSink.chainOf(after(b))
+        .startsWith(KeyedUpsertSink.chainOf(chain)), s"bucket $b was rewritten")
+    }
+    val gens = (m: Map[Long, String]) => m.values.flatMap(KeyedUpsertSink.chainOf).toSet
+    val added = gens(after) -- gens(before)
+    assert(added.size == 1)
+    assert(spark.read.parquet(s"$table/${added.head}").count() == 1)
+    assert(KeyedUpsertSink.readBucketedDelta(spark, table).count() == 2001)
+  }
+
+  test("the pipeline table has versions: time travel and the change feed read it") {
+    import spark.implicits._
+    val root = pipelineRoot("graft-stream-versions")
+    val table = root.resolve("table").toString
+    drop(root, "a.csv", DropA)
+    val v1 = KeyedUpsertSink.tableVersions(table).last
+    drop(root, "b.csv", DropB)
+    val atV1 = spark.read.format("graft-table")
+      .option("path", table).option("versionAsOf", v1).load()
+    assert(atV1.count() == 2)
+    assert(atV1.filter("id = '2'").select("street_address").as[String].head() ==
+      "Second St")
+    // id 2 existed at v1 (an update), id 3 did not (an insert)
+    val feed = KeyedUpsertSink.readChangesBetween(spark, table, v1)
+      .select("id", "street_address").as[(String, String)].collect().toMap
+    assert(feed == Map("2" -> "Updated St", "3" -> "Third St"))
   }
 
   test("multicast: upsert and audit queries share one landing dir with independent progress") {
     val root = Files.createTempDirectory("graft-multicast")
     val landing = Files.createDirectory(root.resolve("landing"))
-    val headers = Seq("ID", "HouseNum", "Street", "Town", "Zip")
-    Files.writeString(landing.resolve("a.csv"),
-      "ID,HouseNum,Street,Town,Zip\n1,10,First St,Alpha,11111\n2,20,Second St,Beta,22222\n")
+    val table = root.resolve("table").toString
+    Files.writeString(landing.resolve("a.csv"), DropA)
 
     def runBoth(): Unit = {
-      EtlPipeline.runStreaming(spark, landing.toString, headers,
-        root.resolve("table").toString, root.resolve("ckpt-upsert").toString)
+      EtlPipeline.runStreaming(spark, landing.toString, Headers,
+        table, root.resolve("ckpt-upsert").toString)
         .awaitTermination()
-      EtlPipeline.auditStreaming(spark, landing.toString, headers,
+      EtlPipeline.auditStreaming(spark, landing.toString, Headers,
         root.resolve("audit").toString, root.resolve("ckpt-audit").toString)
         .awaitTermination()
     }
     runBoth()
-    assert(spark.read.parquet(root.resolve("table").toString).count() == 2)
+    assert(KeyedUpsertSink.readBucketedDelta(spark, table).count() == 2)
     assert(spark.read.parquet(root.resolve("audit").toString).count() == 2)
 
     // a new arrival is seen exactly once by EACH query (separate checkpoints)
     Files.writeString(landing.resolve("b.csv"),
       "ID,HouseNum,Street,Town,Zip\n3,30,Third St,Gamma,33333\n")
     runBoth()
-    assert(spark.read.parquet(root.resolve("table").toString).count() == 3)
+    assert(KeyedUpsertSink.readBucketedDelta(spark, table).count() == 3)
     assert(spark.read.parquet(root.resolve("audit").toString).count() == 3)
   }
 
@@ -123,46 +192,11 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 7)
   }
 
-  test("upsertBatch is idempotent under duplicate replay") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-upsert").resolve("t").toString
-    val batch = Seq(("1", "a", 1L), ("2", "b", 1L)).toDF("id", "v", "seq")
-    val sink = graft.sink.KeyedUpsertSink
-      .upsertBatch(spark, dir, Seq("id"), Seq(col("seq"))) _
-    sink(batch, 0L)
-    sink(batch, 0L) // at-least-once redelivery
-    assert(spark.read.parquet(dir).count() == 2)
-  }
-
-  test("upsertBatch self-heals a crash between the replace renames; empty batches are no-ops") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-upsert-crash").resolve("t").toString
-    val sink = graft.sink.KeyedUpsertSink
-      .upsertBatch(spark, dir, Seq("id"), Seq(col("seq"))) _
-    sink(Seq.empty[(String, String, Long)].toDF("id", "v", "seq"), 0L)
-    // empty FIRST batch: no marker-only table dir is left behind
-    assert(!Files.exists(java.nio.file.Paths.get(dir)))
-    sink(Seq(("1", "a", 1L), ("2", "b", 1L)).toDF("id", "v", "seq"), 1L)
-    // simulate a writer killed between rename-aside and rename-in: the
-    // table vanishes, the set-aside copy remains
-    Files.move(java.nio.file.Paths.get(dir),
-      java.nio.file.Paths.get(dir + ".old-simulated"))
-    // the next batch restores the set-aside table BEFORE merging, so the
-    // previously committed keys survive instead of silently vanishing
-    sink(Seq(("3", "c", 1L)).toDF("id", "v", "seq"), 2L)
-    val t = spark.read.parquet(dir)
-    assert(t.count() == 3)
-    assert(t.select("id").as[String].collect().toSet == Set("1", "2", "3"))
-  }
-
   test("streaming curation: gates run unchanged on a document stream into the bucketed sink") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     import graft.pipeline.Curation
-    import graft.sink.KeyedUpsertSink
     val docs = Tables.documents(spark, Sf0001)
     val root = Files.createTempDirectory("graft-stream-curation")
     val landing = Files.createDirectory(root.resolve("landing")).toString
@@ -226,7 +260,6 @@ class StreamingSpec extends SparkSpec {
   test("the bucketed commit merges LWW and appends only to the touched buckets' chains") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    import graft.sink.KeyedUpsertSink
     val root = Files.createTempDirectory("graft-upsert-b")
     val dir = root.resolve("t").toString
     val nb = 8

@@ -16,9 +16,15 @@ checker stringified through pandas' own coercion and masked exactly that
 failure mode on 16 queries. repr() distinguishes Decimal('1.000000') from
 1.0 and is bit-exact for float64 (shortest round-trip), reproducing the
 driver's sensitivity.
+
+The replays run in a pool of one worker process per available cpu, each
+with its own DuckDB connection and the same views; results print in
+query-name order as they complete.
 """
 import glob
 import json
+import multiprocessing
+import os
 import sys
 
 import duckdb
@@ -72,40 +78,65 @@ def selftest_decimal_double(con) -> None:
               "the VARCHAR route in oracle SQL is still correct, just redundant")
 
 
-def main() -> None:
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
-    selftest_decimal_double(con)
+def register_views(con, sf_dir: str) -> None:
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+
+
+_con = None
+_out_dir = None
+
+
+def init_worker(sf_dir: str, out_dir: str) -> None:
+    global _con, _out_dir
+    # no progress bar: a worker's bar would interleave with the result lines
+    _con = duckdb.connect()
+    _con.execute("SET enable_progress_bar = false")
+    register_views(_con, sf_dir)
+    _out_dir = out_dir
+
+
+def check(item):
+    """Replay one oracle query; returns (its output lines, passed)."""
+    name, sql = item
+    try:
+        got = read_spark(_out_dir, name)
+        want = _con.execute(sql).df()
+        g, w = normalize(got), normalize(want)
+        if list(g.columns) != list(w.columns):
+            return [f"FAIL {name}: columns {list(g.columns)} vs {list(w.columns)}"], False
+        if len(g) != len(w):
+            return [f"FAIL {name}: rows {len(g)} vs {len(w)}"], False
+        if not g.equals(w):
+            diff = (g != w).any(axis=1)
+            idx = diff[diff].index[:3]
+            lines = [f"FAIL {name}: value mismatch at rows {list(idx)}"]
+            for i in idx:
+                lines.append(f"  spark: {g.loc[i].to_dict()}")
+                lines.append(f"  duck : {w.loc[i].to_dict()}")
+            return lines, False
+        return [f"PASS {name} ({len(g)} rows)"], True
+    except Exception as e:  # noqa: BLE001
+        return [f"ERROR {name}: {type(e).__name__}: {e}"], False
+
+
+def main() -> None:
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    selftest_decimal_double(duckdb.connect())
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name, sql in sorted(oracle.items()):
-        try:
-            got = read_spark(out_dir, name)
-            want = con.execute(sql).df()
-            g, w = normalize(got), normalize(want)
-            if list(g.columns) != list(w.columns):
-                print(f"FAIL {name}: columns {list(g.columns)} vs {list(w.columns)}")
-                n_fail += 1
-            elif len(g) != len(w):
-                print(f"FAIL {name}: rows {len(g)} vs {len(w)}")
-                n_fail += 1
-            elif not g.equals(w):
-                diff = (g != w).any(axis=1)
-                idx = diff[diff].index[:3]
-                print(f"FAIL {name}: value mismatch at rows {list(idx)}")
-                for i in idx:
-                    print(f"  spark: {g.loc[i].to_dict()}")
-                    print(f"  duck : {w.loc[i].to_dict()}")
-                n_fail += 1
-            else:
-                print(f"PASS {name} ({len(g)} rows)")
+    # spawn, not fork: a forked child would inherit the parent's DuckDB
+    # and Arrow thread state
+    ctx = multiprocessing.get_context("spawn")
+    with ctx.Pool(len(os.sched_getaffinity(0)), init_worker,
+                  (sf_dir, out_dir)) as pool:
+        for lines, ok in pool.imap(check, sorted(oracle.items())):
+            print("\n".join(lines), flush=True)
+            if ok:
                 n_pass += 1
-        except Exception as e:  # noqa: BLE001
-            print(f"ERROR {name}: {type(e).__name__}: {e}")
-            n_fail += 1
+            else:
+                n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
