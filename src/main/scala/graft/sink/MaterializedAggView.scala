@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * the base table — and folds `sum(expr * __weight)` per group into the
   * stored view: +1 rows add each updated key's new contribution, -1
   * rows subtract its superseded one. At 100 TB base scale a refresh
-  * costs the CHANGE volume plus a view-sized merge, where a recompute
-  * costs the table.
+  * costs the CHANGE volume plus the dirty groups' stored rows, where a
+  * recompute costs the table.
   *
   * Supported aggregates are the distributive sums ([[AggCol]]): SUM of
   * any deterministic row-level expression, COUNT as `sum(1)`. AVG
@@ -32,26 +32,30 @@ import org.apache.spark.sql.functions._
   * ANSI overflow on a maintained sum fails loudly (bound the expression
   * or aggregate through a decimal).
   *
-  * Storage and crash contract: each refresh publishes the merged view
-  * under a per-attempt unique `viewPath/v<H>-<uuid>/` directory — the
-  * view rows under `view/`, each distinct column's multiplicity table
-  * under `aux_<name>/` — staged together, then ONE atomic rename — and
-  * THEN commits a put-if-absent `_head.v<H>` watermark MARKER whose
-  * content names that directory. The marker is the commit point: a
-  * crash between the two leaves a complete-but-unreferenced directory
-  * that the re-run deterministically rebuilds (same (watermark, head]
-  * delta range ⇒ same view), so the maintenance loop is
-  * effectively-once without a transaction log. The previous committed
-  * version is retained for in-flight readers (one-version grace, the
-  * view-side analogue of the base table's vacuum `graceManifests`);
-  * unreferenced versions are reclaimed at publish.
+  * Storage and crash contract: a view IS a keyed table at `viewPath`,
+  * committed through [[KeyedUpsertSink.upsertBucketedDelta]] like every
+  * other piece of engine state. Its keys are a reserved `__part` column
+  * ("" for view rows, a [[DistinctCol]]'s name for that column's
+  * multiplicity rows) then the dims, then one `__v_<name>` value column
+  * per distinct column; its LWW order is a constant, so commit recency
+  * alone decides. The watermark and the view's incarnation token ride
+  * the same manifest commit (`extraMeta`) as the rows, so data, aux
+  * rows and watermark land in ONE put-if-absent CAS: a crash before it
+  * leaves the view at its previous version and an unreferenced staged
+  * generation the vacuum reclaims, and the re-run folds the same
+  * (watermark, head] range again. A fold reads only the dirty groups'
+  * stored rows ([[KeyedUpsertSink.readBucketedDeltaMatching]]: a
+  * column-pruned scan, a shuffle of the matching keys only) and writes
+  * one generation holding only those groups; a group or aux value whose
+  * count reaches 0 becomes a tombstone row in the same commit. Each
+  * commit vacuums with a one-version reader grace.
   *
   * Single maintainer per view path — and, unlike a convention, ENFORCED:
-  * the watermark advance is a compare-and-swap over the marker chain
-  * (see [[publish]]), so a concurrent or stalled second maintainer
+  * every commit aborts unless the head still carries the watermark the
+  * pass started from, so a concurrent or stalled second maintainer
   * fails loudly with `ConcurrentModificationException` instead of
-  * regressing the watermark or deleting a newer version's files
-  * (MaterializedViewRaceSpec races two real JVMs through it).
+  * regressing the watermark (MaterializedViewRaceSpec races two real
+  * JVMs through it).
   *
   * Retention: the watermark must stay inside the base table's vacuum
   * keep window. A view stalled past it fails with `manifestAt`'s loud
@@ -90,15 +94,15 @@ object MaterializedAggView {
     * semantics). Distinct counts are not distributive under retraction
     * either, but unlike MIN/MAX they never need the base: the view
     * carries an auxiliary MULTIPLICITY table per distinct column —
-    * `(dims, value) → live-key count` — stored as
-    * `v<H>/aux_<name>/` beside the view data and folded from the same
-    * weighted feed (`sum(__weight)` per (group, value); a value's row
-    * leaves the aux when its multiplicity reaches 0). The published
-    * count is the aux's live-row count per group. Space is the classic
-    * price: the aux holds one row per distinct (group, value) pair —
-    * bounded by the base's distinct pairs, not its rows; at 100 TB this
-    * is the difference between a view-sized merge and re-scanning the
-    * table for every COUNT DISTINCT refresh.
+    * `(dims, value) → live-key count` — stored in the view's own table
+    * as the rows whose `__part` is this column's name, and folded from
+    * the same weighted feed (`sum(__weight)` per (group, value); a
+    * value's row is tombstoned when its multiplicity reaches 0). The
+    * published count is the aux's live-row count per group. Space is
+    * the classic price: the aux holds one row per distinct (group,
+    * value) pair — bounded by the base's distinct pairs, not its rows;
+    * at 100 TB this is the difference between a dirty-group fold and
+    * re-scanning the table for every COUNT DISTINCT refresh.
     */
   final case class DistinctCol(name: String, expr: Column)
 
@@ -128,37 +132,47 @@ object MaterializedAggView {
 
   private val WeightCol = "__weight"
 
-  /** Hidden per-group live-row count; a group leaves the view when its
-    * last contributing key is retracted (count reaches 0).
+  /** Hidden live-row count: per group on view rows (a group is
+    * tombstoned when its last contributing key is retracted), per
+    * (group, value) on a distinct column's multiplicity rows.
     */
   private val CountCol = "__n"
 
-  /** Test seam: runs between the view-data publish and the watermark
-    * advance — the crash window the scaladoc's effectively-once argument
-    * covers. Production never sets it.
+  /** Reserved key column: "" on view rows, the distinct column's name
+    * on its multiplicity rows — one table, so rows, aux rows and the
+    * watermark commit in one CAS.
     */
-  private[graft] var onBeforeHeadPublish: () => Unit = () => ()
+  private val PartCol = "__part"
 
-  /** Test seam for the force-bootstrap crash windows: invoked between
-    * the overwrite path's ordered steps with the step just COMPLETED
-    * ("cleared-higher" | "published" | "cleared-lower"), so a spec can
-    * throw mid-force and assert the documented invariant — no crash
-    * outcome serves a version above the new head, and nothing above it
-    * is destroyed before the new marker is readable. Production never
-    * sets it.
+  /** A distinct column's value key column: typed, null on every row
+    * that is not one of that column's multiplicity rows.
     */
-  private[graft] var onForceStep: String => Unit = _ => ()
+  private def auxValCol(d: DistinctCol): String = "__v_" + d.name
 
-  /** Refuses a view directory in a layout written before the `_head.v*`
-    * markers and the `_incarnation` token: nothing reads or maintains it.
+  /** The view table's LWW order: a constant, so commit recency alone
+    * decides (a fold writes at most one row per key). A base version
+    * would not do: a force onto a recreated base commits a LOWER head,
+    * and its tombstones would lose to the older rows.
     */
-  private def refuseLegacy(viewPath: String, found: String): Nothing =
-    throw new IllegalStateException(
-      s"$viewPath $found — a view layout this engine no longer reads. A " +
-        "view is derived state: delete the view directory and bootstrap it")
+  private def viewOrder: Seq[Column] = Seq(lit(0L))
 
-  /** The view's INCARNATION: a uuid minted at bootstrap and REPLACED by
-    * every force re-bootstrap — the token that lets a maintenance
+  private def viewKeys(dims: Seq[String],
+      distincts: Seq[DistinctCol]): Seq[String] =
+    (PartCol +: dims) ++ distincts.map(auxValCol)
+
+  /** Every stored column, in stored order: keys, then the published
+    * columns in `read`'s order, then the count.
+    */
+  private def tableCols(dims: Seq[String], aggs: Seq[AggCol],
+      extrema: Seq[ExtremumCol], distincts: Seq[DistinctCol]): Seq[String] =
+    viewKeys(dims, distincts) ++ aggs.map(_.name) ++ extrema.map(_.name) ++
+      distincts.map(_.name) :+ CountCol
+
+  /** The watermark's manifest metadata key; its value is `v,c`. */
+  private val WatermarkMeta = "viewWatermark"
+
+  /** The view's INCARNATION: a uuid minted by every bootstrap — force
+    * re-bootstraps included — the token that lets a maintenance
     * stream's checkpoint detect that the view it is bound to was
     * deliberately rebuilt. Version arithmetic alone cannot: a force
     * onto a recreated base whose new head sits at or above the
@@ -168,28 +182,14 @@ object MaterializedAggView {
     * persists the incarnation it first bound to under its checkpoint
     * and refuses a mismatch at start.
     */
-  private def incarnationFile(viewPath: String): Path =
-    Paths.get(viewPath, "_incarnation")
+  private val IncarnationMeta = "viewIncarnation"
 
-  /** Read (minting one first for a fresh view) the view's incarnation
-    * token.
+  /** Test seam: runs once per commit between its stage and its first
+    * commit attempt (wired to `upsertBucketedDelta`'s
+    * `onBeforeFirstCommit`) — the crash and stall window of every
+    * bootstrap and fold. Production never sets it.
     */
-  private def incarnation(viewPath: String): String = {
-    val f = incarnationFile(viewPath)
-    if (!Files.exists(f))
-      KeyedUpsertSink.putIfAbsent(f,
-        (java.util.UUID.randomUUID().toString + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    storedIncarnation(viewPath).get
-  }
-
-  /** The view's incarnation token if one was ever minted (never mints). */
-  private def storedIncarnation(viewPath: String): Option[String] = {
-    val f = incarnationFile(viewPath)
-    if (!Files.exists(f)) None
-    else Some(new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8).trim)
-  }
+  private[graft] var onBeforeCommit: () => Unit = () => ()
 
   /** A watermark position: base version `v` fully applied PLUS the first
     * `c` buckets (of version v+1's sorted touched-bucket list) — the
@@ -205,118 +205,45 @@ object MaterializedAggView {
   private def fmtMark(m: (Long, Long)): String =
     if (m._2 == 0L) s"v${m._1}" else s"(v${m._1}, bucket cursor ${m._2})"
 
-  /** One committed watermark marker: `_head.v<H>` at a clean version
-    * boundary (zero-padded so a plain listing orders numerically — the
-    * only form pre-cursor views ever wrote, so old views resolve
-    * unchanged), `_head.v<H>.c<C>` for a mid-version position. CONTENT =
-    * the unique directory name holding that position's data. The marker
-    * file IS the commit — published via [[KeyedUpsertSink.putIfAbsent]],
-    * so exactly one maintainer wins each position, the watermark (the
-    * lexicographic max marker) can never regress, and racing maintainers
-    * never share a data directory.
-    */
-  private def markerPath(viewPath: String, m: (Long, Long)): Path =
-    if (m._2 == 0L) Paths.get(viewPath, f"_head.v${m._1}%020d")
-    else Paths.get(viewPath, f"_head.v${m._1}%020d.c${m._2}%010d")
+  private def markOf(meta: Map[String, String]): Option[(Long, Long)] =
+    meta.get(WatermarkMeta).map { m =>
+      val Array(v, c) = m.split(",")
+      (v.toLong, c.toLong)
+    }
 
-  /** Committed markers as ((version, cursor), directory name), sorted.
-    * A marker the maintainer's keep-window prune unlinks between this
-    * listing and its read is skipped, not fatal — concurrent readers
-    * are exactly what the grace design supports, and a pruned marker
-    * was by construction far below the watermark. A directory holding
-    * the pre-marker `_head` file and no marker is refused.
+  /** The view table's head (version, manifest, meta). A directory in
+    * the layout views had before they were keyed tables (`_head*`
+    * markers, an `_incarnation` token, no manifest) is refused.
     */
-  private def markers(viewPath: String): Seq[((Long, Long), String)] = {
+  private def viewHead(
+      viewPath: String): (Long, Map[Long, String], Map[String, String]) = {
+    val head = KeyedUpsertSink.versionedHeadFull(viewPath)
     val root = Paths.get(viewPath)
-    if (!Files.isDirectory(root)) return Seq.empty
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(root)
-    val found = try s.iterator().asScala.toList.flatMap { p =>
-      val n = p.getFileName.toString
-      if (!n.startsWith("_head.v")) None
-      else {
-        val body = n.stripPrefix("_head.v")
-        val mark = body.split("\\.c", 2) match {
-          case Array(v) => v.toLongOption.map((_, 0L))
-          case Array(v, c) =>
-            for (vl <- v.toLongOption; cl <- c.toLongOption) yield (vl, cl)
-        }
-        mark.flatMap { m =>
-          try Some(m -> new String(Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8).trim)
-          catch { case _: java.nio.file.NoSuchFileException => None }
-        }
-      }
-    } finally s.close()
-    if (found.isEmpty && Files.exists(root.resolve("_head")))
-      refuseLegacy(viewPath, "holds a `_head` watermark file and no `_head.v*` marker")
-    found.sortBy(_._1)
+    if (head._1 == 0L && Files.isDirectory(root)) {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(root)
+      val old = try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("_head") || n == "_incarnation").toList
+      finally s.close()
+      if (old.nonEmpty) throw new IllegalStateException(
+        s"$viewPath holds ${old.sorted.head} — a view layout this engine " +
+          "no longer reads. A view is derived state: delete the view " +
+          "directory and bootstrap it")
+    }
+    head
   }
 
-  /** Directory holding position `m`'s data: the marker's recorded name. */
-  private def viewDirAt(viewPath: String, m: (Long, Long)): Path =
-    markers(viewPath).find(_._1 == m) match {
-      case Some((_, dir)) => Paths.get(viewPath, dir)
-      case None => throw new java.util.ConcurrentModificationException(
-        s"$viewPath: the marker of ${fmtMark(m)} is gone — another " +
-          "maintainer advanced the view past it concurrently. The view " +
-          "is single-maintainer: run one refresh loop")
-    }
-
-  /** The view data lives under `<versionDir>/view/`; each distinct
-    * column's multiplicity table under `<versionDir>/aux_<name>/` — one
-    * directory per version so the stage → single-atomic-rename publish
-    * and the whole-dir retention/cleanup cover both.
-    */
-  private def viewData(versionDir: Path): Path = versionDir.resolve("view")
-
-  private def auxData(versionDir: Path, name: String): Path =
-    versionDir.resolve(s"aux_$name")
-
-  /** Per-(viewPath, incarnation, leaf) inferred-schema cache (round-19
-    * optimization): every view/aux parquet read paid a schema-inference
-    * job, and a steady-state refresh reads view + one dir per distinct
-    * column per invocation — for schemas that are CONSTANT within an
-    * incarnation (publish validates the column set; the base table's
-    * evolution contract refuses retypes). Keyed by the incarnation
-    * token, so a force re-bootstrap (the one legal schema change)
-    * misses instead of serving a stale schema. A view without an
-    * incarnation predates the token and is refused.
-    */
-  private val viewSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), org.apache.spark.sql.types.StructType]()
-
-  private def readDataDir(spark: SparkSession, viewPath: String,
-      dataDir: Path): DataFrame = {
-    val key = {
-      val inc = storedIncarnation(viewPath).getOrElse(
-        refuseLegacy(viewPath, "has no `_incarnation` token"))
-      // Keyed by LEAF name (not the full version-dir path) on purpose:
-      // the schema is constant across version dirs within one
-      // incarnation, and per-version keying would re-pay a schema-
-      // inference job after EVERY publish (measured: it doubled the
-      // steady-state view-refresh wall). The one hole — a read during
-      // the force re-bootstrap window resolves the OLD version dir but
-      // would cache its schema under the NEW token — is closed at the
-      // source: the force publish clears this view's entries after its
-      // marker lands (see [[publish]]'s overwrite branch).
-      (viewPath, inc, dataDir.getFileName.toString)
-    }
-    if (viewSchemaCache.size > 8192) viewSchemaCache.clear()
-    val schema = viewSchemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(dataDir.toString).schema)
-    spark.read.schema(schema).parquet(dataDir.toString)
-  }
-
-  /** Aux multiplicity columns: the distinct expression's value and its
-    * live-key count per (dims, value).
-    */
-  private val AuxValCol = "__v"
-  private val AuxMulCol = "__m"
+  private def lost(viewPath: String, cur: Option[(Long, Long)],
+      from: Option[(Long, Long)]) =
+    new java.util.ConcurrentModificationException(
+      s"$viewPath: watermark is ${cur.fold("absent")(fmtMark)} but this " +
+        s"maintainer started from ${from.fold("nothing (bootstrap)")(fmtMark)} " +
+        "— another maintainer advanced the view concurrently; this pass " +
+        "committed nothing. The view is single-maintainer: run one " +
+        "refresh loop")
 
   /** The view's watermark: the base-table version its stored state
-    * reflects — the max committed `_head.v*` marker. None before
-    * bootstrap.
+    * reflects. None before bootstrap.
     */
   def watermark(viewPath: String): Option[Long] =
     watermarkFull(viewPath).map(_._1)
@@ -324,12 +251,12 @@ object MaterializedAggView {
   /** The full (version, bucketCursor) watermark: versions `<= _1` are
     * fully applied, plus — when `_2 > 0` — the first `_2` buckets of
     * version `_1 + 1` (a SLICED maintenance stream's mid-version
-    * position; see [[markerPath]]). [[watermark]] is its version
-    * component, truthful either way ("fully reflects v"), which is all
+    * position; see [[lexLt]]). [[watermark]] is its version component,
+    * truthful either way ("fully reflects v"), which is all
     * clean-boundary consumers need.
     */
   def watermarkFull(viewPath: String): Option[(Long, Long)] =
-    markers(viewPath).lastOption.map(_._1)
+    markOf(viewHead(viewPath)._3)
 
   private def validate(dims: Seq[String], aggs: Seq[AggCol],
       extrema: Seq[ExtremumCol], distincts: Seq[DistinctCol]): Unit = {
@@ -343,8 +270,25 @@ object MaterializedAggView {
     require(names.forall(_.nonEmpty), "empty dim/agg/extremum name")
     require(!names.exists(_.startsWith("__")),
       "the __ prefix is reserved for the view's internal columns " +
-        s"($WeightCol, $CountCol, refresh scratch); rename: " +
+        s"($WeightCol, $CountCol, $PartCol, refresh scratch); rename: " +
         names.filter(_.startsWith("__")).mkString(", "))
+  }
+
+  /** The call's spec must MATCH the stored view: a refresh called with
+    * a different agg/extremum/distinct set (easiest mistake: a defaulted
+    * parameter omitted) would silently drop maintained state. Checked
+    * against the view table's committed column contract — no data read.
+    */
+  private def requireSpec(viewPath: String, cols: Seq[String]): Unit = {
+    val stored = KeyedUpsertSink.storedSchema(viewPath)
+      .map(_.fieldNames.toSeq).getOrElse(Seq.empty)
+    def shown(cs: Seq[String]) =
+      cs.filterNot(_.startsWith("__")).sorted.mkString(", ")
+    require(stored.sorted == cols.sorted,
+      s"$viewPath stores columns [${shown(stored)}] but this call " +
+        s"maintains [${shown(cols)}] — the dims/aggs/extrema/distincts " +
+        "spec must match the bootstrapped view (a mismatched refresh " +
+        "would silently drop maintained state)")
   }
 
   /** One delta (or bootstrap) pass: per-group sums weighted by the
@@ -353,7 +297,8 @@ object MaterializedAggView {
     * identical column types. (A `lit(1L)` weight would not: Spark types
     * the literal as `decimal(1,0)` in decimal arithmetic and the column
     * as `decimal(20,0)`, so a decimal sum would be stored narrower at
-    * bootstrap than every fold publishes it.)
+    * bootstrap than every fold writes it — a retype the view table's
+    * schema contract refuses.)
     */
   private def aggregate(df: DataFrame, dims: Seq[String],
       aggs: Seq[AggCol], extrema: Seq[ExtremumCol],
@@ -366,19 +311,20 @@ object MaterializedAggView {
     df.groupBy(dims.map(col): _*).agg(cols.head, cols.tail: _*)
   }
 
-  /** One distinct column's multiplicity table over `df`: live-key count
+  /** One distinct column's multiplicity rows over `df`: live-key count
     * per (dims, value), nulls excluded (SQL COUNT DISTINCT semantics),
     * weighted by the `__weight` column.
     */
   private def buildAux(df: DataFrame, dims: Seq[String],
       d: DistinctCol): DataFrame =
     df.filter(d.expr.isNotNull)
-      .groupBy((dims.map(col) :+ d.expr.as(AuxValCol)): _*)
-      .agg(sum(WeightCol).as(AuxMulCol))
+      .groupBy((dims.map(col) :+ d.expr.as(auxValCol(d))): _*)
+      .agg(sum(WeightCol).as(CountCol))
 
-  /** Fold a delta aggregate into the stored view: per-group sums add
-    * (`sum` skips the side that lacks the group), then groups whose
-    * live-row count hit 0 leave the view.
+  /** Fold a delta aggregate into the dirty groups' stored rows:
+    * per-group sums add (`sum` skips the side that lacks the group). A
+    * group whose live-row count hit 0 stays in the result, to be
+    * written as a tombstone.
     */
   private def merge(old: DataFrame, delta: DataFrame, dims: Seq[String],
       aggs: Seq[AggCol]): DataFrame = {
@@ -386,233 +332,58 @@ object MaterializedAggView {
     val cols = sums.map(n => sum(col(n)).as(n))
     old.unionByName(delta)
       .groupBy(dims.map(col): _*).agg(cols.head, cols.tail: _*)
-      .filter(col(CountCol) =!= 0L)
   }
 
-  /** Stage → unique version directory → CAS watermark advance →
-    * reclaim. THE single-maintainer enforcement point: the watermark is
-    * a chain of put-if-absent `_head.v<H>` markers (each naming its
-    * unique data directory), and advancing requires BOTH
-    *
-    *  1. the current watermark to still be the `expectFrom` this pass
-    *     refreshed from — a maintainer that stalled while another
-    *     advanced fails loudly HERE, before its marker can land (the
-    *     old mutable `_head` file let that stall silently move the
-    *     watermark backward), and
-    *  2. winning the putIfAbsent on the new marker — of two maintainers
-    *     racing the same head, exactly one commits.
-    *
-    * The watermark is the max marker, so it is monotonic by
-    * construction even in the one benign interleaving both checks pass
-    * (two maintainers reading the same `expectFrom` but targeting
-    * DIFFERENT heads: both publish, readers resolve the max, and both
-    * directories hold correct content for their versions). A loser's
-    * staged directory is never referenced and is reclaimed by the next
-    * successful publish. `overwrite` is the force-bootstrap override:
-    * a deliberate atomic marker replace (plus clearing every other
-    * marker) instead of the CAS.
+  /** The rows one commit writes: view rows (`__part` = "") and each
+    * distinct column's multiplicity rows in one frame, aligned by name
+    * (a row null-fills the other kind's columns), in stored column
+    * order. A row whose count is 0 is a tombstone.
     */
-  private def publish(viewPath: String, expectFrom: Option[(Long, Long)],
-      head: (Long, Long), view: DataFrame,
-      auxes: Seq[(String, DataFrame)] = Seq.empty,
-      overwrite: Boolean = false): Unit = {
-    val root = Paths.get(viewPath)
-    Files.createDirectories(root)
-    // mid-version data dirs carry the cursor in their name; versionOf
-    // still parses the version component, so the reclaim sweep rule
-    // (`v <= wm`) covers both forms
-    val headTag =
-      if (head._2 == 0L) s"v${head._1}" else s"v${head._1}-c${head._2}"
-    val stage = root.resolve(
-      s".stage-$headTag-${java.util.UUID.randomUUID().toString.take(8)}")
-    StateWriter(view).mode("overwrite").parquet(stage.resolve("view").toString)
-    auxes.foreach { case (name, df) =>
-      StateWriter(df).mode("overwrite").parquet(
-        stage.resolve(s"aux_$name").toString)
-    }
-    // the data directory is PER-ATTEMPT unique: a crash between a past
-    // publish and its marker leaves an unreferenced directory this
-    // re-run never touches (it stages its own deterministic rebuild),
-    // and two racing maintainers can never delete files out from under
-    // each other's readers
-    val dirName = s"$headTag-${java.util.UUID.randomUUID().toString.take(8)}"
-    Files.move(stage, root.resolve(dirName), StandardCopyOption.ATOMIC_MOVE)
-    KeyedUpsertSink.fsyncDir(root)
-    onBeforeHeadPublish()
-    val marker = markerPath(viewPath, head)
-    val bytes = s"$dirName\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (overwrite) {
-      // force re-bootstrap: deliberately discard maintained state. The
-      // multi-step replace cannot be atomic, so the ORDERING pins which
-      // crash outcomes are possible — the one outcome no crash may
-      // produce is the view silently serving a version ABOVE the new
-      // head forever (watermark = max marker; reclaim never touches
-      // dirs above it; plain readers have no guard that would notice —
-      // a refresh fails loud on head<from and a maintenance stream on
-      // the startingVersion bound, but a reader-only deployment never
-      // learns). So: (1) stale HIGHER markers clear FIRST — markers
-      // only, their data dirs stay on disk, so a crash here leaves the
-      // view either on an older lower marker or loudly watermark-less,
-      // both recoverable by re-running the force, nothing destroyed;
-      // (2) the new marker publishes (atomic replace) — the view now
-      // reads the forced state; (3) stale LOWER markers clear (their
-      // dirs sit at/below the watermark where reclaim's rule sweeps
-      // them); (4) the higher markers' now-unreferenced dirs go
-      // (reclaim's `v <= wm` rule never would — a crash between (2)
-      // and (4) leaks them until the force is re-run, the benign
-      // residual). Single-actor by declaration: force is an operator
-      // action.
-      markers(viewPath).filter(m => lexLt(head, m._1)).foreach { case (m, _) =>
-        Files.deleteIfExists(markerPath(viewPath, m))
-      }
-      onForceStep("cleared-higher")
-      val tmp = root.resolve(s".${marker.getFileName}.tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      KeyedUpsertSink.writeFsynced(tmp, bytes)
-      Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      KeyedUpsertSink.fsyncDir(root)
-      onForceStep("published")
-      markers(viewPath).filter(_._1 != head)
-        .foreach(m => Files.deleteIfExists(markerPath(viewPath, m._1)))
-      onForceStep("cleared-lower")
-      // ALL data dirs above the new head go — not just the ones whose
-      // markers this run listed: a previous force that crashed after
-      // its marker-clear left orphaned higher dirs that neither
-      // reclaim's `v <= wm` rule nor a marker-driven sweep would ever
-      // touch. Above-head dirs are provably not the just-published
-      // state (its version IS head), and force is single-actor.
-      versionsOnDisk(root).filter(_._1 > head._1).foreach { case (_, p) =>
-        try KeyedUpsertSink.deleteRecursively(p)
-        catch { case _: java.nio.file.NoSuchFileException => () }
-      }
-      // a read that raced this force (resolved an OLD version dir after
-      // the incarnation rotated) may have cached the old schema under
-      // the NEW token — purge this view's entries now that the forced
-      // state is published; the prime below re-fills the leaves written
-      viewSchemaCache.keySet.removeIf(_._1 == viewPath)
-    } else {
-      // the loser's just-moved directory is provably unreferenced (its
-      // marker was never written — or, on a put-if-absent loss, the
-      // existing marker names the WINNER's directory), so delete it
-      // HERE: reclaim() only runs on later successful publishes, and an
-      // operator who heeds the error and stops this loop would
-      // otherwise leak a full view copy forever
-      def lose(msg: String): Nothing = {
-        // best-effort: the WINNER's reclaim may have deleted this
-        // unreferenced dir already (it sits at/below the new watermark)
-        try KeyedUpsertSink.deleteRecursively(root.resolve(dirName))
-        catch { case _: java.nio.file.NoSuchFileException => () }
-        throw new java.util.ConcurrentModificationException(msg)
-      }
-      val cur = watermarkFull(viewPath)
-      if (cur != expectFrom) lose(
-        s"$viewPath: watermark is ${cur.fold("absent")(fmtMark)} but this " +
-          s"maintainer refreshed from ${expectFrom.fold("nothing (bootstrap)")(fmtMark)} — " +
-          "another maintainer advanced the view concurrently; this pass's " +
-          "staged version (never referenced) was reclaimed. The view is " +
-          "single-maintainer: run one refresh loop")
-      if (!KeyedUpsertSink.putIfAbsent(marker, bytes)) lose(
-        s"$viewPath: another maintainer already published watermark " +
-          s"${fmtMark(head)} — two refreshers raced the same head; this " +
-          "maintainer's staged version (never referenced) was " +
-          "reclaimed. The view is single-maintainer: run one refresh loop")
-    }
-    // PRIME the schema cache with what this publish wrote (fields relaxed
-    // to nullable, as parquet footer inference reports them): the next
-    // read of this incarnation skips its schema-inference job — the
-    // first refresh or fold after a bootstrap or JVM start paid one —
-    // and a cached schema that differs from the one just published (a
-    // view stored with an older writer's types, say a bootstrap that
-    // typed a decimal sum narrower than the fold does) is replaced
-    // instead of failing every later read on the column's type.
-    storedIncarnation(viewPath).foreach { token =>
-      if (viewSchemaCache.size > 8192) viewSchemaCache.clear()
-      (("view", view) +: auxes.map { case (n, df) => (s"aux_$n", df) })
-        .foreach { case (leaf, df) =>
-          viewSchemaCache.put((viewPath, token, leaf),
-            org.apache.spark.sql.types.StructType(
-              df.schema.fields.map(_.copy(nullable = true))))
-        }
-    }
-    reclaim(root, viewPath)
-  }
+  private def tableRows(view: DataFrame, auxes: Seq[(String, DataFrame)],
+      cols: Seq[String]): DataFrame =
+    auxes.foldLeft(view.withColumn(PartCol, lit(""))) { case (acc, (n, aux)) =>
+      acc.unionByName(aux.withColumn(PartCol, lit(n)), allowMissingColumns = true)
+    }.select(cols.map(col): _*)
+      .withColumn(KeyedUpsertSink.TombstoneCol, col(CountCol) === 0L)
 
-  /** Reclamation, only ever run by a maintainer that just COMMITTED.
-    * Keeps the top-2 marker-referenced directories (current watermark +
-    * reader grace; plus the top-2 CLEAN versions' under sliced
-    * maintenance — see below) and every directory whose version exceeds
-    * the watermark (a concurrent maintainer's in-flight publish). Loser
-    * directories, crash leftovers at or below the watermark, markers
-    * beyond a keep window, and stages quiescent past a one-minute dwell
-    * (a LIVE stage belongs to a concurrent maintainer mid-publish) go.
+  /** Commit `rows` as the view's next version, moving the watermark from
+    * `from` to `to` in the same CAS (`meta` rides along). The commit
+    * aborts when the head no longer carries `from`: another maintainer
+    * advanced the view, and this pass fails loudly. A pass with no rows
+    * to write (a row-identical redelivery, say) advances the watermark
+    * alone with a meta-only successor commit. Then the vacuum reclaims
+    * what neither the head nor one grace version references.
     */
-  private def reclaim(root: Path, viewPath: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val ms = markers(viewPath)
-    val wm = ms.lastOption.map(_._1).getOrElse(return)
-    // keep the last 2 POSITIONS (current + grace) plus the last 2 CLEAN
-    // version boundaries: under sliced maintenance consecutive publishes
-    // are slice folds of one version, and "two publishes of grace"
-    // would shrink the reader's window from two version advances to two
-    // slices — retaining the last two clean positions restores it, at a
-    // bounded ≤ 4 retained dirs; with no slices in flight the two sets
-    // coincide and this is exactly the old top-2 rule
-    val keepMs = (ms.takeRight(2) ++
-      ms.filter(_._1._2 == 0L).takeRight(2)).distinct
-    val keepDirs: Set[String] = keepMs.map(_._2).toSet
-    // markers prune to the SAME window as retained data directories —
-    // a marker whose directory is gone is a dangling audit surface, not
-    // history (the old keep-16 window left markers 3..16 pointing at
-    // deleted directories)
-    ms.filterNot(keepMs.contains)
-      .foreach(m => Files.deleteIfExists(markerPath(viewPath, m._1)))
-    val now = System.currentTimeMillis()
-    Files.list(root).iterator().asScala.toList.foreach { p =>
-      val name = p.getFileName.toString
-      if (name.startsWith(".stage-")) {
-        if (now - KeyedUpsertSink.newestMtimeMs(p) > 60000L)
-          KeyedUpsertSink.deleteRecursively(p)
-      } else if ((name.startsWith("._head.") ||
-          name.startsWith("._incarnation.")) &&
-          (name.contains(".put-") || name.contains(".tmp-"))) {
-        // a crashed putIfAbsent / force-publish leaves its fsynced tmp
-        // file in the view root (the table-side vacuum sweeps the
-        // analogous `._manifest*.put-*`; nothing else covers the view
-        // dir) — same quiescence dwell as stages, in case it belongs
-        // to a concurrent maintainer mid-publish
-        if (now - KeyedUpsertSink.newestMtimeMs(p) > 60000L)
-          Files.deleteIfExists(p)
-      } else versionOf(name).foreach { v =>
-        // mid-version dirs parse to their version component, which by
-        // the marker convention (versions <= v fully applied) sits at or
-        // below the watermark version whenever they are reclaimable
-        if (!keepDirs.contains(name) && v <= wm._1)
-          KeyedUpsertSink.deleteRecursively(p)
-      }
+  private def commit(spark: SparkSession, viewPath: String,
+      keys: Seq[String], rows: DataFrame, from: Option[(Long, Long)],
+      to: (Long, Long), meta: Map[String, String] = Map.empty): Unit = {
+    val stamp = meta + (WatermarkMeta -> s"${to._1},${to._2}")
+    val landed = KeyedUpsertSink.upsertBucketedDelta(spark, viewPath, keys,
+      viewOrder, onBeforeFirstCommit = () => onBeforeCommit(),
+      extraMeta = stamp, abortIf = m => markOf(m) != from,
+      extraMetaAt = v => Map(KeyedUpsertSink.TombstoneMeta -> v.toString))(
+      rows, to._1)
+    if (landed.isEmpty) {
+      val (ver, man, head) = KeyedUpsertSink.versionedHeadFull(viewPath)
+      if (markOf(head) != from ||
+          KeyedUpsertSink.tryCommitSuccessor(viewPath, ver, man,
+            head ++ stamp) != KeyedUpsertSink.Published)
+        throw lost(viewPath,
+          markOf(KeyedUpsertSink.versionedHeadFull(viewPath)._3), from)
     }
-  }
-
-  /** Version of a data directory name (`v<N>-<suffix>`, mid-version
-    * `v<N>-c<C>-<suffix>`).
-    */
-  private def versionOf(name: String): Option[Long] =
-    if (!name.startsWith("v")) None
-    else name.drop(1).split("-", 2)(0).toLongOption
-
-  private def versionsOnDisk(root: Path): Seq[(Long, Path)] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.isDirectory(root)) Seq.empty
-    else Files.list(root).iterator().asScala.toList.flatMap { p =>
-      versionOf(p.getFileName.toString).map(_ -> p)
-    }
+    KeyedUpsertSink.vacuumGenerations(viewPath, graceManifests = 1)
+    ()
   }
 
   /** First run: full group-by over the base table resolved at its head,
-    * published as the view with the head as watermark. Returns that
-    * head; None when the base has no commits yet. Refuses an existing
-    * view without `force = true` (an accidental re-bootstrap silently
-    * discards maintained state and re-reads the whole base).
+    * committed as the view with the head as watermark and a fresh
+    * incarnation. Returns that head; None when the base has no commits
+    * yet. Refuses an existing view without `force = true` (an accidental
+    * re-bootstrap silently discards maintained state and re-reads the
+    * whole base). A force is ONE commit: the new image plus a tombstone
+    * for every stored key the image lacks — a crash before it leaves the
+    * old view readable, and the re-run forces again. A force keeps the
+    * view's columns; a different spec needs a new view directory.
     */
   def bootstrap(spark: SparkSession, basePath: String, viewPath: String,
       keys: Seq[String], order: Seq[Column], dims: Seq[String],
@@ -620,44 +391,43 @@ object MaterializedAggView {
       distincts: Seq[DistinctCol] = Seq.empty,
       force: Boolean = false): Option[Long] = {
     validate(dims, aggs, extrema, distincts)
-    watermark(viewPath).foreach { v =>
+    val (_, man, meta) = viewHead(viewPath)
+    val from = markOf(meta)
+    from.foreach { m =>
       require(force,
-        s"$viewPath already holds a view at watermark v$v — " +
+        s"$viewPath already holds a view at watermark v${m._1} — " +
           "re-bootstrapping discards it and re-reads the whole base; " +
           "pass force = true to do that deliberately")
     }
     val versions = KeyedUpsertSink.tableVersions(basePath)
     if (versions.isEmpty) return None
-    // the incarnation changes BEFORE any destructive force step: a
-    // crash after this write leaves the view's old state intact but old
-    // maintenance checkpoints already refused — the safe direction
-    // (spuriously refusing a checkpoint costs a fresh one; honoring a
-    // stale one silently under-counts)
-    Files.createDirectories(Paths.get(viewPath))
-    if (force) {
-      val f = incarnationFile(viewPath)
-      val tmp = f.resolveSibling(
-        s".${f.getFileName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      KeyedUpsertSink.writeFsynced(tmp,
-        (java.util.UUID.randomUUID().toString + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    } else incarnation(viewPath) // mint (or keep) the fresh view's token
     val head = versions.max
     val base = KeyedUpsertSink.readBucketedDelta(
       spark, basePath, keys, order, atVersion = Some(head))
     require(!base.isEmpty,
       s"$basePath resolves to zero rows at v$head — an empty view has " +
         "no schema to store; bootstrap after the first data commit")
+    val cols = tableCols(dims, aggs, extrema, distincts)
+    val vkeys = viewKeys(dims, distincts)
     // the view's distinct counts come from count_distinct in the same
     // scan; each aux is its own base scan (bootstrap-only cost — every
     // refresh folds the feed instead)
     val weighted = base.withColumn(WeightCol, lit(1L))
-    publish(viewPath, None, (head, 0L),
-      aggregate(weighted, dims, aggs, extrema, distincts),
-      distincts.map(d => d.name -> buildAux(weighted, dims, d)),
-      overwrite = force)
+    val image = tableRows(aggregate(weighted, dims, aggs, extrema, distincts),
+      distincts.map(d => d.name -> buildAux(weighted, dims, d)), cols)
+    val rows =
+      if (from.isEmpty) image
+      else {
+        requireSpec(viewPath, cols)
+        val stale = joinOnDims(
+          KeyedUpsertSink.readBucketedDeltaManifest(
+            spark, viewPath, vkeys, viewOrder, man),
+          image.select(vkeys.map(col): _*), vkeys, "left_anti")
+        image.unionByName(stale.select(cols.map(col): _*)
+          .withColumn(KeyedUpsertSink.TombstoneCol, lit(true)))
+      }
+    commit(spark, viewPath, vkeys, rows, from, (head, 0L),
+      Map(IncarnationMeta -> java.util.UUID.randomUUID().toString))
     Some(head)
   }
 
@@ -668,7 +438,7 @@ object MaterializedAggView {
     * watermark is a recreated base table and fails loudly, as does a
     * missing watermark (bootstrap first). From a MID-VERSION watermark
     * (a sliced maintenance stream stopped mid-drain) the pass folds the
-    * slice remainder plus the tail and publishes clean at the head —
+    * slice remainder plus the tail and commits clean at the head —
     * the documented unstick; a checkpointed stream resuming AFTER that
     * fails its next batch's straddle check and needs a fresh checkpoint.
     */
@@ -686,64 +456,52 @@ object MaterializedAggView {
       s"$basePath has no committed versions — wrong path, or the table " +
         "was deleted/recreated since this view's watermark")
     val head = versions.max
-    if (fromFull._2 == 0L) {
-      val from = fromFull._1
-      if (head == from) return None
-      if (head < from) throw new IllegalStateException(
-        s"$basePath head is v$head but this view's watermark is v$from — " +
-          "the table was recreated (or its history replaced); " +
-          "re-bootstrap deliberately (force = true)")
-      val deltasRaw = KeyedUpsertSink.readChangesWeighted(
-        spark, basePath, keys, order, fromVersion = from,
-        toVersion = Some(head))
-      applyDelta(spark, basePath, viewPath, keys, order, dims, aggs,
-        extrema, distincts, fromFull, (head, 0L), deltasRaw)
-      Some((from, head))
-    } else {
-      // MID-VERSION watermark: a sliced maintenance stream stopped
-      // mid-drain — crash, operator stop, or the stuck corner where a
-      // TRAILING slice's feed was empty (offsets advanced, the
-      // watermark could not: an empty batch carries no anchor rows to
-      // publish from, and no later commit has arrived to cover the
-      // gap). This refresh is the documented unstick: fold the slice
-      // REMAINDER (the unapplied buckets of the in-flight version)
-      // plus the whole-version tail, publish clean at the head. The
-      // single-maintainer doctrine still holds — if a checkpointed
-      // maintenance stream later resumes over this advance, its next
-      // batch straddles the watermark and fails with the usual
-      // ConcurrentModificationException; restart it on a fresh
-      // checkpoint.
-      val (v, c) = fromFull
-      if (head < v + 1) throw new IllegalStateException(
-        s"$basePath head is v$head but this view's watermark is " +
-          s"${fmtMark(fromFull)} (inside v${v + 1}) — the table was " +
-          "recreated (or its history replaced); re-bootstrap " +
-          "deliberately (force = true)")
-      val touched = KeyedUpsertSink.touchedBucketsAt(basePath, v + 1)
-        .getOrElse(throw new IllegalStateException(
-          s"$basePath: watermark ${fmtMark(fromFull)} sits inside a " +
-            "layout-change version — slices are never constructed there"))
-      val remainder = KeyedUpsertSink.readChangesSlice(
-        spark, basePath, keys, order, v + 1,
-        touched.drop(c.toInt).toSet, weighted = true)
-      val deltasRaw =
+    val (v, c) = fromFull
+    if (c == 0L && head == v) return None
+    if (head < (if (c == 0L) v else v + 1)) throw new IllegalStateException(
+      s"$basePath head is v$head but this view's watermark is " +
+        s"${fmtMark(fromFull)} — the table was recreated (or its history " +
+        "replaced); re-bootstrap deliberately (force = true)")
+    val deltasRaw =
+      if (c == 0L) KeyedUpsertSink.readChangesWeighted(
+        spark, basePath, keys, order, fromVersion = v, toVersion = Some(head))
+      else {
+        // MID-VERSION watermark: a sliced maintenance stream stopped
+        // mid-drain — crash, operator stop, or the stuck corner where a
+        // TRAILING slice's feed was empty (offsets advanced, the
+        // watermark could not: an empty batch carries no anchor rows,
+        // and no later commit has arrived to cover the gap). This
+        // refresh is the documented unstick: fold the slice REMAINDER
+        // (the unapplied buckets of the in-flight version) plus the
+        // whole-version tail, commit clean at the head. A checkpointed
+        // maintenance stream resuming over this advance straddles the
+        // watermark with its next batch and fails with the usual
+        // ConcurrentModificationException; restart it on a fresh
+        // checkpoint.
+        val touched = KeyedUpsertSink.touchedBucketsAt(basePath, v + 1)
+          .getOrElse(throw new IllegalStateException(
+            s"$basePath: watermark ${fmtMark(fromFull)} sits inside a " +
+              "layout-change version — slices are never constructed there"))
+        val remainder = KeyedUpsertSink.readChangesSlice(
+          spark, basePath, keys, order, v + 1,
+          touched.drop(c.toInt).toSet, weighted = true)
         if (head == v + 1) remainder
         else remainder.unionByName(
           KeyedUpsertSink.readChangesWeighted(
             spark, basePath, keys, order, fromVersion = v + 1,
             toVersion = Some(head)),
           allowMissingColumns = true)
-      applyDelta(spark, basePath, viewPath, keys, order, dims, aggs,
-        extrema, distincts, fromFull, (head, 0L), deltasRaw)
-      Some((v, head))
-    }
+      }
+    applyDelta(spark, basePath, viewPath, keys, order, dims, aggs,
+      extrema, distincts, fromFull, (head, 0L), deltasRaw)
+    Some((v, head))
   }
 
   /** The fold core shared by [[refresh]] (which derives the weighted
     * feed itself) and [[maintainStream]] (which receives it from the
     * `graft-changes` stream): fold `deltasRaw` — the weighted feed over
-    * exactly (`from`, `head`] — into the view stored at watermark
-    * `from`, and publish the result at `head` through the CAS.
+    * exactly (`from`, `head`] — into the dirty groups of the view stored
+    * at watermark `from`, and commit one row per dirty key at `head`.
     */
   private def applyDelta(spark: SparkSession, basePath: String,
       viewPath: String, keys: Seq[String], order: Seq[Column],
@@ -753,7 +511,7 @@ object MaterializedAggView {
     // the base image the dirty-extremum recompute reads: at a clean
     // boundary, the committed manifest; mid-version (a slice fold), the
     // MIXED manifest — applied buckets at the step version, the rest
-    // still at the base version — the exact state this fold publishes.
+    // still at the base version — the exact state this fold commits.
     // Reading everything at the step version instead would leak the
     // UNAPPLIED buckets' future values into extrema the sums don't
     // reflect yet. Lazy: only the dirty-retraction path pays it.
@@ -767,41 +525,39 @@ object MaterializedAggView {
         KeyedUpsertSink.mixedManifestAt(basePath, head._1,
           touched.take(head._2.toInt).toSet)
       }
-    val fromDir = viewDirAt(viewPath, from)
-    val old = readDataDir(spark, viewPath, viewData(fromDir))
-    // the refresh spec must MATCH the bootstrapped view: a refresh
-    // called with a different agg/extremum/distinct set (easiest
-    // mistake: a defaulted parameter omitted) would silently publish a
-    // view missing its maintained columns — destroyed state with no
-    // error. Fail loudly against the stored schema instead.
-    val expect = dims ++ aggs.map(_.name) ++ extrema.map(_.name) ++
-      distincts.map(_.name) :+ CountCol
-    require(old.columns.sorted.toSeq == expect.sorted,
-      s"$viewPath stores columns [${old.columns.sorted.mkString(", ")}] " +
-        s"but this refresh maintains [${expect.sorted.mkString(", ")}] — " +
-        "the dims/aggs/extrema/distincts spec must match the " +
-        "bootstrapped view (a mismatched refresh would silently drop " +
-        "maintained state)")
-    // every frame pinned below (the reused feed, the dirty dim set,
-    // merged aux tables) is released here even when an action inside
-    // the extremum/distinct paths throws
+    // ONE head snapshot: the stored rows read below are the state at
+    // `from`, or this pass has already lost
+    val (_, viewMan, viewMeta) = viewHead(viewPath)
+    if (!markOf(viewMeta).contains(from))
+      throw lost(viewPath, markOf(viewMeta), Some(from))
+    val cols = tableCols(dims, aggs, extrema, distincts)
+    requireSpec(viewPath, cols)
+    // every frame pinned below (the reused feed, the dirty groups'
+    // stored rows, merged aux rows) is released here even when an
+    // action inside the extremum/distinct paths throws
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { val p = df.persist(); pins += p; p }
     try {
-      // the feed is derived once per maintained tier (sum fold, insert
-      // extrema, retraction extrema, one aux fold per distinct) — pin
-      // it so the bucket resolve + symmetric difference runs once.
-      // persist(), not a Staging.pin leaf (round-20 A/B: the leaf's
-      // standalone materialization job cost MORE than the per-consumer
-      // planning it saved — steady-state refresh measured 19→23 jobs
-      // and +1 s wall with a localCheckpoint here)
-      val deltas =
-        if (extrema.isEmpty && distincts.isEmpty) deltasRaw
-        else { val d = deltasRaw.persist(); pins += d; d }
+      // the feed is derived once for the dirty-group match and every
+      // maintained tier (sums, insert extrema, retraction extrema, one
+      // aux fold per distinct) — pin it so the bucket resolve +
+      // symmetric difference runs once. persist(), not a Staging.pin
+      // leaf (round-20 A/B: the leaf's standalone materialization job
+      // cost MORE than the per-consumer planning it saved)
+      val deltas = pin(deltasRaw)
       // sums fold over BOTH signs; extrema are sign-split in
       // refreshExtrema (a -1 row's value must not feed a min/max
       // candidate); distinct multiplicities fold signed like sums
-      val deltaAgg =
-        aggregate(deltas, dims, aggs, Seq.empty, Seq.empty)
+      val deltaAgg = aggregate(deltas, dims, aggs, Seq.empty, Seq.empty)
+      // the dirty groups' stored rows — view AND aux rows, one read
+      val oldAll = {
+        val o = KeyedUpsertSink.readBucketedDeltaMatchingManifest(spark,
+          viewPath, viewKeys(dims, distincts), viewOrder,
+          deltaAgg.select(dims.map(col): _*), dims, viewMan,
+          broadcastKeys = false)
+        if (extrema.isEmpty && distincts.isEmpty) o else pin(o)
+      }
+      val old = oldAll.filter(col(PartCol) === "")
       val sumView = merge(
         old.select((dims ++ aggs.map(_.name) :+ CountCol).map(col): _*),
         deltaAgg, dims, aggs)
@@ -811,29 +567,30 @@ object MaterializedAggView {
           headManifest, deltas, old, sumView, pins)
       val (view, auxes) = distincts.foldLeft((extView,
           Seq.empty[(String, DataFrame)])) { case ((v, as), d) =>
-        val oldAux = readDataDir(spark, viewPath,
-          auxData(fromDir, d.name))
-        val mergedAux = oldAux
-          .unionByName(buildAux(deltas, dims, d))
-          .groupBy((dims :+ AuxValCol).map(col): _*)
-          .agg(sum(AuxMulCol).as(AuxMulCol))
-          .filter(col(AuxMulCol) =!= 0L)
-          .persist()
-        pins += mergedAux
-        // the published count is the aux's live-value count per group;
-        // a live group whose values are all null has no aux rows → 0
-        val dcount = mergedAux.groupBy(dims.map(col): _*)
-          .agg(count(lit(1L)).as(d.name))
+        val vcol = auxValCol(d)
+        // the dirty groups' whole multiplicity set, each value flagged
+        // when this delta touched it — only those rows are written
+        val merged = pin(oldAll.filter(col(PartCol) === d.name)
+          .select((dims :+ vcol :+ CountCol).map(col): _*)
+          .withColumn("__new", lit(false))
+          .unionByName(buildAux(deltas, dims, d).withColumn("__new", lit(true)))
+          .groupBy((dims :+ vcol).map(col): _*)
+          .agg(sum(CountCol).as(CountCol), max("__new").as("__new")))
+        // the published count is the live-value count per group; a live
+        // group whose values are all null has no aux rows → 0
+        val dcount = merged.filter(col(CountCol) =!= 0L)
+          .groupBy(dims.map(col): _*).agg(count(lit(1L)).as(d.name))
         val joined = joinOnDims(v, dcount, dims, "left")
           .withColumn(d.name, coalesce(col(d.name), lit(0L)))
-        (joined, as :+ (d.name -> mergedAux))
+        (joined, as :+ (d.name -> merged.filter(col("__new")).drop("__new")))
       }
-      publish(viewPath, Some(from), head, view.select(expect.map(col): _*), auxes)
+      commit(spark, viewPath, viewKeys(dims, distincts),
+        tableRows(view, auxes, cols), Some(from), head)
     } finally pins.foreach(_.unpersist(false))
   }
 
   /** Test/telemetry seam: runs after a [[maintainStream]] batch's fold
-    * published, BEFORE the streaming checkpoint commits — the crash
+    * committed, BEFORE the streaming checkpoint commits — the crash
     * window whose replay the `to <= watermark` skip absorbs. Production
     * never sets it.
     */
@@ -842,15 +599,15 @@ object MaterializedAggView {
   /** CONTINUOUS maintenance: the view follows the base table through
     * the `graft-changes` weighted stream instead of manual [[refresh]]
     * calls — readStream (stored key/order spec, `versionColumns`
-    * anchors) → foreachBatch fold → the same CAS publish as a manual
+    * anchors) → foreachBatch fold → the same CAS commit as a manual
     * refresh, which is what makes the loop exactly-once:
     *
     *  - each batch carries its manifest range as constant columns; the
-    *    fold applies it at the view's CURRENT watermark and publishes
+    *    fold applies it at the view's CURRENT watermark and commits
     *    at the batch's end version;
     *  - a batch whose end is at or below the watermark is a REPLAY (the
     *    engine re-runs the last uncommitted batch after a crash — even
-    *    one whose fold already published) and is skipped: the fold is
+    *    one whose fold already committed) and is skipped: the fold is
     *    anchored, so replay-skip needs no transaction log;
     *  - an empty batch advances nothing (the watermark lags the stream
     *    offset over no-op ranges; the next non-empty batch's fold
@@ -887,29 +644,23 @@ object MaterializedAggView {
     // mismatch would surface only at the first dirty-extremum recompute
     // (possibly days in), or never on a no-extrema view
     KeyedUpsertSink.requireSpecMatches(spark, basePath, keys, order)
-    val wm0 = watermarkFull(viewPath).getOrElse(throw new IllegalStateException(
+    val meta0 = viewHead(viewPath)._3
+    val wm0 = markOf(meta0).getOrElse(throw new IllegalStateException(
       s"$viewPath: no watermark — bootstrap the view before streaming " +
         "maintenance (a fresh view must not treat the whole history as " +
         "one delta)"))
     // REUSED-CHECKPOINT guard. The fold's `wm < batchFrom` case is legal
     // only because every gap range was previously delivered to THIS
-    // query as an empty batch (empty-skips advance offsets but not the
-    // watermark) — an invariant that holds exactly while the watermark
-    // never moves BACKWARD relative to this query's history. A force
-    // re-bootstrap onto a recreated base moves it backward; restarting
-    // the stream on the OLD checkpoint would then resume at the old
-    // history's offsets and silently fold only the tail of the new
-    // history (under-counted aggregates, no error — the one silent
-    // path the round's review sweep found). The stream's first start
-    // persisted its floor under the checkpoint; a watermark below that
-    // floor is exactly "moved backward", so refuse at start. (The
-    // sources/0 layout is the engine's stable per-source metadata path
-    // — the same file the source itself writes.)
-    // resolve the checkpoint location through the source's ONE path
-    // rule: a `file:/...`-form checkpointDir (which Spark accepts, and
-    // the source itself resolves for its floor write) would otherwise
-    // make this guard probe a nonexistent relative path and silently
-    // disarm — on exactly the silent-skip hole it exists to close
+    // query as an empty batch — an invariant that holds exactly while
+    // the watermark never moves BACKWARD relative to this query's
+    // history. A force re-bootstrap onto a recreated base moves it
+    // backward; resuming the OLD checkpoint would silently fold only the
+    // tail of the new history. The stream's first start persisted its
+    // floor under the checkpoint (`sources/0`, the source's own file); a
+    // watermark below it is exactly "moved backward", so refuse at
+    // start. The location resolves through the source's ONE path rule:
+    // a `file:/...` checkpointDir would otherwise probe a nonexistent
+    // relative path and silently disarm the guard
     val persistedFloor = graft.sources.ChangeFeedSource
       .resolveLocalPath(checkpointDir)
       .resolve("sources").resolve("0").resolve("graft-changes-start")
@@ -931,11 +682,10 @@ object MaterializedAggView {
     // (the common case: the floor is the view's original, usually low,
     // bootstrap watermark) while the checkpoint's OFFSETS still point
     // into the old history: resuming would fold only the new history's
-    // tail, silently. Every bootstrap mints (force: replaces) the
-    // view's incarnation token; this stream binds to it at first start
-    // and refuses any later mismatch.
-    val inc = storedIncarnation(viewPath).getOrElse(
-      refuseLegacy(viewPath, "has no `_incarnation` token"))
+    // tail, silently. Every bootstrap mints a new incarnation into the
+    // view table's manifest meta; this stream binds to it at first
+    // start and refuses any later mismatch.
+    val inc = meta0(IncarnationMeta)
     val persistedInc = graft.sources.ChangeFeedSource
       .resolveLocalPath(checkpointDir)
       .resolve("sources").resolve("0").resolve("graft-view-incarnation")
@@ -1060,8 +810,8 @@ object MaterializedAggView {
       if (e.isMin) col("__r_" + e.name) <= col(e.name)
       else col("__r_" + e.name) >= col(e.name)
     }.reduce(_ || _)
-    // pinned: read once for the count here, reused by the publish-time
-    // semi-join (the caller unpersists after publish)
+    // pinned: read once for the count here, reused by the commit's
+    // semi-join (the caller unpersists after the commit)
     val dirtyDims = joinOnDims(retrAgg, oldExt, dims, "inner")
       .filter(dirtyPred).select(dimCols: _*).persist()
     pins += dirtyDims
@@ -1159,16 +909,14 @@ object MaterializedAggView {
   }
 
   /** The view's published columns (dims + aggregate names) at its
-    * current watermark. Loud before bootstrap.
+    * current watermark: the view table's resolved view rows, internal
+    * columns dropped. Loud before bootstrap.
     */
   def read(spark: SparkSession, viewPath: String): DataFrame = {
-    // ONE markers() snapshot serves both the watermark and its
-    // directory — separate reads would double the listing I/O and
-    // could straddle a concurrent advance
-    val ms = markers(viewPath)
-    val dir = ms.lastOption.map { case (_, d) => Paths.get(viewPath, d) }
-      .getOrElse(throw new IllegalStateException(
-        s"$viewPath: no watermark — the view was never bootstrapped"))
-    readDataDir(spark, viewPath, viewData(dir)).drop(CountCol)
+    if (markOf(viewHead(viewPath)._3).isEmpty) throw new IllegalStateException(
+      s"$viewPath: no watermark — the view was never bootstrapped")
+    val rows = KeyedUpsertSink.readBucketedDelta(spark, viewPath)
+      .filter(col(PartCol) === "")
+    rows.drop(rows.columns.filter(_.startsWith("__")): _*)
   }
 }

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 import graft.sink.MaterializedAggView
 
 /** Second-DRIVER half of the materialized-view maintainer race
-  * (MaterializedViewRaceSpec forks this main in its own JVM): the CAS
-  * watermark chain claims two *drivers* — no shared monitor, only
-  * `link(2)` put-if-absent on the marker files — cannot corrupt one
-  * view: every refresh either commits its exact (from, to] range,
-  * loses LOUDLY (`ConcurrentModificationException`), or observes idle.
+  * (MaterializedViewRaceSpec forks this main in its own JVM): the
+  * watermark CAS claims two *drivers* — no shared monitor, only
+  * `link(2)` put-if-absent on the view table's manifest files — cannot
+  * corrupt one view: every refresh either commits its exact (from, to]
+  * range, loses LOUDLY (`ConcurrentModificationException`), or observes
+  * idle.
   *
   * Loops refresh attempts against the shared view until the parent's
   * DONE file exists and the view is idle. One log line per outcome so
@@ -41,10 +42,11 @@ object MviewRacer {
               if (done) idleAfterDone = true else Thread.sleep(50)
           }
         } catch {
-          // a loser can also die INSIDE its refresh (its from-version's
-          // directory reclaimed under it after two winner advances) —
-          // any loss is legal for this racer, only silent corruption
-          // isn't (the spec re-derives correctness from the final view)
+          // a loser can also die INSIDE its refresh (a generation its
+          // snapshot references reclaimed under it after two winner
+          // advances) — any loss is legal for this racer, only silent
+          // corruption isn't (the spec re-derives correctness from the
+          // final view)
           case scala.util.control.NonFatal(e) =>
             println(s"MVRACER lost: ${e.getClass.getSimpleName} " +
               String.valueOf(e.getMessage).take(80))

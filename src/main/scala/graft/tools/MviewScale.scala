@@ -11,23 +11,25 @@ import graft.{Tables => T}
 import graft.sink.{KeyedUpsertSink, MaterializedAggView}
 import graft.sink.MaterializedAggView.{AggCol, DistinctCol, ExtremumCol}
 
-/** Attributed input/shuffle bytes since reset — the cost-shape numbers
-  * the wall clock hides at probe scale (tens of small jobs dominate
-  * sub-second scans; bytes don't lie about what a 1000-executor run
-  * would move).
+/** Attributed input/shuffle/output bytes since reset — the cost-shape
+  * numbers the wall clock hides at probe scale (tens of small jobs
+  * dominate sub-second scans; bytes don't lie about what a
+  * 1000-executor run would move).
   */
 class IoListener extends SparkListener {
   private val input = new AtomicLong
   private val shuffleW = new AtomicLong
+  private val output = new AtomicLong
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     val m = te.taskMetrics
     if (m != null) {
       input.addAndGet(m.inputMetrics.bytesRead)
       shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      output.addAndGet(m.outputMetrics.bytesWritten)
       ()
     }
   }
-  def reset(): Unit = { input.set(0); shuffleW.set(0) }
+  def reset(): Unit = { input.set(0); shuffleW.set(0); output.set(0) }
   /** (input bytes, shuffle-write bytes) — RAW, so callers summing
     * across phases don't compound per-snapshot truncation; tiny
     * listener-flush wait first.
@@ -36,6 +38,8 @@ class IoListener extends SparkListener {
     Thread.sleep(300)
     (input.get(), shuffleW.get())
   }
+  /** Output bytes since reset; read after [[snapshot]]'s flush wait. */
+  def outputBytes(): Long = output.get()
 }
 
 /** Measures the claim the incrementally-maintained view is FOR: after a
@@ -50,8 +54,8 @@ class IoListener extends SparkListener {
   *     partitioned ingest produces — the feed reads 1/numBuckets of
   *     the table, the recompute still reads all of it).
   *
-  * Per mode: summed refresh vs rebuild walls, input MB, and shuffle MB
-  * (an `IoListener` snapshot around each phase), dirty-extremum
+  * Per mode: summed refresh vs rebuild walls, input, shuffle and output
+  * MB (an `IoListener` snapshot around each phase), dirty-extremum
   * fallback count, and a final maintained-== -rebuilt equality gate.
   *
   * `scale` replicates the sf dir's events with disjoint event_ids
@@ -136,7 +140,7 @@ object MviewScale {
       val routes = scala.collection.mutable.ArrayBuffer.empty[String]
       MaterializedAggView.onExtremaRecompute = n => { dirtyFired += 1; routes += s"groups=$n" }
       MaterializedAggView.onDirtyRoute = (est, path) => routes += s"est=$est path=$path"
-      var rfWall = 0.0; var rfIn = 0L; var rfSh = 0L
+      var rfWall = 0.0; var rfIn = 0L; var rfSh = 0L; var rfOut = 0L
       var rcWall = 0.0; var rcIn = 0L; var rcSh = 0L
       (1 to nBatches).foreach { i =>
         sink(trickle(i), i.toLong)
@@ -145,8 +149,9 @@ object MviewScale {
         MaterializedAggView.refresh(
           spark, base, view, keys, order, dims, aggs, ext, nd)
         rfWall += (System.nanoTime() - t0) / 1e9
-        val (in1, sh1) = io.snapshot(); rfIn += in1; rfSh += sh1
-        System.err.println(f"[mview-scale] $mode refresh $i shuffleMB=${sh1 / 1048576.0}%.1f inputMB=${in1 / 1048576.0}%.1f")
+        val (in1, sh1) = io.snapshot(); val out1 = io.outputBytes()
+        rfIn += in1; rfSh += sh1; rfOut += out1
+        System.err.println(f"[mview-scale] $mode refresh $i shuffleMB=${sh1 / 1048576.0}%.1f inputMB=${in1 / 1048576.0}%.1f outputMB=${out1 / 1048576.0}%.3f")
         io.reset()
         val t1 = System.nanoTime()
         MaterializedAggView.bootstrap(spark, base, scratch, keys, order,
@@ -165,7 +170,7 @@ object MviewScale {
       val same = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
       require(same, s"$mode: maintained view != rebuild — fix before measuring")
       def mb(b: Long): Double = b / 1048576.0
-      f""""$mode":{"refresh_wall_s":$rfWall%.2f,"rebuild_wall_s":$rcWall%.2f,"refresh_input_mb":${mb(rfIn)}%.1f,"rebuild_input_mb":${mb(rcIn)}%.1f,"refresh_shuffle_mb":${mb(rfSh)}%.1f,"rebuild_shuffle_mb":${mb(rcSh)}%.1f,"extrema_dirty_refreshes":$dirtyFired,"views_equal":$same}"""
+      f""""$mode":{"refresh_wall_s":$rfWall%.2f,"rebuild_wall_s":$rcWall%.2f,"refresh_input_mb":${mb(rfIn)}%.1f,"rebuild_input_mb":${mb(rcIn)}%.1f,"refresh_shuffle_mb":${mb(rfSh)}%.1f,"rebuild_shuffle_mb":${mb(rcSh)}%.1f,"refresh_output_mb":${mb(rfOut)}%.3f,"extrema_dirty_refreshes":$dirtyFired,"views_equal":$same}"""
     }
 
     val spread = run("spread")

@@ -1051,9 +1051,6 @@ class GraftFormatSpec extends SparkSpec {
 
   private def genDirs(t: String): Set[String] = childDirs(t, _.startsWith("gen"))
 
-  private def viewVersionDirs(v: String): Set[String] =
-    childDirs(v, n => n.matches("v[0-9]+-.*"))
-
   /** Every column chunk of every parquet file under `dir`, from the footers. */
   private def columnChunks(dir: Path)
       : Seq[org.apache.parquet.hadoop.metadata.ColumnChunkMetaData] = {
@@ -1149,14 +1146,14 @@ class GraftFormatSpec extends SparkSpec {
     val aggs = Seq(MaterializedAggView.AggCol("n", lit(1L)),
       MaterializedAggView.AggCol("sum_v", col("v")))
     MaterializedAggView.bootstrap(spark, t, view, lkeys, order, Seq("g"), aggs)
-    val boot = viewVersionDirs(view)
-    assert(boot.size == 1, s"bootstrap published $boot")
+    val boot = genDirs(view)
+    assert(boot.size == 1, s"bootstrap wrote $boot")
     assertStateFormat("view bootstrap", Paths.get(view, boot.head))
     KeyedUpsertSink.upsertBucketedDelta(spark, t, lkeys, order,
       numBuckets = 8, compactAfter = 0)(rows(0 until 200 by 7, 50L), 4L)
     MaterializedAggView.refresh(spark, t, view, lkeys, order, Seq("g"), aggs)
-    val folded = viewVersionDirs(view) -- boot
-    assert(folded.size == 1, s"refresh published $folded")
+    val folded = genDirs(view) -- boot
+    assert(folded.size == 1, s"refresh wrote $folded")
     assertStateFormat("view fold", Paths.get(view, folded.head))
   }
 

@@ -11,15 +11,15 @@ import graft.sink.{KeyedUpsertSink, MaterializedAggView}
 import graft.sink.MaterializedAggView.AggCol
 
 /** The view's single-maintainer contract is ENFORCED, not conventional:
-  * the watermark is a put-if-absent `_head.v*` marker chain with a
-  * compare-and-swap advance, so a stalled or concurrent second
-  * maintainer fails loudly instead of regressing the watermark or
-  * deleting a newer version's files.
+  * the watermark rides the view table's put-if-absent manifest commit,
+  * which aborts unless the head still carries the watermark the pass
+  * started from, so a stalled or concurrent second maintainer fails
+  * loudly instead of regressing the watermark.
   *
   *  - deterministic interleaving (seam): a maintainer stalled between
-  *    its data publish and its marker advance, overtaken by another
-  *    full refresh, gets the documented ConcurrentModificationException;
-  *    the watermark never regresses and the view equals the recompute;
+  *    its stage and its commit, overtaken by another full refresh, gets
+  *    the documented ConcurrentModificationException; the watermark
+  *    never regresses and the view equals the recompute;
   *  - two real JVMs racing refreshes of one view: every committed range
   *    chains contiguously (each from == the previous to — CAS admits no
   *    overlap and no gap), the final view equals the from-scratch
@@ -57,11 +57,11 @@ class MaterializedViewRaceSpec extends SparkSpec {
     MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
     val w0 = MaterializedAggView.watermark(view).get
     sinkTo(base)(batchDf(("a", "x", 5L, 20L)), 1L)
-    // maintainer A stalls between its data publish and its marker
-    // advance; maintainer B refreshes the SAME range to completion
-    // inside that window
+    // maintainer A stalls between its stage and its commit; maintainer
+    // B refreshes the SAME range to completion inside that window
     var fired = false
-    MaterializedAggView.onBeforeHeadPublish = () => {
+    val v0 = KeyedUpsertSink.tableVersions(view).max
+    MaterializedAggView.onBeforeCommit = () => {
       if (!fired) {
         fired = true
         assert(MaterializedAggView.refresh(
@@ -71,22 +71,23 @@ class MaterializedViewRaceSpec extends SparkSpec {
     }
     val err = try intercept[java.util.ConcurrentModificationException] {
       MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
-    } finally MaterializedAggView.onBeforeHeadPublish = () => ()
+    } finally MaterializedAggView.onBeforeCommit = () => ()
     assert(err.getMessage.contains("another maintainer advanced the view"),
       s"documented loser error, got: ${err.getMessage}")
-    // no regression: the watermark is B's, the content the recompute
+    // one CAS won: B's commit is the only new view version, the
+    // watermark is B's, the content the recompute
+    assert(KeyedUpsertSink.tableVersions(view).max == v0 + 1)
     assert(MaterializedAggView.watermark(view).contains(w0 + 1))
     assert(viewRows(view) == recomputed(base))
-    // A's abandoned directory is never referenced; the NEXT successful
-    // publish reclaims it and leaves exactly one dir per marker
+    // A dropped its staged generation: every generation on disk is
+    // referenced by the head, and the next refresh chains on
+    val gens = Files.list(root.resolve("view")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("gen-")).toSet
+    assert(gens == KeyedUpsertSink.readManifest(view).values
+      .flatMap(KeyedUpsertSink.chainOf).toSet, s"unreferenced generations: $gens")
     sinkTo(base)(batchDf(("c", "z", 7L, 30L)), 2L)
     assert(MaterializedAggView.refresh(
       spark, base, view, keys, order, dims, aggs).contains((w0 + 1, w0 + 2)))
-    val dirs = Files.list(root.resolve("view")).iterator().asScala
-      .map(_.getFileName.toString).filterNot(_.startsWith("_")).toList
-    assert(dirs.map(_.split("-")(0)).sorted ==
-      List(s"v${w0 + 1}", s"v${w0 + 2}"),
-      s"abandoned dir reclaimed, one dir per committed marker: $dirs")
     assert(viewRows(view) == recomputed(base))
   }
 
@@ -98,11 +99,11 @@ class MaterializedViewRaceSpec extends SparkSpec {
     MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
     val w0 = MaterializedAggView.watermark(view).get
     sinkTo(base)(batchDf(("b", "y", 2L, 20L)), 1L)
-    // A stalls pre-marker; inside the window TWO more base commits land
-    // and B refreshes PAST A's target head — A's late marker would sit
-    // BELOW the head (the old mutable _head file regressed here)
+    // A stalls pre-commit; inside the window another base commit lands
+    // and B refreshes PAST A's target head — A's late commit would sit
+    // BELOW the head
     var fired = false
-    MaterializedAggView.onBeforeHeadPublish = () => {
+    MaterializedAggView.onBeforeCommit = () => {
       if (!fired) {
         fired = true
         sinkTo(base)(batchDf(("c", "z", 3L, 30L)), 2L)
@@ -112,7 +113,7 @@ class MaterializedViewRaceSpec extends SparkSpec {
     }
     val err = try intercept[java.util.ConcurrentModificationException] {
       MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
-    } finally MaterializedAggView.onBeforeHeadPublish = () => ()
+    } finally MaterializedAggView.onBeforeCommit = () => ()
     assert(err.getMessage.contains("another maintainer advanced the view"))
     assert(MaterializedAggView.watermark(view).contains(w0 + 2),
       "the stalled maintainer's late advance must not move the watermark back")
@@ -193,25 +194,22 @@ class MaterializedViewRaceSpec extends SparkSpec {
     tryRefresh()
     assert(reader.collect().nonEmpty, "grace version deleted under a reader")
 
-    // the invariants publish() actually guarantees (its scaladoc admits
-    // ONE benign interleaving: two maintainers reading the same
-    // expectFrom but targeting DIFFERENT heads can both commit, so
-    // from-versions may duplicate — but every TO (a marker version) is
-    // put-if-absent-unique, the watermark is the max marker and never
-    // regresses, and every from is a previously-committed watermark)
+    // the invariants the watermark CAS guarantees: every commit's TO is
+    // unique, the watermark is the max committed TO and never regresses,
+    // and every from is a previously-committed watermark
     val childRanges = raw"MVRACER ok from=(\d+) to=(\d+)".r
       .findAllMatchIn(log).map(m => (m.group(1).toLong, m.group(2).toLong)).toSeq
     val all = (ownRanges ++ childRanges).sortBy(_._2)
     assert(all.nonEmpty)
     val tos = all.map(_._2)
     assert(tos.distinct.size == tos.size,
-      s"a watermark version was committed twice — putIfAbsent broken: $all")
+      s"a watermark version was committed twice — the CAS is broken: $all")
     assert(all.forall { case (f, t) => f < t }, s"regressing range: $all")
     val legalFroms = tos.toSet + w0
     assert(all.forall { case (f, _) => legalFroms.contains(f) },
       s"a refresh started from a never-committed watermark: $all")
     assert(MaterializedAggView.watermark(view).contains(tos.max),
-      "watermark must be the max committed marker")
+      "watermark must be the max committed watermark")
     assert(tos.max == KeyedUpsertSink.tableVersions(base).max)
     // and the maintained content equals the from-scratch recompute
     assert(viewRows(view) == recomputed(base))

@@ -131,84 +131,31 @@ class MaterializedViewSpec extends SparkSpec {
     sinkTo(base)(batchDf(("a", "x", 1L, 10L), ("b", "y", 2L, 10L)), 0L)
     MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
     val w0 = MaterializedAggView.watermark(view).get
+    val before = viewRows(view)
+    val v0 = KeyedUpsertSink.tableVersions(view).max
     sinkTo(base)(batchDf(("a", "y", 5L, 20L)), 1L)
-    MaterializedAggView.onBeforeHeadPublish =
-      () => throw new RuntimeException("crash before watermark")
+    MaterializedAggView.onBeforeCommit =
+      () => throw new RuntimeException("crash before the commit")
     try intercept[RuntimeException] {
       MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
-    } finally MaterializedAggView.onBeforeHeadPublish = () => ()
-    // the data dir published but the watermark did not move — the view
-    // still reads its OLD state, and the replayed refresh must land on
-    // the same final answer (deterministic delta range)
+    } finally MaterializedAggView.onBeforeCommit = () => ()
+    // the fold's rows were staged but never committed: the view still
+    // reads its OLD state at the old watermark, and the replayed refresh
+    // lands on the same final answer (deterministic delta range)
     assert(MaterializedAggView.watermark(view).contains(w0))
+    assert(KeyedUpsertSink.tableVersions(view).max == v0)
+    assert(viewRows(view) == before)
     assert(MaterializedAggView.refresh(
       spark, base, view, keys, order, dims, aggs).contains((w0, w0 + 1)))
     assert(viewRows(view) == recomputed(base))
-    // retention: exactly the two committed markers and their two data
-    // directories — the CRASHED attempt's unreferenced directory was
-    // reclaimed by the successful replay, and no stage survived
+    // data and watermark commit together: the replay is exactly one
+    // view version, and nothing of the old marker layout is written
+    assert(KeyedUpsertSink.tableVersions(view).max == v0 + 1)
     import scala.jdk.CollectionConverters._
     val names = Files.list(Paths.get(view)).iterator().asScala
-      .map(_.getFileName.toString).toList.sorted
-    val markers = names.filter(_.startsWith("_head.v"))
-    // `_incarnation` is the view's permanent force-rebootstrap token,
-    // not a data dir
-    val dirs = names.filterNot(n =>
-      n.startsWith("_head") || n == "_incarnation")
-    assert(markers == List(f"_head.v$w0%020d", f"_head.v${w0 + 1}%020d"),
-      s"markers: $names")
-    assert(dirs.map(_.split("-")(0)).sorted == List(s"v$w0", s"v${w0 + 1}"),
-      s"exactly one data dir per committed marker, crash leftover gone: $names")
-  }
-
-  test("markers prune to the retained-data window: no marker ever dangles at a deleted directory") {
-    val base = newDir("graft-mv-markers")
-    val view = newDir("graft-mv-markers-view")
-    sinkTo(base)(batchDf(("a", "x", 1L, 10L)), 0L)
-    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
-    // five more publishes — far past the top-2 retention window
-    (1 to 5).foreach { i =>
-      sinkTo(base)(batchDf(("a", "x", i + 1L, 10L + i)), i.toLong)
-      MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
-    }
-    import scala.jdk.CollectionConverters._
-    val entries = Files.list(Paths.get(view)).iterator().asScala
       .map(_.getFileName.toString).toList
-    val markers = entries.filter(_.startsWith("_head.v"))
-    val dirs = entries.filter(n => n.startsWith("v") && !n.startsWith("_")).toSet
-    // unsliced maintenance: the top-2 positions and the top-2 clean
-    // versions coincide — exactly 2 markers, each naming a live directory
-    assert(markers.size == 2, s"marker window must match retained data, got $markers")
-    markers.foreach { m =>
-      val dir = new String(Files.readAllBytes(Paths.get(view, m)),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      assert(dirs.contains(dir),
-        s"marker $m names $dir which is not on disk (dangling audit surface); dirs=$dirs")
-    }
-    assert(viewRows(view) == recomputed(base))
-  }
-
-  test("reclaim sweeps quiescent crashed-putIfAbsent tmp files from the view root; live ones survive") {
-    val base = newDir("graft-mv-tmpsweep")
-    val view = newDir("graft-mv-tmpsweep-view")
-    sinkTo(base)(batchDf(("a", "x", 1L, 10L)), 0L)
-    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
-    // a crashed putIfAbsent / force-publish leaves fsynced tmp files in
-    // the view root; aged ones must be swept by the next publish's
-    // reclaim, fresh ones (a concurrent maintainer mid-publish) survive
-    val aged1 = Paths.get(view, "._head.v00000000000000000099.put-dead")
-    val aged2 = Paths.get(view, "._incarnation.tmp-dead")
-    val fresh = Paths.get(view, "._head.v00000000000000000098.put-live")
-    Seq(aged1, aged2, fresh).foreach(p => Files.write(p, "x\n".getBytes))
-    val old = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 120000L)
-    Seq(aged1, aged2).foreach(p => Files.setLastModifiedTime(p, old))
-    sinkTo(base)(batchDf(("a", "x", 2L, 20L)), 1L)
-    MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
-    assert(!Files.exists(aged1), "aged _head put-tmp must be swept")
-    assert(!Files.exists(aged2), "aged _incarnation tmp must be swept")
-    assert(Files.exists(fresh), "a fresh tmp may belong to a live publish — keep it")
-    assert(viewRows(view) == recomputed(base))
+    assert(!names.exists(n => n.startsWith("_head") || n == "_incarnation" ||
+      n.matches("v[0-9]+-.*")), s"view root: $names")
   }
 
   test("double bootstrap refuses without force; force rebuilds") {
@@ -227,11 +174,10 @@ class MaterializedViewSpec extends SparkSpec {
 
   test("force-bootstrap crash windows: no outcome serves a version above the new head, nothing destroyed before the new marker reads") {
     // the recreated-base shape: the old view sits at watermark v3, the
-    // recreated base's head is v1 — the stale markers are all HIGHER
-    // than the new head, the exact configuration where a wrong step
-    // order either silently serves discarded state forever or destroys
-    // it before any replacement is readable (both found in this
-    // round's review passes)
+    // recreated base's head is v1. A force is ONE commit (the new image
+    // plus tombstones for every stored key it lacks), so a crash before
+    // it leaves the old view whole and readable, and the re-run lands
+    // the forced state at the LOWER head
     val base = newDir("graft-mv-force-crash")
     val view = newDir("graft-mv-force-crash-view")
     sinkTo(base)(batchDf(("a", "x", 1L, 10L)), 0L)
@@ -241,46 +187,29 @@ class MaterializedViewSpec extends SparkSpec {
     sinkTo(base)(batchDf(("c", "y", 3L, 30L)), 2L)
     MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
     assert(MaterializedAggView.watermark(view).contains(3L))
+    val old = viewRows(view)
+    assert(old == Set(("x", 1L, 1L), ("y", 2L, 5L)))
     rmTree(base)
     sinkTo(base)(batchDf(("z", "z", 9L, 90L)), 0L) // recreated: head v1
-    def forceCrashAt(step: String): Unit = {
-      MaterializedAggView.onForceStep =
-        s => if (s == step) throw new RuntimeException(s"crash after $s")
-      try intercept[RuntimeException] {
-        MaterializedAggView.bootstrap(spark, base, view, keys, order,
-          dims, aggs, force = true)
-      } finally MaterializedAggView.onForceStep = _ => ()
-    }
-    // crash after the stale higher MARKERS cleared, before the new one
-    // published: the view is loudly watermark-less (never silently the
-    // discarded v3 state), and the old data directories are intact
-    forceCrashAt("cleared-higher")
-    assert(MaterializedAggView.watermark(view).isEmpty,
-      "no marker may resolve above the new head after the clear")
-    val e = intercept[IllegalStateException] {
-      MaterializedAggView.read(spark, view)
-    }
-    assert(e.getMessage.contains("never bootstrapped"))
-    import scala.jdk.CollectionConverters._
-    def names(): Set[String] = Files.list(Paths.get(view)).iterator()
-      .asScala.map(_.getFileName.toString).toSet
-    assert(names().exists(_.startsWith("v2-")) &&
-      names().exists(_.startsWith("v3-")),
-      s"the discarded state's data dirs must survive the crash: ${names()}")
-    // re-run the force, crashing right after the new marker publishes:
-    // the view now READS the forced state even though cleanup is pending
-    forceCrashAt("published")
+    MaterializedAggView.onBeforeCommit =
+      () => throw new RuntimeException("crash before the force commit")
+    try intercept[RuntimeException] {
+      MaterializedAggView.bootstrap(spark, base, view, keys, order,
+        dims, aggs, force = true)
+    } finally MaterializedAggView.onBeforeCommit = () => ()
+    assert(MaterializedAggView.watermark(view).contains(3L),
+      "a crashed force must leave the old watermark")
+    assert(viewRows(view) == old, "a crashed force must leave the old view readable")
+    // the re-run forces to v1 on the recreated base: the old groups are
+    // tombstoned in the same commit, nothing above the new head serves
+    assert(MaterializedAggView.bootstrap(spark, base, view, keys, order,
+      dims, aggs, force = true).contains(1L))
     assert(MaterializedAggView.watermark(view).contains(1L))
     assert(viewRows(view) == Set(("z", 1L, 9L)))
-    // a clean re-run completes the cleanup: higher dirs and markers gone
-    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims,
-      aggs, force = true)
-    assert(MaterializedAggView.watermark(view).contains(1L))
-    assert(viewRows(view) == Set(("z", 1L, 9L)))
-    assert(!names().exists(_.startsWith("_head.v" + "0" * 19 + "3")),
-      s"stale higher marker must be gone: ${names()}")
-    assert(!names().exists(n => n.startsWith("v2-") || n.startsWith("v3-")),
-      s"orphaned above-head dirs must be swept by the completed force: ${names()}")
+    // and the forced view maintains on from the new head
+    sinkTo(base)(batchDf(("x", "z", 1L, 95L)), 1L)
+    MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
+    assert(viewRows(view) == recomputed(base))
   }
 
   test("refresh without bootstrap and a recreated base fail loudly") {
@@ -319,35 +248,42 @@ class MaterializedViewSpec extends SparkSpec {
         e.getMessage)
     }
     def checkpoint = Files.createTempDirectory("graft-mv-legacy-ck").toString
-    // the pre-marker layout: a `_head` watermark file naming a plain
-    // `v<H>` data directory
+    def allRefuse(view: String): Unit = {
+      refused(view)(MaterializedAggView.read(spark, view))
+      refused(view)(MaterializedAggView.watermark(view))
+      refused(view)(MaterializedAggView.refresh(
+        spark, base, view, keys, order, dims, aggs))
+      refused(view)(MaterializedAggView.bootstrap(
+        spark, base, view, keys, order, dims, aggs))
+      refused(view)(MaterializedAggView.bootstrap(
+        spark, base, view, keys, order, dims, aggs, force = true))
+      refused(view)(MaterializedAggView.maintainStream(spark, base, view,
+        keys, order, dims, aggs, checkpointDir = checkpoint))
+    }
+    def oldData(view: String, dir: String): Unit =
+      spark.range(1).select(lit("x").as("g"), lit(1L).as("n"),
+        lit(1L).as("sum_v"), lit(1L).as("__n"))
+        .write.parquet(s"$view/$dir/view")
+    // the marker layout: a put-if-absent `_head.v<H>` marker naming a
+    // per-version data directory, and an `_incarnation` token
+    val marked = newDir("graft-mv-marked-view")
+    oldData(marked, s"v$head-0a1b2c3d")
+    Files.writeString(Paths.get(marked, f"_head.v$head%020d"), s"v$head-0a1b2c3d\n")
+    Files.writeString(Paths.get(marked, "_incarnation"), "0f1e2d3c\n")
+    allRefuse(marked)
+    // the older single-file layout: a `_head` watermark file naming a
+    // plain `v<H>` data directory
     val legacy = newDir("graft-mv-legacy-view")
-    spark.range(1).select(lit("x").as("g"), lit(1L).as("n"),
-      lit(1L).as("sum_v"), lit(1L).as("__n"))
-      .write.parquet(s"$legacy/v$head/view")
+    oldData(legacy, s"v$head")
     Files.writeString(Paths.get(legacy, "_head"), s"$head\n")
-    refused(legacy)(MaterializedAggView.read(spark, legacy))
-    refused(legacy)(MaterializedAggView.watermark(legacy))
-    refused(legacy)(MaterializedAggView.refresh(
-      spark, base, legacy, keys, order, dims, aggs))
-    refused(legacy)(MaterializedAggView.bootstrap(
-      spark, base, legacy, keys, order, dims, aggs))
-    refused(legacy)(MaterializedAggView.bootstrap(
-      spark, base, legacy, keys, order, dims, aggs, force = true))
-    refused(legacy)(MaterializedAggView.maintainStream(spark, base, legacy,
-      keys, order, dims, aggs, checkpointDir = checkpoint))
-    // markers but no incarnation token
-    val tokenless = newDir("graft-mv-tokenless-view")
-    MaterializedAggView.bootstrap(spark, base, tokenless, keys, order, dims, aggs)
-    Files.delete(Paths.get(tokenless, "_incarnation"))
-    refused(tokenless)(MaterializedAggView.read(spark, tokenless))
-    refused(tokenless)(MaterializedAggView.maintainStream(spark, base,
-      tokenless, keys, order, dims, aggs, checkpointDir = checkpoint))
+    allRefuse(legacy)
     // the fix the message names
-    rmTree(legacy)
-    assert(MaterializedAggView.bootstrap(
-      spark, base, legacy, keys, order, dims, aggs).contains(head))
-    assert(viewRows(legacy) == recomputed(base))
+    Seq(marked, legacy).foreach { view =>
+      rmTree(view)
+      assert(MaterializedAggView.bootstrap(
+        spark, base, view, keys, order, dims, aggs).contains(head))
+      assert(viewRows(view) == recomputed(base))
+    }
   }
 
   // ---- MIN/MAX maintenance (ExtremumCol two-path scheme) ----
@@ -792,8 +728,8 @@ class MaterializedViewSpec extends SparkSpec {
     sinkTo(base)(batchDf(("a", "x", 1L, 10L), ("b", "y", 2L, 10L)), 0L)
     MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
     // the first read after a bootstrap used to pay a parquet schema-
-    // inference job before any data moved; the schema publish wrote is
-    // already cached, so building the read runs no job at all
+    // inference job before any data moved; the view table's commit
+    // primes each generation's schema, so building the read runs no job
     def building(): Int =
       org.apache.spark.sql.graft.Jobs.during(spark)(
         MaterializedAggView.read(spark, view))._2
@@ -804,35 +740,70 @@ class MaterializedViewSpec extends SparkSpec {
     assert(viewRows(view) == recomputed(base))
   }
 
-  test("a view stored with a narrower decimal sum than the fold publishes heals on its next fold") {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.DecimalType
-    val base = newDir("graft-mv-dec-heal")
-    val view = newDir("graft-mv-dec-heal-view")
-    sinkTo(base)(decBatch(decWaves(0)), 0L)
-    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, decAggs)
-    // re-store the bootstrapped rows with sum_amount as decimal(30,2), the
-    // type an earlier bootstrap gave it (the view is not read before this,
-    // so the first read below infers and caches the narrow type)
-    val dataDir = {
-      val s = Files.walk(Paths.get(view))
-      try s.iterator().asScala.filter(p =>
-        p.getFileName.toString == "view" && Files.isDirectory(p)).toList
-      finally s.close()
-    } match { case Seq(d) => d; case ds => fail(s"view data dirs: $ds") }
-    val narrow = spark.read.parquet(dataDir.toString)
-      .withColumn("sum_amount", col("sum_amount").cast("decimal(30,2)"))
-    val rows = narrow.collect()
-    val tmp = Files.createTempDirectory("graft-mv-dec-narrow").resolve("v")
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), narrow.schema)
-      .write.parquet(tmp.toString)
-    rmTree(dataDir.toString)
-    Files.move(tmp, dataDir)
-    for (i <- 1 until decWaves.size) {
-      sinkTo(base)(decBatch(decWaves(i)), i.toLong)
-      MaterializedAggView.refresh(spark, base, view, keys, order, dims, decAggs)
-      assert(decView(view) == decModel(decWaves.take(i + 1).flatten), s"refresh $i")
-      assert(sumAmountType(view) == DecimalType(38, 2))
+  test("a fold writes only its dirty groups: one version, one generation of changed keys") {
+    val base = newDir("graft-mv-dirty")
+    val view = newDir("graft-mv-dirty-view")
+    // 1,000 groups of one key each
+    sinkTo(base)((0 until 1000).map(i => (s"k$i", s"g$i", i.toLong, 10L)).toDF(
+      "k", "g", "v", "ts"), 0L)
+    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
+    val v0 = KeyedUpsertSink.tableVersions(view).max
+    val gens0 = genDirs(view)
+    // one base commit: k2 moves into g1 — g1 changes, g2 empties
+    sinkTo(base)(batchDf(("k2", "g1", 2L, 20L)), 1L)
+    MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
+    assert(KeyedUpsertSink.tableVersions(view).max == v0 + 1,
+      "the fold must add exactly one view version")
+    val added = genDirs(view) -- gens0
+    assert(added.size == 1, s"the fold must add one generation: $added")
+    val written = spark.read.parquet(s"$view/${added.head}")
+    assert(written.count() == 2L, "the generation holds the two dirty groups only")
+    assert(written.filter(col(KeyedUpsertSink.TombstoneCol)).select("g")
+      .as[String].collect().toSeq == Seq("g2"), "the emptied group is a tombstone")
+    // every older chain is a prefix of its new chain: nothing rewritten
+    val (m0, m1) = (KeyedUpsertSink.manifestAt(view, v0),
+      KeyedUpsertSink.manifestAt(view, v0 + 1))
+    m0.foreach { case (b, chain) =>
+      assert(KeyedUpsertSink.chainOf(m1(b)).startsWith(KeyedUpsertSink.chainOf(chain)),
+        s"bucket $b: ${m1(b)} does not extend $chain")
     }
+    assert(viewRows(view) == recomputed(base))
+    assert(viewRows(view).size == 999)
+  }
+
+  test("view storage stays bounded: the vacuum keeps the head and one grace version") {
+    val base = newDir("graft-mv-bounded")
+    val view = newDir("graft-mv-bounded-view")
+    sinkTo(base)(batchDf(("a", "x", 1L, 10L), ("b", "y", 2L, 10L)), 0L)
+    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
+    def fold(i: Int): Unit = {
+      sinkTo(base)(batchDf((s"k${i % 3}", if (i % 2 == 0) "x" else "y",
+        i.toLong, 10L + i)), i.toLong)
+      MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
+    }
+    (1 to 12).foreach(fold)
+    // age every generation past the vacuum's one-minute quiescence dwell
+    val aged = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 120000L)
+    genDirs(view).foreach { g =>
+      val s = Files.walk(Paths.get(view, g))
+      try s.iterator().forEachRemaining(p => Files.setLastModifiedTime(p, aged))
+      finally s.close()
+    }
+    fold(13)
+    val versions = KeyedUpsertSink.tableVersions(view).sorted
+    val live = versions.takeRight(2).flatMap(v =>
+      KeyedUpsertSink.manifestAt(view, v).values.flatMap(KeyedUpsertSink.chainOf)).toSet
+    assert(genDirs(view) == live,
+      s"on disk ${genDirs(view).toSeq.sorted}, live ${live.toSeq.sorted}")
+    assert(viewRows(view) == recomputed(base))
+  }
+
+  private def genDirs(view: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(Paths.get(view))
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("gen-")).toSet
+    finally s.close()
   }
 }
