@@ -2,8 +2,9 @@ package graft.sink
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Incrementally-maintained group-by view over a versioned keyed table
   * ([[KeyedUpsertSink]] optimistic / delta protocol): the classic
@@ -13,8 +14,8 @@ import org.apache.spark.sql.functions._
   * the base table — and folds `sum(expr * __weight)` per group into the
   * stored view: +1 rows add each updated key's new contribution, -1
   * rows subtract its superseded one. At 100 TB base scale a refresh
-  * costs the CHANGE volume plus the dirty groups' stored rows, where a
-  * recompute costs the table.
+  * costs the CHANGE volume plus the view chains of the buckets its
+  * dirty keys hash to, where a recompute costs the table.
   *
   * Supported aggregates are the distributive sums ([[AggCol]]): SUM of
   * any deterministic row-level expression, COUNT as `sum(1)`. AVG
@@ -43,12 +44,14 @@ import org.apache.spark.sql.functions._
   * rows and watermark land in ONE put-if-absent CAS: a crash before it
   * leaves the view at its previous version and an unreferenced staged
   * generation the vacuum reclaims, and the re-run folds the same
-  * (watermark, head] range again. A fold reads only the dirty groups'
-  * stored rows ([[KeyedUpsertSink.readBucketedDeltaMatching]]: a
-  * column-pruned scan, a shuffle of the matching keys only) and writes
-  * one generation holding only those groups; a group or aux value whose
-  * count reaches 0 becomes a tombstone row in the same commit. Each
-  * commit vacuums with a one-version reader grace.
+  * (watermark, head] range again. A fold knows every key it may
+  * rewrite (the dirty groups' view rows, the delta's (group, value)
+  * aux rows), so it reads only the buckets those keys hash to, keeps
+  * those keys' rows, and writes one generation holding only those
+  * keys. A group or aux value whose
+  * count reaches 0 becomes a tombstone row in the same commit, and the
+  * tombstones are purged whenever a chain compaction runs. Each commit
+  * vacuums with a one-version reader grace.
   *
   * Single maintainer per view path — and, unlike a convention, ENFORCED:
   * every commit aborts unless the head still carries the watermark the
@@ -98,7 +101,9 @@ object MaterializedAggView {
     * as the rows whose `__part` is this column's name, and folded from
     * the same weighted feed (`sum(__weight)` per (group, value); a
     * value's row is tombstoned when its multiplicity reaches 0). The
-    * published count is the aux's live-row count per group. Space is
+    * published count is the group's live-value count: a fold adds one
+    * for each value whose multiplicity leaves 0 and takes one off for
+    * each that reaches it, so it reads only the delta's values. Space is
     * the classic price: the aux holds one row per distinct (group,
     * value) pair — bounded by the base's distinct pairs, not its rows;
     * at 100 TB this is the difference between a dirty-group fold and
@@ -274,21 +279,26 @@ object MaterializedAggView {
         names.filter(_.startsWith("__")).mkString(", "))
   }
 
-  /** The call's spec must MATCH the stored view: a refresh called with
-    * a different agg/extremum/distinct set (easiest mistake: a defaulted
-    * parameter omitted) would silently drop maintained state. Checked
-    * against the view table's committed column contract — no data read.
+  /** The view table's committed column contract, from its head meta. */
+  private def contract(meta: Map[String, String]): StructType =
+    meta.get(KeyedUpsertSink.SchemaMeta)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new StructType())
+
+  /** The call's columns must MATCH the stored view's: a refresh called
+    * with a different agg/extremum/distinct set (easiest mistake: a
+    * defaulted parameter omitted) would silently drop maintained state,
+    * and a force keeps the stored columns and types. Checked against
+    * the view table's committed column contract — no data read. `fix`
+    * says what the caller does instead.
     */
-  private def requireSpec(viewPath: String, cols: Seq[String]): Unit = {
-    val stored = KeyedUpsertSink.storedSchema(viewPath)
-      .map(_.fieldNames.toSeq).getOrElse(Seq.empty)
+  private def requireSpec(viewPath: String, stored: Seq[String],
+      cols: Seq[String], fix: String): Unit = {
     def shown(cs: Seq[String]) =
       cs.filterNot(_.startsWith("__")).sorted.mkString(", ")
     require(stored.sorted == cols.sorted,
       s"$viewPath stores columns [${shown(stored)}] but this call " +
-        s"maintains [${shown(cols)}] — the dims/aggs/extrema/distincts " +
-        "spec must match the bootstrapped view (a mismatched refresh " +
-        "would silently drop maintained state)")
+        s"maintains [${shown(cols)}] — $fix")
   }
 
   /** One delta (or bootstrap) pass: per-group sums weighted by the
@@ -322,16 +332,58 @@ object MaterializedAggView {
       .agg(sum(WeightCol).as(CountCol))
 
   /** Fold a delta aggregate into the dirty groups' stored rows:
-    * per-group sums add (`sum` skips the side that lacks the group). A
+    * per-group sums add (`sum` skips the side that lacks the group), as
+    * do the distinct counts (`counts`, 0 where no side moved them). A
     * group whose live-row count hit 0 stays in the result, to be
     * written as a tombstone.
     */
   private def merge(old: DataFrame, delta: DataFrame, dims: Seq[String],
-      aggs: Seq[AggCol]): DataFrame = {
-    val sums = aggs.map(_.name) :+ CountCol
-    val cols = sums.map(n => sum(col(n)).as(n))
-    old.unionByName(delta)
+      sums: Seq[String], counts: Seq[String]): DataFrame = {
+    val cols = (sums :+ CountCol).map(n => sum(col(n)).as(n)) ++
+      counts.map(n => coalesce(sum(col(n)), lit(0L)).as(n))
+    old.unionByName(delta, allowMissingColumns = true)
       .groupBy(dims.map(col): _*).agg(cols.head, cols.tail: _*)
+  }
+
+  /** The stored rows of the keys a fold over `deltas` may rewrite: the
+    * dirty groups' view rows and the delta's (group, value)
+    * multiplicity rows. Every key column is known from the delta, so
+    * the read resolves only the chains of the buckets those keys hash
+    * to, never the whole view, and keeps the wanted keys' rows. The
+    * wanted keys come from the fold's own aggregates (`groups`, the
+    * per-group delta), so the commit's plan shares their shuffles.
+    */
+  private def dirtyRows(spark: SparkSession, viewPath: String,
+      dims: Seq[String], distincts: Seq[DistinctCol], deltas: DataFrame,
+      groups: DataFrame, man: Map[Long, String], meta: Map[String, String],
+      stored: StructType): DataFrame = {
+    import spark.implicits._
+    val vkeys = viewKeys(dims, distincts)
+    def keyed(df: DataFrame, part: Option[DistinctCol]): DataFrame = df.select(
+      (lit(part.fold("")(_.name)).as(PartCol) +: dims.map(col)) ++
+        distincts.map { d =>
+          val v = auxValCol(d)
+          (if (part.contains(d)) col(v) else lit(null))
+            .cast(stored(v).dataType).as(v)
+        }: _*)
+    def union(dfs: Seq[DataFrame]) = dfs.reduce(_ union _)
+    val nb = meta.get("numBuckets").map(_.toInt)
+      .orElse(KeyedUpsertSink.readLayout(viewPath)).getOrElse(
+        throw new IllegalStateException(s"$viewPath has no bucket layout"))
+    // one job, no shuffle: each partition dedupes its bucket ids
+    val buckets = union(keyed(deltas, None) +: distincts.map(d => keyed(
+        deltas.filter(d.expr.isNotNull)
+          .select(dims.map(col) :+ d.expr.as(auxValCol(d)): _*), Some(d))))
+      .select(KeyedUpsertSink.bucketOf(vkeys, nb)).as[Long]
+      .mapPartitions(_.toSet.iterator).collect().toSet
+    val hit = man.filter { case (b, _) => buckets(b) }
+    if (hit.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), stored)
+    else joinOnDims(KeyedUpsertSink.readBucketedDeltaManifest(spark,
+        viewPath, vkeys, viewOrder, hit),
+      union(keyed(groups, None) +: distincts.map(d =>
+        keyed(buildAux(deltas, dims, d), Some(d)))),
+      vkeys, "left_semi")
   }
 
   /** The rows one commit writes: view rows (`__part` = "") and each
@@ -371,6 +423,18 @@ object MaterializedAggView {
         throw lost(viewPath,
           markOf(KeyedUpsertSink.versionedHeadFull(viewPath)._3), from)
     }
+    // a chain compaction ran behind the commit. It keeps winning
+    // tombstones, which on this table guard nothing: the order is a
+    // constant and every writer passes the watermark check, so no older
+    // row can come back. Drop them at the compaction's cadence, or
+    // every emptied group and value would stay stored for good.
+    // Best-effort like the compaction: the fold is already committed,
+    // and the next compaction retries
+    if (landed.exists(_.version <
+        KeyedUpsertSink.versionedHeadFull(viewPath)._1))
+      try KeyedUpsertSink.purgeTombstones(
+        spark, viewPath, keys, viewOrder, lit(true))
+      catch { case scala.util.control.NonFatal(_) => () }
     KeyedUpsertSink.vacuumGenerations(viewPath, graceManifests = 1)
     ()
   }
@@ -418,7 +482,13 @@ object MaterializedAggView {
     val rows =
       if (from.isEmpty) image
       else {
-        requireSpec(viewPath, cols)
+        def typed(s: StructType) = s.fields.toSeq
+          .filterNot(_.name == KeyedUpsertSink.TombstoneCol)
+          .map(f => s"${f.name} ${f.dataType.simpleString}")
+        requireSpec(viewPath, typed(contract(meta)), typed(image.schema),
+          "a force keeps the view's columns and their types; to change " +
+            "the spec or a column's type, delete the view directory and " +
+            "bootstrap it")
         val stale = joinOnDims(
           KeyedUpsertSink.readBucketedDeltaManifest(
             spark, viewPath, vkeys, viewOrder, man),
@@ -531,7 +601,10 @@ object MaterializedAggView {
     if (!markOf(viewMeta).contains(from))
       throw lost(viewPath, markOf(viewMeta), Some(from))
     val cols = tableCols(dims, aggs, extrema, distincts)
-    requireSpec(viewPath, cols)
+    val stored = contract(viewMeta)
+    requireSpec(viewPath, stored.fieldNames.toSeq, cols,
+      "the dims/aggs/extrema/distincts spec must match the bootstrapped " +
+        "view (a mismatched refresh would silently drop maintained state)")
     // every frame pinned below (the reused feed, the dirty groups'
     // stored rows, merged aux rows) is released here even when an
     // action inside the extremum/distinct paths throws
@@ -549,43 +622,47 @@ object MaterializedAggView {
       // refreshExtrema (a -1 row's value must not feed a min/max
       // candidate); distinct multiplicities fold signed like sums
       val deltaAgg = aggregate(deltas, dims, aggs, Seq.empty, Seq.empty)
-      // the dirty groups' stored rows — view AND aux rows, one read
+      // the stored rows of the keys this fold may rewrite — view AND aux
+      // rows, one bucket-pruned read
       val oldAll = {
-        val o = KeyedUpsertSink.readBucketedDeltaMatchingManifest(spark,
-          viewPath, viewKeys(dims, distincts), viewOrder,
-          deltaAgg.select(dims.map(col): _*), dims, viewMan,
-          broadcastKeys = false)
+        val o = dirtyRows(spark, viewPath, dims, distincts, deltas, deltaAgg,
+          viewMan, viewMeta, stored)
         if (extrema.isEmpty && distincts.isEmpty) o else pin(o)
       }
       val old = oldAll.filter(col(PartCol) === "")
-      val sumView = merge(
-        old.select((dims ++ aggs.map(_.name) :+ CountCol).map(col): _*),
-        deltaAgg, dims, aggs)
-      val extView =
+      // each distinct column's touched (group, value) rows, the stored
+      // count beside the new one: a value going live adds one to its
+      // group's published count and a value reaching 0 takes one off, so
+      // the count folds like a sum, from the delta's pairs alone
+      val auxes = distincts.map { d =>
+        val vcol = auxValCol(d)
+        val was = coalesce(sum("__was"), lit(0L))
+        d -> pin(oldAll.filter(col(PartCol) === d.name)
+          .select((dims :+ vcol).map(col) :+ col(CountCol).as("__was"): _*)
+          .unionByName(buildAux(deltas, dims, d), allowMissingColumns = true)
+          .groupBy((dims :+ vcol).map(col): _*)
+          .agg(was.as("__was"),
+            (was + coalesce(sum(CountCol), lit(0L))).as(CountCol)))
+      }
+      val counts = auxes.map { case (d, m) =>
+        m.groupBy(dims.map(col): _*).agg(sum(
+          when(col("__was") === 0L && col(CountCol) =!= 0L, 1L)
+            .when(col("__was") =!= 0L && col(CountCol) === 0L, -1L)
+            .otherwise(0L)).as(d.name))
+      }
+      val sumView = merge(old.select((dims ++ aggs.map(_.name) ++
+          distincts.map(_.name) :+ CountCol).map(col): _*),
+        counts.foldLeft(deltaAgg)(_.unionByName(_, allowMissingColumns = true)),
+        dims, aggs.map(_.name), distincts.map(_.name))
+      val view =
         if (extrema.isEmpty) sumView
         else refreshExtrema(spark, basePath, keys, order, dims, extrema,
           headManifest, deltas, old, sumView, pins)
-      val (view, auxes) = distincts.foldLeft((extView,
-          Seq.empty[(String, DataFrame)])) { case ((v, as), d) =>
-        val vcol = auxValCol(d)
-        // the dirty groups' whole multiplicity set, each value flagged
-        // when this delta touched it — only those rows are written
-        val merged = pin(oldAll.filter(col(PartCol) === d.name)
-          .select((dims :+ vcol :+ CountCol).map(col): _*)
-          .withColumn("__new", lit(false))
-          .unionByName(buildAux(deltas, dims, d).withColumn("__new", lit(true)))
-          .groupBy((dims :+ vcol).map(col): _*)
-          .agg(sum(CountCol).as(CountCol), max("__new").as("__new")))
-        // the published count is the live-value count per group; a live
-        // group whose values are all null has no aux rows → 0
-        val dcount = merged.filter(col(CountCol) =!= 0L)
-          .groupBy(dims.map(col): _*).agg(count(lit(1L)).as(d.name))
-        val joined = joinOnDims(v, dcount, dims, "left")
-          .withColumn(d.name, coalesce(col(d.name), lit(0L)))
-        (joined, as :+ (d.name -> merged.filter(col("__new")).drop("__new")))
-      }
+      // a (group, value) row is written only when its count moved
       commit(spark, viewPath, viewKeys(dims, distincts),
-        tableRows(view, auxes, cols), Some(from), head)
+        tableRows(view, auxes.map { case (d, m) =>
+          d.name -> m.filter(col(CountCol) =!= col("__was")).drop("__was")
+        }, cols), Some(from), head)
     } finally pins.foreach(_.unpersist(false))
   }
 
@@ -910,7 +987,9 @@ object MaterializedAggView {
 
   /** The view's published columns (dims + aggregate names) at its
     * current watermark: the view table's resolved view rows, internal
-    * columns dropped. Loud before bootstrap.
+    * columns dropped. The scan reads a distinct column's aux rows too
+    * (they share the table) and drops them after the resolve. Loud
+    * before bootstrap.
     */
   def read(spark: SparkSession, viewPath: String): DataFrame = {
     if (markOf(viewHead(viewPath)._3).isEmpty) throw new IllegalStateException(

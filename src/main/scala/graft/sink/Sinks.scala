@@ -1688,14 +1688,6 @@ object KeyedUpsertSink {
     requireSpecMatches(spark, tablePath, keys, order)
     readManifestBuckets(spark, tablePath, manifest) match {
       case None => spark.emptyDataFrame
-      // match columns that are all KEY columns never change within a
-      // key, so the matching rows are exactly the candidate keys' rows:
-      // one semi-join, no key derivation (the second pass over `all`
-      // would be pushed through its union, one copy per generation scan)
-      case Some(all) if matchCols.forall(keys.contains) =>
-        dropTombstones(resolveChainRead(
-          semiJoinNullSafe(all, matchDf, matchCols), manifest, keys, order))
-          .drop("__bucket")
       case Some(all) =>
         val wantedKeys = semiJoinNullSafe(all, matchDf, matchCols)
           .select(keys.map(col): _*).distinct()

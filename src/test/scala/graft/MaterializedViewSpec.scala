@@ -172,6 +172,29 @@ class MaterializedViewSpec extends SparkSpec {
     assert(viewRows(view) == Set(("x", 1L, 1L)))
   }
 
+  test("a force with a different spec or column type is refused and names the fix") {
+    val base = newDir("graft-mv-force-spec")
+    val view = newDir("graft-mv-force-spec-view")
+    sinkTo(base)(batchDf(("a", "x", 1L, 10L)), 0L)
+    MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
+    val v0 = KeyedUpsertSink.tableVersions(view).max
+    // a dropped aggregate, then a sum retyped (a recreated base with a
+    // decimal column where the view summed a bigint)
+    Seq(Seq(AggCol("n", lit(1L))),
+        Seq(AggCol("n", lit(1L)), AggCol("sum_v", col("v").cast("decimal(20,2)"))))
+      .foreach { changed =>
+        val e = intercept[IllegalArgumentException] {
+          MaterializedAggView.bootstrap(spark, base, view, keys, order, dims,
+            changed, force = true)
+        }
+        assert(e.getMessage.contains("delete the view directory and bootstrap it"),
+          e.getMessage)
+      }
+    assert(KeyedUpsertSink.tableVersions(view).max == v0,
+      "a refused force commits nothing")
+    assert(viewRows(view) == recomputed(base))
+  }
+
   test("force-bootstrap crash windows: no outcome serves a version above the new head, nothing destroyed before the new marker reads") {
     // the recreated-base shape: the old view sits at watermark v3, the
     // recreated base's head is v1. A force is ONE commit (the new image
@@ -774,8 +797,13 @@ class MaterializedViewSpec extends SparkSpec {
   test("view storage stays bounded: the vacuum keeps the head and one grace version") {
     val base = newDir("graft-mv-bounded")
     val view = newDir("graft-mv-bounded-view")
-    sinkTo(base)(batchDf(("a", "x", 1L, 10L), ("b", "y", 2L, 10L)), 0L)
+    sinkTo(base)(batchDf(("a", "x", 1L, 10L), ("b", "y", 2L, 10L),
+      ("c", "z", 3L, 10L)), 0L)
     MaterializedAggView.bootstrap(spark, base, view, keys, order, dims, aggs)
+    // group z empties before the folds below: its tombstone must not
+    // outlive the compaction of the view's chains
+    sinkTo(base)(batchDf(("c", "x", 3L, 11L)), 100L)
+    MaterializedAggView.refresh(spark, base, view, keys, order, dims, aggs)
     def fold(i: Int): Unit = {
       sinkTo(base)(batchDf((s"k${i % 3}", if (i % 2 == 0) "x" else "y",
         i.toLong, 10L + i)), i.toLong)
@@ -796,6 +824,10 @@ class MaterializedViewSpec extends SparkSpec {
       KeyedUpsertSink.manifestAt(view, v).values.flatMap(KeyedUpsertSink.chainOf)).toSet
     assert(genDirs(view) == live,
       s"on disk ${genDirs(view).toSeq.sorted}, live ${live.toSeq.sorted}")
+    val stored = genDirs(view).toSeq.map(g => spark.read.parquet(s"$view/$g"))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    assert(stored.filter(col("g") === "z").count() == 0L,
+      "the emptied group's tombstone must be purged, not kept for good")
     assert(viewRows(view) == recomputed(base))
   }
 
